@@ -19,7 +19,8 @@ Scale shape (designed for 10^12 rows / 1000 executors, exercised on local[N]):
 - discovery aggregates (source, content_sig) — cardinality ~templates, not
   rows — then runs Drain on the driver over that tiny set;
 - AQE handles the deliberately-skewed hot source; the salt bounds the largest
-  fan-out task.
+  fan-out task, and is sized per template from discovery's row counts so cold
+  templates are not split into many tiny files.
 """
 
 from __future__ import annotations
@@ -37,6 +38,19 @@ from log_parser_cli_spark.plans.checkpoint import Manifest
 
 UNPARSED = "__UNPARSED__"
 UNMATCHED = "__UNMATCHED__"
+
+# Schema of every template mapping built here. ``salt_share`` is the
+# template's discovery row count over the hottest template's (1.0 for the
+# hottest); NULL where unknown. Mappings written before the column existed
+# have only the first four columns; every consumer accepts both shapes.
+MAPPING_SCHEMA = (
+    "source string, content_sig string, template_id string, template_star string,"
+    " salt_share double"
+)
+ROUTED_COLS = (
+    "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
+    "template_star", "variables", "n_vars",
+)
 
 
 @dataclass
@@ -66,8 +80,11 @@ def discover_templates(
     """Distinct-signature aggregation + driver-side Drain → signature mapping.
 
     Returns the mapping DataFrame (source, content_sig, template_id,
-    template_star) — the frozen "template library" equivalent. Deterministic:
-    ids ordered by first-seen doc_id then signature (SURVEY.md §7.4).
+    template_star, salt_share) — the frozen "template library" equivalent.
+    Deterministic: ids ordered by first-seen doc_id then signature (SURVEY.md
+    §7.4). ``salt_share`` keeps the row counts the aggregation already holds:
+    the template's rows ÷ the hottest template's rows, so ``route_stage``
+    salts a template by ``ceil(salt_buckets × salt_share)``.
 
     Driver safety: the collected set is CAPPED at ``max_signatures_per_source``
     per source (top-N by row count, deterministic tie-break) — if mask classes
@@ -95,7 +112,7 @@ def discover_templates(
     per_source: dict[str, list[tuple[str, int, str]]] = {}
     for r in sig_stats:
         per_source.setdefault(r.source, []).append((r.content_sig, int(r.n_rows), r.first_doc))
-    mapping_rows = []
+    templates = []
     for source in sorted(per_source):
         # first-seen order = lexicographic doc-id rank (zero-padded ids ⇒
         # arrival order; arbitrary non-numeric ids still order deterministically
@@ -105,13 +122,14 @@ def discover_templates(
         clusters = cluster_signatures(sig_rows)
         order = sorted(clusters, key=lambda c: (c.first_seen, c.template_words))
         for idx, cluster in enumerate(order, start=1):
-            tid = f"{source}#{idx}"
-            star = cluster.template_star
-            for sig in cluster.signatures:
-                mapping_rows.append((source, sig, tid, star))
-    return spark.createDataFrame(
-        mapping_rows, "source string, content_sig string, template_id string, template_star string"
-    )
+            templates.append((source, f"{source}#{idx}", cluster))
+    hottest = max((c.n_rows for _, _, c in templates), default=1)
+    mapping_rows = [
+        (source, sig, tid, cluster.template_star, cluster.n_rows / hottest)
+        for source, tid, cluster in templates
+        for sig in cluster.signatures
+    ]
+    return spark.createDataFrame(mapping_rows, MAPPING_SCHEMA)
 
 
 def extend_mapping(
@@ -136,7 +154,9 @@ def extend_mapping(
       deterministic first-seen order.
 
     Both driver-side sets (frozen distinct templates, capped novel signatures)
-    are small; the new batch is scanned once.
+    are small; the new batch is scanned once. Appended rows carry a NULL
+    ``salt_share`` (routed at the full salt), as do all rows when the frozen
+    mapping is a legacy four-column one.
     """
     from pyspark.sql import Window
 
@@ -194,7 +214,7 @@ def extend_mapping(
             s == "<*>" or s == w for s, w in zip(star_words, sig_words)
         )
 
-    new_rows: list[tuple[str, str, str, str]] = []
+    new_rows: list[tuple[str, str, str, str, None]] = []
     leftover: dict[str, list[tuple[str, int, str]]] = {}
     for r in novel:
         sig_star_words = signature_to_star(r.content_sig).split(" ")
@@ -204,7 +224,7 @@ def extend_mapping(
                 target = (tid, " ".join(star_words))
                 break
         if target is not None:
-            new_rows.append((r.source, r.content_sig, target[0], target[1]))
+            new_rows.append((r.source, r.content_sig, target[0], target[1], None))
         else:
             leftover.setdefault(r.source, []).append(
                 (r.content_sig, int(r.n_rows), r.first_doc)
@@ -223,11 +243,9 @@ def extend_mapping(
             tid = f"{source}#{base + idx}"
             star = cluster.template_star
             for sig in cluster.signatures:
-                new_rows.append((source, sig, tid, star))
-    appended = spark.createDataFrame(
-        new_rows, "source string, content_sig string, template_id string, template_star string"
-    )
-    return frozen_mapping.unionByName(appended)
+                new_rows.append((source, sig, tid, star, None))
+    appended = spark.createDataFrame(new_rows, MAPPING_SCHEMA)
+    return frozen_mapping.unionByName(appended, allowMissingColumns=True)
 
 
 def refine_mapping(
@@ -251,7 +269,8 @@ def refine_mapping(
     replay-vs-final-library semantics — so orphans re-queued after their
     rightful template was already integrated still land correctly. Signatures
     no surviving template matches get no mapping row (→ UNMATCHED, the
-    unresolved-samples path, pipeline.ts:451-456).
+    unresolved-samples path, pipeline.ts:451-456). The refined templates'
+    ``salt_share`` is NULL: their row counts were never aggregated.
 
     ``seed_library``: pre-existing template dicts (template_id, source,
     pattern, created_at, template_star) — e.g. a carried-over library whose
@@ -296,14 +315,12 @@ def refine_mapping(
     final = match_templates(spark, base, res["library"], version=1)
     star_of = {t["template_id"]: t.get("template_star", "") for t in res["library"]}
     rows = [
-        (r["source"], r["content_sig"], r["template_id"], star_of.get(r["template_id"], ""))
+        (r["source"], r["content_sig"], r["template_id"], star_of.get(r["template_id"], ""), None)
         for r in final.filter(F.col("template_id").isNotNull())
         .select("source", "content_sig", "template_id")
         .collect()
     ]
-    refined = spark.createDataFrame(
-        rows, "source string, content_sig string, template_id string, template_star string"
-    )
+    refined = spark.createDataFrame(rows, MAPPING_SCHEMA)
     return refined, res["reports"]
 
 
@@ -353,6 +370,35 @@ def enrich_stage(parsed: DataFrame, mapping: DataFrame, sources_df: DataFrame) -
     ).withColumn("n_vars", F.size("word_vars"))
 
 
+def route_frame(enriched: DataFrame, salt_buckets: int) -> DataFrame:
+    """The routed rows behind the route stage's ONE payload exchange:
+    hash-partitioned by (sink, template_id, salt).
+
+    Salting: a template's rows spread over ``ceil(salt_buckets × salt_share)``
+    salts keyed by hash(doc_id). The hottest template (share 1.0) gets all
+    ``salt_buckets``, so the hot source cannot serialize into one writer task;
+    a template with share ≤ 1/``salt_buckets`` gets one salt, hence one file
+    per (sink, template_id) dir. Where the share is unknown — UNPARSED and
+    UNMATCHED rows (no mapping row joined: an UNPARSED row's content_sig is
+    NULL), rows added by ``extend_mapping``/``refine_mapping``, a legacy
+    four-column mapping, a frame with no ``salt_share`` column — the salt is
+    the full ``salt_buckets``. The share rides in the mapping's broadcast
+    join, so sizing adds no job, join or exchange.
+    """
+    salts = F.lit(salt_buckets)
+    cols = ROUTED_COLS
+    if "salt_share" in enriched.columns:
+        cols += ("salt_share",)
+        salts = F.coalesce(F.ceil(F.col("salt_share") * salt_buckets), salts)
+    # content/content_sig are derivable (render+mask of tokens) — not carried
+    # through the fan-out shuffle; tokens ride untouched.
+    return (
+        enriched.select(*cols)
+        .repartition(F.col("sink"), F.col("template_id"), F.pmod(F.hash("doc_id"), salts))
+        .select(*ROUTED_COLS)
+    )
+
+
 def route_stage(
     enriched: DataFrame,
     out_dir: str,
@@ -362,9 +408,11 @@ def route_stage(
 ) -> str:
     """Deterministic fan-out write partitioned by (sink, template_id) — K1.
 
-    Salting: within one (sink, template_id) partition, rows spread over
-    ``salt_buckets`` tasks keyed by hash(doc_id) — the hot source cannot
-    serialize into one writer task. Original ``tokens`` ride along untouched.
+    Salting (``route_frame``): a template's rows spread over
+    ``ceil(salt_buckets × salt_share)`` tasks keyed by hash(doc_id), or over
+    ``salt_buckets`` where the share is unknown — the hot template cannot
+    serialize into one writer task, and cold templates are not split into
+    many tiny files. Original ``tokens`` ride along untouched.
 
     The write is a SNAPSHOT COMMIT (plans/snapshots.py): data lands in an
     immutable uniquely-named dir and becomes visible only when the manifest
@@ -377,15 +425,7 @@ def route_stage(
     routed_path = os.path.join(out_dir, "routed")
     table = SnapshotTable(routed_path)
     table.commit_overwrite(
-        enriched.select(
-            # content/content_sig are derivable (render+mask of tokens) — not
-            # carried through the fan-out shuffle; tokens ride untouched.
-            "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
-            "template_star", "variables", "n_vars",
-        ).repartition(
-            F.col("sink"), F.col("template_id"), F.pmod(F.hash("doc_id"), F.lit(salt_buckets))
-        ),
-        partition_by=("sink", "template_id"),
+        route_frame(enriched, salt_buckets), partition_by=("sink", "template_id")
     )
     # auto-vacuum is safe against concurrent committers: never-referenced
     # dirs are age-gated (snapshots.vacuum orphan_grace_s); retention is a
@@ -471,6 +511,25 @@ def _lineage(df: DataFrame, stage: str, run_id: str, out_dir: str, wall_ms: floa
     )
     rows.write.mode("append").parquet(os.path.join(out_dir, "run_metrics"))
     return sum(r["count"] for r in stats.collect())
+
+
+def _footer_rows(path: str) -> int:
+    """Row count of a just-written parquet dir from its files' footers —
+    exact, driver-side, no scan job. Spark writes at least one file even for
+    an empty frame, so an empty glob means the dir is not on the local
+    filesystem (hdfs://, s3://) or the write layout changed: raise rather
+    than record 0 rows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(path, "*.parquet"))
+    if not files:
+        raise FileNotFoundError(
+            f"{path}: no local *.parquet files to count rows from"
+            " (non-local URI or changed write layout)"
+        )
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def run_replay(
@@ -579,16 +638,7 @@ def run_pipeline(
             if lineage:
                 n = _lineage(parsed, "parse", run_id, out_dir, 0)
             else:
-                # row count from the just-written files' parquet footers —
-                # exact, driver-side, no scan job
-                import glob as _glob
-
-                import pyarrow.parquet as _pq
-
-                n = sum(
-                    _pq.ParquetFile(f).metadata.num_rows
-                    for f in _glob.glob(os.path.join(parsed_path, "*.parquet"))
-                )
+                n = _footer_rows(parsed_path)
         else:
             # One-shot mode: persist OFF-HEAP on local storage, not in
             # executor memory. The default MEMORY_AND_DISK cache of the fat

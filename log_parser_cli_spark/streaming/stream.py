@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_parser_cli_spark.operators.parse import parse_stage
-from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims
+from log_parser_cli_spark.plans.pipeline import ROUTED_COLS, enrich_stage, load_dims
 from log_parser_cli_spark.plans.snapshots import SnapshotTable
 
 
@@ -79,10 +79,7 @@ def stream_replay(
         # read_routed never observe a torn batch, unlike the previous
         # batch_id=N/ plain-dir layout).
         table.commit_batch(
-            enriched.select(
-                "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
-                "template_star", "variables", "n_vars",
-            ).withColumn("batch_id", F.lit(batch_id).cast("long")),
+            enriched.select(*ROUTED_COLS).withColumn("batch_id", F.lit(batch_id).cast("long")),
             batch_id=batch_id,
             partition_by=("sink", "template_id"),
         )
@@ -191,15 +188,14 @@ def stream_with_discovery(
             mapping = extend_mapping(spark, frozen, parsed)
         else:
             mapping = discover_templates(spark, parsed)
-        rows = mapping.collect()  # library is tiny; pin before writing
+        # library is tiny; pin before writing. salt_share passes through
+        # (batch 1's discovery shares; rows appended later carry NULL)
+        rows = mapping.collect()
         mapping = spark.createDataFrame(rows, mapping.schema)
         _commit_mapping(mapping, mapping_root, batch_id)
         enriched = enrich_stage(parsed, mapping, sources_df)
         table.commit_batch(
-            enriched.select(
-                "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
-                "template_star", "variables", "n_vars",
-            ).withColumn("batch_id", F.lit(batch_id).cast("long")),
+            enriched.select(*ROUTED_COLS).withColumn("batch_id", F.lit(batch_id).cast("long")),
             batch_id=batch_id,
             partition_by=("sink", "template_id"),
         )

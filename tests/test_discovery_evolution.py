@@ -174,7 +174,8 @@ def test_extend_mapping_keeps_ids_stable_and_appends_dense(spark, fixture_dir, p
     new_rows = [r for r in ext_rows if r not in frozen_rows]
     assert len(new_rows) == 2
     apache_max = max(int(r[2].split("#")[1]) for r in frozen_rows if r[0] == "apache")
-    for source, sig, tid, star in new_rows:
+    for source, sig, tid, star, share in new_rows:
+        assert share is None  # appended rows have no discovery count → full salt
         if "totally new" in sig:
             assert (source, tid) == ("apache", f"apache#{apache_max + 1}")
             assert star == "totally new event shape <*>"
@@ -184,3 +185,22 @@ def test_extend_mapping_keeps_ids_stable_and_appends_dense(spark, fixture_dir, p
     # idempotent: extending again with the same batch is a no-op
     again = extend_mapping(spark, extended, new_parsed)
     assert sorted(map(tuple, again.collect())) == ext_rows
+
+
+def test_extend_mapping_accepts_legacy_four_column_mapping(spark, pipeline_out):
+    """A frozen mapping written before salt_share existed still extends: the
+    union gains the column as NULL (routed at the full salt), and the rows
+    are the ones the current-schema mapping extends to."""
+    frozen = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    legacy = frozen.select("source", "content_sig", "template_id", "template_star")
+    num = "\x00NUM\x00"
+    new_parsed = spark.createDataFrame(
+        [("doc-z00000009", "apache", f"legacy shape event {num}", True)],
+        "doc_id string, source string, content_sig string, head_matched boolean",
+    )
+    extended = extend_mapping(spark, legacy, new_parsed)
+    assert extended.filter(extended.salt_share.isNotNull()).count() == 0
+    current = extend_mapping(spark, frozen, new_parsed)
+    assert sorted(map(tuple, extended.drop("salt_share").collect())) == sorted(
+        map(tuple, current.drop("salt_share").collect())
+    )

@@ -128,3 +128,84 @@ def test_salted_fanout_splits_hot_template(spark, fixture_dir, pipeline_out, tmp
     )
     files = glob.glob(os.path.join(tpl_dir, "*.parquet"))
     assert len(files) >= 2, f"hot template wrote {len(files)} file(s) — salting ineffective"
+
+
+def test_salt_sized_by_template_share(spark, fixture_dir, pipeline_out, tmp_path):
+    """Per-template salt = ceil(salt_buckets × salt_share): the hottest
+    template (share 1.0) still spreads over several files, and every template
+    with share ≤ 1/salt_buckets lands in one salt, hence exactly one file in
+    its (sink, template_id) dir. Coalescing pinned off, as above."""
+    import glob
+    from urllib.parse import quote
+
+    from log_parser_cli_spark.plans.pipeline import (
+        enrich_stage,
+        load_dims,
+        route_stage,
+        routed_data_dirs,
+    )
+
+    salt_buckets = 4
+    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    shares = dict(mapping.select("template_id", "salt_share").distinct().collect())
+    assert len(shares) == mapping.select("template_id").distinct().count()  # one share per template
+    assert max(shares.values()) == 1.0
+    _, _, sources_df = load_dims(spark, fixture_dir)
+    parsed = spark.read.parquet(os.path.join(pipeline_out, "parsed"))
+    enriched = enrich_stage(parsed, mapping, sources_df)
+
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        out = str(tmp_path / "sized")
+        route_stage(enriched, out, salt_buckets=salt_buckets)
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    (data_dir,) = routed_data_dirs(out)
+
+    def n_files(template_id: str) -> int:
+        tpl = f"template_id={quote(template_id, safe='')}"
+        return len(glob.glob(os.path.join(data_dir, "sink=*", tpl, "*.parquet")))
+
+    hot = next(t for t, s in shares.items() if s == 1.0)
+    assert n_files(hot) >= 2, f"hot template {hot} wrote {n_files(hot)} file(s)"
+    cold = [t for t, s in shares.items() if s <= 1 / salt_buckets]
+    assert cold, "fixture must have templates below the one-salt share"
+    assert {t: n_files(t) for t in cold} == {t: 1 for t in cold}
+
+
+def test_legacy_four_column_mapping_routes_same_rows(spark, fixture_dir, pipeline_out, tmp_path):
+    """--match-only with a mapping written before salt_share existed: the
+    route falls back to the full salt and routes the same rows and tokens."""
+    from log_parser_cli_spark.plans.pipeline import run_pipeline
+
+    legacy_path = str(tmp_path / "legacy_mapping")
+    spark.read.parquet(os.path.join(pipeline_out, "template_mapping")).select(
+        "source", "content_sig", "template_id", "template_star"
+    ).write.parquet(legacy_path)
+    legacy = spark.read.parquet(legacy_path)
+    assert "salt_share" not in legacy.columns
+
+    out = str(tmp_path / "legacy_run")
+    res = run_pipeline(spark, fixture_dir, out, run_id="legacy", mapping_df=legacy)
+    assert "discover" not in res.stages_run
+    cols = ["doc_id", "tokens", "n_tok", "source", "sink", "template_id", "template_star", "n_vars"]
+    want = read_routed(spark, pipeline_out).select(*cols)
+    got = read_routed(spark, out).select(*cols)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_checkpoint_row_count_raises_on_empty_footer_glob(spark, fixture_dir, tmp_path, monkeypatch):
+    """The parse checkpoint's row count is read from parquet footers; a glob
+    that finds no file (a non-local URI, a changed write layout) must raise,
+    never record 0 rows."""
+    import glob
+
+    import pytest
+
+    from log_parser_cli_spark.plans.pipeline import run_pipeline
+
+    monkeypatch.setattr(glob, "glob", lambda *a, **k: [])
+    with pytest.raises(FileNotFoundError, match="no local"):
+        run_pipeline(spark, fixture_dir, str(tmp_path / "out"), checkpoint_parse=True)

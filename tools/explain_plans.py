@@ -27,7 +27,12 @@ def plan_of(df) -> str:
 def main() -> int:
     from log_parser_cli_spark.datagen import ensure_fixtures
     from log_parser_cli_spark.operators.parse import parse_stage
-    from log_parser_cli_spark.plans.pipeline import discover_templates, enrich_stage, load_dims
+    from log_parser_cli_spark.plans.pipeline import (
+        discover_templates,
+        enrich_stage,
+        load_dims,
+        route_frame,
+    )
     from log_parser_cli_spark.session import get_spark
     from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs, minhash_dedup
     from log_parser_cli_spark.extras.similarity import cosine_topk
@@ -43,18 +48,36 @@ def main() -> int:
     parsed = parse_stage(spark, seq, vocab_rows, source_heads)
     mapping = discover_templates(spark, parsed)
     enriched = enrich_stage(parsed, mapping, sources_df)
-    routed_cols = enriched.select(
-        "doc_id", "tokens", "n_tok", "source", "sink", "template_id", "template_star",
-        "variables", "n_vars",
-    ).repartition(F.col("sink"), F.col("template_id"), F.pmod(F.hash("doc_id"), F.lit(4)))
+    route_title = "enrich + fan-out repartition (parse → broadcast joins → salted exchange)"
+    route_plan = plan_of(route_frame(enriched, salt_buckets=4))
     sections.append(
         (
-            "enrich + fan-out repartition (parse → broadcast joins → salted exchange)",
-            plan_of(routed_cols),
+            route_title,
+            route_plan,
             ["BroadcastHashJoin", "MapInArrow", "Exchange", "hashpartitioning"],
-            ["CartesianProduct", "SortMergeJoin"],
+            ["CartesianProduct", "SortMergeJoin", "HashAggregate"],
         )
     )
+    # per-template salt sizing rides the mapping's broadcast join: the route
+    # keeps ONE payload exchange, keyed by (sink, template_id, salt), and
+    # gains no aggregate and no second broadcast of the mapping
+    tree = route_plan.split("\n\n", 1)[0]
+    exchanges = [ln for ln in tree.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
+    keys = next(
+        (ln for ln in route_plan.splitlines() if ln.startswith("Arguments: hashpartitioning(")), ""
+    )
+    route_checks = [
+        (f"one payload exchange (found {len(exchanges)})", len(exchanges) == 1),
+        (
+            "two broadcasts, mapping + sources "
+            f"(found {tree.count('BroadcastExchange')})",
+            tree.count("BroadcastExchange") == 2,
+        ),
+        (
+            f"exchange keyed by sink, template_id and the share-sized salt: `{keys[11:]}`",
+            all(k in keys for k in ("sink#", "template_id#", "hash(doc_id#", "salt_share#")),
+        ),
+    ]
 
     # column pruning + predicate pushdown on the routed-style scan
     pruned = seq.select("doc_id", "n_tok").filter(F.col("n_tok") > 20)
@@ -235,6 +258,11 @@ def main() -> int:
     ]
     for title, plan, must, must_not in sections:
         checks = []
+        if title == route_title:
+            for what, ok in route_checks:
+                checks.append(f"- {'✅' if ok else '❌'} {what}")
+                if not ok:
+                    failures.append(f"{title}: {what}")
         for m in must:
             ok = any(alt in plan for alt in m.split("|"))
             checks.append(f"- {'✅' if ok else '❌'} contains `{m}`")
