@@ -122,30 +122,6 @@ def metrics_from_cells(cells: list[tuple[str, str, int]]) -> dict[str, float]:
     }
 
 
-def collapse_pure_clusters(labels: DataFrame, pred_col: str = "pred_id", gt_col: str = "gt_id") -> DataFrame:
-    """Relabel single-gt pred clusters to __PURE__#<gt> (run-eval.js:209-234).
-
-    DataFrame variant kept for callers that need the relabeled rows themselves
-    (metrics use the cells-only path above).
-    """
-    purity_map = (
-        labels.groupBy(pred_col)
-        .agg(F.countDistinct(gt_col).alias("n_gt"), F.first(gt_col).alias("any_gt"))
-        .withColumn(
-            "merged",
-            F.when(F.col("n_gt") == 1, F.concat(F.lit("__PURE__#"), F.col("any_gt"))).otherwise(
-                F.col(pred_col)
-            ),
-        )
-        .select(pred_col, "merged")
-    )
-    return (
-        labels.join(F.broadcast(purity_map), pred_col)
-        .drop(pred_col)
-        .withColumnRenamed("merged", pred_col)
-    )
-
-
 def macro_metrics(per_dataset: dict[str, dict[str, float]]) -> dict[str, float]:
     """Macro averages across datasets (A8, run-eval.js:327-375): unweighted
     mean of every metric key present in all datasets."""

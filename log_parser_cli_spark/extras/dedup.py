@@ -62,6 +62,34 @@ def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 2) -> DataFrame
     return df.select(F.col(id_col).alias("doc"), F.explode(F.expr(sh)).alias("shingle"))
 
 
+def _candidate_overlaps(candidates: DataFrame, sh: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, inter): shared-shingle counts for each candidate pair (a, b).
+
+    Restricts the join INPUTS to candidate pairs before any pair is
+    enumerated — a post-hoc semi-filter would still pay the quadratic
+    shingle self-join inside hot duplicate groups. Work here is
+    |candidates| × shingles-per-doc, all keyed equi-joins."""
+    return (
+        candidates.select(*keys)
+        .join(sh.withColumnRenamed("doc", "a"), "a")
+        .join(sh.withColumnRenamed("doc", "b"), ["b", "shingle"])
+        .groupBy(*keys)
+        .agg(F.count("*").alias("inter"))
+    )
+
+
+def _score_pairs(inter: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, jaccard) from (a, b, sz_a, sz_b, inter) rows, kept at ≥ threshold."""
+    return (
+        inter.withColumn(
+            "jaccard",
+            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
+    )
+
+
 def jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, k: int = 2, threshold: float = 0.5,
     candidates: DataFrame | None = None,
@@ -71,43 +99,16 @@ def jaccard_pairs(
     With ``candidates`` (columns a, b) only those pairs are scored — the
     scale path; without, scoring happens for every shingle-sharing pair
     (fine at test scale, quadratic in duplicate-group size at 100 TB).
-    Candidates that additionally carry ``sz_a``/``sz_b`` (per-doc distinct
-    shingle counts, e.g. ridden through the LSH banding as join payload)
-    skip this function's own size aggregation + two size joins entirely.
+    Any other candidate columns are ignored: shingle sizes always come from
+    ``df`` itself.
     """
     # no .cache(): shingling is a narrow transform recomputed per reference
     # (3 scans max), and at the design scale a shingle cache wouldn't fit
     # executor storage anyway — a session-lifetime pin was the round-3 leak
     sh = shingles(df, id_col, text_col, k)
-    if candidates is not None and {"sz_a", "sz_b"}.issubset(candidates.columns):
-        inter = (
-            candidates.select("a", "b", "sz_a", "sz_b")
-            .join(sh.withColumnRenamed("doc", "a"), "a")
-            .join(sh.withColumnRenamed("doc", "b"), ["b", "shingle"])
-            .groupBy("a", "b", "sz_a", "sz_b")
-            .agg(F.count("*").alias("inter"))
-        )
-        return (
-            inter.withColumn(
-                "jaccard",
-                F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("a", "b", "jaccard")
-        )
     sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     if candidates is not None:
-        # restrict the join INPUTS to candidate pairs before any pair is
-        # enumerated — a post-hoc semi-filter would still pay the quadratic
-        # shingle self-join inside hot duplicate groups. Work here is
-        # |candidates| × shingles-per-doc, all keyed equi-joins.
-        inter = (
-            candidates.select("a", "b")
-            .join(sh.withColumnRenamed("doc", "a"), "a")
-            .join(sh.withColumnRenamed("doc", "b"), ["b", "shingle"])
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("inter"))
-        )
+        inter = _candidate_overlaps(candidates, sh, ["a", "b"])
     else:
         inter = (
             sh.alias("x")
@@ -116,14 +117,11 @@ def jaccard_pairs(
             .groupBy(F.col("x.doc").alias("a"), F.col("y.doc").alias("b"))
             .agg(F.count("*").alias("inter"))
         )
-    pairs = (
+    return _score_pairs(
         inter.join(sizes.withColumnRenamed("doc", "a").withColumnRenamed("sz", "sz_a"), "a")
-        .join(sizes.withColumnRenamed("doc", "b").withColumnRenamed("sz", "sz_b"), "b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
+        .join(sizes.withColumnRenamed("doc", "b").withColumnRenamed("sz", "sz_b"), "b"),
+        threshold,
     )
-    return pairs
 
 
 def minhash_signatures(
@@ -360,7 +358,8 @@ def minhash_dedup(
         banded, ["band", "bucket"], None,
         payload=("sz",), first_band_filter=FIRST_BAND_ARRAY_FILTER,
     )
-    return jaccard_pairs(df, id_col, text_col, k, threshold, candidates=cands)
+    sh = shingles(df, id_col, text_col, k)
+    return _score_pairs(_candidate_overlaps(cands, sh, ["a", "b", "sz_a", "sz_b"]), threshold)
 
 
 SIMHASH_BITS = 60  # keep within signed-64 positive range for portability

@@ -627,9 +627,10 @@ def run_pipeline(
 
     # -- stage 1: parse (checkpointed so downstream stages & resume reuse it)
     parsed_cached: DataFrame | None = None
+    count_deferred = False
 
     def do_parse():
-        nonlocal parsed_cached
+        nonlocal parsed_cached, count_deferred
         parsed = parse_stage(spark, seq_df, vocab_rows, source_heads)
         if checkpoint_parse:
             parsed.write.mode("overwrite").parquet(parsed_path)
@@ -664,7 +665,7 @@ def run_pipeline(
                 # the row count is read back from the cached batches after
                 # the run (column-pruned scan of batch counts, ~1s vs a
                 # 6-9s dedicated pass at 19.2M rows).
-                result.counts["parsed"] = -1
+                count_deferred = True
                 return {}
         result.counts["parsed"] = n
         return {"rows": n}
@@ -720,10 +721,12 @@ def run_pipeline(
         return aggregate_stage(spark, read_routed(spark, out_dir), out_dir)
 
     stage("aggregate", do_aggregate)
+    if count_deferred:
+        # cache was materialized by discovery/route above; this scan
+        # decodes no columns, it just sums cached-batch row counts
+        n = parsed_cached.count()
+        result.counts["parsed"] = n
+        manifest.commit("parse", **{**manifest.stage_info("parse"), "rows": n})
     if not checkpoint_parse and parsed_cached is not None:
-        if result.counts.get("parsed", 0) < 0:
-            # cache was materialized by discovery/route above; this scan
-            # decodes no columns, it just sums cached-batch row counts
-            result.counts["parsed"] = parsed_cached.count()
         parsed_cached.unpersist()
     return result

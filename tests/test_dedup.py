@@ -55,17 +55,20 @@ def test_minhash_equals_bruteforce_on_found_pairs(docs):
 
 def test_candidate_restricted_jaccard_equals_bruteforce(docs, spark):
     """The input-restricted candidate join computes the SAME jaccard values
-    as the self-join path when the candidate set is complete."""
+    as the self-join path when the candidate set is complete — also when the
+    candidates carry stray (here deliberately wrong) ``sz_a``/``sz_b``."""
     brute = {(r.a, r.b): r.jaccard for r in jaccard_pairs(docs, "doc_id", "text", k=2, threshold=0.0).collect()}
     ids = [r.doc_id for r in docs.select("doc_id").collect()]
     all_pairs = spark.createDataFrame(
         [(a, b) for a in ids for b in ids if a < b], "a long, b long"
     )
-    cand = {
-        (r.a, r.b): r.jaccard
-        for r in jaccard_pairs(docs, "doc_id", "text", k=2, threshold=0.0, candidates=all_pairs).collect()
-    }
-    assert cand == brute
+    wrong_sizes = all_pairs.withColumn("sz_a", F.lit(1000)).withColumn("sz_b", F.lit(1))
+    for candidates in (all_pairs, wrong_sizes):
+        cand = {
+            (r.a, r.b): r.jaccard
+            for r in jaccard_pairs(docs, "doc_id", "text", k=2, threshold=0.0, candidates=candidates).collect()
+        }
+        assert cand == brute
 
 
 def test_minhash_signature_shape(docs):

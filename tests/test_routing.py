@@ -1,5 +1,6 @@
 """Routing stage: unknown-source rows classified by head-pattern vote."""
 
+import json
 import os
 
 import pyspark.sql.functions as F
@@ -35,10 +36,16 @@ def test_pipeline_with_inferred_sources_matches_baseline(spark, fixture_dir, pip
     seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
     anon = seq.withColumn("source", F.lit(None).cast("string"))
     out = str(tmp_path / "routed_run")
-    run_pipeline(
+    result = run_pipeline(
         spark, fixture_dir, out, run_id="routed", seq_df=anon,
         infer_missing_sources=True, checkpoint_parse=False,
     )
+    # one-shot mode defers the parse count to after the run; the resolved
+    # count lands in both the result and the manifest
+    with open(os.path.join(out, "_manifest.json")) as f:
+        parse_entry = json.load(f)["stages"]["parse"]
+    assert parse_entry["rows"] == result.counts["parsed"] == seq.count()
+    assert "wall_ms" in parse_entry
     mine = {
         (r.source, r.template_star): r.n
         for r in spark.read.parquet(os.path.join(out, "sink_counts"))
