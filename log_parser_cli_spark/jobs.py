@@ -71,7 +71,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--out", required=True, help="output dir for routed tables + aggregates")
     ap.add_argument("--run-id", default="run-1")
     ap.add_argument("--resume", action="store_true", help="skip stages committed in the manifest")
-    ap.add_argument("--lineage", action="store_true", help="write per-partition lineage metrics")
     ap.add_argument("--cores", type=int, default=None, help="local[N] override (omit on a cluster)")
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--match-only", metavar="MAPPING_DIR", default=None,
@@ -122,7 +121,6 @@ def main(argv: list[str] | None = None) -> int:
         args.out,
         run_id=args.run_id,
         resume=args.resume,
-        lineage=args.lineage,
         salt_buckets=args.salt_buckets,
         mapping_df=mapping_df,
         derive_heads=args.derive_heads,

@@ -27,12 +27,13 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from log_parser_cli_spark.operators.drain import cluster_signatures
+from log_parser_cli_spark.operators.drain import DrainCluster, cluster_signatures
 from log_parser_cli_spark.operators.parse import parse_stage
 from log_parser_cli_spark.plans.checkpoint import Manifest
 
@@ -61,6 +62,15 @@ class PipelineResult:
     counts: dict[str, int] = field(default_factory=dict)
 
 
+def _observe(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
+    """The pipeline's one way to count rows: attach named aggregate metrics to
+    ``df``. The action that consumes the returned frame first (a write, a
+    collect, the fill of a persisted cache) computes them in the same pass —
+    no job of its own. ``Observation.get`` blocks until that action ends."""
+    obs = Observation()
+    return df.observe(obs, *(c.alias(name) for name, c in metrics.items())), obs
+
+
 def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, str]], dict[str, tuple[str, int]], DataFrame]:
     """Load vocab + source-head config (small driver-side dims) + sources df."""
     vocab_rows = [
@@ -72,6 +82,51 @@ def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, st
         r.source: (r.head_pattern, int(r.content_group)) for r in sources_df.collect()
     }
     return vocab_rows, source_heads, sources_df
+
+
+def _top_signatures(parsed: DataFrame, cap: int, known: DataFrame | None = None) -> list:
+    """Collected (source, content_sig, n_rows, first_doc) of the head-matched
+    rows, minus the (source, content_sig) pairs already in ``known``, capped at
+    ``cap`` per source: top-N by row count, deterministic tie-break on
+    first-seen doc_id then signature."""
+    from pyspark.sql import Window
+
+    stats = (
+        parsed.filter(F.col("head_matched"))
+        .groupBy("source", "content_sig")
+        .agg(F.count("*").alias("n_rows"), F.min("doc_id").alias("first_doc"))
+    )
+    if known is not None:
+        keys = ["source", "content_sig"]
+        stats = stats.join(known.select(*keys), keys, "left_anti")
+    w = Window.partitionBy("source").orderBy(
+        F.desc("n_rows"), F.asc("first_doc"), F.asc("content_sig")
+    )
+    return (
+        stats.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= cap)
+        .drop("_rk")
+        .collect()
+    )
+
+
+def _cluster_by_source(sig_rows: list) -> Iterator[tuple[str, int, DrainCluster]]:
+    """Drain-cluster collected signature rows per source. Yields (source,
+    ordinal, cluster) with dense 1-based ordinals in (first_seen,
+    template_words) order, sources in sorted order."""
+    per_source: dict[str, list] = {}
+    for r in sig_rows:
+        per_source.setdefault(r.source, []).append((r.content_sig, int(r.n_rows), r.first_doc))
+    for source in sorted(per_source):
+        # first-seen order = lexicographic doc-id rank (zero-padded ids ⇒
+        # arrival order; arbitrary non-numeric ids still order deterministically
+        # — never parse doc_id arithmetic)
+        by_doc = sorted(per_source[source], key=lambda t: (t[2], t[0]))
+        ranked = [(sig, n, rank) for rank, (sig, n, _doc) in enumerate(by_doc)]
+        clusters = cluster_signatures(ranked)
+        order = sorted(clusters, key=lambda c: (c.first_seen, c.template_words))
+        for idx, cluster in enumerate(order, start=1):
+            yield source, idx, cluster
 
 
 def discover_templates(
@@ -93,36 +148,12 @@ def discover_templates(
     those rows to UNMATCHED/sink-failures (the reference's unresolved-samples
     path, pipeline.ts:142).
     """
-    from pyspark.sql import Window
-
-    sig_stats_df = (
-        parsed.filter(F.col("head_matched"))
-        .groupBy("source", "content_sig")
-        .agg(F.count("*").alias("n_rows"), F.min("doc_id").alias("first_doc"))
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.desc("n_rows"), F.asc("first_doc"), F.asc("content_sig")
-    )
-    sig_stats = (
-        sig_stats_df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_signatures_per_source)
-        .drop("_rk")
-        .collect()
-    )
-    per_source: dict[str, list[tuple[str, int, str]]] = {}
-    for r in sig_stats:
-        per_source.setdefault(r.source, []).append((r.content_sig, int(r.n_rows), r.first_doc))
-    templates = []
-    for source in sorted(per_source):
-        # first-seen order = lexicographic doc-id rank (zero-padded ids ⇒
-        # arrival order; arbitrary non-numeric ids still order deterministically
-        # — never parse doc_id arithmetic)
-        by_doc = sorted(per_source[source], key=lambda t: (t[2], t[0]))
-        sig_rows = [(sig, n, rank) for rank, (sig, n, _doc) in enumerate(by_doc)]
-        clusters = cluster_signatures(sig_rows)
-        order = sorted(clusters, key=lambda c: (c.first_seen, c.template_words))
-        for idx, cluster in enumerate(order, start=1):
-            templates.append((source, f"{source}#{idx}", cluster))
+    templates = [
+        (source, f"{source}#{idx}", cluster)
+        for source, idx, cluster in _cluster_by_source(
+            _top_signatures(parsed, max_signatures_per_source)
+        )
+    ]
     hottest = max((c.n_rows for _, _, c in templates), default=1)
     mapping_rows = [
         (source, sig, tid, cluster.template_star, cluster.n_rows / hottest)
@@ -158,28 +189,12 @@ def extend_mapping(
     ``salt_share`` (routed at the full salt), as do all rows when the frozen
     mapping is a legacy four-column one.
     """
-    from pyspark.sql import Window
-
     from log_parser_cli_spark.functions.masking import signature_to_star
 
-    novel_stats_df = (
-        parsed_new.filter(F.col("head_matched"))
-        .groupBy("source", "content_sig")
-        .agg(F.count("*").alias("n_rows"), F.min("doc_id").alias("first_doc"))
-        .join(frozen_mapping.select("source", "content_sig"), ["source", "content_sig"], "left_anti")
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.desc("n_rows"), F.asc("first_doc"), F.asc("content_sig")
-    )
-    novel = (
-        novel_stats_df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_signatures_per_source)
-        .drop("_rk")
-        .collect()
-    )
-    frozen_rows = frozen_mapping.collect()
+    novel = _top_signatures(parsed_new, max_signatures_per_source, known=frozen_mapping)
     if not novel:
         return frozen_mapping
+    frozen_rows = frozen_mapping.collect()
 
     # existing clusters per source: (template_id, star words), max ordinal
     clusters_by_source: dict[str, list[tuple[str, list[str]]]] = {}
@@ -215,7 +230,7 @@ def extend_mapping(
         )
 
     new_rows: list[tuple[str, str, str, str, None]] = []
-    leftover: dict[str, list[tuple[str, int, str]]] = {}
+    leftover = []
     for r in novel:
         sig_star_words = signature_to_star(r.content_sig).split(" ")
         target = None
@@ -226,24 +241,12 @@ def extend_mapping(
         if target is not None:
             new_rows.append((r.source, r.content_sig, target[0], target[1], None))
         else:
-            leftover.setdefault(r.source, []).append(
-                (r.content_sig, int(r.n_rows), r.first_doc)
-            )
+            leftover.append(r)
     # truly-novel clusters: Drain per source, appended ids source#N+1...
-    for source in sorted(leftover):
-        # first-seen order = lexicographic doc-id rank (doc ids are
-        # zero-padded, so lexicographic == arrival order; arbitrary ids
-        # still give a deterministic insertion order)
-        by_doc = sorted(leftover[source], key=lambda t: (t[2], t[0]))
-        ranked = [(sig, n, rank) for rank, (sig, n, _doc) in enumerate(by_doc)]
-        clusters = cluster_signatures(ranked)
-        order = sorted(clusters, key=lambda c: (c.first_seen, c.template_words))
-        base = max_ordinal.get(source, 0)
-        for idx, cluster in enumerate(order, start=1):
-            tid = f"{source}#{base + idx}"
-            star = cluster.template_star
-            for sig in cluster.signatures:
-                new_rows.append((source, sig, tid, star, None))
+    for source, idx, cluster in _cluster_by_source(leftover):
+        tid = f"{source}#{max_ordinal.get(source, 0) + idx}"
+        for sig in cluster.signatures:
+            new_rows.append((source, sig, tid, cluster.template_star, None))
     appended = spark.createDataFrame(new_rows, MAPPING_SCHEMA)
     return frozen_mapping.unionByName(appended, allowMissingColumns=True)
 
@@ -405,7 +408,7 @@ def route_stage(
     salt_buckets: int = 16,
     shuffle_partitions: int | None = None,
     retain_snapshots: int = 2,
-) -> str:
+) -> dict[str, int]:
     """Deterministic fan-out write partitioned by (sink, template_id) — K1.
 
     Salting (``route_frame``): a template's rows spread over
@@ -419,36 +422,37 @@ def route_stage(
     links in atomically — SURVEY §2.1's Iceberg prescription for K1, vendored.
     A crashed or concurrent re-route never leaves readers a half-written or
     mixed fan-out; the previous snapshot stays readable until vacuumed.
+
+    Returns the written rows' counts (``rows``, ``unparsed``, ``unmatched``),
+    observed on the write itself. The observation sits above the exchange, so
+    the column pruning below it is unaffected.
     """
     from log_parser_cli_spark.plans.snapshots import SnapshotTable
 
-    routed_path = os.path.join(out_dir, "routed")
-    table = SnapshotTable(routed_path)
-    table.commit_overwrite(
-        route_frame(enriched, salt_buckets), partition_by=("sink", "template_id")
+    routed, obs = _observe(
+        route_frame(enriched, salt_buckets),
+        rows=F.count(F.lit(1)),
+        unparsed=F.count_if(F.col("template_id") == UNPARSED),
+        unmatched=F.count_if(F.col("template_id") == UNMATCHED),
     )
+    table = SnapshotTable(os.path.join(out_dir, "routed"))
+    table.commit_overwrite(routed, partition_by=("sink", "template_id"))
     # auto-vacuum is safe against concurrent committers: never-referenced
     # dirs are age-gated (snapshots.vacuum orphan_grace_s); retention is a
     # caller policy (jobs.py --retain-snapshots / --vacuum for maintenance)
     table.vacuum(keep_last=retain_snapshots)
-    return routed_path
+    return obs.get
 
 
 def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:
     """Current committed snapshot of a run's routed table (batch AND
-    streaming sinks both commit through SnapshotTable); falls back to a
-    plain parquet read only for legacy pre-snapshot run dirs."""
+    streaming sinks both commit through SnapshotTable). Raises
+    FileNotFoundError when no snapshot is committed — staged dirs of a writer
+    that crashed before its first commit point mean "table does not exist
+    yet", never "read the partial bytes"."""
     from log_parser_cli_spark.plans.snapshots import SnapshotTable
 
-    root = os.path.join(out_dir, "routed")
-    if SnapshotTable.is_snapshot_dir(root):
-        return SnapshotTable(root).read(spark)
-    if os.path.isdir(root) and any(n.startswith("data-") for n in os.listdir(root)):
-        # staged dirs but no manifest: a writer crashed before its first
-        # commit point — that is "table does not exist yet", never "read the
-        # partial bytes"
-        raise FileNotFoundError(f"{root}: staged data but no committed snapshot")
-    return spark.read.parquet(root)
+    return SnapshotTable(os.path.join(out_dir, "routed")).read(spark)
 
 
 def routed_data_dirs(out_dir: str) -> list[str]:
@@ -457,10 +461,10 @@ def routed_data_dirs(out_dir: str) -> list[str]:
     from log_parser_cli_spark.plans.snapshots import SnapshotTable
 
     root = os.path.join(out_dir, "routed")
-    if SnapshotTable.is_snapshot_dir(root):
-        table = SnapshotTable(root)
-        return [os.path.join(root, d) for d in table.manifest()["data_dirs"]]
-    return [root]
+    manifest = SnapshotTable(root).manifest()
+    if manifest is None:
+        raise FileNotFoundError(f"no committed snapshot under {root}")
+    return [os.path.join(root, d) for d in manifest["data_dirs"]]
 
 
 def aggregate_stage(spark: SparkSession, routed: DataFrame, out_dir: str) -> dict[str, str]:
@@ -501,37 +505,6 @@ def aggregate_stage(spark: SparkSession, routed: DataFrame, out_dir: str) -> dic
     return {"sink_counts": counts_path, "ntok_hist": hist_path}
 
 
-def _lineage(df: DataFrame, stage: str, run_id: str, out_dir: str, wall_ms: float) -> int:
-    """Per-partition lineage rows (K4 analog): rows per partition per stage."""
-    from pyspark.sql.functions import spark_partition_id
-
-    stats = df.groupBy(spark_partition_id().alias("partition_id")).count()
-    rows = stats.withColumn("stage", F.lit(stage)).withColumn("run_id", F.lit(run_id)).withColumn(
-        "wall_ms", F.lit(float(wall_ms))
-    )
-    rows.write.mode("append").parquet(os.path.join(out_dir, "run_metrics"))
-    return sum(r["count"] for r in stats.collect())
-
-
-def _footer_rows(path: str) -> int:
-    """Row count of a just-written parquet dir from its files' footers —
-    exact, driver-side, no scan job. Spark writes at least one file even for
-    an empty frame, so an empty glob means the dir is not on the local
-    filesystem (hdfs://, s3://) or the write layout changed: raise rather
-    than record 0 rows."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = glob.glob(os.path.join(path, "*.parquet"))
-    if not files:
-        raise FileNotFoundError(
-            f"{path}: no local *.parquet files to count rows from"
-            " (non-local URI or changed write layout)"
-        )
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
 def run_replay(
     spark: SparkSession,
     fixture_dir: str,
@@ -547,20 +520,18 @@ def run_replay(
     against an immutable template library. One wide action (the fan-out write)
     materializes everything — parse streams straight into the salted shuffle,
     no intermediate persist — then the per-sink aggregates reduce the routed
-    files. Returns the routed row count.
+    files. Returns the routed row count, observed on the route write.
     """
     vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
     if seq_df is None:
         seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
     parsed = parse_stage(spark, seq_df, vocab_rows, source_heads)
     enriched = enrich_stage(parsed, mapping_df, sources_df)
-    route_stage(enriched, out_dir, salt_buckets=salt_buckets, retain_snapshots=retain_snapshots)
-    routed = read_routed(spark, out_dir)
-    aggregate_stage(spark, routed, out_dir)
-    counts = spark.read.parquet(os.path.join(out_dir, "sink_counts"))
-    from pyspark.sql.functions import sum as _sum
-
-    return int(counts.agg(_sum("n_sequences")).first()[0] or 0)
+    counts = route_stage(
+        enriched, out_dir, salt_buckets=salt_buckets, retain_snapshots=retain_snapshots
+    )
+    aggregate_stage(spark, read_routed(spark, out_dir), out_dir)
+    return counts["rows"]
 
 
 def run_pipeline(
@@ -569,7 +540,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str = "run-1",
     resume: bool = False,
-    lineage: bool = False,
     salt_buckets: int = 16,
     mapping_df: DataFrame | None = None,
     seq_df: DataFrame | None = None,
@@ -599,6 +569,11 @@ def run_pipeline(
     conflict→delete→requeue candidate queue (``refine_mapping``) before
     routing, optionally against a carried-over ``seed_library``; per-candidate
     reports land in ``out_dir/refine_reports.json``.
+
+    Each stage's ``_manifest.json`` entry records the row counts observed on
+    its own action (``_observe``): parse ``rows``/``head_matched``, discover
+    ``templates``, route ``rows``/``unparsed``/``unmatched``.
+    ``result.counts["parsed"]`` is the parse ``rows`` of a run that parsed.
     """
     result = PipelineResult(out_dir=out_dir)
     manifest = Manifest(out_dir, run_id)
@@ -627,48 +602,33 @@ def run_pipeline(
 
     # -- stage 1: parse (checkpointed so downstream stages & resume reuse it)
     parsed_cached: DataFrame | None = None
-    count_deferred = False
+    parse_obs: Observation | None = None
 
     def do_parse():
-        nonlocal parsed_cached, count_deferred
-        parsed = parse_stage(spark, seq_df, vocab_rows, source_heads)
+        nonlocal parsed_cached, parse_obs
+        parsed, parse_obs = _observe(
+            parse_stage(spark, seq_df, vocab_rows, source_heads),
+            rows=F.count(F.lit(1)),
+            head_matched=F.count_if("head_matched"),
+        )
         if checkpoint_parse:
             parsed.write.mode("overwrite").parquet(parsed_path)
-            parsed = spark.read.parquet(parsed_path)
-            parsed_cached = parsed
-            if lineage:
-                n = _lineage(parsed, "parse", run_id, out_dir, 0)
-            else:
-                n = _footer_rows(parsed_path)
-        else:
-            # One-shot mode: persist OFF-HEAP on local storage, not in
-            # executor memory. The default MEMORY_AND_DISK cache of the fat
-            # parsed stream (19.2M rows × tokens+content) competes with the
-            # route shuffle's execution memory and thrashes: measured route
-            # 33s from a memory cache vs 23s from DISK_ONLY at bench scale
-            # (guide §5 — cached data competes with execution memory), and
-            # the full no-persist recompute alternative re-pays the 11s
-            # Python parse per consumer (measured 53-56s total vs ~46s).
-            from pyspark import StorageLevel
+            parsed_cached = spark.read.parquet(parsed_path)
+            return parse_obs.get
+        # One-shot mode: persist OFF-HEAP on local storage, not in executor
+        # memory. The default MEMORY_AND_DISK cache of the fat parsed stream
+        # (19.2M rows × tokens+content) competes with the route shuffle's
+        # execution memory and thrashes: measured route 33s from a memory
+        # cache vs 23s from DISK_ONLY at bench scale (guide §5 — cached data
+        # competes with execution memory), and the full no-persist recompute
+        # alternative re-pays the 11s Python parse per consumer (measured
+        # 53-56s total vs ~46s). The observation fires on the first action
+        # that fills the cache: discovery's aggregation, or the route write
+        # in match-only mode.
+        from pyspark import StorageLevel
 
-            parsed = parsed.persist(StorageLevel.DISK_ONLY)
-            parsed_cached = parsed
-            if lineage:
-                n = _lineage(parsed, "parse", run_id, out_dir, 0)
-            else:
-                # Deferred count (guide §1.2: remove whole passes): a
-                # dedicated count() action here would pay parse + cache
-                # write, and then discovery would re-scan the cache for its
-                # signature aggregation. Let the FIRST downstream action
-                # (discovery's aggregation — or the route write in
-                # match-only mode) materialize the cache in that same pass;
-                # the row count is read back from the cached batches after
-                # the run (column-pruned scan of batch counts, ~1s vs a
-                # 6-9s dedicated pass at 19.2M rows).
-                count_deferred = True
-                return {}
-        result.counts["parsed"] = n
-        return {"rows": n}
+        parsed_cached = parsed.persist(StorageLevel.DISK_ONLY)
+        return {}
 
     stage("parse", do_parse)
     parsed = parsed_cached if parsed_cached is not None else spark.read.parquet(parsed_path)
@@ -690,9 +650,9 @@ def run_pipeline(
                     _json.dump(reports, f, indent=1)
                 info["refine_accepted"] = sum(1 for r in reports if r["accepted"])
                 info["refine_deleted"] = sorted({d for r in reports for d in r["deleted_ids"]})
+            mapping, obs = _observe(mapping, templates=F.size(F.collect_set("template_id")))
             mapping.write.mode("overwrite").parquet(mapping_path)
-            info["templates"] = mapping.select("template_id").distinct().count()
-            return info
+            return {**info, **obs.get}
 
         stage("discover", do_discover)
         mapping_df_local = spark.read.parquet(mapping_path)
@@ -702,15 +662,12 @@ def run_pipeline(
     # -- stage 3: enrich + route
     enriched = enrich_stage(parsed, mapping_df_local, sources_df)
 
-    def do_route():
-        routed_path = route_stage(
+    stage(
+        "route",
+        lambda: route_stage(
             enriched, out_dir, salt_buckets=salt_buckets, retain_snapshots=retain_snapshots
-        )
-        if lineage:
-            _lineage(read_routed(spark, out_dir), "route", run_id, out_dir, 0)
-        return {"routed_path": routed_path}
-
-    stage("route", do_route)
+        ),
+    )
 
     # -- stage 4: aggregate from the routed files. Counter-intuitive but
     #    measured: the aggregates touch 5 tiny columns, so a column-pruned
@@ -721,12 +678,9 @@ def run_pipeline(
         return aggregate_stage(spark, read_routed(spark, out_dir), out_dir)
 
     stage("aggregate", do_aggregate)
-    if count_deferred:
-        # cache was materialized by discovery/route above; this scan
-        # decodes no columns, it just sums cached-batch row counts
-        n = parsed_cached.count()
-        result.counts["parsed"] = n
-        manifest.commit("parse", **{**manifest.stage_info("parse"), "rows": n})
-    if not checkpoint_parse and parsed_cached is not None:
-        parsed_cached.unpersist()
+    if parse_obs is not None:
+        result.counts["parsed"] = parse_obs.get["rows"]
+        if not checkpoint_parse:
+            manifest.commit("parse", **{**manifest.stage_info("parse"), **parse_obs.get})
+            parsed_cached.unpersist()
     return result

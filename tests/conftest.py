@@ -33,5 +33,5 @@ def pipeline_out(spark, fixture_dir, tmp_path_factory) -> str:
     from log_parser_cli_spark.plans.pipeline import run_pipeline
 
     out = str(tmp_path_factory.mktemp("pipeline_out"))
-    run_pipeline(spark, fixture_dir, out, lineage=True)
+    run_pipeline(spark, fixture_dir, out)
     return out

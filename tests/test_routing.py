@@ -27,7 +27,9 @@ def test_infer_sources_recovers_ground_truth(spark, fixture_dir):
     assert bad.count() == 0, bad.take(5)
 
 
-def test_pipeline_with_inferred_sources_matches_baseline(spark, fixture_dir, pipeline_out, tmp_path):
+def test_pipeline_with_inferred_sources_matches_baseline(
+    spark, fixture_dir, pipeline_out, tmp_path, monkeypatch
+):
     """Full pipeline over a table whose sources were stripped: routing by
     head-pattern vote recovers them, so per-(source, star) counts for the
     routable rows equal the baseline run (noise rows route to __UNKNOWN__)."""
@@ -36,12 +38,20 @@ def test_pipeline_with_inferred_sources_matches_baseline(spark, fixture_dir, pip
     seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
     anon = seq.withColumn("source", F.lit(None).cast("string"))
     out = str(tmp_path / "routed_run")
-    result = run_pipeline(
-        spark, fixture_dir, out, run_id="routed", seq_df=anon,
-        infer_missing_sources=True, checkpoint_parse=False,
-    )
-    # one-shot mode defers the parse count to after the run; the resolved
-    # count lands in both the result and the manifest
+
+    def no_count_jobs(self):
+        raise AssertionError("pipeline counts rows by observation, never a count() job")
+
+    with monkeypatch.context() as m:
+        # type(seq), not pyspark.sql.DataFrame: the classic DataFrame
+        # subclass overrides count()
+        m.setattr(type(seq), "count", no_count_jobs)
+        result = run_pipeline(
+            spark, fixture_dir, out, run_id="routed", seq_df=anon,
+            infer_missing_sources=True, checkpoint_parse=False,
+        )
+    # one-shot mode: the parse observation fires on the first action that
+    # fills the cache; its count lands in both the result and the manifest
     with open(os.path.join(out, "_manifest.json")) as f:
         parse_entry = json.load(f)["stages"]["parse"]
     assert parse_entry["rows"] == result.counts["parsed"] == seq.count()

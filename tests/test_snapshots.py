@@ -257,12 +257,17 @@ def test_cli_time_travel_and_vacuum_roundtrip(spark, fixture_dir, pipeline_out, 
     assert rc == 1
 
 
-def test_read_routed_falls_back_on_plain_layout(spark, tmp_path):
-    from log_parser_cli_spark.plans.pipeline import read_routed
+def test_read_routed_raises_on_plain_layout(spark, tmp_path):
+    """Every routed writer commits through SnapshotTable: a plain parquet dir
+    under routed/ has no committed snapshot, so it is no table to read."""
+    from log_parser_cli_spark.plans.pipeline import read_routed, routed_data_dirs
 
     out = str(tmp_path / "legacy")
     _df(spark, [("a#1", "a", 1)]).write.parquet(os.path.join(out, "routed"))
-    assert read_routed(spark, out).count() == 1
+    with pytest.raises(FileNotFoundError, match="no committed snapshot"):
+        read_routed(spark, out)
+    with pytest.raises(FileNotFoundError, match="no committed snapshot"):
+        routed_data_dirs(out)
 
 
 def test_routed_sink_is_snapshot_committed(spark, pipeline_out):
