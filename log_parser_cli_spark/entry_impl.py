@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from log_parser_cli_spark.datagen import ensure_fixtures, fixtures_for_sf_dir
 
 # Bump when pipeline logic changes so cached run dirs are invalidated.
-ENGINE_VERSION = 7  # v7: template_mapping gains salt_share; routed file layout is salted per template
+ENGINE_VERSION = 8  # v8: streaming template library (out/mapping) is a SnapshotTable; v7: salt_share + per-template salt
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

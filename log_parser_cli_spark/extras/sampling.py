@@ -1,44 +1,17 @@
-"""Sampling operators for discovery: stride thinning + k-center selection.
+"""Diverse sample selection for head derivation (O5).
 
-Mirrors the reference's DiverseSampler (src/core/diverse-sampler.ts):
-- stride thinning (O4): every ⌊n/pool⌋-th row up to a pool cap — distributed,
-- greedy k-center max-min Jaccard selection (O5): runs on the ≤pool_size
-  collected rows on the driver (discovery-time only, never on the fact
-  stream), picking samples that maximize the minimum pairwise distance.
+Mirrors the reference's DiverseSampler (src/core/diverse-sampler.ts): greedy
+k-center max-min Jaccard selection over a small pool on the driver
+(discovery-time only, never on the fact stream), picking samples that
+maximize the minimum pairwise distance. The pool itself is stride-thinned by
+``operators/head_derive.stride_pool_collect`` (O4).
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 _TOKEN_RX = re.compile(r"[^a-z0-9]+")
-
-
-def stride_sample(df: DataFrame, order_col: str, pool_size: int = 200) -> DataFrame:
-    """Deterministic stride thinning: ≤ pool_size rows, evenly spaced by rank.
-
-    Distributed (window rank + modulo filter) — unlike random sample(), the
-    result is stable across runs and cluster sizes.
-    """
-    from pyspark.sql import Window
-
-    n = df.count()
-    if n <= pool_size:
-        return df
-    step = n // pool_size
-    # (rn - 1) % step keeps row 1 and every step-th after it; the naive
-    # rn % step == 1 form returns ZERO rows when step == 1 (x % 1 is always 0),
-    # i.e. for the whole range pool_size < n < 2*pool_size.
-    w = Window.orderBy(order_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(((F.col("_rn") - 1) % step) == 0)
-        .limit(pool_size)
-        .drop("_rn")
-    )
 
 
 def _tokens(line: str) -> frozenset[str]:
@@ -75,10 +48,3 @@ def k_center_select(lines: list[str], k: int = 12) -> list[str]:
                 min_dist[i] = d
     return [lines[i] for i in sorted(selected)]
 
-
-def diverse_sample(
-    df: DataFrame, line_col: str, order_col: str, pool_size: int = 200, k: int = 12
-) -> list[str]:
-    """Stride-thin to a pool, then k-center select on the driver (O4 + O5)."""
-    pool = [r[0] for r in stride_sample(df, order_col, pool_size).select(line_col).collect()]
-    return k_center_select(pool, k)

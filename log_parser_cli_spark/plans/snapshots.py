@@ -186,30 +186,6 @@ class SnapshotTable:
                     raise
         raise ConcurrentCommitError(f"gave up after {retries} racing commits")
 
-    def commit_append(
-        self, df: DataFrame, partition_by: tuple[str, ...] | None = None, retries: int = 5
-    ) -> int:
-        """Append ``df`` as a new snapshot = parent's data dirs + one new dir.
-        Losing a version race rebases on the winner's dir list and retries —
-        both appends survive, in commit order."""
-        staged = self._stage(df, partition_by)
-        for _ in range(retries):
-            parent = self.current_version()
-            base: list[str] = []
-            tags: dict[str, int] = {}
-            if parent is not None:
-                m = self.manifest(parent)
-                base = m["data_dirs"]
-                # carry the parent's batch tags forward — dropping them would
-                # let a later commit_batch retry miss its own prior dir and
-                # duplicate that micro-batch's rows
-                tags = {d: b for d, b in m.get("dir_batches", {}).items() if d in base}
-            try:
-                return self._try_commit(parent, "append", base + [staged], {}, tags or None)
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(f"gave up after {retries} racing commits")
-
     def commit_batch(
         self,
         df: DataFrame,

@@ -1,36 +1,10 @@
-"""Sampling (O4/O5), compression-gain detection (A10), duplication fixer (F6)."""
+"""Diverse sampling (O5), compression-gain detection (A10), duplication fixer (F6)."""
 
 import pyspark.sql.functions as F
 
 from log_parser_cli_spark.extras.overbroad import compression_gain_stats
-from log_parser_cli_spark.extras.sampling import (
-    diverse_sample,
-    jaccard_distance,
-    k_center_select,
-    stride_sample,
-)
+from log_parser_cli_spark.extras.sampling import jaccard_distance, k_center_select
 from log_parser_cli_spark.functions.templates import fix_duplicated_variables
-
-
-def test_stride_sample_is_deterministic_and_bounded(spark):
-    df = spark.range(1000).withColumnRenamed("id", "line_no")
-    a = [r.line_no for r in stride_sample(df, "line_no", 50).collect()]
-    b = [r.line_no for r in stride_sample(df, "line_no", 50).collect()]
-    assert a == b
-    assert len(a) == 50
-    # evenly spaced
-    diffs = {a[i + 1] - a[i] for i in range(len(a) - 1)}
-    assert diffs == {20}
-
-
-def test_stride_sample_step_one_range(spark):
-    """pool_size < n < 2*pool_size → step == 1; must return pool_size rows,
-    not zero (regression: rn % 1 == 1 is never true)."""
-    for n in (250, 399):
-        df = spark.range(n).withColumnRenamed("id", "line_no")
-        got = [r.line_no for r in stride_sample(df, "line_no", 200).collect()]
-        assert len(got) == 200
-        assert got == list(range(200))
 
 
 def test_k_center_prefers_diverse_lines():
@@ -53,14 +27,6 @@ def test_jaccard_distance():
     a = frozenset({"a", "b"})
     assert jaccard_distance(a, a) == 0.0
     assert jaccard_distance(a, frozenset({"c"})) == 1.0
-
-
-def test_diverse_sample_end_to_end(spark):
-    rows = [(i, f"repeated message number {i % 3}") for i in range(300)]
-    df = spark.createDataFrame(rows, "line_no long, line string")
-    picked = diverse_sample(df, "line", "line_no", pool_size=60, k=5)
-    assert 1 <= len(picked) <= 5
-    assert len(set(picked)) == len(picked)
 
 
 def test_compression_gain_flags_overbroad(spark):

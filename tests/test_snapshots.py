@@ -28,9 +28,9 @@ def test_commit_read_roundtrip_with_partitions(spark, tmp_path):
 def test_append_accumulates_and_overwrite_replaces(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"))
     t.commit_overwrite(_df(spark, [("a#1", "a", 1)]))
-    t.commit_append(_df(spark, [("b#1", "b", 2)]))
+    t.commit_batch(_df(spark, [("b#1", "b", 2)]), batch_id=0)
     assert t.read(spark).count() == 2
-    assert t.manifest()["operation"] == "append"
+    assert t.manifest()["operation"] == "append-batch"
     t.commit_overwrite(_df(spark, [("c#1", "c", 3)]))
     assert [r.template_id for r in t.read(spark).collect()] == ["c#1"]
 
@@ -103,7 +103,7 @@ def test_concurrent_commit_detected_at_commit_point(spark, tmp_path):
     with pytest.raises(ConcurrentCommitError):
         t.commit_overwrite(_df(spark, [("c#1", "c", 3)]), expected_parent=0)
     # append retries on top of the winner: both writes survive
-    t.commit_append(_df(spark, [("d#1", "d", 4)]))
+    t.commit_batch(_df(spark, [("d#1", "d", 4)]), batch_id=0)
     assert {r.template_id for r in t.read(spark).collect()} == {"b#1", "d#1"}
 
 
@@ -121,18 +121,6 @@ def test_commit_batch_retry_replaces_own_output(spark, tmp_path):
     assert t.manifest()["summary"]["batch_id"] == 1
     t._stage(_df(spark, [("c#1", "c", 3)]), None)  # crash before commit point
     assert {r.template_id for r in t.read(spark).collect()} == {"a#1", "b#1"}
-
-
-def test_commit_append_preserves_batch_tags(spark, tmp_path):
-    """An append between micro-batches must carry the parent's batch tags
-    forward — otherwise a replayed batch no longer recognizes its own prior
-    dir and duplicates its rows."""
-    t = SnapshotTable(str(tmp_path / "t"))
-    t.commit_batch(_df(spark, [("a#1", "a", 1)]), batch_id=5)
-    t.commit_append(_df(spark, [("x#1", "x", 9)]))  # operator backfill
-    t.commit_batch(_df(spark, [("a#1", "a", 1)]), batch_id=5)  # crash replay
-    got = sorted((r.template_id, r.n) for r in t.read(spark).collect())
-    assert got == [("a#1", 1), ("x#1", 9)]  # batch 5 not duplicated
 
 
 def test_vacuum_retains_snapshot_committed_during_scan(spark, tmp_path, monkeypatch):

@@ -63,10 +63,19 @@ def test_stream_with_discovery_evolves_library(spark, fixture_dir, pipeline_out,
         for r in batch.groupBy("source", "template_star").agg(FN.count("*").alias("n")).collect()
     }
     assert s_counts == b_counts
-    # library only grew: every routed template id appears in the final mapping
-    from log_parser_cli_spark.streaming.stream import read_mapping
+    # the library is a snapshot table overwritten once per micro-batch; it
+    # only grew: every (source, content_sig, template_id) row of the first
+    # version (time travel) is in the current one, so ids are never
+    # renumbered, and every routed template id is in it
+    from log_parser_cli_spark.plans.snapshots import SnapshotTable
 
-    mapping = read_mapping(spark, out)
+    library = SnapshotTable(os.path.join(out, "mapping"))
+    history = library.history()
+    assert [m["operation"] for m in history] == ["overwrite", "overwrite"]
+    key = ("source", "content_sig", "template_id")
+    first = {tuple(r) for r in library.read(spark, history[0]["version"]).select(*key).collect()}
+    mapping = library.read(spark)
+    assert first <= {tuple(r) for r in mapping.select(*key).collect()}
     mapped_ids = {r.template_id for r in mapping.select("template_id").distinct().collect()}
     routed_ids = {
         r.template_id
@@ -106,57 +115,3 @@ def test_stream_kill_mid_batch_never_exposes_partial(
     q2 = stream_replay(spark, fixture_dir, out, mapping, available_now=True)
     q2.awaitTermination(120)
     assert read_routed(spark, out).count() == read_routed(spark, pipeline_out).count()
-
-
-def test_mapping_commit_survives_crash_mid_write(spark, tmp_path):
-    """A crash between the version-dir write and the pointer flip must leave
-    the previous library fully readable (ADVICE: the old overwrite-in-place
-    scheme lost the accumulated library and renumbered ids)."""
-    from log_parser_cli_spark.streaming.stream import (
-        _commit_mapping,
-        latest_mapping_dir,
-        read_mapping,
-    )
-
-    root = str(tmp_path / "out" / "mapping")
-    os.makedirs(root)
-    m1 = spark.createDataFrame(
-        [("s", "sig1", "s#1", "alpha <*>")],
-        "source string, content_sig string, template_id string, template_star string",
-    )
-    _commit_mapping(m1, root, 0)
-    v0 = os.path.basename(latest_mapping_dir(root))
-    assert v0.startswith("v000000000000")
-
-    # simulate a crash mid-write of batch 1: staged dir half-written (no
-    # _SUCCESS), pointer never flipped — the committed library is untouched
-    broken = os.path.join(root, "v000000000001-deadbeef")
-    os.makedirs(broken)
-    with open(os.path.join(broken, "part-junk.parquet"), "w") as f:
-        f.write("not parquet")
-    assert os.path.basename(latest_mapping_dir(root)) == v0
-    got = read_mapping(spark, str(tmp_path / "out")).collect()
-    assert [(r.template_id, r.template_star) for r in got] == [("s#1", "alpha <*>")]
-
-    # the retried batch stages a FRESH dir (never overwriting the pointer's
-    # target in place), flips the pointer, and GCs every other version dir
-    m2 = m1.unionByName(
-        spark.createDataFrame(
-            [("s", "sig2", "s#2", "beta <*>")],
-            "source string, content_sig string, template_id string, template_star string",
-        )
-    )
-    _commit_mapping(m2, root, 1)
-    v1 = os.path.basename(latest_mapping_dir(root))
-    assert v1.startswith("v000000000001")
-    assert read_mapping(spark, str(tmp_path / "out")).count() == 2
-    assert not os.path.exists(broken)
-    assert not os.path.exists(os.path.join(root, v0))
-
-    # a RE-retry of the same batch while the pointer already targets a
-    # same-batch dir (the round-3 ADVICE scenario): stages a second unique
-    # dir, never touching v1's bytes mid-read
-    _commit_mapping(m2, root, 1)
-    v1b = os.path.basename(latest_mapping_dir(root))
-    assert v1b.startswith("v000000000001") and v1b != v1
-    assert read_mapping(spark, str(tmp_path / "out")).count() == 2
