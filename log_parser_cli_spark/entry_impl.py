@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from log_parser_cli_spark.datagen import ensure_fixtures, fixtures_for_sf_dir
+from log_parser_cli_spark.datagen import GEN_VERSION, ensure_fixtures, fixtures_for_sf_dir
 
 # Bump when pipeline logic changes so cached run dirs are invalidated.
 ENGINE_VERSION = 8  # v8: streaming template library (out/mapping) is a SnapshotTable; v7: salt_share + per-template salt
@@ -29,14 +29,21 @@ def _runs_base() -> str:
     return os.path.join(_REPO_ROOT, "data", "runs")
 
 
+def _run_dir(sf_dir: str, kind: str = "") -> str:
+    """Cached run dir for one sf and run kind, keyed on the engine and
+    fixture-generator versions so a logic change never reuses stale output."""
+    sf_name = os.path.basename(sf_dir.rstrip("/"))
+    tag = f"-{kind}" if kind else ""
+    return os.path.join(_runs_base(), f"{sf_name}{tag}-v{ENGINE_VERSION}.{GEN_VERSION}")
+
+
 def pipeline_out_for(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Run (or reuse) the full pipeline for this sf; returns (out_dir, fixture_dir)."""
     from log_parser_cli_spark.plans.pipeline import run_pipeline
 
     fixture_dir = fixtures_for_sf_dir(sf_dir)
     sf_name = os.path.basename(sf_dir.rstrip("/"))
-    from log_parser_cli_spark.datagen import GEN_VERSION
-    out_dir = os.path.join(_runs_base(), f"{sf_name}-v{ENGINE_VERSION}.{GEN_VERSION}")
+    out_dir = _run_dir(sf_dir)
     run_pipeline(spark, fixture_dir, out_dir, run_id=f"entry-{sf_name}", resume=True)
     return out_dir, fixture_dir
 
@@ -186,11 +193,8 @@ def q_head_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LLM): stride pools per source → driver-side keep-best refine loop →
     distributed coverage validation of the final pattern (P5). Sources whose
     derivation fails are omitted (matching the oracle twin's filter)."""
-    from log_parser_cli_spark.operators.head_derive import (
-        refine_head_pattern,
-        stride_pool_collect,
-        to_jvm_pattern,
-    )
+    from log_parser_cli_spark.functions.templates import to_jvm_pattern
+    from log_parser_cli_spark.operators.head_derive import refine_head_pattern, stride_pool_collect
 
     fx = fixtures_for_sf_dir(sf_dir)
     gt = spark.read.parquet(os.path.join(fx, "ground_truth.parquet")).select(
@@ -243,16 +247,12 @@ def q_eval_from_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     __MACRO__ averages. Reports are materialized from the perturbed labels
     fixture (the eval corpus analog) and read back from disk."""
     from log_parser_cli_spark.eval.harness import eval_from_reports, write_eval_reports
-    from log_parser_cli_spark.datagen import GEN_VERSION
 
     fx = fixtures_for_sf_dir(sf_dir)
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
     gt = spark.read.parquet(os.path.join(fx, "ground_truth.parquet")).select(
         "line_no", "source", "rendered", "event_id"
     )
-    report_dir = os.path.join(
-        _runs_base(), f"{sf_name}-reports-v{ENGINE_VERSION}.{GEN_VERSION}"
-    )
+    report_dir = _run_dir(sf_dir, "reports")
     # reuse the cached reports only when BOTH sinks committed — a crash
     # between the matches and failures writes must trigger regeneration, not
     # silently undercount failures (ADVICE)
@@ -492,12 +492,11 @@ def q_pipeline_with_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     template ends up deleted and the final per-(source, star) clustering still
     equals ground truth exactly — the refine machine recovers from a poisoned
     carried-over library without help."""
-    from log_parser_cli_spark.datagen import GEN_VERSION
     from log_parser_cli_spark.plans.pipeline import run_pipeline
 
     fx = fixtures_for_sf_dir(sf_dir)
     sf_name = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(_runs_base(), f"{sf_name}-refine-v{ENGINE_VERSION}.{GEN_VERSION}")
+    out_dir = _run_dir(sf_dir, "refine")
     run_pipeline(
         spark,
         fx,
@@ -616,14 +615,16 @@ def q_dedup_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_hot_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The no-silent-caps REPORT for the guarded query: how many buckets were
     capped, the largest, and how many banded rows sit in them."""
-    from log_parser_cli_spark.extras.dedup import hot_bucket_stats, simhash, simhash_banded
+    from log_parser_cli_spark.extras.dedup import SIMHASH_BITS, bit_bands, hot_bucket_stats, simhash
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    stats = hot_bucket_stats(
-        simhash_banded(simhash(docs, "doc_id", "text"), SIMHASH_CHUNKS),
-        ["chunk", "val"],
-        SIMHASH_CAP_BUCKET,
+    banded = bit_bands(
+        simhash(docs, "doc_id", "text"),
+        "simhash",
+        SIMHASH_BITS // SIMHASH_CHUNKS,
+        [(c,) for c in range(SIMHASH_CHUNKS)],
     )
+    stats = hot_bucket_stats(banded, ["band", "val"], SIMHASH_CAP_BUCKET)
     return stats.agg(
         F.count("*").cast("long").alias("n_hot_buckets"),
         F.coalesce(F.max("n_docs"), F.lit(0)).cast("long").alias("max_bucket_docs"),
@@ -641,11 +642,11 @@ SIMHASH_WIDE_COMBO = 2
 
 
 def q_dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs_wide
+    from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
     fp = simhash(docs, "doc_id", "text")
-    return simhash_pairs_wide(
+    return simhash_pairs(
         fp,
         max_hamming=SIMHASH_WIDE_HAMMING,
         chunks=SIMHASH_WIDE_CHUNKS,
@@ -660,12 +661,12 @@ def q_simhash_wide_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.dedup import (
         simhash,
         simhash_bruteforce_pairs,
-        simhash_pairs_wide,
+        simhash_pairs,
     )
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
     fp = simhash(docs, "doc_id", "text")
-    banded = simhash_pairs_wide(
+    banded = simhash_pairs(
         fp,
         max_hamming=SIMHASH_WIDE_HAMMING,
         chunks=SIMHASH_WIDE_CHUNKS,
@@ -921,13 +922,11 @@ def q_stream_discovery_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    from log_parser_cli_spark.datagen import GEN_VERSION
     from log_parser_cli_spark.plans.pipeline import read_routed
     from log_parser_cli_spark.streaming.stream import stream_with_discovery
 
     fx = fixtures_for_sf_dir(sf_dir)
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    base = os.path.join(_runs_base(), f"{sf_name}-sdisc-v{ENGINE_VERSION}.{GEN_VERSION}")
+    base = _run_dir(sf_dir, "sdisc")
     split_dir = os.path.join(base, "stream_src")
     # _SPLIT_OK is written into the temp dir BEFORE the atomic rename, so
     # its presence proves a complete build; a dir without it (e.g. the
@@ -998,15 +997,11 @@ def q_stream_batch_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache, so a repeat is an availableNow no-op. Oracle: the ground truth's
     row count with zero mismatches (any divergence inflates the full-outer
     row count or a mismatch sum)."""
-    from log_parser_cli_spark.datagen import GEN_VERSION
     from log_parser_cli_spark.plans.pipeline import read_routed
     from log_parser_cli_spark.streaming.stream import stream_replay
 
     out, fx = pipeline_out_for(spark, sf_dir)
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    stream_out = os.path.join(
-        _runs_base(), f"{sf_name}-stream-v{ENGINE_VERSION}.{GEN_VERSION}"
-    )
+    stream_out = _run_dir(sf_dir, "stream")
     mapping = spark.read.parquet(os.path.join(out, "template_mapping"))
     q = stream_replay(spark, fx, stream_out, mapping, available_now=True)
     if not q.awaitTermination(600):
@@ -1181,8 +1176,9 @@ def _simhash_combo_banded_cte(
 ) -> str:
     """Like ``_simhash_fp_banded_cte`` but bands every C(chunks, combo_size)
     chunk COMBINATION (concatenated chunk values as the key) — the oracle
-    twin of ``dedup.simhash_pairs_wide``; itertools.combinations order is
-    deterministic, so band ids line up on both sides."""
+    twin of ``dedup.simhash_pairs(..., combo_size=...)``;
+    itertools.combinations order is deterministic, so band ids line up on
+    both sides."""
     from itertools import combinations
 
     width = bits // chunks

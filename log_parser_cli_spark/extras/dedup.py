@@ -11,11 +11,15 @@ no Python UDFs) and scale-shaped:
   bucket-join for candidates → exact-Jaccard verification. The classic
   Broder construction; the only shuffles are keyed on shingles/bands.
 - SimHash: word-hash sign-sum → 60-bit fingerprint; candidate pairs via
-  pigeonhole banding (4×15-bit chunks) then Hamming ≤ r filter.
+  pigeonhole banding (4×15-bit chunks) then Hamming ≤ r filter. Every
+  packed-bit signature (SimHash, and RHP in extras/similarity.py) bands
+  through ``bit_bands`` / ``bit_band_pairs``.
 - embedding cosine near-dup: see extras/similarity.py for the kernel.
 """
 
 from __future__ import annotations
+
+from itertools import combinations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -177,34 +181,36 @@ def banded_pair_join(
     sharing simhash 0, a dead band value — makes the join's OUTPUT quadratic,
     and AQE can split a skewed input but not a quadratic output. Buckets
     above the cap instead emit a TWO-LEVEL STAR in O(m) rows: members with
-    an IDENTICAL full signature (the payload, or the carried ``_bands``
-    array) link to their signature-group's smallest doc at signature
-    distance 0 — so the exact-duplicate groups that actually cause
-    degenerate buckets lose NOTHING to downstream distance filters — and
-    the group minima link to the bucket's smallest doc. The guard is
-    therefore an APPROXIMATION, and honestly so: a pair of DISTINCT
-    signatures whose only shared buckets are capped survives downstream
-    radius filtering only if the representative edges stay within the
-    radius; exact pair semantics inside a hot bucket inherently require up
-    to C(m, 2) distance checks, which is the very cost the cap exists to
-    refuse. Pair-list semantics stay EXACT for every bucket ≤ max_bucket;
-    capped buckets are reported by ``hot_bucket_stats`` over the same
-    banded rows — no silent truncation. With the default None the guard is
-    off (the oracle-verified exact shape; recall gates run here).
+    an IDENTICAL ``payload`` (the carried full signature) link to their
+    signature-group's smallest doc at signature distance 0 — so the
+    exact-duplicate groups that actually cause degenerate buckets lose
+    NOTHING to downstream distance filters — and the group minima link to
+    the bucket's smallest doc. The guard is therefore an APPROXIMATION, and
+    honestly so: a pair of DISTINCT signatures whose only shared buckets
+    are capped survives downstream radius filtering only if the
+    representative edges stay within the radius; exact pair semantics inside
+    a hot bucket inherently require up to C(m, 2) distance checks, which is
+    the very cost the cap exists to refuse. Pair-list semantics stay EXACT
+    for every bucket ≤ max_bucket; capped buckets are reported by
+    ``hot_bucket_stats`` over the same banded rows — no silent truncation.
+    With an empty payload the group is the whole bucket, so the star is
+    single-level (every member → bucket min). With the default None the
+    guard is off (the oracle-verified exact shape; recall gates run here).
 
     ``first_band_filter`` replaces the pair-dedup DISTINCT with a predicate
     (SQL over the ``x``/``y`` aliases and the key columns) that is true for
     exactly ONE of a pair's colliding bands — the classic LSH trick when
-    band membership is a pure function of the carried payload (SimHash:
-    band j collides iff the XOR's chunks for combo j are all zero, so
-    "band = first matching band" needs no data beyond the two
-    fingerprints). The DISTINCT is the dominant cost of the unguarded
-    plan — it shuffles every (pair × colliding-band) row, two orders of
-    magnitude more rows than the final pair set — while the filter is
-    evaluated inside the join's codegen stage and nothing wide ever
-    shuffles. Only valid WITHOUT the guard: under a cap, a pair's earliest
-    matching band may sit in a capped bucket, so the row that the filter
-    would keep might not exist (raises to prevent silent pair loss)."""
+    band membership is a pure function of the carried payload (packed
+    signatures: band j collides iff the XOR's slices for combo j are all
+    zero, so "band = first matching band" needs no data beyond the two
+    signatures; see ``bit_band_pairs``). The DISTINCT is the dominant cost
+    of the unguarded plan — it shuffles every (pair × colliding-band) row,
+    two orders of magnitude more rows than the final pair set — while the
+    filter is evaluated inside the join's codegen stage and nothing wide
+    ever shuffles. Only valid WITHOUT the guard: under a cap, a pair's
+    earliest matching band may sit in a capped bucket, so the row that the
+    filter would keep might not exist (raises to prevent silent pair
+    loss)."""
     if first_band_filter is not None and max_bucket is not None:
         raise ValueError(
             "first_band_filter cannot combine with max_bucket: a pair's first "
@@ -240,53 +246,33 @@ def banded_pair_join(
         .select(*pair_select())
     )
     hot = sized.filter(F.col("_bsz") > max_bucket).drop("_bsz")
-    # the refinement signature: the payload if carried, else whatever full
-    # per-doc signature the banded rows hold (_bands array, or the raw
-    # simhash that simhash_candidates' rows carry without payload)
-    sig_cols = list(payload) or [
-        c for c in ("_bands", "simhash") if c in banded.columns
-    ]
-    if sig_cols:
-        # two-level star (see docstring): signature-group min first, then
-        # bucket min over the group minima
-        grp = hot.groupBy(*keys, *sig_cols).agg(F.min("doc").alias("_gmin"))
-        intra = (
-            hot.join(grp, [*keys, *sig_cols])
-            .filter(F.col("doc") != F.col("_gmin"))
-            .select(
-                F.col("_gmin").alias("a"),
-                F.col("doc").alias("b"),
-                # identical signature on both sides by construction
-                *[F.col(c).alias(f"{c}_a") for c in payload],
-                *[F.col(c).alias(f"{c}_b") for c in payload],
-            )
+    # two-level star (see docstring): payload-group min first, then bucket
+    # min over the group minima
+    grp = hot.groupBy(*keys, *payload).agg(F.min("doc").alias("_gmin"))
+    intra = (
+        hot.join(grp, [*keys, *payload])
+        .filter(F.col("doc") != F.col("_gmin"))
+        .select(
+            F.col("_gmin").alias("a"),
+            F.col("doc").alias("b"),
+            # identical signature on both sides by construction
+            *[F.col(c).alias(f"{c}_a") for c in payload],
+            *[F.col(c).alias(f"{c}_b") for c in payload],
         )
-        reps = grp.select(*keys, *sig_cols, F.col("_gmin").alias("doc"))
-        brep = reps.groupBy(*keys).agg(F.min(F.struct("doc", *payload)).alias("_rep"))
-        inter = (
-            reps.join(brep, list(keys))
-            .filter(F.col("doc") != F.col("_rep.doc"))
-            .select(
-                F.col("_rep.doc").alias("a"),
-                F.col("doc").alias("b"),
-                *[F.col(f"_rep.{c}").alias(f"{c}_a") for c in payload],
-                *[F.col(c).alias(f"{c}_b") for c in payload],
-            )
+    )
+    reps = grp.select(*keys, *payload, F.col("_gmin").alias("doc"))
+    brep = reps.groupBy(*keys).agg(F.min(F.struct("doc", *payload)).alias("_rep"))
+    inter = (
+        reps.join(brep, list(keys))
+        .filter(F.col("doc") != F.col("_rep.doc"))
+        .select(
+            F.col("_rep.doc").alias("a"),
+            F.col("doc").alias("b"),
+            *[F.col(f"_rep.{c}").alias(f"{c}_a") for c in payload],
+            *[F.col(c).alias(f"{c}_b") for c in payload],
         )
-        star = intra.unionByName(inter)
-    else:
-        # no signature to refine on: single-level star vs the bucket min
-        rep = hot.groupBy(*keys).agg(F.min(F.struct("doc", *payload)).alias("_rep"))
-        star = (
-            hot.join(rep, list(keys))
-            .filter(F.col("doc") != F.col("_rep.doc"))
-            .select(
-                F.col("_rep.doc").alias("a"),
-                F.col("doc").alias("b"),
-                *[F.col(f"_rep.{c}").alias(f"{c}_a") for c in payload],
-                *[F.col(c).alias(f"{c}_b") for c in payload],
-            )
-        )
+    )
+    star = intra.unionByName(inter)
     return normal_pairs.unionByName(star).distinct()
 
 
@@ -295,8 +281,8 @@ FIRST_BAND_ARRAY_FILTER = (
 )
 """Generic first-matching-band predicate for banded rows that carry their
 full per-band value array as ``_bands``: a pair is kept only in the first
-band where the two arrays agree — the payload-array twin of the SimHash
-XOR construction (see ``banded_pair_join``)."""
+band where the two arrays agree — the payload-array twin of the packed-
+signature XOR construction (see ``bit_band_pairs``)."""
 
 
 def minhash_banded(
@@ -323,20 +309,6 @@ def minhash_banded(
     )
     return sig.select("doc", *carry, buckets.alias("_bands")).select(
         "doc", *carry, "_bands", F.posexplode("_bands").alias("band", "bucket")
-    )
-
-
-def minhash_lsh_candidates(
-    sig: DataFrame, bands: int = 4, rows_per_band: int = 4, max_bucket: int | None = None
-) -> DataFrame:
-    """LSH banding: docs sharing any band bucket become candidate pairs (a<b).
-    ``max_bucket`` = hot-bucket guard (see ``banded_pair_join``); unguarded,
-    pair dedup is the shuffle-free first-band filter."""
-    return banded_pair_join(
-        minhash_banded(sig, bands, rows_per_band),
-        ["band", "bucket"],
-        max_bucket,
-        first_band_filter=None if max_bucket is not None else FIRST_BAND_ARRAY_FILTER,
     )
 
 
@@ -394,26 +366,67 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return fp
 
 
-def simhash_banded(fp: DataFrame, chunks: int = 4) -> DataFrame:
-    """(doc, simhash, chunk, val) banded rows: the fingerprint split into
-    ``chunks`` exact sub-keys (single-chunk pigeonhole banding)."""
-    width = SIMHASH_BITS // chunks
+def bit_bands(
+    sig: DataFrame, sig_col: str, width: int, combos: list[tuple[int, ...]]
+) -> DataFrame:
+    """(doc, <sig_col>, band, val) banded rows over a packed-bit signature:
+    band i's key packs the ``width``-bit slices of ``sig_col`` named by
+    ``combos[i]`` (slice c = bits c·width … (c+1)·width − 1). One-slice
+    combos are plain bit-slice banding (SimHash chunks, RHP bands); larger
+    combos are the multi-index construction ``simhash_pairs`` uses for wide
+    radii. The only place a packed signature becomes band keys."""
     mask = (1 << width) - 1
-    return fp.select(
+
+    def piece(c: int, j: int) -> str:
+        s = f"(({sig_col} >> {c * width}) & {mask})"
+        return f"({s} << {j * width})" if j else s
+
+    return sig.select(
         "doc",
-        "simhash",
+        sig_col,
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.expr(f"(simhash >> {c * width}) & {mask}").alias("val"),
+                        F.lit(i).alias("band"),
+                        F.expr(" + ".join(piece(c, j) for j, c in enumerate(combo))).alias("val"),
                     )
-                    for c in range(chunks)
+                    for i, combo in enumerate(combos)
                 ]
             )
-        ).alias("ck"),
-    ).select("doc", "simhash", "ck.chunk", "ck.val")
+        ).alias("bk"),
+    ).select("doc", sig_col, "bk.band", "bk.val")
+
+
+def bit_band_pairs(
+    sig: DataFrame,
+    sig_col: str,
+    width: int,
+    combos: list[tuple[int, ...]],
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Candidate pairs (a < b, <sig_col>_a, <sig_col>_b) of docs sharing any
+    ``bit_bands`` band. ``max_bucket`` = hot-bucket guard (see
+    ``banded_pair_join``), refining on the carried signature. Unguarded, a
+    pair is kept only in its FIRST matching band — band i matches iff the
+    XOR of the two signatures is zero on every slice of combo i, a pure
+    function of the carried signatures — so no pair DISTINCT is shuffled."""
+    mask = (1 << width) - 1
+    first = " ".join(
+        "WHEN ("
+        + " AND ".join(
+            f"(((x.{sig_col} ^ y.{sig_col}) >> {c * width}) & {mask}) = 0" for c in combo
+        )
+        + f") THEN {i}"
+        for i, combo in enumerate(combos)
+    )
+    return banded_pair_join(
+        bit_bands(sig, sig_col, width, combos),
+        ["band", "val"],
+        max_bucket,
+        payload=(sig_col,),
+        first_band_filter=None if max_bucket is not None else f"band = (CASE {first} END)",
+    )
 
 
 def simhash_candidates(
@@ -422,21 +435,34 @@ def simhash_candidates(
     """Raw SimHash banding candidates (a < b): docs sharing any exact chunk.
     Feed these to a verifier (e.g. jaccard_pairs) — the cross-family LSH plan.
     ``max_bucket`` = hot-bucket guard (see ``banded_pair_join``)."""
-    return banded_pair_join(simhash_banded(fp, chunks), ["chunk", "val"], max_bucket)
+    return bit_band_pairs(
+        fp, "simhash", SIMHASH_BITS // chunks, [(c,) for c in range(chunks)], max_bucket
+    ).select("a", "b")
 
 
 def simhash_pairs(
-    fp: DataFrame, max_hamming: int = 3, chunks: int = 4, max_bucket: int | None = None
+    fp: DataFrame,
+    max_hamming: int = 3,
+    chunks: int = 4,
+    combo_size: int | None = None,
+    max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance via pigeonhole banding.
 
-    With ``chunks`` > ``max_hamming`` any pair within distance shares ≥1 exact
-    chunk, so candidates come from equi-joins on chunk values — never an
-    all-pairs cross join. The guarantee is enforced: a radius ≥ chunks would
-    silently drop pairs that differ in every chunk (recall hole), so such
-    parameterizations raise instead of advertising semantics they can't keep.
-    ``simhash_recall`` in the query suite verifies recall == 1.0 vs the
-    brute-force baseline.
+    Generalized pigeonhole (the HmSearch/multi-index construction): ≤ r
+    differing bits touch ≤ r of the ``chunks`` chunks, so ≥ chunks − r
+    chunks agree exactly — banding on every C(chunks, q) chunk combination
+    with 1 ≤ q ≤ chunks − r (``combo_size``, default chunks − r) has recall
+    1 by construction, and candidates come from equi-joins on band values,
+    never an all-pairs cross join. q = 1 is single-chunk banding; a larger
+    q gives each band key q × width bits of selectivity, so radius 8 over
+    60 bits runs with 10 chunks / q=2 / 45 bands on 12-bit keys instead of
+    drowning in 6-bit single-chunk buckets (banded-row cost C(chunks, q) ×
+    corpus — a documented space/selectivity trade). The guarantee is
+    enforced: parameterizations that could silently drop in-radius pairs
+    raise instead of advertising semantics they can't keep.
+    ``simhash_recall`` / ``simhash_wide_recall`` in the query suite verify
+    recall == 1.0 vs the brute-force baseline.
     """
     if chunks <= max_hamming:
         raise ValueError(
@@ -445,80 +471,6 @@ def simhash_pairs(
             f"distance {chunks}..{max_hamming} can differ in all {chunks} "
             f"chunks and would be silently missed"
         )
-    width = SIMHASH_BITS // chunks
-    mask = (1 << width) - 1
-    # dedup-free unguarded plan: keep a pair only in its FIRST matching
-    # chunk — chunk c matches iff the XOR's c-th chunk is zero, a pure
-    # function of the two fingerprints (see banded_pair_join)
-    first = " ".join(
-        f"WHEN (((x.simhash ^ y.simhash) >> {c * width}) & {mask}) = 0 THEN {c}"
-        for c in range(chunks)
-    )
-    pairs = banded_pair_join(
-        simhash_banded(fp, chunks),
-        ["chunk", "val"],
-        max_bucket,
-        payload=("simhash",),
-        first_band_filter=None if max_bucket is not None else f"chunk = (CASE {first} END)",
-    )
-    return pairs.select(
-        "a",
-        "b",
-        F.bit_count(F.expr("simhash_a ^ simhash_b")).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
-
-
-def simhash_banded_wide(
-    fp: DataFrame, chunks: int = 10, combo_size: int = 2
-) -> DataFrame:
-    """(doc, simhash, band, val) rows banding every C(chunks, combo_size)
-    chunk COMBINATION (concatenated chunk values as the band key)."""
-    from itertools import combinations
-
-    width = SIMHASH_BITS // chunks
-    mask = (1 << width) - 1
-    combos = list(combinations(range(chunks), combo_size))
-    return fp.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.expr(
-                            " + ".join(
-                                f"(((simhash >> {c * width}) & {mask}) << {j * width})"
-                                for j, c in enumerate(combo)
-                            )
-                        ).alias("val"),
-                    )
-                    for i, combo in enumerate(combos)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "simhash", "bk.band", "bk.val")
-
-
-def simhash_pairs_wide(
-    fp: DataFrame,
-    max_hamming: int = 8,
-    chunks: int = 10,
-    combo_size: int | None = None,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Wide-radius Hamming pairs via chunk-COMBINATION banding.
-
-    Generalized pigeonhole (the HmSearch/multi-index construction): ≤ r
-    differing bits touch ≤ r chunks, so ≥ chunks − r chunks agree exactly —
-    banding on every C(chunks, q) combination with q ≤ chunks − r keys has
-    recall 1 by construction. Compared to ``simhash_pairs`` (q = 1, radius
-    capped at chunks − 1, key width shrinking as chunks grows), each band
-    key here carries q × width bits of selectivity, so radius 8 over 60
-    bits runs with 10 chunks / q=2 / 45 bands on 12-bit keys instead of
-    drowning in 6-bit single-chunk buckets. Banded-row cost is
-    C(chunks, q) × corpus — a documented space/selectivity trade.
-    """
     if combo_size is None:
         combo_size = chunks - max_hamming
     if combo_size < 1 or combo_size > chunks - max_hamming:
@@ -533,27 +485,12 @@ def simhash_pairs_wide(
             f"chunks={chunks} must divide {SIMHASH_BITS} bits — a remainder "
             f"leaves high bits outside every band (silent recall hole)"
         )
-    from itertools import combinations
-
-    width = SIMHASH_BITS // chunks
-    mask = (1 << width) - 1
-    # dedup-free unguarded plan: band i (a chunk COMBINATION) matches iff the
-    # XOR's chunks are zero for every member of combo i; keep the pair only
-    # in its first matching combination (see banded_pair_join)
-    first = " ".join(
-        "WHEN ("
-        + " AND ".join(
-            f"(((x.simhash ^ y.simhash) >> {c * width}) & {mask}) = 0" for c in combo
-        )
-        + f") THEN {i}"
-        for i, combo in enumerate(combinations(range(chunks), combo_size))
-    )
-    pairs = banded_pair_join(
-        simhash_banded_wide(fp, chunks, combo_size),
-        ["band", "val"],
+    pairs = bit_band_pairs(
+        fp,
+        "simhash",
+        SIMHASH_BITS // chunks,
+        list(combinations(range(chunks), combo_size)),
         max_bucket,
-        payload=("simhash",),
-        first_band_filter=None if max_bucket is not None else f"band = (CASE {first} END)",
     )
     return pairs.select(
         "a",
@@ -628,19 +565,6 @@ def connected_components(
             f"(a component with diameter > max_iters exists; raise the bound)"
         )
     return labels.select(F.col("x").alias("doc"), F.col("comp").alias("component"))
-
-
-def dedup_survivors(
-    docs: DataFrame, components: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """The deduplicated corpus: keep exactly one doc per component — the
-    component label IS the surviving doc id (smallest reachable), so the
-    filter is a broadcast-able semi-join, no shuffle of the fact table's
-    payload columns."""
-    keep = components.filter(F.col("doc") == F.col("component")).select(
-        F.col("doc").alias(id_col)
-    )
-    return docs.join(keep, id_col, "left_semi")
 
 
 def simhash_bruteforce_pairs(fp: DataFrame, max_hamming: int = 3) -> DataFrame:

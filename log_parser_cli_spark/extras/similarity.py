@@ -27,6 +27,8 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from log_parser_cli_spark.extras.dedup import bit_band_pairs
+
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 NORM = "sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
 
@@ -95,13 +97,13 @@ def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
 
 def vectors_to_df(spark, vectors: list[list[float]], col: str) -> DataFrame:
     """ONE-row DataFrame holding ``vectors`` as an array<array<double>>
-    column — the broadcast-join carrier for the scale path. The literal
-    paths inline each vector into the SQL text (perfect for DuckDB oracle
+    column — the broadcast-join carrier for the IVF scale path. The literal
+    path inlines each vector into the SQL text (perfect for DuckDB oracle
     portability, but the expression tree grows as O(n_vectors × dim)); at
     production sizes (IVF lists of 4k–65k × dim 768–4096) that plan would
-    collapse, so the join paths attach the same numbers as DATA via a
-    broadcast single-row cross join and reduce them with higher-order
-    functions — plan size constant in both n_vectors and dim."""
+    collapse, so ``ivf_topk(centroids_df=...)`` attaches the same numbers as
+    DATA via a broadcast single-row cross join and reduces them with
+    higher-order functions — plan size constant in both n_vectors and dim."""
     return spark.createDataFrame([(vectors,)], f"{col} array<array<double>>")
 
 
@@ -112,7 +114,6 @@ def rhp_candidates(
     rows_per_band: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    planes_df: DataFrame | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate pairs (a < b) by banded random-hyperplane signatures.
@@ -120,89 +121,30 @@ def rhp_candidates(
     Each vector gets ``n_planes`` sign bits (dot with a hyperplane ≥ 0);
     bits group into bands of ``rows_per_band``; vectors sharing any band
     value become candidates via an equi-join on (band, value) — the shuffles
-    are keyed on band buckets, never corpus×corpus.
-
-    Two physically different, numerically identical plane carriers:
-    - default: every plane inlined as a double-array LITERAL (oracle-
-      portable; plan grows with n_planes × dim);
-    - ``planes_df`` (from ``vectors_to_df(spark, hyperplanes(...), "planes")``):
-      planes ride a broadcast single-row join and the signature is computed
-      by higher-order functions — constant plan size, the 100 TB shape.
+    are keyed on band buckets, never corpus×corpus. Every plane is inlined
+    as a double-array LITERAL, so a DuckDB oracle replays the same
+    signatures. ``max_bucket`` = hot-bucket guard (see
+    ``dedup.banded_pair_join``).
     """
     if n_planes > 62:
         raise ValueError(f"n_planes={n_planes} must fit a signed 64-bit signature")
-    n_bands = n_planes // rows_per_band
-    mask = (1 << rows_per_band) - 1
-    # Pack ALL sign bits into ONE long signature per vector (the SimHash
-    # shape): band vals become bit-slices of the signature, computed by JVM
-    # shifts AFTER the explode instead of hyperplane dot products. The
-    # round-5 DISTINCT-dedup revert carried the per-band value ARRAY through
-    # the banding, and whole-stage codegen re-evaluated the 60 dot products
-    # per exploded row (measured 4×); the packed long plus an explicit
-    # exchange below makes that re-evaluation impossible — the signature is
-    # shuffle-materialized once per vector (16 bytes/row, negligible at any
-    # scale next to the banded-row shuffle the join itself pays).
-    if planes_df is not None:
-        sig_expr = (
-            f"aggregate(zip_with("
-            f"transform(planes, p -> IF(({DOT.format(a=vec_col, b='p')}) >= 0, 1, 0)), "
-            f"sequence(0, {n_planes - 1}), "
-            f"(x, j) -> shiftleft(CAST(x AS BIGINT), j)), "
-            f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-        sig = embeddings.join(F.broadcast(planes_df)).select(
-            F.col(id_col).alias("doc"), F.expr(sig_expr).alias("rhpsig")
-        )
-    else:
-        planes = hyperplanes(n_planes, dim)
-        sig_expr = " + ".join(
-            f"(CASE WHEN ({DOT.format(a=vec_col, b=_lit_array(planes[j]))}) >= 0 "
-            f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            for j in range(n_planes)
-        )
-        sig = embeddings.select(
-            F.col(id_col).alias("doc"), F.expr(sig_expr).alias("rhpsig")
-        )
-    banded = sig.repartition(F.col("doc")).select(
-        "doc",
-        "rhpsig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.expr(f"(rhpsig >> {b * rows_per_band}) & {mask}").alias("val"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "rhpsig", "bk.band", "bk.val")
-    # shared guarded tail (hot-bucket star cap + reporting via
-    # dedup.hot_bucket_stats) — LSH bucket skew is one failure mode across
-    # every banding family, so it gets one implementation. Unguarded, pair
-    # dedup is the shuffle-free first-matching-band filter (band b matches
-    # iff the XOR'd signatures' b-th slice is zero — the SimHash
-    # construction); guarded, the carried signature gives the two-level
-    # star its refinement key, so exact-duplicate vector groups inside a
-    # hot bucket keep their intra-group edges (previously the RHP guard
-    # degraded to the single-level star and dropped them).
-    from log_parser_cli_spark.extras.dedup import banded_pair_join
-
-    if max_bucket is not None:
-        return banded_pair_join(
-            banded, ["band", "val"], max_bucket, payload=("rhpsig",)
-        ).select("a", "b")
-    first = " ".join(
-        f"WHEN (((x.rhpsig ^ y.rhpsig) >> {b * rows_per_band}) & {mask}) = 0 THEN {b}"
-        for b in range(n_bands)
+    planes = hyperplanes(n_planes, dim)
+    sig_expr = " + ".join(
+        f"(CASE WHEN ({DOT.format(a=vec_col, b=_lit_array(planes[j]))}) >= 0 "
+        f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+        for j in range(n_planes)
     )
-    return banded_pair_join(
-        banded,
-        ["band", "val"],
-        None,
-        first_band_filter=f"band = (CASE {first} END)",
-    ).select("a", "b")
+    # Pack ALL sign bits into ONE long signature per vector (the SimHash
+    # shape), so band vals are bit-slices computed by JVM shifts AFTER the
+    # explode. The explicit exchange on doc matters: without it whole-stage
+    # codegen re-evaluated the 60 dot products per exploded row (measured
+    # 4×); the signature is shuffle-materialized once per vector instead
+    # (16 bytes/row, negligible next to the banded-row shuffle the join pays).
+    sig = embeddings.select(
+        F.col(id_col).alias("doc"), F.expr(sig_expr).alias("rhpsig")
+    ).repartition("doc")
+    bands = [(b,) for b in range(n_planes // rows_per_band)]
+    return bit_band_pairs(sig, "rhpsig", rows_per_band, bands, max_bucket).select("a", "b")
 
 
 def cosine_pairs(

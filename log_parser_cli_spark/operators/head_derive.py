@@ -33,7 +33,7 @@ place of the LLM (everything else mirrors the reference's control flow):
   full-scan coverage check runs once, not per round.
 
 Patterns are emitted in Python/RE2 dialect (``(?P<content>...)``);
-``to_jvm_pattern`` converts for Spark ``rlike``.
+``functions.templates.to_jvm_pattern`` converts for Spark ``rlike``.
 """
 
 from __future__ import annotations
@@ -211,11 +211,6 @@ def refine_head_pattern(
             best_pattern, best_unmatched = candidate, cand_unmatched
         history.append(len(best_unmatched))
     return best_pattern, len(best_unmatched), history
-
-
-def to_jvm_pattern(pattern: str) -> str:
-    """Python-dialect named groups → JVM dialect for Spark ``rlike``."""
-    return pattern.replace("(?P<", "(?<").replace("(?P=", r"\k<")
 
 
 def _pool_hash(key) -> int:

@@ -26,6 +26,7 @@ are built once per worker process, not per task.
 
 from __future__ import annotations
 
+import hashlib
 import re
 from collections.abc import Iterator
 
@@ -48,19 +49,16 @@ _EXEC_CACHE: dict = {}
 
 
 def _vocab_cache_key(vocab_rows: list[tuple[int, str]]) -> tuple:
-    """Cache key robust to two same-length vocabs on one executor: length +
-    crc of a sampled row subset (cheap; computed once per task)."""
-    import zlib
-
-    step = max(1, len(vocab_rows) // 16)
-    return ("vocab", len(vocab_rows), zlib.crc32(repr(vocab_rows[::step]).encode()))
+    """Executor cache key: a digest of the WHOLE vocab, so two vocabs that
+    differ in any row never share cached arrays. Computed once per stage on
+    the driver and closed over by the tasks."""
+    return ("vocab", hashlib.blake2b(repr(vocab_rows).encode(), digest_size=16).hexdigest())
 
 
-def _cached_vocab_arrays(vocab_rows: list[tuple[int, str]]) -> tuple[pa.Array, pa.Array]:
-    key = _vocab_cache_key(vocab_rows)
+def _cached_vocab_arrays(key: tuple, b_vocab) -> tuple[pa.Array, pa.Array]:
     arrays = _EXEC_CACHE.get(key)
     if arrays is None:
-        arrays = build_vocab_arrays(vocab_rows)
+        arrays = build_vocab_arrays(b_vocab.value)
         _EXEC_CACHE[key] = arrays
     return arrays
 
@@ -184,6 +182,7 @@ def infer_sources(
     """
     sc = spark.sparkContext
     b_vocab = sc.broadcast(vocab_rows)
+    vocab_key = _vocab_cache_key(vocab_rows)
     b_heads = sc.broadcast(sorted(source_heads.items()))
 
     out_schema = seq_df.schema
@@ -192,7 +191,7 @@ def infer_sources(
     source_idx = col_names.index("source")
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        text_by_id, _canon = _cached_vocab_arrays(b_vocab.value)
+        text_by_id, _canon = _cached_vocab_arrays(vocab_key, b_vocab)
         heads = b_heads.value
         for batch in batches:
             n = batch.num_rows
@@ -240,6 +239,7 @@ def parse_stage(
     """seq_df(doc_id, tokens, n_tok, source) → + (content, content_sig, head_matched)."""
     sc = spark.sparkContext
     b_vocab = sc.broadcast(vocab_rows)
+    vocab_key = _vocab_cache_key(vocab_rows)
     b_heads = sc.broadcast(source_heads)
 
     out_schema = T.StructType(list(seq_df.schema.fields) + PARSED_EXTRA_FIELDS)
@@ -249,7 +249,7 @@ def parse_stage(
     out_names = [f.name for f in out_schema.fields]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        text_by_id, canon_by_id = _cached_vocab_arrays(b_vocab.value)
+        text_by_id, canon_by_id = _cached_vocab_arrays(vocab_key, b_vocab)
         heads = b_heads.value
 
         for batch in batches:

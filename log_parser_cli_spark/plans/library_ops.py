@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from log_parser_cli_spark.functions.templates import to_jvm_pattern
+
 
 def merge_templates(existing: DataFrame, updates: DataFrame, key: str = "template_id") -> DataFrame:
     """Upsert semantics: rows in ``updates`` replace same-key rows in
@@ -76,11 +78,6 @@ def exclude_seen(candidates: DataFrame, seen: DataFrame, on: str = "content") ->
     return candidates.join(seen.select(on).distinct(), on=on, how="left_anti")
 
 
-def _jvm_pattern(pattern: str) -> str:
-    """Python-dialect named groups → JVM dialect for rlike."""
-    return pattern.replace("(?P<", "(?<").replace("(?P=", r"\k<")
-
-
 def detect_conflicts(
     samples: DataFrame,
     candidate_template_id: str,
@@ -90,9 +87,8 @@ def detect_conflicts(
     """Stored samples of OTHER templates that the candidate pattern matches,
     grouped by their owning template (J3). Returns
     (template_id, n_conflicts, sample_contents array, capped)."""
-    jvm = _jvm_pattern(candidate_pattern)
     hits = samples.filter(F.col("template_id") != candidate_template_id).filter(
-        F.col(content_col).rlike(jvm)
+        F.col(content_col).rlike(to_jvm_pattern(candidate_pattern))
     )
     return (
         hits.groupBy("template_id")

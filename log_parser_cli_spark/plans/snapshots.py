@@ -9,7 +9,6 @@ data files plus an atomic metadata commit — with zero dependencies:
 
     <root>/
       _snapshots/v000000000001.json   immutable manifest per snapshot
-      _CURRENT_HINT                   fast-path pointer (hint only)
       data-v000000000001-<hex>/       immutable parquet dir(s), one per commit
 
 Protocol (Iceberg's, minus the catalog):
@@ -23,8 +22,7 @@ Protocol (Iceberg's, minus the catalog):
   snapshot and retries with N+1 (optimistic concurrency, like Iceberg's
   catalog swap).
 - The current version is the max committed manifest (a directory listing —
-  Iceberg's version-hint.text is likewise only a hint); ``_CURRENT_HINT`` is
-  best-effort and never trusted over the listing.
+  Iceberg's version-hint.text is likewise only a hint, so none is kept).
 - Manifests are immutable and reference their full data-dir list, so any
   retained snapshot is readable (time travel) and ``vacuum`` can delete
   exactly the dirs no retained manifest references.
@@ -39,13 +37,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 _MANIFEST_DIR = "_snapshots"
-_HINT = "_CURRENT_HINT"
+_MANIFEST_NAME = re.compile(r"v(\d{12})\.json")
 FORMAT = "lpcs-snapshot-v1"
 
 
@@ -62,18 +61,20 @@ class SnapshotTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.root, _MANIFEST_DIR, f"v{version:012d}.json")
 
-    def current_version(self) -> int | None:
-        """Max committed manifest version; the listing is authoritative
-        (manifest creation is the atomic commit point), the hint file is not."""
+    def _versions(self) -> list[int]:
+        """Committed manifest versions, ascending. The listing is the only
+        authority (manifest creation is the atomic commit point); any other
+        file in the manifest dir is ignored."""
         mdir = os.path.join(self.root, _MANIFEST_DIR)
         if not os.path.isdir(mdir):
-            return None
-        versions = [
-            int(name[1:13])
-            for name in os.listdir(mdir)
-            if name.startswith("v") and name.endswith(".json") and name[1:13].isdigit()
-        ]
-        return max(versions, default=None)
+            return []
+        return sorted(
+            int(m.group(1)) for m in map(_MANIFEST_NAME.fullmatch, os.listdir(mdir)) if m
+        )
+
+    def current_version(self) -> int | None:
+        """Max committed manifest version."""
+        return max(self._versions(), default=None)
 
     def manifest(self, version: int | None = None) -> dict | None:
         if version is None:
@@ -84,10 +85,7 @@ class SnapshotTable:
             return json.load(f)
 
     def history(self) -> list[dict]:
-        mdir = os.path.join(self.root, _MANIFEST_DIR)
-        if not os.path.isdir(mdir):
-            return []
-        return [self.manifest(int(n[1:13])) for n in sorted(os.listdir(mdir)) if n.endswith(".json")]
+        return [self.manifest(v) for v in self._versions()]
 
     @staticmethod
     def is_snapshot_dir(root: str) -> bool:
@@ -152,10 +150,6 @@ class SnapshotTable:
             raise ConcurrentCommitError(f"snapshot v{version} already committed")
         finally:
             os.unlink(tmp)
-        hint_tmp = os.path.join(self.root, f".{_HINT}.tmp")
-        with open(hint_tmp, "w") as f:
-            f.write(f"v{version:012d}")
-        os.replace(hint_tmp, os.path.join(self.root, _HINT))
         return version
 
     def commit_overwrite(
@@ -272,10 +266,8 @@ class SnapshotTable:
         mdir = os.path.join(self.root, _MANIFEST_DIR)
         committed: set[str] = set()  # referenced by ANY existing manifest
         retained: set[str] = set()  # referenced by a RETAINED manifest
-        for name in os.listdir(mdir):
-            if not (name.startswith("v") and name.endswith(".json") and name[1:13].isdigit()):
-                continue
-            v = int(name[1:13])
+        versions = self._versions()
+        for v in versions:
             try:
                 dirs = self.manifest(v)["data_dirs"]
             except FileNotFoundError:
@@ -300,15 +292,15 @@ class SnapshotTable:
             if name in committed or age >= orphan_grace_s:
                 shutil.rmtree(path, ignore_errors=True)
                 removed.append(name)
-        for name in os.listdir(mdir):
-            path = os.path.join(mdir, name)
-            is_manifest = name.startswith("v") and name.endswith(".json") and name[1:13].isdigit()
-            if is_manifest and int(name[1:13]) < min(retained_versions):
+        for v in versions:
+            if v < min(retained_versions):
                 try:
-                    os.unlink(path)
+                    os.unlink(self._manifest_path(v))
                 except OSError:
                     pass  # unlinked by a concurrent vacuum
-            elif name.endswith(".tmp"):
+        for name in os.listdir(mdir):
+            path = os.path.join(mdir, name)
+            if name.endswith(".tmp"):
                 # crashed _try_commit between temp-write and finally-unlink;
                 # age-gated because a live committer's temp exists briefly
                 try:

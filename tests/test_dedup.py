@@ -7,7 +7,6 @@ from log_parser_cli_spark.extras.dedup import (
     exact_dup_stats,
     jaccard_pairs,
     minhash_dedup,
-    minhash_lsh_candidates,
     minhash_signatures,
     simhash,
     simhash_pairs,
@@ -143,12 +142,10 @@ def test_simhash_wide_combo_recall_is_total(spark, docs):
     scheme cannot give without collapsing to 6-bit buckets."""
     import pyspark.sql.functions as F
 
-    from log_parser_cli_spark.extras.dedup import simhash_pairs_wide
-
     fp = simhash(docs, "doc_id", "text").cache()
     banded = {
         (r.a, r.b)
-        for r in simhash_pairs_wide(fp, max_hamming=8, chunks=10, combo_size=2).collect()
+        for r in simhash_pairs(fp, max_hamming=8, chunks=10, combo_size=2).collect()
     }
     brute = {
         (r.x, r.y)
@@ -171,13 +168,11 @@ def test_simhash_wide_rejects_unsound_params(docs):
     voids the combination guarantee — must raise."""
     import pytest
 
-    from log_parser_cli_spark.extras.dedup import simhash_pairs_wide
-
     fp = simhash(docs, "doc_id", "text")
     with pytest.raises(ValueError, match="combo_size"):
-        simhash_pairs_wide(fp, max_hamming=8, chunks=10, combo_size=3)
+        simhash_pairs(fp, max_hamming=8, chunks=10, combo_size=3)
     with pytest.raises(ValueError, match="divide"):
-        simhash_pairs_wide(fp, max_hamming=8, chunks=9)
+        simhash_pairs(fp, max_hamming=8, chunks=9)
 
 
 def test_hot_bucket_guard_star_caps_degenerate_corpus(spark):
@@ -200,15 +195,15 @@ def test_hot_bucket_guard_star_caps_degenerate_corpus(spark):
 
 def test_hot_bucket_guard_reports_capped_buckets(spark):
     """No silent truncation: hot_bucket_stats names every capped bucket."""
-    from log_parser_cli_spark.extras.dedup import hot_bucket_stats, simhash_banded
+    from log_parser_cli_spark.extras.dedup import bit_bands, hot_bucket_stats
 
     n = 300
     df = spark.createDataFrame(
         [(i, "identical text for the hot bucket test") for i in range(n)],
         "doc_id long, text string",
     )
-    banded = simhash_banded(simhash(df, "doc_id", "text"), chunks=4)
-    stats = hot_bucket_stats(banded, ["chunk", "val"], max_bucket=64).collect()
+    banded = bit_bands(simhash(df, "doc_id", "text"), "simhash", 15, [(c,) for c in range(4)])
+    stats = hot_bucket_stats(banded, ["band", "val"], max_bucket=64).collect()
     # every chunk of the shared fingerprint is one hot bucket of n docs
     assert len(stats) == 4
     assert all(r.n_docs == n for r in stats)
@@ -224,20 +219,6 @@ def test_hot_bucket_guard_noop_below_cap(spark, docs):
         for r in simhash_pairs(fp, 3, 4, max_bucket=10_000).collect()
     }
     assert guarded == unguarded
-
-
-def test_minhash_hot_bucket_guard(spark):
-    """Same guard, MinHash family: identical docs share every band bucket;
-    star caps candidates at n-1."""
-    n = 500
-    df = spark.createDataFrame(
-        [(i, "the very same minhash document body") for i in range(n)],
-        "doc_id long, text string",
-    )
-    sig = minhash_signatures(df, "doc_id", "text", k=2, n_hashes=16)
-    cands = minhash_lsh_candidates(sig, bands=4, rows_per_band=4, max_bucket=32).collect()
-    assert len(cands) == n - 1
-    assert all(r.a == 0 for r in cands)
 
 
 def test_connected_components_labels_dup_groups(spark):
@@ -284,10 +265,10 @@ def test_hot_bucket_two_level_star_keeps_exact_dup_groups(spark):
 
 
 def test_simhash_candidates_guard_uses_two_level_star(spark):
-    """Second review pass: simhash_candidates' banded rows carry the full
-    fingerprint as `simhash` (no payload) — the guard must refine on it,
-    so two exact-dup groups sharing a hot bucket keep their intra-group
-    candidate edges instead of all anchoring on the bucket min."""
+    """Second review pass: simhash_candidates carries the full fingerprint
+    as payload — the guard must refine on it, so two exact-dup groups
+    sharing a hot bucket keep their intra-group candidate edges instead of
+    all anchoring on the bucket min."""
     from log_parser_cli_spark.extras.dedup import simhash_candidates
 
     fp_a = 0
@@ -298,17 +279,3 @@ def test_simhash_candidates_guard_uses_two_level_star(spark):
     # group B's members must anchor on B's min (300), not the global min 0
     assert {(300, b) for b in range(301, 600)} <= got
     assert (0, 300) in got  # the single inter-group representative edge
-
-
-def test_dedup_survivors_keep_one_per_component(spark):
-    """End-to-end materialization: pairs → components → surviving corpus
-    (exactly the component representatives, everything else dropped)."""
-    from log_parser_cli_spark.extras.dedup import connected_components, dedup_survivors
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in [1, 2, 3, 10, 11, 99]], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "a long, b long")
-    comps = connected_components(pairs, docs.select(F.col("doc_id").alias("doc")))
-    kept = sorted(r.doc_id for r in dedup_survivors(docs, comps).collect())
-    assert kept == [1, 10, 99]

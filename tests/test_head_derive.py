@@ -5,11 +5,11 @@ import re
 
 import pyspark.sql.functions as F
 
+from log_parser_cli_spark.functions.templates import to_jvm_pattern
 from log_parser_cli_spark.operators.head_derive import (
     pool_lines,
     propose_head_pattern,
     refine_head_pattern,
-    to_jvm_pattern,
 )
 
 

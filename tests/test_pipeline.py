@@ -198,3 +198,22 @@ def test_legacy_four_column_mapping_routes_same_rows(spark, fixture_dir, pipelin
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
+
+
+def test_parse_vocab_cache_is_keyed_on_the_whole_vocab(spark):
+    """Two same-length vocabs that differ in one row get different executor
+    cache keys, and parsing one frame under each in the same session (Python
+    workers reused) renders each vocab's own words, never the cached other."""
+    from log_parser_cli_spark.operators.parse import _vocab_cache_key, parse_stage
+
+    vocab_a = [(i, f"word{i}") for i in range(64)]
+    vocab_b = [(i, "CHANGED" if i == 1 else w) for i, w in vocab_a]
+    assert _vocab_cache_key(vocab_a) != _vocab_cache_key(vocab_b)
+
+    seq = spark.createDataFrame(
+        [("d0", [0, 1, 2], 3, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    ).coalesce(1)
+    heads = {"s": (r"(.*)", 1)}
+    for vocab, want in ((vocab_a, "word0 word1 word2"), (vocab_b, "word0 CHANGED word2")):
+        assert parse_stage(spark, seq, vocab, heads).collect()[0].content == want

@@ -135,29 +135,6 @@ def test_ivf_join_path_matches_literal_path(spark, emb):
     assert "cents" in plan and str(cents[0][0]) not in plan
 
 
-def test_rhp_join_path_matches_literal_path(spark, emb):
-    """Broadcast-plane RHP signatures produce the exact same candidate set
-    as the literal-inlined hyperplanes."""
-    from log_parser_cli_spark.extras.similarity import (
-        hyperplanes,
-        rhp_candidates,
-        vectors_to_df,
-    )
-
-    lit = {
-        (r.a, r.b)
-        for r in rhp_candidates(emb, dim=16, n_planes=24, rows_per_band=3).collect()
-    }
-    pdf = vectors_to_df(spark, hyperplanes(24, 16), "planes")
-    joined = {
-        (r.a, r.b)
-        for r in rhp_candidates(
-            emb, dim=16, n_planes=24, rows_per_band=3, planes_df=pdf
-        ).collect()
-    }
-    assert lit and joined == lit
-
-
 def test_rhp_hot_bucket_guard(spark):
     """The RHP candidate generator shares dedup's hot-bucket guard: n copies
     of one vector land in every band bucket; the star cap emits n-1

@@ -152,17 +152,20 @@ def test_vacuum_retains_snapshot_committed_during_scan(spark, tmp_path, monkeypa
 
 def test_vacuum_skips_foreign_json_in_manifest_dir(spark, tmp_path):
     """Round-4 ADVICE (low): a non-manifest .json dropped into _snapshots/
-    must not make vacuum raise ValueError mid-sweep."""
+    (including a look-alike ``v1.json``) must not make vacuum or history
+    raise ValueError, nor count as a version."""
     root = str(tmp_path / "t")
     t = SnapshotTable(root)
     for n in range(3):
         t.commit_overwrite(_df(spark, [("a#1", "a", n)]))
-    foreign = os.path.join(root, "_snapshots", "notes.json")
-    with open(foreign, "w") as f:
-        json.dump({"foreign": True}, f)
+    foreign = [os.path.join(root, "_snapshots", n) for n in ("notes.json", "v1.json")]
+    for path in foreign:
+        with open(path, "w") as f:
+            json.dump({"foreign": True}, f)
     t.vacuum(keep_last=2)  # must not raise
-    assert os.path.exists(foreign)  # and must not delete what it doesn't own
+    assert all(map(os.path.exists, foreign))  # and must not delete what it doesn't own
     assert t.read(spark).first().n == 2
+    assert [m["version"] for m in t.history()] == [1, 2]
 
 
 def test_vacuum_clamps_nonpositive_retention(spark, tmp_path):
@@ -196,18 +199,6 @@ def test_vacuum_keeps_retained_versions_readable(spark, tmp_path):
     # only the two retained data dirs remain on disk
     data_dirs = [d for d in os.listdir(root) if d.startswith("data-")]
     assert len(data_dirs) == 2
-
-
-def test_hint_is_only_a_hint(spark, tmp_path):
-    """A stale or vandalized hint never wins over the manifest listing."""
-    root = str(tmp_path / "t")
-    t = SnapshotTable(root)
-    t.commit_overwrite(_df(spark, [("a#1", "a", 1)]))
-    t.commit_overwrite(_df(spark, [("a#1", "a", 2)]))
-    with open(os.path.join(root, "_CURRENT_HINT"), "w") as f:
-        f.write("v000000000000")
-    assert t.current_version() == 1
-    assert t.read(spark).first().n == 2
 
 
 def test_cli_time_travel_and_vacuum_roundtrip(spark, fixture_dir, pipeline_out, tmp_path, capsys):
@@ -269,6 +260,5 @@ def test_routed_sink_is_snapshot_committed(spark, pipeline_out):
     for d in m["data_dirs"]:
         assert os.path.isdir(os.path.join(root, d))
     assert not any(d.startswith("sink=") for d in os.listdir(root))
-    with open(os.path.join(root, "_CURRENT_HINT")) as f:
-        assert f.read() == f"v{m['version']:012d}"
+    assert SnapshotTable(root).current_version() == m["version"]
     json.dumps(m)  # manifest is plain JSON end to end

@@ -137,9 +137,7 @@ def main() -> int:
         )
     )
 
-    from log_parser_cli_spark.extras.dedup import simhash_pairs_wide
-
-    sh_wide = simhash_pairs_wide(simhash(docs, "doc_id", "text"), max_hamming=8, chunks=10)
+    sh_wide = simhash_pairs(simhash(docs, "doc_id", "text"), max_hamming=8, chunks=10, combo_size=2)
     sections.append(
         (
             "simhash WIDE radius 8 (C(10,2)=45 combination bands, still equi-joins only)",
