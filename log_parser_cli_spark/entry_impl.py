@@ -230,15 +230,18 @@ def q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fx = fixtures_for_sf_dir(sf_dir)
     labels = spark.read.parquet(os.path.join(fx, "labels.parquet"))
-    m = accuracy_metrics(labels)
-    row = [tuple(round(m[k], 6) for k in _METRIC_COLS)]
-    return spark.createDataFrame(row, ", ".join(f"{c.lower()} double" for c in _METRIC_COLS))
+    return _metrics_row(spark, accuracy_metrics(labels))
 
 
-_METRIC_COLS = [
-    "GA", "GA_precision", "GA_recall", "PA", "predPure", "gtPure",
-    "GA_friendly", "PA_friendly", "pureCoverage",
-]
+def _metrics_row(spark: SparkSession, m: dict[str, float]) -> DataFrame:
+    """One published metrics row, rounded HALF_UP by Spark like every other
+    published metric row (Python round() is banker's rounding)."""
+    from log_parser_cli_spark.eval.metrics import METRIC_COLS
+
+    raw = spark.createDataFrame(
+        [tuple(m[k] for k in METRIC_COLS)], ", ".join(f"{c} double" for c in METRIC_COLS)
+    )
+    return raw.select(*[F.round(c, 6).alias(c.lower()) for c in METRIC_COLS])
 
 
 def q_eval_from_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,9 +341,7 @@ def q_pipeline_eval_vs_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = spark.read.parquet(os.path.join(fx, "ground_truth.parquet")).select(
         "doc_id", F.col("event_id").alias("gt_id")
     )
-    m = accuracy_metrics(routed.join(gt, "doc_id"))
-    row = [tuple(round(m[k], 6) for k in _METRIC_COLS)]
-    return spark.createDataFrame(row, ", ".join(f"{c.lower()} double" for c in _METRIC_COLS))
+    return _metrics_row(spark, accuracy_metrics(routed.join(gt, "doc_id")))
 
 
 def q_derived_library_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

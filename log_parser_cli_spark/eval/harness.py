@@ -11,8 +11,9 @@ J5/W1), computes GA/PA/purity/friendly per dataset, and macro-averages
   run (matches CSV via K2, failures JSONL via K4).
 - ``eval_from_reports``: read the files back, occurrence-align to ground
   truth, reduce each dataset's (pred, gt) contingency cells in ONE scan
-  (groupBy source+pred+gt, tiny output), compute every metric driver-side
-  from the cells, append the __MACRO__ unweighted-average row.
+  (groupBy source+pred+gt, tiny output), score every dataset in one
+  ``cell_metrics`` call keyed on source, append the __MACRO__
+  unweighted-average row.
 
 Alignment note: within one raw-text bucket the gt event is constant (two
 different templates cannot render identical lines within a source), so FIFO
@@ -27,21 +28,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from log_parser_cli_spark.eval.metrics import (
-    MAX_DRIVER_CELLS,
-    _distributed_metrics,
-    metrics_from_cells,
-)
+from log_parser_cli_spark.eval.metrics import METRIC_COLS, cell_metrics
 from log_parser_cli_spark.plans.library_ops import (
     CSV_NULL as _CSV_NULL,
     write_failure_report,
     write_match_report,
 )
-
-METRIC_COLS = [
-    "GA", "GA_precision", "GA_recall", "PA", "predPure", "gtPure",
-    "GA_friendly", "PA_friendly", "pureCoverage",
-]
 
 
 def write_eval_reports(spark: SparkSession, labeled: DataFrame, out_dir: str) -> dict[str, str]:
@@ -70,12 +62,7 @@ def write_eval_reports(spark: SparkSession, labeled: DataFrame, out_dir: str) ->
     return {"matches": matches_path, "failures": failures_path}
 
 
-def eval_from_reports(
-    spark: SparkSession,
-    report_dir: str,
-    gt: DataFrame,
-    max_driver_cells: int = MAX_DRIVER_CELLS,
-) -> DataFrame:
+def eval_from_reports(spark: SparkSession, report_dir: str, gt: DataFrame) -> DataFrame:
     """Ingest report files, align to ground truth, emit per-dataset + macro
     metrics (one row per dataset, one ``__MACRO__`` row).
 
@@ -83,12 +70,6 @@ def eval_from_reports(
     (dataset, ga, …, purecoverage, coverage) — coverage is the matched
     fraction per dataset (failures count against it), macro rows are
     unweighted means (A8).
-
-    Driver safety: the contingency cells are collected only up to
-    ``max_driver_cells`` total; beyond that (degenerate labelings where cells
-    ≈ rows, e.g. pred=doc_id) each dataset's metrics run distributed on the
-    cached cells instead — same arithmetic, bounded driver memory (mirrors
-    ``eval.metrics.accuracy_metrics``).
     """
     matches = (
         spark.read.option("header", True)
@@ -119,83 +100,32 @@ def eval_from_reports(
         (pred["p_source"] == gt_occ["source"])
         & (pred["raw_log"] == gt_occ["rendered"])
         & (pred["occ"] == gt_occ["occ"]),
-    ).select("source", "pred_id", F.col("event_id").alias("gt_id"))
-
-    # ONE scan → per-dataset contingency cells (cardinality ~ clusters²)
-    cells_df = (
-        aligned.groupBy("source", "pred_id", "gt_id")
-        .agg(F.count("*").alias("cnt"))
-        .cache()
     )
-    failed = {
-        r["source"]: r["n"]
-        for r in failures.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
-    cols = METRIC_COLS + ["coverage"]
-    per_dataset: dict[str, dict[str, float]] = {}
-    try:
-        # ONE aggregation job probes the cell-count AND the per-source totals
-        # while fully materializing the cache; the previous
-        # limit(N+1).collect() probe ran its own incremental jobs and the
-        # oversized branch re-scanned for totals (the round-3 2.6× wall)
-        stats = {
-            r["source"]: (r["n_cells"], r["tot"])
-            for r in cells_df.groupBy("source")
-            .agg(F.count("*").alias("n_cells"), F.sum("cnt").alias("tot"))
-            .collect()
-        }
-        if sum(n for n, _t in stats.values()) <= max_driver_cells:
-            per_source_cells: dict[str, list[tuple[str, str, int]]] = {}
-            for r in cells_df.collect():  # second pass reads the cache
-                per_source_cells.setdefault(r["source"], []).append(
-                    (r["pred_id"], r["gt_id"], r["cnt"])
-                )
-            # union with failure-only sources: a dataset where every line
-            # failed must surface with coverage 0, not vanish from the macro
-            for source in sorted(set(per_source_cells) | set(failed)):
-                cells_src = per_source_cells.get(source, [])
-                m = metrics_from_cells(cells_src)
-                total = sum(c for _p, _g, c in cells_src)
-                m["coverage"] = (
-                    total / (total + failed.get(source, 0))
-                    if (total or failed.get(source))
-                    else 0.0
-                )
-                per_dataset[source] = m
-        else:
-            # oversized cells (degenerate labelings where cells ≈ rows):
-            # per-dataset distributed arithmetic on the cached cells; only
-            # per-dataset totals reach the driver
-            for source in sorted(set(stats) | set(failed)):
-                src_cells = cells_df.filter(F.col("source") == source).select(
-                    F.col("pred_id").alias("pred"), F.col("gt_id").alias("gt"), "cnt"
-                )
-                total = stats.get(source, (0, 0))[1] or 0
-                m = (
-                    _distributed_metrics(src_cells)
-                    if total
-                    else metrics_from_cells([])
-                )
-                m["coverage"] = (
-                    total / (total + failed.get(source, 0))
-                    if (total or failed.get(source))
-                    else 0.0
-                )
-                per_dataset[source] = m
-    finally:
-        cells_df.unpersist()
-    rows = [tuple([ds] + [m[k] for k in cols]) for ds, m in sorted(per_dataset.items())]
-    schema = "dataset string, " + ", ".join(f"{c.lower()} double" for c in cols)
-    raw_df = spark.createDataFrame(rows, schema)
+    # ONE scan → per-dataset contingency cells (cardinality ~ clusters²)
+    cells = aligned.groupBy(
+        "source", F.col("pred_id").alias("pred"), F.col("event_id").alias("gt")
+    ).agg(F.count("*").alias("cnt"))
+    scored = spark.createDataFrame(
+        cell_metrics(cells, ("source",)),
+        "source string, " + ", ".join(f"{c} double" for c in METRIC_COLS) + ", total long",
+    )
+    # full join with the failure counts: a dataset where every line failed
+    # must surface with 0 metrics and coverage 0, not vanish from the macro
+    failed = failures.groupBy("source").agg(F.count("*").alias("failed"))
+    per_source = scored.join(failed, "source", "full").fillna(0)
+    coverage = F.col("total") / (F.col("total") + F.col("failed"))
     # ALL published rounding happens with Spark's HALF_UP round (matching
     # SQL engines); Python's round() is banker's rounding and can differ in
     # the 6th decimal on exact halves. Macro (A8) averages the published
     # per-dataset values.
-    per_ds_df = raw_df.select(
-        "dataset", *[F.round(c.lower(), 6).alias(c.lower()) for c in cols]
+    cols = [c.lower() for c in METRIC_COLS] + ["coverage"]
+    per_ds_df = per_source.select(
+        F.col("source").alias("dataset"),
+        *[F.round(c, 6).alias(c.lower()) for c in METRIC_COLS],
+        F.round(coverage, 6).alias("coverage"),
     )
     macro_df = per_ds_df.agg(
         F.lit("__MACRO__").alias("dataset"),
-        *[F.round(F.avg(c.lower()), 6).alias(c.lower()) for c in cols],
+        *[F.round(F.avg(c), 6).alias(c) for c in cols],
     )
     return per_ds_df.unionByName(macro_df)

@@ -31,16 +31,6 @@ def token_count(text_col: str) -> Column:
     return F.size(F.expr(words_expr(text_col))).cast("long")
 
 
-def bpe_ish_token_count(text_col: str) -> Column:
-    """BPE-flavored proxy: count sub-word units split on transitions
-    (letters / digits / other), ~GPT-2 pre-tokenizer shape, regex-only."""
-    return F.size(
-        F.expr(
-            rf"filter(split({text_col}, '(?<=[a-zA-Z])(?=[0-9])|(?<=[0-9])(?=[a-zA-Z])|\\s+|(?=[^a-zA-Z0-9\\s])'), x -> x <> '')"
-        )
-    ).cast("long")
-
-
 def quality_score(text_col: str, n_chars_col: str) -> Column:
     """Deterministic [0,1] quality heuristic: length, lexical diversity,
     chars-per-word sanity. Identical formula in the DuckDB oracle."""

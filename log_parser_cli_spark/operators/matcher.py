@@ -16,7 +16,7 @@ Python ``re`` loop — for those rows only.
 
 Used for the ``--match-only`` replay path (semantic-log-parser.ts:108-151) and
 as the parity check against the signature fast path. Per-executor compiled
-cache keyed by template-set version (mirrors TemplateRuntimeCache,
+cache keyed by a digest of the whole library (mirrors TemplateRuntimeCache,
 template-runtime-cache.ts:22-60 — compile O(templates), not O(templates×rows)).
 """
 
@@ -32,6 +32,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from log_parser_cli_spark.operators.parse import cache_key
 
 _COMPILED_CACHE: dict[tuple[str, object], list["_CompiledTemplate"]] = {}
 
@@ -76,16 +78,26 @@ def _compile_one(template_id: str, pattern: str) -> _CompiledTemplate:
     return _CompiledTemplate(template_id, "py", full, re.compile(pattern))
 
 
+def library_key(template_rows: list[dict]) -> tuple:
+    """Executor cache key of a template library: a digest of every
+    (template_id, source, pattern, created_at), so two libraries that differ
+    anywhere never share compiled templates."""
+    return cache_key(
+        "templates",
+        sorted((r["template_id"], r["source"], r["pattern"], r["created_at"]) for r in template_rows),
+    )
+
+
 def compile_ordered(
-    template_rows: list[dict], source: str, version
+    template_rows: list[dict], source: str, lib_key: tuple
 ) -> list[_CompiledTemplate]:
     """Compile one source's templates in precedence order, with caching."""
-    key = (source, version)
+    key = (source, lib_key)
     compiled = _COMPILED_CACHE.get(key)
     if compiled is None:
-        # Keep only the latest template-set version per source: long-lived
-        # executors matching against evolving libraries must not accumulate
-        # every historical compiled set.
+        # Keep only the latest library per source: long-lived executors
+        # matching against evolving libraries must not accumulate every
+        # historical compiled set.
         for stale in [k for k in _COMPILED_CACHE if k[0] == source]:
             del _COMPILED_CACHE[stale]
         rows = [r for r in template_rows if r["source"] == source]
@@ -112,7 +124,6 @@ def match_templates(
     template_rows: list[dict],
     content_col: str = "content",
     source_col: str = "source",
-    version=0,
 ) -> DataFrame:
     """Append (template_id, variables) via ordered first-match-wins.
 
@@ -121,16 +132,7 @@ def match_templates(
     the matched/unmatched split is a single pass (E1 semantics), callers
     filter ``template_id IS NULL`` for the failure side.
     """
-    import zlib
-
-    # cache version = fingerprint of the template set, so two different
-    # libraries for the same source never collide in the executor cache
-    fingerprint = zlib.crc32(
-        repr(
-            sorted((r["template_id"], r["source"], r["pattern"], r["created_at"]) for r in template_rows)
-        ).encode()
-    )
-    version = (version, fingerprint)
+    lib_key = library_key(template_rows)
     sc = spark.sparkContext
     b_templates = sc.broadcast(template_rows)
 
@@ -150,7 +152,7 @@ def match_templates(
             # null sources stay unmatched (np.unique cannot sort None vs str)
             src_notnull = np.array([s is not None for s in sources], dtype=bool)
             for src in np.unique(sources[src_notnull]):
-                compiled = compile_ordered(rows, src, version)
+                compiled = compile_ordered(rows, src, lib_key)
                 if not compiled:
                     continue
                 # still-unmatched candidate positions for this source

@@ -48,11 +48,12 @@ PARSED_EXTRA_FIELDS = [
 _EXEC_CACHE: dict = {}
 
 
-def _vocab_cache_key(vocab_rows: list[tuple[int, str]]) -> tuple:
-    """Executor cache key: a digest of the WHOLE vocab, so two vocabs that
-    differ in any row never share cached arrays. Computed once per stage on
-    the driver and closed over by the tasks."""
-    return ("vocab", hashlib.blake2b(repr(vocab_rows).encode(), digest_size=16).hexdigest())
+def cache_key(tag: str, rows: list) -> tuple:
+    """Executor cache key: a digest of the WHOLE ``rows`` (a vocab, a template
+    library), so two values that differ in any row never share a cached
+    entry. Computed once per stage on the driver and closed over by the
+    tasks."""
+    return (tag, hashlib.blake2b(repr(rows).encode(), digest_size=16).hexdigest())
 
 
 def _cached_vocab_arrays(key: tuple, b_vocab) -> tuple[pa.Array, pa.Array]:
@@ -182,7 +183,7 @@ def infer_sources(
     """
     sc = spark.sparkContext
     b_vocab = sc.broadcast(vocab_rows)
-    vocab_key = _vocab_cache_key(vocab_rows)
+    vocab_key = cache_key("vocab", vocab_rows)
     b_heads = sc.broadcast(sorted(source_heads.items()))
 
     out_schema = seq_df.schema
@@ -239,7 +240,7 @@ def parse_stage(
     """seq_df(doc_id, tokens, n_tok, source) → + (content, content_sig, head_matched)."""
     sc = spark.sparkContext
     b_vocab = sc.broadcast(vocab_rows)
-    vocab_key = _vocab_cache_key(vocab_rows)
+    vocab_key = cache_key("vocab", vocab_rows)
     b_heads = sc.broadcast(source_heads)
 
     out_schema = T.StructType(list(seq_df.schema.fields) + PARSED_EXTRA_FIELDS)

@@ -63,6 +63,15 @@ def placeholder_from_star(content: str, star: str) -> str:
     return " ".join(out)
 
 
+def template_ordinal(template_id: str) -> int | None:
+    """The dense per-source ordinal N of a ``source#N`` template id; None
+    when the id carries no integer ordinal."""
+    try:
+        return int(template_id.rsplit("#", 1)[1])
+    except (IndexError, ValueError):
+        return None
+
+
 def export_template_library(
     spark: SparkSession, enriched: DataFrame, content_col: str = "content"
 ) -> list[dict]:
@@ -87,10 +96,6 @@ def export_template_library(
     for r in sorted(samples, key=lambda r: r["template_id"]):
         placeholder = placeholder_from_star(r[content_col], r["template_star"])
         built = build_regex_from_template(placeholder, r[content_col])
-        try:
-            ordinal = int(r["template_id"].rsplit("#", 1)[1])
-        except (IndexError, ValueError):
-            ordinal = 0
         library.append(
             {
                 "template_id": r["template_id"],
@@ -99,7 +104,7 @@ def export_template_library(
                 "pattern": anchor_pattern(built.pattern),
                 "template_star": r["template_star"],
                 "variables": built.variables,
-                "created_at": ordinal,
+                "created_at": template_ordinal(r["template_id"]) or 0,
             }
         )
     return library

@@ -122,7 +122,6 @@ def integrate_template(
     id_col: str = "doc_id",
     max_iterations: int = 5,
     samples_per_template: int = 20,
-    refine_fn=None,
     sample_scope_col: str | None = None,
 ) -> dict:
     """The reference's discovery state machine for ONE candidate template:
@@ -133,10 +132,9 @@ def integrate_template(
     ``library``: template dicts (template_id, source, pattern, created_at).
     ``matches``: fact rows already owned by templates (… template_id).
     ``pending``: rows not yet owned (same columns minus template_id/variables).
-    ``refine_fn(candidate, conflicts) -> candidate``: deterministic stand-in
-    for the reference's LLM RefineAgent; default keeps the candidate unchanged
-    and relies on conflict deletion (deleted templates release their samples,
-    so the re-check converges).
+    The candidate itself is never rewritten (the reference's LLM RefineAgent
+    has no deterministic stand-in here): re-checks converge through conflict
+    deletion, since deleted templates release their samples.
     ``sample_scope_col``: restrict conflict samples to rows whose value in
     this column equals the candidate's (the reference's per-library conflict
     scope — an apache candidate is never checked against hdfs samples).
@@ -184,8 +182,6 @@ def integrate_template(
         deleted_all.extend(deleted)
         matches, pending = requeue_orphans(matches, deleted, pending)
         library = [t for t in library if t["template_id"] not in deleted]
-        if refine_fn is not None:
-            candidate = refine_fn(candidate, conflicts)
     # unresolved: candidate rejected, orphans stay pending (pipeline.ts:451-456)
     return {
         "library": library,
@@ -211,7 +207,6 @@ def discover_with_refine(
     matches: DataFrame,
     pending: DataFrame,
     candidates: list[dict],
-    pin_state: bool = False,
     **integrate_kwargs,
 ) -> dict:
     """Iterative discovery over a candidate queue (pipeline.ts:130-165): each
@@ -220,8 +215,8 @@ def discover_with_refine(
     templates shrink the pending queue before the next candidate is tried
     (the reference's re-match-pending-after-persist, pipeline.ts:500-510).
 
-    ``pin_state=True`` re-materializes matches/pending after each candidate
-    (for long queues over signature-sized state — see ``_pin``).
+    matches/pending are re-materialized after each candidate (``_pin``), so
+    the plan stays flat over long queues of signature-sized state.
 
     Returns {library, matches, pending, reports} where ``reports`` carries one
     per-candidate record (accepted, deleted_ids, iterations).
@@ -229,9 +224,8 @@ def discover_with_refine(
     reports: list[dict] = []
     for cand in candidates:
         r = integrate_template(spark, library, matches, pending, cand, **integrate_kwargs)
-        library, matches, pending = r["library"], r["matches"], r["pending"]
-        if pin_state:
-            matches, pending = _pin(spark, matches), _pin(spark, pending)
+        library = r["library"]
+        matches, pending = _pin(spark, r["matches"]), _pin(spark, r["pending"])
         reports.append(
             {
                 "template_id": cand["template_id"],

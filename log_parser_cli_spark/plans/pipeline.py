@@ -190,6 +190,7 @@ def extend_mapping(
     mapping is a legacy four-column one.
     """
     from log_parser_cli_spark.functions.masking import signature_to_star
+    from log_parser_cli_spark.plans.export import template_ordinal
 
     novel = _top_signatures(parsed_new, max_signatures_per_source, known=frozen_mapping)
     if not novel:
@@ -206,18 +207,13 @@ def extend_mapping(
             clusters_by_source.setdefault(r.source, []).append(
                 (r.template_id, r.template_star.split(" "))
             )
-        try:
-            ordinal = int(r.template_id.rsplit("#", 1)[1])
-        except (IndexError, ValueError):
-            ordinal = 0
+        ordinal = template_ordinal(r.template_id) or 0
         max_ordinal[r.source] = max(max_ordinal.get(r.source, 0), ordinal)
 
     def _id_order(entry: tuple[str, list[str]]):
         tid = entry[0]
-        try:
-            return (0, int(tid.rsplit("#", 1)[1]), tid)
-        except (IndexError, ValueError):
-            return (1, 0, tid)
+        ordinal = template_ordinal(tid)
+        return (0, ordinal, tid) if ordinal is not None else (1, 0, tid)
 
     # star-compat pre-match scans clusters in dense-id (discovery/precedence)
     # order — collect() order is parquet file-listing order, NOT deterministic
@@ -256,7 +252,6 @@ def refine_mapping(
     parsed: DataFrame,
     mapping: DataFrame,
     seed_library: list[dict] | None = None,
-    samples_per_template: int = 20,
 ) -> tuple[DataFrame, list[dict]]:
     """Route the discovered clusters through the reference's full
     integrate → conflict → delete → re-queue machine (pipeline.ts:130-165,
@@ -311,11 +306,9 @@ def refine_mapping(
         matches,
         pending,
         candidates,
-        pin_state=True,
-        samples_per_template=samples_per_template,
         sample_scope_col="source",
     )
-    final = match_templates(spark, base, res["library"], version=1)
+    final = match_templates(spark, base, res["library"])
     star_of = {t["template_id"]: t.get("template_star", "") for t in res["library"]}
     rows = [
         (r["source"], r["content_sig"], r["template_id"], star_of.get(r["template_id"], ""), None)

@@ -48,13 +48,16 @@ def test_worked_example_reproduced_from_files(spark, tmp_path):
 
 def test_duplicate_lines_align_fifo(spark, tmp_path):
     """Identical raw lines consume distinct gt occurrences (J5/W1): three
-    duplicate lines produce three aligned label rows, not nine."""
+    duplicate lines produce three aligned label rows, not nine. A dataset
+    whose every line failed still gets a row: 0 metrics, coverage 0."""
     labeled = spark.createDataFrame(
-        [(i, "ds", "same exact line", "p1") for i in range(1, 4)],
+        [(i, "ds", "same exact line", "p1") for i in range(1, 4)]
+        + [(4, "dead", "@@@ failed @@@", "__UNPARSED__")],
         "line_no long, source string, rendered string, pred_id string",
     )
     gt = spark.createDataFrame(
-        [(i, "ds", "same exact line", "G") for i in range(1, 4)],
+        [(i, "ds", "same exact line", "G") for i in range(1, 4)]
+        + [(4, "dead", "@@@ failed @@@", "X")],
         "line_no long, source string, rendered string, event_id string",
     )
     out = str(tmp_path / "reports")
@@ -62,6 +65,7 @@ def test_duplicate_lines_align_fifo(spark, tmp_path):
     got = {r.dataset: r for r in eval_from_reports(spark, out, gt).collect()}
     assert got["ds"].ga == 1.0 and got["ds"].pa == 1.0
     assert got["ds"].coverage == 1.0
+    assert set(got["dead"].asDict().values()) == {"dead", 0.0}
 
 
 def test_fixture_labels_round_trip(spark, fixture_dir, tmp_path):
@@ -86,9 +90,9 @@ def test_fixture_labels_round_trip(spark, fixture_dir, tmp_path):
 
 
 def test_degenerate_labeling_uses_bounded_distributed_path(spark, tmp_path):
-    """pred=line_no (cells ≈ rows) with a tiny driver-cell cap: the harness
-    must fall back to distributed per-dataset arithmetic and produce the SAME
-    metrics as the driver path (bounded driver memory, ADVICE/wrong #3)."""
+    """pred=line_no (cells ≈ rows, the shape a driver-side reduction cannot
+    bound) scores through the one distributed path to the hand-computed
+    values: 40 singleton preds over 4 gt groups of 10, plus one failed line."""
     rows = [(i, "ds", f"unique line {i}", str(i)) for i in range(1, 41)]
     rows.append((41, "ds", "@@@ failed @@@", "__UNPARSED__"))
     labeled = spark.createDataFrame(
@@ -101,14 +105,17 @@ def test_degenerate_labeling_uses_bounded_distributed_path(spark, tmp_path):
     )
     out = str(tmp_path / "reports")
     write_eval_reports(spark, labeled, out)
-    driver = {r.dataset: r for r in eval_from_reports(spark, out, gt).collect()}
-    dist = {
-        r.dataset: r
-        for r in eval_from_reports(spark, out, gt, max_driver_cells=5).collect()
-    }
-    assert set(driver) == set(dist) == {"ds", "__MACRO__"}
-    for ds in driver:
-        assert tuple(driver[ds]) == tuple(dist[ds]), ds
+    got = {r.dataset: r for r in eval_from_reports(spark, out, gt).collect()}
+    assert set(got) == {"ds", "__MACRO__"}
+    # singletons: no predicted pairs (GA 0), no pred cluster equals a gt one
+    # (PA 0), every gt cluster's top cell is 1 row (gtPure 4/40); collapsing
+    # the pure singletons rebuilds the 4 gt clusters exactly (friendly 1)
+    want = dict(
+        ga=0.0, pa=0.0, predpure=1.0, gtpure=0.1, ga_friendly=1.0, pa_friendly=1.0,
+        purecoverage=1.0, coverage=0.97561,  # 40/41 to 6 dp
+    )
+    for ds in got:
+        assert {k: got[ds][k] for k in want} == want, ds
 
 
 def test_empty_rendered_line_survives_csv_round_trip(spark, tmp_path):

@@ -90,7 +90,7 @@ def test_first_match_wins_precedence(spark):
     templates[0]["created_at"], templates[1]["created_at"] = 2, 1
     got2 = {
         r.doc_id: r.template_id
-        for r in match_templates(spark, df, templates, version=1).collect()
+        for r in match_templates(spark, df, templates).collect()
     }
     assert got2["d1"] == "t#2"
 
@@ -126,3 +126,26 @@ def test_py_fallback_backtracks_into_end_anchor(spark):
     )
     got = {r.doc_id: r.template_id for r in match_templates(spark, df, templates).collect()}
     assert got == {"d1": "t#1", "d2": "t#1", "d3": None}
+
+
+def test_compiled_cache_keys_on_the_whole_library(spark):
+    """Two one-template libraries whose CRC32 fingerprints collide must get
+    different executor cache keys: matching under each in turn (Python
+    workers reused) applies each library's own pattern."""
+
+    def library(suffix):
+        pattern = rf"^item (?P<v1>[0-9]+) {suffix}$"
+        return [{"template_id": "t#1", "source": "s", "pattern": pattern, "created_at": 1}]
+
+    lib_a, lib_b = library("c50963c80102"), library("d3f504638284")
+    df = spark.createDataFrame(
+        [("d1", "s", "item 7 c50963c80102"), ("d2", "s", "item 7 d3f504638284")],
+        "doc_id string, source string, content string",
+    ).coalesce(1)
+    for lib, hit, miss in ((lib_a, "d1", "d2"), (lib_b, "d2", "d1")):
+        got = {r.doc_id: r.template_id for r in match_templates(spark, df, lib).collect()}
+        assert got == {hit: "t#1", miss: None}
+
+    from log_parser_cli_spark.operators.matcher import library_key
+
+    assert library_key(lib_a) != library_key(lib_b)

@@ -3,7 +3,7 @@
 
 import pytest
 
-from log_parser_cli_spark.eval.metrics import accuracy_metrics
+from log_parser_cli_spark.eval.metrics import METRIC_COLS, accuracy_metrics, cell_metrics
 
 
 @pytest.fixture(scope="module")
@@ -43,13 +43,23 @@ def test_labels_fixture_metrics(spark, fixture_dir):
     assert m["GA_friendly"] > m["GA"]  # pure oversplits get collapsed back
 
 
-def test_macro_metrics():
-    from log_parser_cli_spark.eval.metrics import macro_metrics
-
-    per_ds = {
-        "apache": {"GA": 1.0, "PA": 0.8},
-        "hdfs": {"GA": 0.5, "PA": 0.4},
+def test_keyed_groups_score_like_separate_tables(spark):
+    """One keyed ``cell_metrics`` call scores each group exactly as scoring
+    that group's labels alone."""
+    groups = {
+        "worked": [("A", "1"), ("A", "1"), ("A", "2"), ("B", "3"), ("B", "3")],
+        "mixed": [("A", "x"), ("B", "x"), ("B", "y"), ("C", "z"), ("C", "z")],
     }
-    m = macro_metrics(per_ds)
-    assert m == {"GA": 0.75, "PA": 0.6000000000000001}
-    assert macro_metrics({}) == {}
+    cells = (
+        spark.createDataFrame(
+            [(k, pred, gt) for k, rows in groups.items() for gt, pred in rows],
+            "k string, pred string, gt string",
+        )
+        .groupBy("k", "pred", "gt")
+        .count()
+        .withColumnRenamed("count", "cnt")
+    )
+    keyed = {r["k"]: {c: r[c] for c in METRIC_COLS} for r in cell_metrics(cells, ("k",))}
+    for k, rows in groups.items():
+        labels = spark.createDataFrame(rows, "gt_id string, pred_id string")
+        assert keyed[k] == accuracy_metrics(labels), k

@@ -204,11 +204,11 @@ def test_parse_vocab_cache_is_keyed_on_the_whole_vocab(spark):
     """Two same-length vocabs that differ in one row get different executor
     cache keys, and parsing one frame under each in the same session (Python
     workers reused) renders each vocab's own words, never the cached other."""
-    from log_parser_cli_spark.operators.parse import _vocab_cache_key, parse_stage
+    from log_parser_cli_spark.operators.parse import cache_key, parse_stage
 
     vocab_a = [(i, f"word{i}") for i in range(64)]
     vocab_b = [(i, "CHANGED" if i == 1 else w) for i, w in vocab_a]
-    assert _vocab_cache_key(vocab_a) != _vocab_cache_key(vocab_b)
+    assert cache_key("vocab", vocab_a) != cache_key("vocab", vocab_b)
 
     seq = spark.createDataFrame(
         [("d0", [0, 1, 2], 3, "s")],

@@ -1,5 +1,6 @@
 """Every package module is reached from an entry point (queries, job, bench,
-tools) — a module only its own tests import is dead code."""
+tools), and every top-level package function is referenced from one — a
+module or function only its own tests use is dead code."""
 
 import ast
 import pathlib
@@ -29,9 +30,21 @@ def _imports(path: pathlib.Path) -> set[str]:
     return {n for n in names if n.split(".")[0] == PKG and _module_file(n)}
 
 
-def test_every_package_module_is_reached_from_an_entry_point():
-    entries = [ROOT / "__spark_entry__.py", ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]
-    todo = set().union(*(_imports(p) for p in entries)) | {f"{PKG}.jobs"}
+#: Functions only tests call, on purpose: the pure-Python twins tests compare
+#: against, and the reference's conflict-report (K3) and capped match-store
+#: (K6) sinks, contract-tested but wired into no job yet.
+TEST_ONLY = {
+    f"{PKG}.oracle.oracle_match",
+    f"{PKG}.oracle.oracle_counts",
+    f"{PKG}.plans.library_ops.write_conflict_report",
+    f"{PKG}.plans.library_ops.append_matches_capped",
+}
+
+ENTRIES = [ROOT / "__spark_entry__.py", ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]
+
+
+def _reached_modules() -> set[str]:
+    todo = set().union(*(_imports(p) for p in ENTRIES)) | {f"{PKG}.jobs"}
     seen: set[str] = set()
     while todo:
         name = todo.pop()
@@ -40,9 +53,54 @@ def test_every_package_module_is_reached_from_an_entry_point():
         seen.add(name)
         parts = name.split(".")
         todo |= _imports(_module_file(name)) | {".".join(parts[:i]) for i in range(1, len(parts))}
-    modules = {
-        ".".join(p.relative_to(ROOT).with_suffix("").parts).removesuffix(".__init__")
+    return seen
+
+
+def _module_name(path: pathlib.Path) -> str:
+    return ".".join(path.relative_to(ROOT).with_suffix("").parts).removesuffix(".__init__")
+
+
+def _referenced_names(tree: ast.Module) -> set[str]:
+    """Names a module refers to (Name, Attribute, import alias); a top-level
+    function's references to itself do not count."""
+
+    def refs(node: ast.AST) -> set[str]:
+        out: set[str] = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rsplit(".", 1)[-1])
+        return out
+
+    names: set[str] = set()
+    for stmt in tree.body:
+        own = {stmt.name} if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)) else set()
+        names |= refs(stmt) - own
+    return names
+
+
+def test_every_package_module_is_reached_from_an_entry_point():
+    modules = {_module_name(p) for p in (ROOT / PKG).rglob("*.py") if p.read_text().strip()}
+    assert sorted(modules - _reached_modules()) == []
+
+
+def test_every_package_function_is_referenced_from_an_entry_point():
+    """References count from the entries, the modules they reach and the
+    benchmark harness (``perfbench``), never from tests or a function's own
+    body."""
+    files = [
+        *ENTRIES,
+        *sorted((ROOT / "perfbench").glob("*.py")),
+        *(_module_file(m) for m in sorted(_reached_modules())),
+    ]
+    referenced = set().union(*(_referenced_names(ast.parse(p.read_text())) for p in files))
+    unreferenced = {
+        f"{_module_name(p)}.{stmt.name}"
         for p in (ROOT / PKG).rglob("*.py")
-        if p.read_text().strip()
+        for stmt in ast.parse(p.read_text()).body
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)) and stmt.name not in referenced
     }
-    assert sorted(modules - seen) == []
+    assert sorted(unreferenced - TEST_ONLY) == []

@@ -4,7 +4,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from log_parser_cli_spark.extras.textstats import (
-    bpe_ish_token_count,
     fingerprint_count,
     lang_id,
     quality_score,
@@ -27,14 +26,6 @@ def docs(spark):
 def test_token_count(spark):
     df = spark.createDataFrame([(1, "a b c d")], "id long, text string")
     assert df.select(token_count("text")).first()[0] == 4
-
-
-def test_bpe_ish_token_count(spark):
-    df = spark.createDataFrame([(1, "user42 logged-in at 14:30")], "id long, text string")
-    # pieces: user | 42 | logged | -in | at | 14 | :30
-    # (the lookahead split starts a new piece at each symbol but keeps the
-    # symbol attached to what follows)
-    assert df.select(bpe_ish_token_count("text")).first()[0] == 7
 
 
 def test_lang_id_heuristic(docs):
