@@ -12,17 +12,36 @@ oracle SQL reads by absolute path — DuckDB sees the same parquet bytes.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
+import pathlib
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from log_parser_cli_spark.datagen import GEN_VERSION, ensure_fixtures, fixtures_for_sf_dir
 
-# Bump when pipeline logic changes so cached run dirs are invalidated.
+# Names bench.py's frozen ``_mapping-v{N}`` discovery cache; data/runs dirs
+# are keyed on the engine source itself (``source_digest``).
 ENGINE_VERSION = 8  # v8: streaming template library (out/mapping) is a SnapshotTable; v7: salt_share + per-template salt
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+_REPO_ROOT = os.path.dirname(_PKG_DIR)
+
+
+@functools.lru_cache(maxsize=None)
+def source_digest(pkg_dir: str = _PKG_DIR) -> str:
+    """Digest of a package's ``.py`` sources (sorted relative path plus
+    bytes), computed once per process: any engine code change names fresh
+    cached run dirs."""
+    root = pathlib.Path(pkg_dir)
+    h = hashlib.sha256()
+    for rel in sorted(p.relative_to(root).as_posix() for p in root.rglob("*.py")):
+        data = (root / rel).read_bytes()
+        h.update(f"{rel}\0{len(data)}\0".encode())
+        h.update(data)
+    return h.hexdigest()[:12]
 
 
 def _runs_base() -> str:
@@ -30,11 +49,13 @@ def _runs_base() -> str:
 
 
 def _run_dir(sf_dir: str, kind: str = "") -> str:
-    """Cached run dir for one sf and run kind, keyed on the engine and
-    fixture-generator versions so a logic change never reuses stale output."""
+    """Cached run dir for one sf and run kind, keyed on the engine source and
+    the fixture-generator version so a code change never reuses stale output."""
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     tag = f"-{kind}" if kind else ""
-    return os.path.join(_runs_base(), f"{sf_name}{tag}-v{ENGINE_VERSION}.{GEN_VERSION}")
+    return os.path.join(
+        _runs_base(), f"{sf_name}{tag}-v{ENGINE_VERSION}.{GEN_VERSION}-{source_digest()}"
+    )
 
 
 def pipeline_out_for(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -410,7 +431,7 @@ def q_library_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_orphan_requeue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2/E3/E4: delete two templates, re-queue their rows into pending,
+    """E2/E3: delete two templates, re-queue their rows into pending,
     exclude already-seen contents — per-source kept/pending counts."""
     from log_parser_cli_spark.plans.library_ops import exclude_seen, requeue_orphans
 

@@ -14,8 +14,9 @@ template is masked out of every later template's input) while keeping zero
 per-row Python on the RE2 path. Patterns RE2 cannot compile fall back to the
 Python ``re`` loop — for those rows only.
 
-Used for the ``--match-only`` replay path (semantic-log-parser.ts:108-151) and
-as the parity check against the signature fast path. Per-executor compiled
+Used for the ``--match-only`` replay path (semantic-log-parser.ts:108-151),
+as the parity check against the signature fast path, and (``match_batch``,
+on the driver) for every regex test of the refine machine. Per-process compiled
 cache keyed by a digest of the whole library (mirrors TemplateRuntimeCache,
 template-runtime-cache.ts:22-60 — compile O(templates), not O(templates×rows)).
 """
@@ -118,6 +119,74 @@ def _groupdicts(struct: pa.StructArray) -> list[dict[str, str]]:
     ]
 
 
+def match_batch(
+    contents, sources, template_rows: list[dict], lib_key: tuple
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one matching kernel: ordered first-match-wins over one batch.
+
+    ``contents``/``sources``: equal-length sequences (a pandas Series or a
+    list) of line text and source name. Returns (template ids, variable
+    maps), one per row, None where no template of the row's source matches
+    its whole line; null contents and null sources stay unmatched. The
+    executor path (``match_templates``) and the driver-side refine machine
+    (``plans.library_ops``) both run every regex test through here.
+    """
+    n = len(contents)
+    tids = np.full(n, None, dtype=object)
+    varmaps = np.full(n, None, dtype=object)
+    contents = pa.array(contents, type=pa.string(), from_pandas=True)
+    valid = pc.is_valid(contents).to_numpy(zero_copy_only=False)
+    sources = np.asarray(sources, dtype=object)
+    # null sources stay unmatched (np.unique cannot sort None vs str)
+    src_notnull = np.array([s is not None for s in sources], dtype=bool)
+    for src in np.unique(sources[src_notnull]):
+        compiled = compile_ordered(template_rows, src, lib_key)
+        if not compiled:
+            continue
+        # still-unmatched candidate positions for this source
+        remaining = np.nonzero((sources == src) & valid & src_notnull)[0]
+        for tpl in compiled:
+            if remaining.size == 0:
+                break
+            lines = pc.take(contents, pa.array(remaining, pa.int64()))
+            if tpl.mode == "re2_extract":
+                struct = pc.extract_regex(lines, tpl.full_pattern)
+                hit = pc.is_valid(struct).to_numpy(zero_copy_only=False)
+                hit_pos = remaining[hit]
+                if hit_pos.size:
+                    tids[hit_pos] = tpl.template_id
+                    varmaps[hit_pos] = _groupdicts(struct.filter(pa.array(hit)))
+                remaining = remaining[~hit]
+            elif tpl.mode == "re2_match":
+                hit = (
+                    pc.fill_null(pc.match_substring_regex(lines, tpl.full_pattern), False)
+                    .to_numpy(zero_copy_only=False)
+                    .astype(bool)
+                )
+                hit_pos = remaining[hit]
+                if hit_pos.size:
+                    tids[hit_pos] = tpl.template_id
+                    varmaps[hit_pos] = [{} for _ in range(hit_pos.size)]
+                remaining = remaining[~hit]
+            else:  # Python re fallback (RE2-incompatible patterns only)
+                rx = tpl.rx
+                keep = []
+                for pos, line in zip(remaining, lines.to_pylist()):
+                    # fullmatch, not match()+end-length check: with an
+                    # in-pattern end anchor the engine backtracks into
+                    # later alternatives (e.g. 'a|ab' on 'ab'), keeping
+                    # py-mode consistent with the RE2 \A(?:...)\z modes
+                    m = rx.fullmatch(line)
+                    if m is not None:
+                        tids[pos] = tpl.template_id
+                        gd = m.groupdict()
+                        varmaps[pos] = {k: v for k, v in gd.items() if v is not None}
+                    else:
+                        keep.append(pos)
+                remaining = np.array(keep, dtype=np.int64)
+    return tids, varmaps
+
+
 def match_templates(
     spark: SparkSession,
     df: DataFrame,
@@ -141,69 +210,12 @@ def match_templates(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = b_templates.value
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            tids = np.full(n, None, dtype=object)
-            varmaps = np.full(n, None, dtype=object)
-            contents = pa.Array.from_pandas(pdf[content_col], type=pa.string())
-            valid = pc.is_valid(contents).to_numpy(zero_copy_only=False)
-            sources = pdf[source_col].to_numpy()
-            # null sources stay unmatched (np.unique cannot sort None vs str)
-            src_notnull = np.array([s is not None for s in sources], dtype=bool)
-            for src in np.unique(sources[src_notnull]):
-                compiled = compile_ordered(rows, src, lib_key)
-                if not compiled:
-                    continue
-                # still-unmatched candidate positions for this source
-                remaining = np.nonzero((sources == src) & valid & src_notnull)[0]
-                for tpl in compiled:
-                    if remaining.size == 0:
-                        break
-                    lines = pc.take(contents, pa.array(remaining, pa.int64()))
-                    if tpl.mode == "re2_extract":
-                        struct = pc.extract_regex(lines, tpl.full_pattern)
-                        hit = pc.is_valid(struct).to_numpy(zero_copy_only=False)
-                        hit_pos = remaining[hit]
-                        if hit_pos.size:
-                            tids[hit_pos] = tpl.template_id
-                            varmaps[hit_pos] = _groupdicts(
-                                struct.filter(pa.array(hit))
-                            )
-                        remaining = remaining[~hit]
-                    elif tpl.mode == "re2_match":
-                        hit = (
-                            pc.fill_null(
-                                pc.match_substring_regex(lines, tpl.full_pattern), False
-                            )
-                            .to_numpy(zero_copy_only=False)
-                            .astype(bool)
-                        )
-                        hit_pos = remaining[hit]
-                        if hit_pos.size:
-                            tids[hit_pos] = tpl.template_id
-                            varmaps[hit_pos] = [{} for _ in range(hit_pos.size)]
-                        remaining = remaining[~hit]
-                    else:  # Python re fallback (RE2-incompatible patterns only)
-                        rx = tpl.rx
-                        keep = []
-                        py_lines = lines.to_pylist()
-                        for pos, line in zip(remaining, py_lines):
-                            # fullmatch, not match()+end-length check: with an
-                            # in-pattern end anchor the engine backtracks into
-                            # later alternatives (e.g. 'a|ab' on 'ab'), keeping
-                            # py-mode consistent with the RE2 \A(?:...)\z modes
-                            m = rx.fullmatch(line)
-                            if m is not None:
-                                tids[pos] = tpl.template_id
-                                gd = m.groupdict()
-                                varmaps[pos] = {k: v for k, v in gd.items() if v is not None}
-                            else:
-                                keep.append(pos)
-                        remaining = np.array(keep, dtype=np.int64)
             out = pdf.copy()
-            out["template_id"] = tids
-            out["variables"] = varmaps
+            out["template_id"], out["variables"] = match_batch(
+                pdf[content_col], pdf[source_col], rows, lib_key
+            )
             yield out
 
     return df.mapInPandas(run, schema=out_schema)

@@ -258,17 +258,19 @@ def refine_mapping(
     355-451, 561-612) and return the refined signature mapping.
 
     Spark-first shape: the state machine runs over the DISTINCT-SIGNATURE
-    dimension (cardinality ~templates, never the fact stream). Each signature
-    is represented by its first-seen content; candidates are the Drain
-    clusters exported as anchored regex templates (plans/export.py) in
-    discovery order; conflicts are checked against per-template stored samples
-    scoped to the candidate's source. After the queue drains, the FINAL
-    library re-matches every signature representative — the reference's
-    replay-vs-final-library semantics — so orphans re-queued after their
-    rightful template was already integrated still land correctly. Signatures
-    no surviving template matches get no mapping row (→ UNMATCHED, the
-    unresolved-samples path, pipeline.ts:451-456). The refined templates'
-    ``salt_share`` is NULL: their row counts were never aggregated.
+    dimension (cardinality ~templates, never the fact stream). One collect
+    brings each signature's first-seen content to the driver; the machine
+    (``library_ops.discover_with_refine``) and the final re-match run there
+    through the matcher's kernel, so the job count does not grow with the
+    number of candidates. Candidates are the Drain clusters exported as
+    anchored regex templates (plans/export.py) in discovery order. After the
+    queue drains, the FINAL library re-matches every signature representative
+    — the reference's replay-vs-final-library semantics — so orphans
+    re-queued after their rightful template was already integrated still
+    land correctly. Signatures no surviving template matches get no mapping
+    row (→ UNMATCHED, the unresolved-samples path, pipeline.ts:451-456). The
+    refined templates' ``salt_share`` is NULL: their row counts were never
+    aggregated.
 
     ``seed_library``: pre-existing template dicts (template_id, source,
     pattern, created_at, template_star) — e.g. a carried-over library whose
@@ -276,11 +278,11 @@ def refine_mapping(
 
     Returns (refined mapping DataFrame, per-candidate reports).
     """
-    from log_parser_cli_spark.operators.matcher import match_templates
+    from log_parser_cli_spark.operators.matcher import library_key, match_batch
     from log_parser_cli_spark.plans.export import export_template_library
     from log_parser_cli_spark.plans.library_ops import discover_with_refine
 
-    sig_df = (
+    sig_agg = (
         parsed.filter(F.col("head_matched"))
         .groupBy("source", "content_sig")
         .agg(F.min(F.struct("doc_id", "content")).alias("_f"))
@@ -291,30 +293,26 @@ def refine_mapping(
             F.col("_f.content").alias("content"),
         )
     )
+    reps = sig_agg.collect()
+    sig_df = spark.createDataFrame(reps, sig_agg.schema)
     enriched_sigs = sig_df.join(F.broadcast(mapping), ["source", "content_sig"])
     candidates = export_template_library(spark, enriched_sigs)
     candidates.sort(key=lambda t: (t["source"], t["created_at"], t["template_id"]))
 
-    library = [dict(t) for t in (seed_library or [])]
-    base = sig_df.select("doc_id", "source", "content_sig", "content")
-    seeded = match_templates(spark, base, library)
-    matches = seeded.filter(F.col("template_id").isNotNull())
-    pending = seeded.filter(F.col("template_id").isNull()).drop("template_id", "variables")
     res = discover_with_refine(
-        spark,
-        library,
-        matches,
-        pending,
+        seed_library or [],
+        [(r.doc_id, r.source, r.content) for r in reps],
         candidates,
-        sample_scope_col="source",
     )
-    final = match_templates(spark, base, res["library"])
-    star_of = {t["template_id"]: t.get("template_star", "") for t in res["library"]}
+    library = res["library"]
+    tids, _ = match_batch(
+        [r.content for r in reps], [r.source for r in reps], library, library_key(library)
+    )
+    star_of = {t["template_id"]: t.get("template_star", "") for t in library}
     rows = [
-        (r["source"], r["content_sig"], r["template_id"], star_of.get(r["template_id"], ""), None)
-        for r in final.filter(F.col("template_id").isNotNull())
-        .select("source", "content_sig", "template_id")
-        .collect()
+        (r.source, r.content_sig, tid, star_of.get(tid, ""), None)
+        for r, tid in zip(reps, tids)
+        if tid is not None
     ]
     refined = spark.createDataFrame(rows, MAPPING_SCHEMA)
     return refined, res["reports"]

@@ -5,12 +5,15 @@ import os
 
 import pyspark.sql.functions as F
 
-from log_parser_cli_spark.operators.matcher import match_templates
-from log_parser_cli_spark.plans.library_ops import integrate_template
+from log_parser_cli_spark.plans.library_ops import discover_with_refine
 from log_parser_cli_spark.plans.pipeline import discover_templates, extend_mapping
 
 
-def test_refine_loop_deletes_overbroad_seed_and_reassigns(spark):
+def _pending(owner):
+    return sorted(d for d, t in owner.items() if t is None)
+
+
+def test_refine_loop_deletes_overbroad_seed_and_reassigns():
     """An overbroad seed template that stole another cluster's rows ends
     DELETED; its orphans re-queue and re-match against the accepted candidate
     (pipeline.ts:355-451 + 561-612 semantics). Counts checked against an
@@ -20,7 +23,6 @@ def test_refine_loop_deletes_overbroad_seed_and_reassigns(spark):
         + [(f"b{i:02d}", "s", f"beta {i} done") for i in range(6)]
         + [(f"g{i:02d}", "s", f"gamma sent {i}") for i in range(4)]
     )
-    df = spark.createDataFrame(rows, "doc_id string, source string, content string")
 
     # overbroad seed: swallows both alpha and beta rows
     seed = {
@@ -29,11 +31,9 @@ def test_refine_loop_deletes_overbroad_seed_and_reassigns(spark):
         "pattern": r"^[a-z]+ (?P<v1>\d+) [a-z]+$",
         "created_at": 1,
     }
-    matched0 = match_templates(spark, df, [seed])
-    matches = matched0.filter(F.col("template_id").isNotNull())
-    pending = matched0.filter(F.col("template_id").isNull()).drop("template_id", "variables")
-    assert matches.count() == 16  # alpha + beta
-    assert pending.count() == 4  # gamma
+    seeded = discover_with_refine([seed], rows, [])["owner"]
+    assert sum(t is not None for t in seeded.values()) == 16  # alpha + beta
+    assert len(_pending(seeded)) == 4  # gamma
 
     candidate = {
         "template_id": "s#1",
@@ -41,35 +41,32 @@ def test_refine_loop_deletes_overbroad_seed_and_reassigns(spark):
         "pattern": r"^alpha (?P<v1>\d+) ok$",
         "created_at": 2,
     }
-    result = integrate_template(spark, [seed], matches, pending, candidate)
+    result = discover_with_refine([seed], rows, [candidate])
+    (report,) = result["reports"]
 
-    assert result["accepted"]
-    assert result["deleted_ids"] == ["s#seed"]
+    assert report["accepted"]
+    assert report["deleted_ids"] == ["s#seed"]
     assert [t["template_id"] for t in result["library"]] == ["s#1"]
     # pure-Python oracle: candidate owns exactly the 10 alpha rows; beta's 6
     # orphans + gamma's 4 return to pending
-    owned = {r.doc_id: r.template_id for r in result["matches"].collect()}
+    owned = {d: t for d, t in result["owner"].items() if t is not None}
     assert owned == {f"a{i:02d}": "s#1" for i in range(10)}
-    assert result["matches"].count() == 10
-    assert result["pending"].count() == 10
-    assert {r.doc_id[0] for r in result["pending"].collect()} == {"b", "g"}
+    assert len(owned) == 10
+    assert len(_pending(result["owner"])) == 10
+    assert {d[0] for d in _pending(result["owner"])} == {"b", "g"}
 
 
-def test_refine_loop_rejects_unresolvable_candidate(spark):
+def test_refine_loop_rejects_unresolvable_candidate():
     """A candidate that conflicts with a template whose samples it cannot
     release (self-conflict via identical ownership each round) hits the
     iteration cap and is rejected; orphans stay pending."""
     rows = [(f"x{i}", "s", f"item {i} ok") for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id string, source string, content string")
     t1 = {
         "template_id": "s#1",
         "source": "s",
         "pattern": r"^item (?P<v1>\d+) ok$",
         "created_at": 1,
     }
-    matched0 = match_templates(spark, df, [t1])
-    matches = matched0.filter(F.col("template_id").isNotNull())
-    pending = matched0.filter(F.col("template_id").isNull()).drop("template_id", "variables")
 
     # candidate overlaps everything t1 owns
     candidate = {
@@ -80,51 +77,59 @@ def test_refine_loop_rejects_unresolvable_candidate(spark):
     }
 
     # conflict → t1 deleted → accept on re-check (sanity of the accept path)
-    r1 = integrate_template(spark, [t1], matches, pending, candidate)
+    (r1,) = discover_with_refine([t1], rows, [candidate])["reports"]
     assert r1["accepted"] and r1["deleted_ids"] == ["s#1"]
 
     # iteration-cap exhaustion path: with a zero budget the candidate is
     # rejected outright and the library is untouched
-    r2 = integrate_template(spark, [t1], matches, pending, candidate, max_iterations=0)
-    assert not r2["accepted"]
+    r2 = discover_with_refine([t1], rows, [candidate], max_iterations=0)
+    assert not r2["reports"][0]["accepted"]
     assert [t["template_id"] for t in r2["library"]] == ["s#1"]
 
 
-def test_discover_with_refine_processes_candidate_queue(spark):
+def test_discover_with_refine_processes_candidate_queue():
     """Sequential candidate queue (pipeline.ts:130-165): candidate 1 deletes
     the overbroad seed and claims its rows; candidate 2 then claims the beta
     orphans that returned to pending; gamma rows remain pending."""
-    from log_parser_cli_spark.plans.library_ops import discover_with_refine
-
     rows = (
         [(f"a{i:02d}", "s", f"alpha {i} ok") for i in range(8)]
         + [(f"b{i:02d}", "s", f"beta {i} done") for i in range(5)]
         + [(f"g{i:02d}", "s", f"gamma sent {i}") for i in range(3)]
     )
-    df = spark.createDataFrame(rows, "doc_id string, source string, content string")
     seed = {
         "template_id": "s#seed",
         "source": "s",
         "pattern": r"^[a-z]+ (?P<v1>\d+) [a-z]+$",
         "created_at": 1,
     }
-    matched0 = match_templates(spark, df, [seed])
-    matches = matched0.filter(F.col("template_id").isNotNull())
-    pending = matched0.filter(F.col("template_id").isNull()).drop("template_id", "variables")
-
     candidates = [
         {"template_id": "s#1", "source": "s", "pattern": r"^alpha (?P<v1>\d+) ok$", "created_at": 2},
         {"template_id": "s#2", "source": "s", "pattern": r"^beta (?P<v1>\d+) done$", "created_at": 3},
     ]
-    result = discover_with_refine(spark, [seed], matches, pending, candidates)
+    result = discover_with_refine([seed], rows, candidates)
     assert [r["accepted"] for r in result["reports"]] == [True, True]
     assert result["reports"][0]["deleted_ids"] == ["s#seed"]
     assert result["reports"][1]["deleted_ids"] == []
     assert sorted(t["template_id"] for t in result["library"]) == ["s#1", "s#2"]
-    owned = {r.doc_id[0] for r in result["matches"].collect()}
-    assert owned == {"a", "b"}
-    assert result["matches"].count() == 13
-    assert {r.doc_id[0] for r in result["pending"].collect()} == {"g"}
+    owned = [d for d, t in result["owner"].items() if t is not None]
+    assert {d[0] for d in owned} == {"a", "b"}
+    assert len(owned) == 13
+    assert {d[0] for d in _pending(result["owner"])} == {"g"}
+
+
+def test_refine_conflicts_are_full_line_matches():
+    """A candidate that matches a seed's samples only as a substring would
+    claim none of them: no conflict, the seed survives, and the candidate
+    claims only the pending lines it matches whole."""
+    rows = [(f"a{i}", "s", f"alpha {i} ok") for i in range(3)] + [("p0", "s", "alpha 7")]
+    seed = {"template_id": "s#seed", "source": "s", "pattern": r"^alpha (?P<v1>\d+) ok$", "created_at": 1}
+    candidate = {"template_id": "s#1", "source": "s", "pattern": r"alpha (?P<v1>\d+)", "created_at": 2}
+    result = discover_with_refine([seed], rows, [candidate])
+    assert result["reports"] == [
+        {"template_id": "s#1", "accepted": True, "deleted_ids": [], "iterations": 1}
+    ]
+    assert sorted(t["template_id"] for t in result["library"]) == ["s#1", "s#seed"]
+    assert result["owner"] == {"a0": "s#seed", "a1": "s#seed", "a2": "s#seed", "p0": "s#1"}
 
 
 def test_discovery_driver_set_is_bounded(spark):

@@ -26,3 +26,23 @@ def test_entry_returns_rows(spark):
     assert len(rows) > 0
     assert {"source", "template_star", "n_sequences"} <= set(df.columns)
     assert sum(r.n_sequences for r in rows) > 0
+
+
+def test_run_dirs_are_keyed_on_the_engine_source(tmp_path):
+    """A one-byte change anywhere in the package names fresh cached run dirs."""
+    import shutil
+
+    from log_parser_cli_spark import entry_impl
+
+    pkg = entry_impl._PKG_DIR
+    same, changed = str(tmp_path / "same"), str(tmp_path / "changed")
+    for dst in (same, changed):
+        shutil.copytree(pkg, dst, ignore=shutil.ignore_patterns("__pycache__"))
+    src = os.path.join(changed, "plans", "library_ops.py")
+    data = open(src, "rb").read()
+    with open(src, "wb") as f:
+        f.write(data[:-1] + bytes([data[-1] ^ 1]))
+    digest = entry_impl.source_digest()
+    assert entry_impl.source_digest(same) == digest
+    assert entry_impl.source_digest(changed) != digest
+    assert entry_impl._run_dir("/fx/sf0.01", "refine").endswith(f"-{digest}")

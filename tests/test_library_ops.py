@@ -1,18 +1,11 @@
-"""Library maintenance ops: upsert, capped store, orphan re-queue, conflicts,
-report sinks (K2-K7, E2-E4, J3, A9)."""
-
-import json
-import os
-
-import pyspark.sql.functions as F
+"""Library maintenance ops: upsert, orphan re-queue, conflicts, report sinks
+(K2, K4, K5, E2, E3, J3)."""
 
 from log_parser_cli_spark.plans.library_ops import (
-    append_matches_capped,
     detect_conflicts,
     exclude_seen,
     merge_templates,
     requeue_orphans,
-    write_conflict_report,
     write_failure_report,
     write_match_report,
 )
@@ -29,27 +22,14 @@ def test_merge_templates_upsert(spark):
     assert got == {"t#1": "new pattern", "t#2": "keep me", "t#3": "brand new"}
 
 
-def test_append_matches_capped(spark):
-    existing = spark.createDataFrame(
-        [("s", i, f"line{i}") for i in range(10)], "source string, line_no long, content string"
-    )
-    new = spark.createDataFrame(
-        [("s", i, f"line{i}") for i in range(8, 15)], "source string, line_no long, content string"
-    )
-    got = append_matches_capped(existing, new, cap=6)
-    rows = sorted(r.line_no for r in got.collect())
-    assert rows == [9, 10, 11, 12, 13, 14]  # newest 6, duplicates collapsed
-
-
 def test_requeue_orphans(spark):
     matches = spark.createDataFrame(
         [("d1", "t#1", "a"), ("d2", "t#2", "b"), ("d3", "t#1", "c")],
         "doc_id string, template_id string, content string",
     )
-    pending = spark.createDataFrame([("d9", "z")], "doc_id string, content string")
-    kept, new_pending = requeue_orphans(matches, ["t#1"], pending)
+    kept, orphans = requeue_orphans(matches, ["t#1"])
     assert {r.doc_id for r in kept.collect()} == {"d2"}
-    assert {r.doc_id for r in new_pending.collect()} == {"d9", "d1", "d3"}
+    assert {r.doc_id for r in orphans.collect()} == {"d1", "d3"}
 
 
 def test_exclude_seen(spark):
@@ -81,6 +61,18 @@ def test_conflicts_ignore_own_samples(spark):
     assert detect_conflicts(samples, "t#9", r"^served \d+ blocks$").count() == 0
 
 
+def test_conflicts_are_full_line_matches(spark):
+    """A conflict means the candidate would claim the whole line, as in the
+    matcher: an unanchored pattern that only finds a substring of a sample
+    conflicts with nothing."""
+    samples = spark.createDataFrame(
+        [("s#seed", "alpha 3 ok"), ("s#seed", "alpha 4 ok"), ("s#2", "alpha 5")],
+        "template_id string, content string",
+    )
+    conflicts = detect_conflicts(samples, "s#1", r"alpha (?P<v1>\d+)")
+    assert {r.template_id: r.n_conflicts for r in conflicts.collect()} == {"s#2": 1}
+
+
 def test_report_sinks(spark, tmp_path):
     matched = spark.createDataFrame(
         [("raw a", "t#1", "tpl <*>")], "raw_log string, template_id string, template_placeholder string"
@@ -88,14 +80,6 @@ def test_report_sinks(spark, tmp_path):
     write_match_report(matched, str(tmp_path / "matches"))
     back = spark.read.option("header", True).csv(str(tmp_path / "matches"))
     assert back.count() == 1 and back.columns == ["raw_log", "template_id", "template_placeholder"]
-
-    conflicts = spark.createDataFrame(
-        [("t#1", 2, ["a", "b"], "t#9")],
-        "template_id string, n_conflicts long, sample_contents array<string>, candidate_template_id string",
-    )
-    path = write_conflict_report(conflicts, str(tmp_path))
-    payload = json.load(open(path))
-    assert payload["totalConflicts"] == 2 and len(payload["conflicts"]) == 1
 
     failures = spark.createDataFrame(
         [(3, "bad line", "parse", "head pattern did not match")],

@@ -31,13 +31,10 @@ def _imports(path: pathlib.Path) -> set[str]:
 
 
 #: Functions only tests call, on purpose: the pure-Python twins tests compare
-#: against, and the reference's conflict-report (K3) and capped match-store
-#: (K6) sinks, contract-tested but wired into no job yet.
+#: against.
 TEST_ONLY = {
     f"{PKG}.oracle.oracle_match",
     f"{PKG}.oracle.oracle_counts",
-    f"{PKG}.plans.library_ops.write_conflict_report",
-    f"{PKG}.plans.library_ops.append_matches_capped",
 }
 
 ENTRIES = [ROOT / "__spark_entry__.py", ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]

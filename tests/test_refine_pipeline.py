@@ -7,7 +7,7 @@ import os
 
 import pyspark.sql.functions as F
 
-from log_parser_cli_spark.plans.pipeline import run_pipeline
+from log_parser_cli_spark.plans.pipeline import refine_mapping, run_pipeline
 
 SEED = {
     "template_id": "apache#0seed",
@@ -63,3 +63,19 @@ def test_refine_without_seed_is_identity(spark, fixture_dir, pipeline_out, tmp_p
         reports = json.load(f)
     assert all(r["accepted"] and not r["deleted_ids"] for r in reports)
     assert _star_counts(spark, out) == _star_counts(spark, pipeline_out)
+
+
+def test_refine_job_count_does_not_grow_with_candidates(spark, pipeline_out):
+    """The machine runs on the driver over the collected signature
+    representatives: refine_mapping runs a fixed handful of Spark jobs, not
+    several per candidate."""
+    parsed = spark.read.parquet(os.path.join(pipeline_out, "parsed"))
+    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    sc = spark.sparkContext
+    sc.setJobGroup("refine-job-count", "refine_mapping")
+    try:
+        _, reports = refine_mapping(spark, parsed, mapping, seed_library=[dict(SEED)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(reports) > 10
+    assert len(sc.statusTracker().getJobIdsForGroup("refine-job-count")) <= 10
