@@ -215,18 +215,14 @@ def q_head_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed coverage validation of the final pattern (P5). Sources whose
     derivation fails are omitted (matching the oracle twin's filter)."""
     from log_parser_cli_spark.functions.templates import to_jvm_pattern
-    from log_parser_cli_spark.operators.head_derive import refine_head_pattern, stride_pool_collect
+    from log_parser_cli_spark.operators.head_derive import derive_heads, stride_pool_collect
 
     fx = fixtures_for_sf_dir(sf_dir)
     gt = spark.read.parquet(os.path.join(fx, "ground_truth.parquet")).select(
         "source", "line_no", "rendered"
     )
     pools = stride_pool_collect(gt, "source", "line_no", ["rendered"], HEAD_DERIVE_POOL)
-    patterns: dict[str, str] = {}
-    for src in sorted(pools):
-        pat, _, _ = refine_head_pattern([ln for _no, ln in pools[src]])
-        if pat:
-            patterns[src] = pat
+    patterns = {s: p for s, p in derive_heads(pools, HEAD_DERIVE_POOL).items() if p}
     # distributed coverage of the derived patterns (literal per-source rlike →
     # compiled once per branch, whole-stage codegen)
     matched = F.lit(False)
@@ -900,7 +896,7 @@ def q_source_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the same decision as a regexp CASE over the ground truth's
     rendered lines — DuckDB's regexps are RE2, the same engine the matcher
     uses, so the vote is bit-reproducible."""
-    from log_parser_cli_spark.operators.parse import infer_sources
+    from log_parser_cli_spark.operators.parse import parse_stage
     from log_parser_cli_spark.plans.pipeline import load_dims
 
     fx = fixtures_for_sf_dir(sf_dir)
@@ -908,8 +904,8 @@ def q_source_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = spark.read.parquet(os.path.join(fx, "sequences.parquet")).withColumn(
         "source", F.lit(None).cast("string")
     )
-    inferred = infer_sources(spark, seq, vocab_rows, source_heads)
-    return inferred.groupBy("source").agg(F.count("*").cast("long").alias("n_rows"))
+    parsed = parse_stage(spark, seq, vocab_rows, source_heads)
+    return parsed.groupBy("source").agg(F.count("*").cast("long").alias("n_rows"))
 
 
 def q_compression_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1621,7 +1617,7 @@ SELECT lang_guess, CAST(count(*) AS BIGINT) AS n_docs FROM guessed GROUP BY 1
 
 
 def _source_routing_sql(gt: str, sources_path: str) -> str:
-    """Replay infer_sources' first-match-in-sorted-source-order vote as a
+    """Replay parse_stage's first-match-in-sorted-source-order vote as a
     regexp CASE over the ground truth's rendered lines."""
     import pyarrow.parquet as pq
 

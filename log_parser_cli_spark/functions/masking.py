@@ -37,18 +37,6 @@ MASK_RULES: list[tuple[str, re.Pattern[str]]] = [
 # \x00 guard: no real token can equal a mask token.
 MASK_TOKENS: dict[str, str] = {name: f"\x00{name}\x00" for name, _ in MASK_RULES}
 
-# Equivalent JVM-regex replacement rules (for an all-Catalyst masking path over
-# already-rendered text columns, e.g. the documents table): word-anchored
-# regexp_replace chain. Python and JVM dialects agree on these patterns.
-JVM_MASK_REPLACEMENTS: list[tuple[str, str]] = [
-    (r"(?<=^|\s)\d{4}-\d{2}-\d{2}(?:[T ]\d{2}:\d{2}:\d{2}(?:[.,]\d+)?Z?)?(?=\s|$)", "<TS>"),
-    (r"(?<=^|\s)\d{2}:\d{2}(?::\d{2})?(?:[.,]\d+)?(?=\s|$)", "<TIME>"),
-    (r"(?<=^|\s)\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}(?::\d+)?(?=\s|$)", "<IP>"),
-    (r"(?<=^|\s)0x[0-9a-fA-F]+(?=\s|$)", "<HEX>"),
-    (r"(?<=^|\s)[+-]?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?%?(?=\s|$)", "<NUM>"),
-    (r"(?<=^|\s)/(?:[A-Za-z0-9_.\-]+/)*[A-Za-z0-9_.\-]+/?(?=\s|$)", "<PATH>"),
-]
-
 
 def mask_word(word: str) -> str:
     """Classify one word: returns the word itself or a mask token.
@@ -70,15 +58,6 @@ def mask_word(word: str) -> str:
             return f"{m.group(1)}{MASK_TOKENS['NUM']}"
         return MASK_TOKENS[name]
     return word
-
-
-def mask_words(words: list[str]) -> list[str]:
-    return [mask_word(w) for w in words]
-
-
-def signature_of_line(line: str) -> str:
-    """Canonical signature of a rendered line (single-space word split)."""
-    return " ".join(mask_words(line.split(" ")))
 
 
 _MASK_IN_SIG = re.compile("\x00[A-Z]+\x00")

@@ -12,8 +12,6 @@ reference CLI:
   shape (reference: src/common/regex-builder.ts:34-161).
 - ``normalize_placeholder``: ``⟪...⟫`` → ``<*>`` + whitespace squeeze
   (reference: benchmark/run-eval.js:114-118).
-- ``slugify``: library-id derivation
-  (reference: src/agents/implementations/routing-agent.ts:110-116).
 
 All of this runs driver-side at template-compile time (template cardinality is
 tiny); the per-row hot path never calls these.
@@ -228,14 +226,6 @@ def normalize_placeholder(s: str | None) -> str:
     if not s:
         return ""
     return _WS.sub(" ", _PLACEHOLDER.sub("<*>", s)).strip()
-
-
-_SLUG_STRIP = re.compile(r"[^a-z0-9]+")
-
-
-def slugify(s: str) -> str:
-    """Lowercase, non-alphanumeric runs → '-', strip edge dashes."""
-    return _SLUG_STRIP.sub("-", s.strip().lower()).strip("-")
 
 
 def fix_duplicated_variables(template: str, log_line: str) -> tuple[bool, str]:

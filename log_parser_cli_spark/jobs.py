@@ -83,8 +83,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="persist the top-50 overbroad-template report")
     ap.add_argument("--export-library", action="store_true",
                     help="export the discovered clusters as a regex template library")
-    ap.add_argument("--infer-sources", action="store_true",
-                    help="route NULL/empty-source rows by head-pattern vote before parsing")
     ap.add_argument("--refine", action="store_true",
                     help="run discovery through the conflict→delete→requeue candidate queue")
     ap.add_argument("--retain-snapshots", type=int, default=2, metavar="N",
@@ -124,7 +122,6 @@ def main(argv: list[str] | None = None) -> int:
         salt_buckets=args.salt_buckets,
         mapping_df=mapping_df,
         derive_heads=args.derive_heads,
-        infer_missing_sources=args.infer_sources,
         refine=args.refine,
         retain_snapshots=args.retain_snapshots,
     )

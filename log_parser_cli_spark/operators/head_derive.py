@@ -311,18 +311,20 @@ def derive_heads_stage(
     the ``source_heads`` dict parse_stage consumes: {source: (pattern, 1)} —
     group 1 is the named ``(?P<content>…)`` group. Sources where derivation
     fails are omitted (their rows become UNPARSED, the reference's
-    no-head-pattern failure path).
+    no-head-pattern failure path). Rows without a source take no part:
+    parse_stage routes them by a vote over the derived heads.
 
     Scale: one window-ranked scan of (doc_id, tokens, source) projecting only
     the pool rows to the driver; the full-corpus coverage cost is paid by the
     parse stage itself, not here.
     """
-    pools = stride_pool_collect(seq_df, "source", "doc_id", ["tokens"], pool_size)
-    vocab = {tid: word for tid, word in vocab_rows}
-    heads: dict[str, tuple[str, int]] = {}
-    for source in sorted(pools):
-        lines = [" ".join(vocab.get(t, "") for t in tokens) for _doc, tokens in pools[source]]
-        pattern, _, _ = refine_head_pattern(lines)
-        if pattern:
-            heads[source] = (pattern, 1)
-    return heads
+    from pyspark.sql import functions as F
+
+    known = seq_df.filter(F.col("source") != "")
+    pools = stride_pool_collect(known, "source", "doc_id", ["tokens"], pool_size)
+    vocab = dict(vocab_rows)
+    rendered = {
+        source: [(doc, " ".join(vocab.get(t, "") for t in tokens)) for doc, tokens in rows]
+        for source, rows in pools.items()
+    }
+    return {s: (p, 1) for s, p in derive_heads(rendered, pool_size).items() if p}

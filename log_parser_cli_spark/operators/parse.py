@@ -10,6 +10,8 @@ vectorized Arrow/NumPy kernel:
   row subset — the reference applies one compiled regex per row
   (src/core/head-pattern.ts:14-36); here it is one vectorized call per
   (source, batch), with a Python ``re`` fallback for patterns RE2 cannot run,
+- source vote: rows with a NULL/empty source try every head in sorted source
+  order over the still-unclaimed subset, one call per (head, batch),
 - masked signature: mask classes are precomputed per *vocab word* on the
   driver (masking.py) and applied by a second ``pc.take``; the content suffix
   is sliced with pure offset arithmetic (content is always a word-suffix of
@@ -44,6 +46,9 @@ PARSED_EXTRA_FIELDS = [
     T.StructField("head_matched", T.BooleanType()),
 ]
 
+# Source of rows no head pattern claims in the source vote.
+UNKNOWN_SOURCE = "__UNKNOWN__"
+
 # Per-executor-process caches (module state survives across tasks).
 _EXEC_CACHE: dict = {}
 
@@ -62,16 +67,6 @@ def _cached_vocab_arrays(key: tuple, b_vocab) -> tuple[pa.Array, pa.Array]:
         arrays = build_vocab_arrays(b_vocab.value)
         _EXEC_CACHE[key] = arrays
     return arrays
-
-
-def _render_lines(tokens: pa.Array, text_by_id: pa.Array) -> pa.StringArray:
-    """Render token lists → space-joined lines (one C++ take + join pass)."""
-    if isinstance(tokens, pa.ChunkedArray):
-        tokens = tokens.combine_chunks()
-    offs = np.asarray(tokens.offsets)
-    words = pc.take(text_by_id, tokens.values)
-    word_lists = pa.ListArray.from_arrays(pa.array(offs, pa.int32()), words)
-    return pc.binary_join(word_lists, pa.scalar(" "))
 
 
 def build_vocab_arrays(vocab_rows: list[tuple[int, str]]) -> tuple[pa.Array, pa.Array]:
@@ -164,80 +159,20 @@ def _extract_content(
     return content, matched
 
 
-def infer_sources(
-    spark: SparkSession,
-    seq_df: DataFrame,
-    vocab_rows: list[tuple[int, str]],
-    source_heads: dict[str, tuple[str, int]],
-    unknown_label: str = "__UNKNOWN__",
-) -> DataFrame:
-    """Routing stage (§3.1a): classify rows with NULL/empty ``source`` by
-    head-pattern match — the deterministic stand-in for the reference's
-    RoutingAgent (routing-agent.ts:34-80 classifies sample lines to a library;
-    here every candidate library's head regex votes, first match in sorted
-    source order wins; unmatched rows get ``unknown_label``).
-
-    Rows that already carry a source pass through untouched. Same vectorized
-    shape as parse: render once, then one RE2 pass per candidate source over
-    the still-unassigned subset.
-    """
-    sc = spark.sparkContext
-    b_vocab = sc.broadcast(vocab_rows)
-    vocab_key = cache_key("vocab", vocab_rows)
-    b_heads = sc.broadcast(sorted(source_heads.items()))
-
-    out_schema = seq_df.schema
-    col_names = [f.name for f in seq_df.schema.fields]
-    tokens_idx = col_names.index("tokens")
-    source_idx = col_names.index("source")
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        text_by_id, _canon = _cached_vocab_arrays(vocab_key, b_vocab)
-        heads = b_heads.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            src_col = batch.column(source_idx)
-            # vectorized unknown mask (no per-row Python)
-            unknown_arr = pc.or_kleene(
-                pc.is_null(src_col), pc.equal(src_col, pa.scalar(""))
-            )
-            unknown = pc.fill_null(unknown_arr, True).to_numpy(zero_copy_only=False)
-            if not unknown.any():
-                yield batch
-                continue
-            # render ONLY the unknown-source subset
-            unknown_idx = np.nonzero(unknown)[0]
-            tokens = batch.column(tokens_idx)
-            if isinstance(tokens, pa.ChunkedArray):
-                tokens = tokens.combine_chunks()
-            sub_tokens = tokens.take(pa.array(unknown_idx, pa.int64()))
-            lines = _render_lines(sub_tokens, text_by_id)
-            out_sources = src_col.to_numpy(zero_copy_only=False).copy()
-            remaining = np.arange(unknown_idx.size)  # positions within the subset
-            for src, (pattern, group_idx) in heads:
-                if remaining.size == 0:
-                    break
-                sub = pc.take(lines, pa.array(remaining, pa.int64()))
-                _c, matched = _extract_content(sub, pattern, group_idx)
-                out_sources[unknown_idx[remaining[matched]]] = src
-                remaining = remaining[~matched]
-            out_sources[unknown_idx[remaining]] = unknown_label
-            cols = list(batch.columns)
-            cols[source_idx] = pa.array(out_sources.tolist(), pa.string())
-            yield pa.RecordBatch.from_arrays(cols, names=col_names)
-
-    return seq_df.mapInArrow(run, schema=out_schema)
-
-
 def parse_stage(
     spark: SparkSession,
     seq_df: DataFrame,
     vocab_rows: list[tuple[int, str]],
     source_heads: dict[str, tuple[str, int]],
 ) -> DataFrame:
-    """seq_df(doc_id, tokens, n_tok, source) → + (content, content_sig, head_matched)."""
+    """seq_df(doc_id, tokens, n_tok, source) → + (content, content_sig, head_matched).
+
+    Rows whose ``source`` is NULL or empty are routed in the same pass: every
+    head votes in sorted source order and the first match takes the row
+    (reference routing-agent.ts:34-80 minus the LLM); unclaimed rows get
+    ``UNKNOWN_SOURCE`` and ``head_matched = False``. Rows with a source keep
+    their ``source`` column untouched.
+    """
     sc = spark.sparkContext
     b_vocab = sc.broadcast(vocab_rows)
     vocab_key = cache_key("vocab", vocab_rows)
@@ -252,6 +187,7 @@ def parse_stage(
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         text_by_id, canon_by_id = _cached_vocab_arrays(vocab_key, b_vocab)
         heads = b_heads.value
+        vote_order = sorted(heads.items())
 
         for batch in batches:
             n = batch.num_rows
@@ -263,21 +199,40 @@ def parse_stage(
             offs = np.asarray(tokens.offsets)
             flat = tokens.values
             # render: vocab take + list join — all C++
-            lines = _render_lines(tokens, text_by_id)
+            words = pa.ListArray.from_arrays(tokens.offsets, pc.take(text_by_id, flat))
+            lines = pc.binary_join(words, pa.scalar(" "))
 
-            # head extraction per source over that source's row subset
-            sources = batch.column(source_idx).to_numpy(zero_copy_only=False)
             content = np.full(n, None, dtype=object)
             matched = np.zeros(n, dtype=bool)
-            for src in np.unique(sources):
-                head = heads.get(src)
-                if head is None:
-                    continue
-                idx = np.nonzero(sources == src)[0]
-                sub = pc.take(lines, pa.array(idx, pa.int64()))
-                c_sub, m_sub = _extract_content(sub, head[0], head[1])
+
+            def extract(idx: np.ndarray, head: tuple[str, int]) -> np.ndarray:
+                c_sub, m_sub = _extract_content(pc.take(lines, idx), *head)
                 content[idx] = c_sub
                 matched[idx] = m_sub
+                return m_sub
+
+            # head extraction per source over that source's row subset
+            cols = batch.columns
+            src_col = cols[source_idx]
+            for src in pc.unique(src_col).to_pylist():
+                if src and src in heads:
+                    extract(pc.indices_nonzero(pc.equal(src_col, src)).to_numpy(), heads[src])
+
+            # rows without a source: first-match head vote in sorted source
+            # order over the still-unassigned rows (the reference's routing
+            # step, §3.1a); the voting extraction is the row's parse
+            unknown = pc.fill_null(pc.equal(src_col, ""), True)
+            if pc.any(unknown).as_py():
+                remaining = pc.indices_nonzero(unknown).to_numpy()
+                voted = src_col.to_numpy(zero_copy_only=False, writable=True)
+                for src, head in vote_order:
+                    if remaining.size == 0:
+                        break
+                    hit = extract(remaining, head)
+                    voted[remaining[hit]] = src
+                    remaining = remaining[~hit]
+                voted[remaining] = UNKNOWN_SOURCE
+                cols[source_idx] = pa.array(voted, pa.string())
 
             # masked signature of the content word-suffix: pure offset math
             canon_words = pc.take(canon_by_id, flat)
@@ -311,11 +266,7 @@ def parse_stage(
             # null-out signatures for unmatched rows (join gives "" there)
             sigs = pc.if_else(pa.array(matched), sigs, pa.scalar(None, pa.string()))
 
-            out_cols = list(batch.columns) + [
-                content_arr,
-                sigs,
-                pa.array(matched),
-            ]
+            out_cols = cols + [content_arr, sigs, pa.array(matched)]
             yield pa.RecordBatch.from_arrays(out_cols, names=out_names)
 
     return seq_df.mapInArrow(run, schema=out_schema)

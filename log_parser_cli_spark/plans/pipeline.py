@@ -397,7 +397,6 @@ def route_stage(
     enriched: DataFrame,
     out_dir: str,
     salt_buckets: int = 16,
-    shuffle_partitions: int | None = None,
     retain_snapshots: int = 2,
 ) -> dict[str, int]:
     """Deterministic fan-out write partitioned by (sink, template_id) — K1.
@@ -502,8 +501,6 @@ def run_replay(
     out_dir: str,
     mapping_df: DataFrame,
     salt_buckets: int = 16,
-    seq_df: DataFrame | None = None,
-    retain_snapshots: int = 2,
 ) -> int:
     """Lean scoring pass: parse → enrich (frozen mapping) → route → aggregate.
 
@@ -514,13 +511,10 @@ def run_replay(
     files. Returns the routed row count, observed on the route write.
     """
     vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
-    if seq_df is None:
-        seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
+    seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
     parsed = parse_stage(spark, seq_df, vocab_rows, source_heads)
     enriched = enrich_stage(parsed, mapping_df, sources_df)
-    counts = route_stage(
-        enriched, out_dir, salt_buckets=salt_buckets, retain_snapshots=retain_snapshots
-    )
+    counts = route_stage(enriched, out_dir, salt_buckets=salt_buckets)
     aggregate_stage(spark, read_routed(spark, out_dir), out_dir)
     return counts["rows"]
 
@@ -536,7 +530,6 @@ def run_pipeline(
     seq_df: DataFrame | None = None,
     checkpoint_parse: bool = True,
     derive_heads: bool = False,
-    infer_missing_sources: bool = False,
     refine: bool = False,
     seed_library: list[dict] | None = None,
     retain_snapshots: int = 2,
@@ -554,8 +547,6 @@ def run_pipeline(
     ``derive_heads=True`` ignores the configured head patterns and derives
     them from the token table itself (the reference's ensureHeadPattern step,
     manager.ts:31-213) before parsing.
-    ``infer_missing_sources=True`` routes NULL/empty-source rows to a library
-    by head-pattern vote before parsing (the reference's routing step, §3.1a).
     ``refine=True`` routes the discovered clusters through the full
     conflict→delete→requeue candidate queue (``refine_mapping``) before
     routing, optionally against a carried-over ``seed_library``; per-candidate
@@ -571,10 +562,6 @@ def run_pipeline(
     vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
     if seq_df is None:
         seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
-    if infer_missing_sources:
-        from log_parser_cli_spark.operators.parse import infer_sources
-
-        seq_df = infer_sources(spark, seq_df, vocab_rows, source_heads)
     if derive_heads:
         from log_parser_cli_spark.operators.head_derive import derive_heads_stage
 

@@ -11,7 +11,6 @@ from log_parser_cli_spark.functions.templates import (
     infer_regex_for_value,
     normalize_placeholder,
     parse_template_structure,
-    slugify,
 )
 
 
@@ -84,8 +83,3 @@ def test_normalize_placeholder():
 def test_anchor_pattern():
     assert anchor_pattern("abc") == "^abc$"
     assert anchor_pattern("^abc$") == "^abc$"
-
-
-def test_slugify():
-    assert slugify("Apache HTTPD 2.4!") == "apache-httpd-2-4"
-    assert slugify("  --Weird__Name--  ") == "weird-name"

@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 on Spark and its oracle_sql() on DuckDB at sf0.01, compare row count, schema
-width, and order-insensitive values.
+width, and order-insensitive values. Before it runs, it deletes the cached
+``data/runs`` dirs that an older engine source left behind.
 
 Usage: python tools/check_oracles.py [query_name ...]
 """
@@ -8,6 +9,8 @@ Usage: python tools/check_oracles.py [query_name ...]
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
 import time
 
@@ -33,9 +36,29 @@ def normalize(rows: list[tuple]) -> list[tuple]:
     return sorted(tuple(norm_val(v) for v in r) for r in rows)
 
 
+def prune_stale_runs(runs_dir: str, digest: str) -> list[str]:
+    """Delete the ``<sf>[-kind]-v*-<digest>`` run dirs whose digest is not
+    ``digest``; returns the deleted names. Only this tool prunes: a library
+    call never deletes another process's run dirs."""
+    if not os.path.isdir(runs_dir):
+        return []
+    stale = [
+        name
+        for name in sorted(os.listdir(runs_dir))
+        if (m := re.fullmatch(r".+-v[0-9.]+-([0-9a-f]{12})", name)) and m.group(1) != digest
+    ]
+    for name in stale:
+        shutil.rmtree(os.path.join(runs_dir, name))
+    return stale
+
+
 def main() -> int:
     import __spark_entry__ as entry_mod
+    from log_parser_cli_spark.entry_impl import _runs_base, source_digest
     from log_parser_cli_spark.session import get_spark
+
+    for name in prune_stale_runs(_runs_base(), source_digest()):
+        print(f"pruned stale run cache {name}")
 
     only = set(sys.argv[1:])
     spark = get_spark(app_name="check-oracles", cores=16)
