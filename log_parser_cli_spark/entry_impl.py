@@ -12,36 +12,19 @@ oracle SQL reads by absolute path — DuckDB sees the same parquet bytes.
 
 from __future__ import annotations
 
-import functools
-import hashlib
 import os
-import pathlib
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from log_parser_cli_spark.datagen import GEN_VERSION, ensure_fixtures, fixtures_for_sf_dir
+from log_parser_cli_spark.plans.checkpoint import source_digest
 
 # Names bench.py's frozen ``_mapping-v{N}`` discovery cache; data/runs dirs
 # are keyed on the engine source itself (``source_digest``).
 ENGINE_VERSION = 8  # v8: streaming template library (out/mapping) is a SnapshotTable; v7: salt_share + per-template salt
 
-_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
-_REPO_ROOT = os.path.dirname(_PKG_DIR)
-
-
-@functools.lru_cache(maxsize=None)
-def source_digest(pkg_dir: str = _PKG_DIR) -> str:
-    """Digest of a package's ``.py`` sources (sorted relative path plus
-    bytes), computed once per process: any engine code change names fresh
-    cached run dirs."""
-    root = pathlib.Path(pkg_dir)
-    h = hashlib.sha256()
-    for rel in sorted(p.relative_to(root).as_posix() for p in root.rglob("*.py")):
-        data = (root / rel).read_bytes()
-        h.update(f"{rel}\0{len(data)}\0".encode())
-        h.update(data)
-    return h.hexdigest()[:12]
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _runs_base() -> str:
@@ -1634,7 +1617,7 @@ def _source_routing_sql(gt: str, sources_path: str) -> str:
     """
 
 
-def _compression_gain_twin_sql(gt: str, threshold: float = 0.2, cap: int = 200) -> str:
+def _compression_gain_twin_sql(gt: str) -> str:
     """Pure-Python twin of extras.overbroad.compression_gain_stats over the
     ground truth (same zlib level, same doc_id-ordered cap, same rounding),
     inlined as literal rows — gzip byte counts are not SQL-expressible, so
@@ -1643,6 +1626,8 @@ def _compression_gain_twin_sql(gt: str, threshold: float = 0.2, cap: int = 200) 
     from itertools import groupby
 
     import duckdb
+
+    from log_parser_cli_spark.extras.overbroad import GAIN_THRESHOLD, MAX_ROWS_PER_TEMPLATE
 
     con = duckdb.connect()
     # key = source || '||' || event_template: discovered ids carry their own
@@ -1655,7 +1640,7 @@ def _compression_gain_twin_sql(gt: str, threshold: float = 0.2, cap: int = 200) 
     con.close()
     selects = []
     for tid, grp in groupby(rows, key=lambda r: r[0]):
-        g = list(grp)[:cap]
+        g = list(grp)[:MAX_ROWS_PER_TEMPLATE]
         raws = "\n".join(r[2] or "" for r in g)
         template = g[0][3] or ""
         var_text = "\n".join(r[4] or "" for r in g)
@@ -1670,7 +1655,7 @@ def _compression_gain_twin_sql(gt: str, threshold: float = 0.2, cap: int = 200) 
             f"CAST({tpl_b} AS BIGINT) AS template_gzip_bytes, "
             f"CAST({var_b} AS BIGINT) AS vars_gzip_bytes, "
             f"CAST({gain!r} AS DOUBLE) AS compression_gain, "
-            f"{'TRUE' if gain < threshold else 'FALSE'} AS overbroad"
+            f"{'TRUE' if gain < GAIN_THRESHOLD else 'FALSE'} AS overbroad"
         )
     return " UNION ALL ".join(selects)
 

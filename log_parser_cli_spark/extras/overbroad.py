@@ -20,6 +20,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Shared with the oracle twin (entry_impl._compression_gain_twin_sql), so
+# both sides move together.
+GAIN_THRESHOLD = 0.2  # gain below this flags a template overbroad
+MAX_ROWS_PER_TEMPLATE = 200  # doc_id-smallest rows per template the stats read
+
 RESULT_SCHEMA = T.StructType(
     [
         T.StructField("template_id", T.StringType()),
@@ -37,28 +42,23 @@ def _gzip_len(s: str) -> int:
     return len(zlib.compress(s.encode("utf-8")))
 
 
-def compression_gain_stats(
-    enriched: DataFrame,
-    raw_col: str = "content",
-    template_col: str = "template_star",
-    vars_col: str = "word_vars",
-    gain_threshold: float = 0.2,
-    max_rows_per_template: int = 200,
-) -> DataFrame:
-    """Per-template compression-gain stats; ``overbroad`` = low gain.
+def compression_gain_stats(enriched: DataFrame) -> DataFrame:
+    """Per-template compression-gain stats; ``overbroad`` = gain below
+    ``GAIN_THRESHOLD``.
 
     Takes the enrich-stage output (still carries content + word_vars).
     gain = 1 - (template + vars bytes) / raw bytes: how much representing rows
-    as (template, variables) saves over raw text. Caps rows per template
-    (W2-style) so group payloads stay bounded at any input scale.
+    as (template, variables) saves over raw text. Caps rows per template at
+    ``MAX_ROWS_PER_TEMPLATE`` (W2-style) so group payloads stay bounded at any
+    input scale.
     """
     from pyspark.sql import Window
 
     w = Window.partitionBy("template_id").orderBy("doc_id")
     capped = (
-        enriched.select("doc_id", "template_id", raw_col, template_col, vars_col)
+        enriched.select("doc_id", "template_id", "content", "template_star", "word_vars")
         .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_rows_per_template)
+        .filter(F.col("_rn") <= MAX_ROWS_PER_TEMPLATE)
         .drop("_rn")
     )
 
@@ -68,11 +68,11 @@ def compression_gain_stats(
         # the byte counts) is deterministic and oracle-reproducible
         pdf = pdf.sort_values("doc_id")
         tid = pdf["template_id"].iloc[0]
-        raws = "\n".join(pdf[raw_col].fillna(""))
-        template = str(pdf[template_col].iloc[0] or "")
+        raws = "\n".join(pdf["content"].fillna(""))
+        template = str(pdf["template_star"].iloc[0] or "")
         var_text = "\n".join(
             "|".join(str(x) for x in v) if v is not None and not isinstance(v, str) else ""
-            for v in pdf[vars_col]
+            for v in pdf["word_vars"]
         )  # v arrives as np.ndarray from the Arrow array<string> column
         raw_b = _gzip_len(raws)
         tpl_b = _gzip_len(template)
@@ -90,7 +90,7 @@ def compression_gain_stats(
                     "template_gzip_bytes": tpl_b,
                     "vars_gzip_bytes": var_b,
                     "compression_gain": gain,
-                    "overbroad": gain < gain_threshold,
+                    "overbroad": gain < GAIN_THRESHOLD,
                 }
             ]
         )
@@ -131,15 +131,13 @@ def routed_for_overbroad(routed: DataFrame) -> DataFrame:
     )
 
 
-def write_overbroad_report(
-    enriched: DataFrame, out_dir: str, top_n: int = 50, **stat_kwargs
-) -> str:
+def write_overbroad_report(enriched: DataFrame, out_dir: str, top_n: int = 50) -> str:
     """Persisted top-N flagged-templates report (O3): overbroad templates
     ordered by cluster size, written as JSON rows
     (check-overbroad.js:241-243's sort-desc + slice, materialized)."""
     import os
 
-    stats = compression_gain_stats(enriched, **stat_kwargs)
+    stats = compression_gain_stats(enriched)
     path = os.path.join(out_dir, "overbroad_report")
     (
         stats.filter(F.col("overbroad"))

@@ -1,28 +1,31 @@
-"""Ordered first-match-wins regex template matcher (reference parity).
+"""The one regex kernel and the ordered first-match-wins template matcher.
 
-The reference's core match loop iterates the library's templates in
-``created_at`` order and takes the first full-line regex match
-(src/core/regex-worker-pool.ts:67-112, order from
-sqlite-template-manager.ts:224-247). Semantically a broadcast nested-loop
-join with short-circuit — never a crossJoin: the template side is tiny and
-broadcast; rows stream through a vectorized Arrow stage.
+The reference runs two regex steps the same way: the head step applies one
+compiled pattern per line and keeps its content group
+(src/core/head-pattern.ts:14-36), and the template step takes the first
+full-line match in ``created_at`` order (src/core/regex-worker-pool.ts:67-112,
+order from sqlite-template-manager.ts:224-247), both over one compiled cache
+(template-runtime-cache.ts:22-60). Here both run through two functions:
 
-Execution is TEMPLATE-MAJOR, not row-major: templates run in precedence order
-as one vectorized RE2 call (pyarrow.compute) over the still-unmatched row
-subset, which preserves first-match-wins exactly (a row matched by an earlier
-template is masked out of every later template's input) while keeping zero
-per-row Python on the RE2 path. Patterns RE2 cannot compile fall back to the
-Python ``re`` loop — for those rows only.
+- ``compile_regex`` compiles a pattern once per process: Python ``re`` always;
+  RE2 as well when naming every unnamed group ``g<k>`` provably keeps
+  Python's group numbering and RE2 accepts the anchored form.
+- ``first_match`` runs patterns in precedence order over the still-unclaimed
+  rows: a row claimed by an earlier pattern is masked out of every later
+  one's input. On the RE2 path it is one vectorized ``pc.extract_regex`` per
+  (pattern, batch) with no per-row Python.
 
-Used for the ``--match-only`` replay path (semantic-log-parser.ts:108-151),
-as the parity check against the signature fast path, and (``match_batch``,
-on the driver) for every regex test of the refine machine. Per-process compiled
-cache keyed by a digest of the whole library (mirrors TemplateRuntimeCache,
-template-runtime-cache.ts:22-60 — compile O(templates), not O(templates×rows)).
+Callers: the parse stage (head content of a known source, and the source
+vote over every head) and ``match_batch`` (templates per source), which
+``match_templates`` runs per batch on the executors and the refine machine
+runs on the driver. Semantically a broadcast nested-loop join with
+short-circuit — never a crossJoin: the template side is tiny and broadcast.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import re
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -34,49 +37,110 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from log_parser_cli_spark.operators.parse import cache_key
-
-_COMPILED_CACHE: dict[tuple[str, object], list["_CompiledTemplate"]] = {}
+_COMPILED_CACHE: dict[tuple[str, tuple], list[tuple[str, "Regex"]]] = {}
 
 MATCH_FIELDS = [
     T.StructField("template_id", T.StringType()),
     T.StructField("variables", T.MapType(T.StringType(), T.StringType())),
 ]
 
-_EMPTY_STR = pa.array([], pa.string())
+
+def cache_key(tag: str, rows: list) -> tuple:
+    """Executor cache key: a digest of the WHOLE ``rows`` (a vocab, a template
+    library), so two values that differ in any row never share a cached
+    entry. Computed once per stage on the driver and closed over by the
+    tasks."""
+    return (tag, hashlib.blake2b(repr(rows).encode(), digest_size=16).hexdigest())
 
 
-@dataclass
-class _CompiledTemplate:
-    template_id: str
-    mode: str  # "re2_extract" | "re2_match" | "py"
-    full_pattern: str  # \A(?:pattern)\z — full-line anchored (P8)
-    rx: re.Pattern[str] | None  # Python fallback / extraction
+@dataclass(frozen=True)
+class Regex:
+    """A pattern compiled for ``first_match``. Field k - 1 of the yielded
+    struct holds capturing group k, named ``groups[k - 1]``: the pattern's
+    own name, else ``g<k>``. ``re2`` is the anchored all-named RE2 form, None
+    when the pattern runs on Python ``re``."""
+
+    rx: re.Pattern[str]
+    full_line: bool
+    groups: tuple[str, ...]
+    re2: str | None
 
 
-def _compile_one(template_id: str, pattern: str) -> _CompiledTemplate:
-    """Pick the fastest executable form for one pattern.
+def _name_groups(pattern: str) -> str:
+    """``pattern`` with each unnamed capturing group named ``g<k>``, k its
+    group number; escapes and ``[...]`` classes (a leading ``]`` or ``^]``
+    included) are copied as they are."""
+    out, i, k, n = [], 0, 0, len(pattern)
+    while i < n:
+        j = i + 1
+        if pattern[i] == "\\":
+            j = i + 2
+        elif pattern[i] == "[":
+            j += pattern.startswith("^", j)
+            j += pattern.startswith("]", j)
+            while j < n and pattern[j] != "]":
+                j += 2 if pattern[j] == "\\" else 1
+            j += 1
+        elif pattern[i] == "(":
+            if not pattern.startswith("(?", i):
+                k += 1
+                out.append(f"(?P<g{k}>")
+                i = j
+                continue
+            k += pattern.startswith("(?P<", i)
+        out.append(pattern[i:j])
+        i = j
+    return "".join(out)
 
-    Full-line semantics (match must consume the whole line, P8) are encoded
-    with \\A(?:...)\\z so RE2's substring-match primitives become full-line
-    matchers. RE2 handles (?P<name>...) groups; extract_regex additionally
-    requires EVERY group named — template-builder patterns satisfy that.
-    """
-    full = r"\A(?:" + pattern + r")\z"
-    has_groups = "(?P<" in pattern
-    if has_groups:
-        try:
-            pc.extract_regex(_EMPTY_STR, full)
-            return _CompiledTemplate(template_id, "re2_extract", full, None)
-        except pa.ArrowException:
-            pass
-    else:
-        try:
-            pc.match_substring_regex(_EMPTY_STR, full)
-            return _CompiledTemplate(template_id, "re2_match", full, None)
-        except pa.ArrowException:
-            pass
-    return _CompiledTemplate(template_id, "py", full, re.compile(pattern))
+
+@functools.lru_cache(maxsize=4096)
+def compile_regex(pattern: str, full_line: bool) -> Regex:
+    """Compile ``pattern`` for ``first_match``: a head (``full_line=False``,
+    anchored at line start like ``re.match``) or a template (the whole line,
+    like ``re.fullmatch``). RE2 runs it only when the all-named rewrite keeps
+    Python's group numbering (checked on its ``groupindex``) and RE2 accepts
+    ``\\A(?:…)`` / ``\\A(?:…)\\z``; otherwise Python ``re`` does."""
+    rx = re.compile(pattern)
+    own = {k: name for name, k in rx.groupindex.items()}
+    groups = tuple(own.get(k, f"g{k}") for k in range(1, rx.groups + 1))
+    re2 = None
+    try:
+        named = re.compile(_name_groups(pattern))
+        if named.groups == rx.groups and named.groupindex == {g: k for k, g in enumerate(groups, 1)}:
+            anchored = r"\A(?:" + named.pattern + (r")\z" if full_line else ")")
+            pc.extract_regex(pa.array([], pa.string()), anchored)
+            re2 = anchored
+    except (re.error, pa.ArrowException):
+        pass  # the rewrite or RE2 rejects it: Python re runs it
+    return Regex(rx, full_line, groups, re2)
+
+
+def first_match(
+    lines: pa.Array, rows: np.ndarray, patterns: list[Regex]
+) -> Iterator[tuple[int, np.ndarray, pa.StructArray]]:
+    """The one first-match-wins loop. ``patterns`` run in precedence order,
+    each over the ``rows`` (positions in ``lines``) no earlier pattern
+    claimed; yields (pattern position, rows it won, their group struct) for
+    each pattern that wins any. Null lines match nothing."""
+    for pos, regex in enumerate(patterns):
+        if rows.size == 0:
+            return
+        sub = pc.take(lines, rows)
+        if regex.re2 is not None:
+            struct = pc.extract_regex(sub, regex.re2)
+            hit = pc.is_valid(struct).to_numpy(zero_copy_only=False)
+            won = struct.filter(pa.array(hit))
+        else:
+            run = regex.rx.fullmatch if regex.full_line else regex.rx.match
+            found = [None if s is None else run(s) for s in sub.to_pylist()]
+            hit = np.array([m is not None for m in found], dtype=bool)
+            won = pa.array(
+                [m.groups() for m in found if m is not None],
+                pa.struct([(g, pa.string()) for g in regex.groups]),
+            )
+        if hit.any():
+            yield pos, rows[hit], won
+        rows = rows[~hit]
 
 
 def library_key(template_rows: list[dict]) -> tuple:
@@ -91,8 +155,9 @@ def library_key(template_rows: list[dict]) -> tuple:
 
 def compile_ordered(
     template_rows: list[dict], source: str, lib_key: tuple
-) -> list[_CompiledTemplate]:
-    """Compile one source's templates in precedence order, with caching."""
+) -> list[tuple[str, Regex]]:
+    """One source's (template_id, compiled pattern) in precedence order
+    (created_at, template_id), cached per source."""
     key = (source, lib_key)
     compiled = _COMPILED_CACHE.get(key)
     if compiled is None:
@@ -103,87 +168,38 @@ def compile_ordered(
             del _COMPILED_CACHE[stale]
         rows = [r for r in template_rows if r["source"] == source]
         rows.sort(key=lambda r: (r["created_at"], r["template_id"]))
-        compiled = [_compile_one(r["template_id"], r["pattern"]) for r in rows]
+        compiled = [(r["template_id"], compile_regex(r["pattern"], True)) for r in rows]
         _COMPILED_CACHE[key] = compiled
     return compiled
-
-
-def _groupdicts(struct: pa.StructArray) -> list[dict[str, str]]:
-    """Named-group struct array → one {name: value} dict per row (F7),
-    None-valued groups dropped (mirrors groupdict() filtering)."""
-    names = [f.name for f in struct.type]
-    cols = [struct.field(n).to_pylist() for n in names]
-    return [
-        {n: v for n, v in zip(names, row_vals) if v is not None}
-        for row_vals in zip(*cols)
-    ]
 
 
 def match_batch(
     contents, sources, template_rows: list[dict], lib_key: tuple
 ) -> tuple[np.ndarray, np.ndarray]:
-    """The one matching kernel: ordered first-match-wins over one batch.
+    """Ordered first-match-wins templates over one batch.
 
     ``contents``/``sources``: equal-length sequences (a pandas Series or a
     list) of line text and source name. Returns (template ids, variable
     maps), one per row, None where no template of the row's source matches
-    its whole line; null contents and null sources stay unmatched. The
-    executor path (``match_templates``) and the driver-side refine machine
-    (``plans.library_ops``) both run every regex test through here.
+    its whole line; null contents and null sources stay unmatched. A map
+    holds the pattern's own named groups that took part in the match, never
+    the synthetic ``g<k>`` ones.
     """
     n = len(contents)
     tids = np.full(n, None, dtype=object)
     varmaps = np.full(n, None, dtype=object)
     contents = pa.array(contents, type=pa.string(), from_pandas=True)
-    valid = pc.is_valid(contents).to_numpy(zero_copy_only=False)
     sources = np.asarray(sources, dtype=object)
-    # null sources stay unmatched (np.unique cannot sort None vs str)
-    src_notnull = np.array([s is not None for s in sources], dtype=bool)
-    for src in np.unique(sources[src_notnull]):
-        compiled = compile_ordered(template_rows, src, lib_key)
-        if not compiled:
-            continue
-        # still-unmatched candidate positions for this source
-        remaining = np.nonzero((sources == src) & valid & src_notnull)[0]
-        for tpl in compiled:
-            if remaining.size == 0:
-                break
-            lines = pc.take(contents, pa.array(remaining, pa.int64()))
-            if tpl.mode == "re2_extract":
-                struct = pc.extract_regex(lines, tpl.full_pattern)
-                hit = pc.is_valid(struct).to_numpy(zero_copy_only=False)
-                hit_pos = remaining[hit]
-                if hit_pos.size:
-                    tids[hit_pos] = tpl.template_id
-                    varmaps[hit_pos] = _groupdicts(struct.filter(pa.array(hit)))
-                remaining = remaining[~hit]
-            elif tpl.mode == "re2_match":
-                hit = (
-                    pc.fill_null(pc.match_substring_regex(lines, tpl.full_pattern), False)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(bool)
-                )
-                hit_pos = remaining[hit]
-                if hit_pos.size:
-                    tids[hit_pos] = tpl.template_id
-                    varmaps[hit_pos] = [{} for _ in range(hit_pos.size)]
-                remaining = remaining[~hit]
-            else:  # Python re fallback (RE2-incompatible patterns only)
-                rx = tpl.rx
-                keep = []
-                for pos, line in zip(remaining, lines.to_pylist()):
-                    # fullmatch, not match()+end-length check: with an
-                    # in-pattern end anchor the engine backtracks into
-                    # later alternatives (e.g. 'a|ab' on 'ab'), keeping
-                    # py-mode consistent with the RE2 \A(?:...)\z modes
-                    m = rx.fullmatch(line)
-                    if m is not None:
-                        tids[pos] = tpl.template_id
-                        gd = m.groupdict()
-                        varmaps[pos] = {k: v for k, v in gd.items() if v is not None}
-                    else:
-                        keep.append(pos)
-                remaining = np.array(keep, dtype=np.int64)
+    for src in {s for s in sources if s is not None}:  # null sources stay unmatched
+        ordered = compile_ordered(template_rows, src, lib_key)
+        rows = np.nonzero(sources == src)[0]
+        for pos, won, struct in first_match(contents, rows, [rx for _, rx in ordered]):
+            tid, regex = ordered[pos]
+            tids[won] = tid
+            named = [(g, struct.field(k - 1).to_pylist()) for g, k in regex.rx.groupindex.items()]
+            varmaps[won] = [
+                {g: vals[i] for g, vals in named if vals[i] is not None} for i in range(won.size)
+            ]
     return tids, varmaps
 
 
@@ -191,8 +207,6 @@ def match_templates(
     spark: SparkSession,
     df: DataFrame,
     template_rows: list[dict],
-    content_col: str = "content",
-    source_col: str = "source",
 ) -> DataFrame:
     """Append (template_id, variables) via ordered first-match-wins.
 
@@ -214,7 +228,7 @@ def match_templates(
                 continue
             out = pdf.copy()
             out["template_id"], out["variables"] = match_batch(
-                pdf[content_col], pdf[source_col], rows, lib_key
+                pdf["content"], pdf["source"], rows, lib_key
             )
             yield out
 

@@ -6,12 +6,13 @@ vectorized Arrow/NumPy kernel:
 
 - render: ``pc.take`` of the broadcast vocab over the batch's flattened token
   values, then ``pc.binary_join`` of the word lists — one C++ pass,
-- head extraction: ``pc.extract_regex`` (RE2) per source over that source's
-  row subset — the reference applies one compiled regex per row
-  (src/core/head-pattern.ts:14-36); here it is one vectorized call per
-  (source, batch), with a Python ``re`` fallback for patterns RE2 cannot run,
-- source vote: rows with a NULL/empty source try every head in sorted source
-  order over the still-unclaimed subset, one call per (head, batch),
+- head extraction: the matcher's regex kernel (``compile_regex`` +
+  ``first_match``) per source over that source's row subset — the reference
+  applies one compiled regex per row (src/core/head-pattern.ts:14-36); here
+  it is one vectorized RE2 call per (source, batch), Python ``re`` only for
+  heads RE2 cannot run with Python's group numbering,
+- source vote: rows with a NULL/empty source go through the same kernel
+  with every head in sorted source order over the still-unclaimed subset,
 - masked signature: mask classes are precomputed per *vocab word* on the
   driver (masking.py) and applied by a second ``pc.take``; the content suffix
   is sliced with pure offset arithmetic (content is always a word-suffix of
@@ -28,8 +29,6 @@ are built once per worker process, not per task.
 
 from __future__ import annotations
 
-import hashlib
-import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -39,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from log_parser_cli_spark.functions.masking import mask_word
+from log_parser_cli_spark.operators.matcher import cache_key, compile_regex, first_match
 
 PARSED_EXTRA_FIELDS = [
     T.StructField("content", T.StringType()),
@@ -51,14 +51,6 @@ UNKNOWN_SOURCE = "__UNKNOWN__"
 
 # Per-executor-process caches (module state survives across tasks).
 _EXEC_CACHE: dict = {}
-
-
-def cache_key(tag: str, rows: list) -> tuple:
-    """Executor cache key: a digest of the WHOLE ``rows`` (a vocab, a template
-    library), so two values that differ in any row never share a cached
-    entry. Computed once per stage on the driver and closed over by the
-    tasks."""
-    return (tag, hashlib.blake2b(repr(rows).encode(), digest_size=16).hexdigest())
 
 
 def _cached_vocab_arrays(key: tuple, b_vocab) -> tuple[pa.Array, pa.Array]:
@@ -84,81 +76,6 @@ def build_vocab_arrays(vocab_rows: list[tuple[int, str]]) -> tuple[pa.Array, pa.
     return pa.array(text, pa.string()), pa.array(canon, pa.string())
 
 
-def _named_content_pattern(pattern: str, group_idx: int) -> str | None:
-    """Name EVERY capturing group (RE2 extract_regex requires all-named);
-    the ``group_idx``-th becomes ``content``. Returns None if too few groups."""
-    count = 0
-    out = []
-    i = 0
-    while i < len(pattern):
-        ch = pattern[i]
-        if ch == "\\" and i + 1 < len(pattern):
-            out.append(pattern[i : i + 2])
-            i += 2
-            continue
-        if ch == "(":
-            if pattern.startswith("(?P<", i):
-                count += 1  # already-named capturing group, keep as-is
-                out.append(ch)
-                i += 1
-                continue
-            if pattern.startswith("(?", i):
-                out.append(ch)  # non-capturing / flags group
-                i += 1
-                continue
-            count += 1
-            out.append("(?P<content>" if count == group_idx else f"(?P<g{count}>")
-            i += 1
-            continue
-        out.append(ch)
-        i += 1
-    if count < group_idx:
-        return None
-    return "".join(out) if "(?P<content>" in "".join(out) else None
-
-
-def _extract_content(
-    lines: pa.Array, pattern: str, group_idx: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized head extraction: (content object-array, matched bool-array).
-
-    RE2 via pc.extract_regex when possible; Python re fallback otherwise.
-    Both engines anchor at line START (re.match semantics): the RE2 pattern
-    is wrapped with \\A so an un-anchored head config cannot match mid-line
-    on one engine and fail on the other.
-    """
-    named = _named_content_pattern(pattern, group_idx)
-    if named is not None:
-        named = r"\A(?:" + named + ")"
-        try:
-            # ONE RE2 pass: extract_regex yields a null struct for unmatched
-            # rows, so matched-ness and the content group come from the same
-            # scan (a separate match_substring_regex pass would double the
-            # regex work in the pipeline's hottest stage)
-            struct = pc.extract_regex(lines, named)
-            matched_arr = pc.is_valid(struct)
-            return (
-                struct.field("content").to_numpy(zero_copy_only=False),
-                matched_arr.to_numpy(zero_copy_only=False),
-            )
-        except pa.ArrowInvalid:
-            pass  # RE2-incompatible pattern → fallback
-    rx_key = ("re", pattern)
-    rx = _EXEC_CACHE.get(rx_key)
-    if rx is None:
-        rx = re.compile(pattern)
-        _EXEC_CACHE[rx_key] = rx
-    py_lines = lines.to_pylist()
-    content = np.empty(len(py_lines), dtype=object)
-    matched = np.zeros(len(py_lines), dtype=bool)
-    for i, line in enumerate(py_lines):
-        m = rx.match(line) if line is not None else None
-        if m is not None:
-            content[i] = m.group(group_idx)
-            matched[i] = True
-    return content, matched
-
-
 def parse_stage(
     spark: SparkSession,
     seq_df: DataFrame,
@@ -173,6 +90,9 @@ def parse_stage(
     ``UNKNOWN_SOURCE`` and ``head_matched = False``. Rows with a source keep
     their ``source`` column untouched.
     """
+    for src, (pattern, group) in source_heads.items():
+        if not 1 <= group <= len(compile_regex(pattern, False).groups):
+            raise ValueError(f"head of {src!r} has no content group {group}: {pattern!r}")
     sc = spark.sparkContext
     b_vocab = sc.broadcast(vocab_rows)
     vocab_key = cache_key("vocab", vocab_rows)
@@ -186,8 +106,12 @@ def parse_stage(
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         text_by_id, canon_by_id = _cached_vocab_arrays(vocab_key, b_vocab)
-        heads = b_heads.value
-        vote_order = sorted(heads.items())
+        # source → (compiled head, struct field of its content group)
+        heads = {
+            src: (compile_regex(pattern, False), group - 1)
+            for src, (pattern, group) in b_heads.value.items()
+        }
+        vote_order = sorted(heads)
 
         for batch in batches:
             n = batch.num_rows
@@ -205,33 +129,33 @@ def parse_stage(
             content = np.full(n, None, dtype=object)
             matched = np.zeros(n, dtype=bool)
 
-            def extract(idx: np.ndarray, head: tuple[str, int]) -> np.ndarray:
-                c_sub, m_sub = _extract_content(pc.take(lines, idx), *head)
-                content[idx] = c_sub
-                matched[idx] = m_sub
-                return m_sub
+            def extract(rows: np.ndarray, srcs: list[str]) -> list[tuple[str, np.ndarray]]:
+                """Head extraction over ``rows``, first match in ``srcs``
+                order; returns (source, rows its head won) pairs."""
+                won_by = []
+                for pos, won, struct in first_match(lines, rows, [heads[s][0] for s in srcs]):
+                    content[won] = struct.field(heads[srcs[pos]][1]).to_numpy(zero_copy_only=False)
+                    matched[won] = True
+                    won_by.append((srcs[pos], won))
+                return won_by
 
             # head extraction per source over that source's row subset
             cols = batch.columns
             src_col = cols[source_idx]
             for src in pc.unique(src_col).to_pylist():
                 if src and src in heads:
-                    extract(pc.indices_nonzero(pc.equal(src_col, src)).to_numpy(), heads[src])
+                    extract(pc.indices_nonzero(pc.equal(src_col, src)).to_numpy(), [src])
 
-            # rows without a source: first-match head vote in sorted source
-            # order over the still-unassigned rows (the reference's routing
-            # step, §3.1a); the voting extraction is the row's parse
+            # rows without a source: every head votes in sorted source order
+            # over the still-unclaimed rows (the reference's routing step,
+            # §3.1a); the winning extraction is the row's parse
             unknown = pc.fill_null(pc.equal(src_col, ""), True)
             if pc.any(unknown).as_py():
-                remaining = pc.indices_nonzero(unknown).to_numpy()
                 voted = src_col.to_numpy(zero_copy_only=False, writable=True)
-                for src, head in vote_order:
-                    if remaining.size == 0:
-                        break
-                    hit = extract(remaining, head)
-                    voted[remaining[hit]] = src
-                    remaining = remaining[~hit]
-                voted[remaining] = UNKNOWN_SOURCE
+                rows = pc.indices_nonzero(unknown).to_numpy()
+                voted[rows] = UNKNOWN_SOURCE
+                for src, won in extract(rows, vote_order):
+                    voted[won] = src
                 cols[source_idx] = pa.array(voted, pa.string())
 
             # masked signature of the content word-suffix: pure offset math

@@ -72,9 +72,7 @@ def template_ordinal(template_id: str) -> int | None:
         return None
 
 
-def export_template_library(
-    spark: SparkSession, enriched: DataFrame, content_col: str = "content"
-) -> list[dict]:
+def export_template_library(spark: SparkSession, enriched: DataFrame) -> list[dict]:
     """Discovered clusters → regex template library rows.
 
     ``enriched``: rows carrying (doc_id, source, content, template_id,
@@ -86,7 +84,7 @@ def export_template_library(
     w = Window.partitionBy("template_id").orderBy("doc_id")
     samples = (
         enriched.filter(~F.col("template_id").startswith("__"))
-        .select("doc_id", "source", "template_id", "template_star", content_col)
+        .select("doc_id", "source", "template_id", "template_star", "content")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "doc_id")
@@ -94,8 +92,8 @@ def export_template_library(
     )
     library: list[dict] = []
     for r in sorted(samples, key=lambda r: r["template_id"]):
-        placeholder = placeholder_from_star(r[content_col], r["template_star"])
-        built = build_regex_from_template(placeholder, r[content_col])
+        placeholder = placeholder_from_star(r["content"], r["template_star"])
+        built = build_regex_from_template(placeholder, r["content"])
         library.append(
             {
                 "template_id": r["template_id"],

@@ -50,16 +50,13 @@ def requeue_orphans(matches: DataFrame, deleted_template_ids: list[str]) -> tupl
     return kept, orphans
 
 
-def exclude_seen(candidates: DataFrame, seen: DataFrame, on: str = "content") -> DataFrame:
-    """Left-anti seen-sample exclusion (E3)."""
-    return candidates.join(seen.select(on).distinct(), on=on, how="left_anti")
+def exclude_seen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
+    """Left-anti seen-sample exclusion on ``content`` (E3)."""
+    return candidates.join(seen.select("content").distinct(), on="content", how="left_anti")
 
 
 def detect_conflicts(
-    samples: DataFrame,
-    candidate_template_id: str,
-    candidate_pattern: str,
-    content_col: str = "content",
+    samples: DataFrame, candidate_template_id: str, candidate_pattern: str
 ) -> DataFrame:
     """Stored samples of OTHER templates whose whole line the candidate
     pattern matches, grouped by their owning template (J3): a conflict means
@@ -68,13 +65,13 @@ def detect_conflicts(
     candidate_template_id)."""
     full_line = to_jvm_pattern(r"\A(?:" + candidate_pattern + r")\z")
     hits = samples.filter(F.col("template_id") != candidate_template_id).filter(
-        F.col(content_col).rlike(full_line)
+        F.col("content").rlike(full_line)
     )
     return (
         hits.groupBy("template_id")
         .agg(
             F.count("*").alias("n_conflicts"),
-            F.slice(F.collect_list(content_col), 1, 5).alias("sample_contents"),
+            F.slice(F.collect_list("content"), 1, 5).alias("sample_contents"),
         )
         .withColumn("candidate_template_id", F.lit(candidate_template_id))
     )
@@ -149,18 +146,18 @@ def discover_with_refine(
 CSV_NULL = "\x00"
 
 
-def write_match_report(matched: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_match_report(matched: DataFrame, path: str) -> None:
     """CSV match report (K2): raw_log, template_id, template_placeholder."""
     cols = [c for c in ("raw_log", "template_id", "template_placeholder") if c in matched.columns]
     (
         matched.select(*cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("header", True)
         .option("nullValue", CSV_NULL)
         .csv(path)
     )
 
 
-def write_failure_report(failures: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Append-only failures sink (K4): one JSON object per line (jsonl)."""
-    failures.write.mode(mode).json(path)
+def write_failure_report(failures: DataFrame, path: str) -> None:
+    """Failures sink (K4): one JSON object per line (jsonl)."""
+    failures.write.mode("overwrite").json(path)

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from log_parser_cli_spark.operators.drain import DrainCluster, cluster_signatures
 from log_parser_cli_spark.operators.parse import parse_stage
-from log_parser_cli_spark.plans.checkpoint import Manifest
+from log_parser_cli_spark.plans.checkpoint import Manifest, source_digest
 
 UNPARSED = "__UNPARSED__"
 UNMATCHED = "__UNMATCHED__"
@@ -539,7 +539,8 @@ def run_pipeline(
     ``mapping_df``: pass a frozen template mapping to run match-only replay
     (the reference's --match-only path); otherwise discovery runs first.
     ``resume=True`` skips stages committed in the checkpoint manifest
-    (requires ``checkpoint_parse=True``, the default).
+    (requires ``checkpoint_parse=True``, the default) and raises ValueError
+    when other engine code (another ``source_digest``) committed them.
     ``checkpoint_parse=False`` keeps the parsed stream on local storage
     (persist DISK_ONLY — a memory-level cache thrashes against the route
     shuffle's execution memory) instead of materializing to parquet — faster
@@ -559,6 +560,11 @@ def run_pipeline(
     """
     result = PipelineResult(out_dir=out_dir)
     manifest = Manifest(out_dir, run_id)
+    if resume and manifest.digest != source_digest():
+        raise ValueError(
+            f"cannot resume {out_dir}: its stages were written by engine source "
+            f"{manifest.digest}, this is {source_digest()}"
+        )
     vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
     if seq_df is None:
         seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))

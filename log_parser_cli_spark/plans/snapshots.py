@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 _MANIFEST_DIR = "_snapshots"
 _MANIFEST_NAME = re.compile(r"v(\d{12})\.json")
 FORMAT = "lpcs-snapshot-v1"
+_COMMIT_RETRIES = 5  # racing commits a writer rebases over before giving up
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -152,12 +153,31 @@ class SnapshotTable:
             os.unlink(tmp)
         return version
 
+    def _commit(self, op: str, build, summary: dict, expected_parent: int | None = None) -> int:
+        """The one optimistic commit loop: ``build(parent)`` returns the
+        (data_dirs, dir_batches) of the new snapshot on top of the current
+        version ``parent``; losing the race for version parent + 1 rebuilds on
+        the winner, at most ``_COMMIT_RETRIES`` times. With ``expected_parent``
+        set, a table past that version or a lost race raises instead."""
+        for _ in range(_COMMIT_RETRIES):
+            parent = self.current_version()
+            if expected_parent is not None and parent != expected_parent:
+                raise ConcurrentCommitError(
+                    f"expected parent v{expected_parent}, table is at v{parent}"
+                )
+            data_dirs, dir_batches = build(parent)
+            try:
+                return self._try_commit(parent, op, data_dirs, summary, dir_batches)
+            except ConcurrentCommitError:
+                if expected_parent is not None:
+                    raise
+        raise ConcurrentCommitError(f"gave up after {_COMMIT_RETRIES} racing commits")
+
     def commit_overwrite(
         self,
         df: DataFrame,
         partition_by: tuple[str, ...] | None = None,
         expected_parent: int | None = None,
-        retries: int = 5,
     ) -> int:
         """Publish ``df`` as the new current snapshot (replaces all rows).
 
@@ -167,25 +187,10 @@ class SnapshotTable:
         retries on top of the winner.
         """
         staged = self._stage(df, partition_by)
-        for _ in range(retries):
-            parent = self.current_version()
-            if expected_parent is not None and parent != expected_parent:
-                raise ConcurrentCommitError(
-                    f"expected parent v{expected_parent}, table is at v{parent}"
-                )
-            try:
-                return self._try_commit(parent, "overwrite", [staged], {})
-            except ConcurrentCommitError:
-                if expected_parent is not None:
-                    raise
-        raise ConcurrentCommitError(f"gave up after {retries} racing commits")
+        return self._commit("overwrite", lambda parent: ([staged], None), {}, expected_parent)
 
     def commit_batch(
-        self,
-        df: DataFrame,
-        batch_id: int,
-        partition_by: tuple[str, ...] | None = None,
-        retries: int = 5,
+        self, df: DataFrame, batch_id: int, partition_by: tuple[str, ...] | None = None
     ) -> int:
         """Idempotent per-micro-batch append for at-least-once sinks
         (Structured Streaming ``foreachBatch``): the new snapshot keeps the
@@ -195,8 +200,8 @@ class SnapshotTable:
         crash before the commit point leaves only an unreferenced staged dir
         (age-gated vacuum) — readers never observe a torn batch."""
         staged = self._stage(df, partition_by)
-        for _ in range(retries):
-            parent = self.current_version()
+
+        def build(parent: int | None) -> tuple[list[str], dict[str, int]]:
             tags: dict[str, int] = {}
             base: list[str] = []
             if parent is not None:
@@ -208,17 +213,11 @@ class SnapshotTable:
                         if d in ptags:
                             tags[d] = ptags[d]
             tags[staged] = batch_id
-            try:
-                return self._try_commit(
-                    parent, "append-batch", base + [staged], {"batch_id": batch_id}, tags
-                )
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(f"gave up after {retries} racing commits")
+            return base + [staged], tags
 
-    def merge(
-        self, spark: SparkSession, updates: DataFrame, key: str = "template_id", retries: int = 5
-    ) -> int:
+        return self._commit("append-batch", build, {"batch_id": batch_id})
+
+    def merge(self, spark: SparkSession, updates: DataFrame, key: str = "template_id") -> int:
         """MERGE INTO stand-in with snapshot isolation (K5): same-key rows are
         replaced, new keys union through, the result commits atomically. A
         commit that lands between our read and our publish is detected at the
@@ -226,15 +225,11 @@ class SnapshotTable:
         never lost-update."""
         from log_parser_cli_spark.plans.library_ops import merge_templates
 
-        for _ in range(retries):
-            parent = self.current_version()
+        def build(parent: int | None) -> tuple[list[str], None]:
             merged = updates if parent is None else merge_templates(self.read(spark, parent), updates, key)
-            staged = self._stage(merged, None)
-            try:
-                return self._try_commit(parent, "merge", [staged], {"key": key})
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(f"gave up after {retries} racing commits")
+            return [self._stage(merged, None)], None
+
+        return self._commit("merge", build, {"key": key})
 
     # -- maintenance --------------------------------------------------------
 

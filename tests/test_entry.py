@@ -33,8 +33,9 @@ def test_run_dirs_are_keyed_on_the_engine_source(tmp_path):
     import shutil
 
     from log_parser_cli_spark import entry_impl
+    from log_parser_cli_spark.plans import checkpoint
 
-    pkg = entry_impl._PKG_DIR
+    pkg = checkpoint._PKG_DIR
     same, changed = str(tmp_path / "same"), str(tmp_path / "changed")
     for dst in (same, changed):
         shutil.copytree(pkg, dst, ignore=shutil.ignore_patterns("__pycache__"))
@@ -42,7 +43,7 @@ def test_run_dirs_are_keyed_on_the_engine_source(tmp_path):
     data = open(src, "rb").read()
     with open(src, "wb") as f:
         f.write(data[:-1] + bytes([data[-1] ^ 1]))
-    digest = entry_impl.source_digest()
-    assert entry_impl.source_digest(same) == digest
-    assert entry_impl.source_digest(changed) != digest
+    digest = checkpoint.source_digest()
+    assert checkpoint.source_digest(same) == digest
+    assert checkpoint.source_digest(changed) != digest
     assert entry_impl._run_dir("/fx/sf0.01", "refine").endswith(f"-{digest}")

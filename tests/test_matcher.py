@@ -3,9 +3,17 @@
 import os
 from collections import Counter
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 import pyspark.sql.functions as F
 
-from log_parser_cli_spark.operators.matcher import match_templates
+from log_parser_cli_spark.operators.matcher import (
+    compile_regex,
+    library_key,
+    match_batch,
+    match_templates,
+)
 from log_parser_cli_spark.operators.parse import parse_stage
 from log_parser_cli_spark.oracle import load_fixture_table, oracle_counts, oracle_match
 from log_parser_cli_spark.plans.pipeline import load_dims
@@ -113,12 +121,10 @@ def test_py_fallback_backtracks_into_end_anchor(spark):
     full-line check must let backtracking pick a later alternative instead of
     rejecting after the first unanchored match (ADVICE: rx.fullmatch, not
     match()+end-length)."""
-    from log_parser_cli_spark.operators.matcher import _compile_one
-
     # backreference forces the py engine; alt 1 matches a PREFIX of the line,
     # alt 2 matches the whole line — only fullmatch backtracks into alt 2
     pattern = r"(?P<a>x)(?P=a)|(?P<b>x)(?P=b)y"
-    assert _compile_one("t#1", pattern).mode == "py"
+    assert compile_regex(pattern, full_line=True).re2 is None
     templates = [{"template_id": "t#1", "source": "s", "pattern": pattern, "created_at": 1}]
     df = spark.createDataFrame(
         [("d1", "s", "xxy"), ("d2", "s", "xx"), ("d3", "s", "xxz")],
@@ -146,6 +152,54 @@ def test_compiled_cache_keys_on_the_whole_library(spark):
         got = {r.doc_id: r.template_id for r in match_templates(spark, df, lib).collect()}
         assert got == {hit: "t#1", miss: None}
 
-    from log_parser_cli_spark.operators.matcher import library_key
-
     assert library_key(lib_a) != library_key(lib_b)
+
+
+def test_mixed_named_and_unnamed_template_runs_on_re2():
+    """Unnamed groups get synthetic ``g<k>`` names so RE2 runs the pattern;
+    the variables hold only the pattern's own named groups."""
+    pattern = r"^(\w+) (?P<v1>\d+) ([a-z]+)$"
+    assert compile_regex(pattern, full_line=True).re2 is not None
+    lib = [{"template_id": "t#1", "source": "s", "pattern": pattern, "created_at": 1}]
+    tids, varmaps = match_batch(["ab 12 cd", "ab 12"], ["s", "s"], lib, library_key(lib))
+    assert list(tids) == ["t#1", None] and list(varmaps) == [{"v1": "12"}, None]
+
+
+@pytest.mark.parametrize(
+    "head, group, on_re2, doc, content",
+    [
+        (r"^[(](\d+)[)] (\S+) (.*)$", 3, True, "d0", "the message"),
+        (r"^(\d+) (?<=\d )(\S+) (.*)$", 3, False, "d1", "the message"),
+        (r"^(\w+) \1 (.*)$", 2, False, "d2", "rest of it"),
+    ],
+    ids=["paren-in-class", "lookbehind", "backreference"],
+)
+def test_parse_heads_agree_with_oracle(spark, tmp_path, head, group, on_re2, doc, content):
+    """Head content comes from the configured group on both engines: a ``(``
+    inside a character class is no group, and heads RE2 rejects parse on
+    Python ``re``; either way as ``oracle.oracle_match`` parses them."""
+    assert (compile_regex(head, full_line=False).re2 is not None) == on_re2
+    lines = ["(12) host the message", "12 host the message", "ab ab rest of it", "x y"]
+    words = sorted({w for line in lines for w in line.split(" ")})
+    tokens = [[words.index(w) for w in line.split(" ")] for line in lines]
+    d = str(tmp_path)
+    for name, cols in {
+        "vocab": {"token_id": range(len(words)), "text": words},
+        "sources": {"source": ["s"], "head_pattern": [head], "content_group": [group]},
+        "templates": {"template_id": [], "source": [], "pattern": [], "created_at": []},
+        "sequences": {
+            "doc_id": [f"d{i}" for i in range(len(lines))],
+            "tokens": tokens,
+            "n_tok": [len(t) for t in tokens],
+            "source": ["s"] * len(lines),
+        },
+    }.items():
+        pq.write_table(pa.table({c: list(v) for c, v in cols.items()}), f"{d}/{name}.parquet")
+    vocab_rows, source_heads, _ = load_dims(spark, d)
+    seq = spark.read.parquet(f"{d}/sequences.parquet")
+    parsed = parse_stage(spark, seq, vocab_rows, source_heads).collect()
+    got = {r.doc_id: (r.content, r.head_matched) for r in parsed}
+    assert got == {m.doc_id: (m.content, m.head_matched) for m in oracle_match(d)}
+    assert {k: c for k, (c, matched) in got.items() if matched} == {doc: content}
+    with pytest.raises(ValueError, match=f"no content group {group + 1}"):
+        parse_stage(spark, seq, vocab_rows, {"s": (head, group + 1)})

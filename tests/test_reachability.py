@@ -101,3 +101,17 @@ def test_every_package_function_is_referenced_from_an_entry_point():
         if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)) and stmt.name not in referenced
     }
     assert sorted(unreferenced - TEST_ONLY) == []
+
+
+
+def test_one_regex_executor():
+    """Only the matcher's kernel calls Arrow's regex kernels; any other
+    package module doing so is a second executor (Catalyst ``rlike`` is out
+    of scope)."""
+    kernels = {"extract_regex", "match_substring_regex"}
+    callers = {
+        _module_name(p)
+        for p in (ROOT / PKG).rglob("*.py")
+        if kernels & _referenced_names(ast.parse(p.read_text()))
+    }
+    assert callers <= {f"{PKG}.operators.matcher"}

@@ -1,6 +1,7 @@
 """Checkpoint/resume semantics (T3/T4): kill after stage N, rerun, identical
 final aggregates."""
 
+import json
 import os
 
 import pytest
@@ -67,3 +68,19 @@ def test_match_only_replay_with_frozen_mapping(spark, fixture_dir, tmp_path):
     out2 = str(tmp_path / "match_only_run")
     run_pipeline(spark, fixture_dir, out2, run_id="r2", mapping_df=mapping)
     assert _counts(spark, out1) == _counts(spark, out2)
+
+
+def test_resume_refuses_a_manifest_from_other_code(spark, fixture_dir, tmp_path):
+    """A manifest other engine code committed is never resumed (its parsed/
+    and template_mapping/ would be stale); this code's first commit drops it."""
+    from log_parser_cli_spark.plans.checkpoint import Manifest, source_digest
+
+    out = str(tmp_path / "foreign")
+    os.makedirs(out)
+    with open(os.path.join(out, "_manifest.json"), "w") as f:
+        json.dump({"run_id": "r1", "source_digest": "0123456789ab", "stages": {"parse": {}}}, f)
+    with pytest.raises(ValueError, match=f"0123456789ab.*{source_digest()}"):
+        run_pipeline(spark, fixture_dir, out, run_id="r1", resume=True)
+    Manifest(out, "r1").commit("route")
+    m = Manifest(out, "r1")
+    assert m.digest == source_digest() and m.is_done("route") and not m.is_done("parse")

@@ -54,7 +54,8 @@ def prune_stale_runs(runs_dir: str, digest: str) -> list[str]:
 
 def main() -> int:
     import __spark_entry__ as entry_mod
-    from log_parser_cli_spark.entry_impl import _runs_base, source_digest
+    from log_parser_cli_spark.entry_impl import _runs_base
+    from log_parser_cli_spark.plans.checkpoint import source_digest
     from log_parser_cli_spark.session import get_spark
 
     for name in prune_stale_runs(_runs_base(), source_digest()):
