@@ -8,8 +8,9 @@ order from sqlite-template-manager.ts:224-247), both over one compiled cache
 (template-runtime-cache.ts:22-60). Here both run through two functions:
 
 - ``compile_regex`` compiles a pattern once per process: Python ``re`` always;
-  RE2 as well when naming every unnamed group ``g<k>`` provably keeps
-  Python's group numbering and RE2 accepts the anchored form.
+  RE2 as well when no group can miss a match, naming every unnamed group
+  ``g<k>`` provably keeps Python's group numbering and RE2 accepts the
+  anchored form.
 - ``first_match`` runs patterns in precedence order over the still-unclaimed
   rows: a row claimed by an earlier pattern is masked out of every later
   one's input. On the RE2 path it is one vectorized ``pc.extract_regex`` per
@@ -27,6 +28,8 @@ from __future__ import annotations
 import functools
 import hashlib
 import re
+import re._constants as _sre
+import re._parser as _sre_parse
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -93,20 +96,48 @@ def _name_groups(pattern: str) -> str:
     return "".join(out)
 
 
+def _group_can_miss(tree, optional: bool = False) -> bool:
+    """Whether a capturing group in ``tree`` (an ``re._parser`` parse) can
+    take no part in a match: it sits under a min-0 repeat, in an alternation
+    branch, or in a conditional or negative lookahead. RE2 (Arrow's
+    ``extract_regex``) reads such a group as ``""`` where Python ``re`` gives
+    None."""
+    for op, av in tree:
+        if op is _sre.SUBPATTERN and av[0] is not None and optional:
+            return True
+        inner = optional or op in (_sre.BRANCH, _sre.GROUPREF_EXISTS, _sre.ASSERT_NOT) or (
+            op in (_sre.MAX_REPEAT, _sre.MIN_REPEAT, _sre.POSSESSIVE_REPEAT) and av[0] == 0
+        )
+        stack = [av]
+        while stack:
+            x = stack.pop()
+            if isinstance(x, _sre_parse.SubPattern):
+                if _group_can_miss(x, inner):
+                    return True
+            elif isinstance(x, (tuple, list)):
+                stack.extend(x)
+    return False
+
+
 @functools.lru_cache(maxsize=4096)
 def compile_regex(pattern: str, full_line: bool) -> Regex:
     """Compile ``pattern`` for ``first_match``: a head (``full_line=False``,
     anchored at line start like ``re.match``) or a template (the whole line,
-    like ``re.fullmatch``). RE2 runs it only when the all-named rewrite keeps
-    Python's group numbering (checked on its ``groupindex``) and RE2 accepts
-    ``\\A(?:…)`` / ``\\A(?:…)\\z``; otherwise Python ``re`` does."""
+    like ``re.fullmatch``). RE2 runs it only when no group can miss a match,
+    the all-named rewrite keeps Python's group numbering (checked on its
+    ``groupindex``) and RE2 accepts ``\\A(?:…)`` / ``\\A(?:…)\\z``;
+    otherwise Python ``re`` does."""
     rx = re.compile(pattern)
     own = {k: name for name, k in rx.groupindex.items()}
     groups = tuple(own.get(k, f"g{k}") for k in range(1, rx.groups + 1))
     re2 = None
     try:
         named = re.compile(_name_groups(pattern))
-        if named.groups == rx.groups and named.groupindex == {g: k for k, g in enumerate(groups, 1)}:
+        if (
+            not _group_can_miss(_sre_parse.parse(pattern))
+            and named.groups == rx.groups
+            and named.groupindex == {g: k for k, g in enumerate(groups, 1)}
+        ):
             anchored = r"\A(?:" + named.pattern + (r")\z" if full_line else ")")
             pc.extract_regex(pa.array([], pa.string()), anchored)
             re2 = anchored

@@ -1,6 +1,7 @@
 """Regex first-match-wins matcher (J2) vs the pure-Python oracle and GT."""
 
 import os
+import re
 from collections import Counter
 
 import pyarrow as pa
@@ -163,6 +164,41 @@ def test_mixed_named_and_unnamed_template_runs_on_re2():
     lib = [{"template_id": "t#1", "source": "s", "pattern": pattern, "created_at": 1}]
     tids, varmaps = match_batch(["ab 12 cd", "ab 12"], ["s", "s"], lib, library_key(lib))
     assert list(tids) == ["t#1", None] and list(varmaps) == [{"v1": "12"}, None]
+
+
+@pytest.mark.parametrize(
+    "pattern",
+    [
+        r"^a(?P<v1>b)?$",
+        r"^a(?:(?P<v1>b) )*$",
+        r"^a (?P<v1>b)$|^a(?P<v2>)$",
+        r"^a(?:(?P<v1>b)c)?$",
+    ],
+    ids=["optional", "star", "alternation", "nested"],
+)
+def test_group_that_misses_the_match_is_absent(pattern):
+    """A named group that takes no part in a match is absent from the
+    variables, as under Python ``re`` and ``oracle.oracle_match``; RE2 would
+    read it as ``""``, so such a pattern runs on Python ``re``."""
+    lib = [{"template_id": "t#1", "source": "s", "pattern": pattern, "created_at": 1}]
+    tids, varmaps = match_batch(["a"], ["s"], lib, library_key(lib))
+    assert list(tids) == ["t#1"]
+    expected = {g: v for g, v in re.fullmatch(pattern, "a").groupdict().items() if v is not None}
+    assert varmaps[0] == expected
+    assert compile_regex(pattern, full_line=True).re2 is None
+
+
+def test_fixture_patterns_run_on_re2(fixture_dir):
+    """No fixture head or template has a group that can miss a match (the one
+    ``?`` is a literal ``\\?``): all 6 heads and 48 templates stay on RE2."""
+    heads = [r["head_pattern"] for r in load_fixture_table(fixture_dir, "sources")]
+    templates = [r["pattern"] for r in load_fixture_table(fixture_dir, "templates")]
+    engines = Counter(
+        ("re2" if compile_regex(p, full_line).re2 else "re", full_line)
+        for patterns, full_line in ((heads, False), (templates, True))
+        for p in patterns
+    )
+    assert engines == {("re2", False): 6, ("re2", True): 48}
 
 
 @pytest.mark.parametrize(

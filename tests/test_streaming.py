@@ -115,3 +115,61 @@ def test_stream_kill_mid_batch_never_exposes_partial(
     q2 = stream_replay(spark, fixture_dir, out, mapping, available_now=True)
     q2.awaitTermination(120)
     assert read_routed(spark, out).count() == read_routed(spark, pipeline_out).count()
+
+
+@pytest.fixture(scope="module")
+def three_batch_stream(spark, fixture_dir, pipeline_out, tmp_path_factory):
+    """``stream_replay`` of the fixture split into 3 files (3 micro-batches)
+    against the pipeline's mapping rebuilt as a Python RDD whose map counts
+    every row it yields; returns (out dir, rows counted, mapping rows)."""
+    seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
+    stream_dir = str(tmp_path_factory.mktemp("stream_src3"))
+    ordinal = F.substring("doc_id", 5, 9).cast("long")
+    for part in range(3):
+        seq.filter(ordinal % 3 == part).coalesce(1).write.mode("append").parquet(stream_dir)
+
+    stored = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    rows = stored.collect()
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count(row):
+        evaluated.add(1)
+        return row
+
+    mapping = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2).map(count), stored.schema)
+    out = str(tmp_path_factory.mktemp("stream_out3"))
+    q = stream_replay(spark, fixture_dir, out, mapping, stream_dir=stream_dir)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    return out, evaluated.value, len(rows)
+
+
+def test_stream_evaluates_the_mapping_once(three_batch_stream):
+    """The frozen mapping is pinned once per stream, not rebuilt from its
+    lineage for each micro-batch's broadcast."""
+    _, evaluated, n_rows = three_batch_stream
+    assert evaluated == n_rows
+
+
+def test_micro_batch_writes_one_file_per_template_dir(spark, pipeline_out, three_batch_stream):
+    """Each committed micro-batch dir holds exactly one parquet file per
+    sink=/template_id= leaf, and the streamed rows equal the batch route's."""
+    from log_parser_cli_spark.plans.pipeline import routed_data_dirs
+
+    out = three_batch_stream[0]
+    data_dirs = routed_data_dirs(out)
+    assert len(data_dirs) == 3
+    for data_dir in data_dirs:
+        leaves = [
+            (root, [f for f in files if f.endswith(".parquet")])
+            for root, _, files in os.walk(data_dir)
+            if "template_id=" in os.path.basename(root)
+        ]
+        assert leaves and all(len(parquet) == 1 for _, parquet in leaves), [
+            leaf for leaf in leaves if len(leaf[1]) != 1
+        ]
+
+    def by_doc(df):
+        return {r.doc_id: r.asDict() for r in df.drop("batch_id").collect()}
+
+    assert by_doc(read_routed(spark, out)) == by_doc(read_routed(spark, pipeline_out))

@@ -24,6 +24,15 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def payload_exchanges(plan: str) -> tuple[str, list[str], str]:
+    """(operator tree, its non-broadcast Exchange lines, the first
+    hashpartitioning arguments line) of a formatted plan."""
+    tree = plan.split("\n\n", 1)[0]
+    exchanges = [ln for ln in tree.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
+    keys = next((ln for ln in plan.splitlines() if ln.startswith("Arguments: hashpartitioning(")), "")
+    return tree, exchanges, keys
+
+
 def main() -> int:
     from log_parser_cli_spark.datagen import ensure_fixtures
     from log_parser_cli_spark.operators.parse import parse_stage
@@ -61,11 +70,7 @@ def main() -> int:
     # per-template salt sizing rides the mapping's broadcast join: the route
     # keeps ONE payload exchange, keyed by (sink, template_id, salt), and
     # gains no aggregate and no second broadcast of the mapping
-    tree = route_plan.split("\n\n", 1)[0]
-    exchanges = [ln for ln in tree.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
-    keys = next(
-        (ln for ln in route_plan.splitlines() if ln.startswith("Arguments: hashpartitioning(")), ""
-    )
+    tree, exchanges, keys = payload_exchanges(route_plan)
     route_checks = [
         (f"one payload exchange (found {len(exchanges)})", len(exchanges) == 1),
         (
@@ -78,6 +83,38 @@ def main() -> int:
             all(k in keys for k in ("sink#", "template_id#", "hash(doc_id#", "salt_share#")),
         ),
     ]
+
+    # a micro-batch's frame, here over a static read: the same single payload
+    # exchange at salt 1, against the mapping and sources pinned as local
+    # relations (their broadcasts scan no file and re-run no lineage)
+    from log_parser_cli_spark.streaming.stream import batch_frame, pin
+
+    batch_title = "micro-batch route (pinned dims → broadcast joins → salt-1 exchange)"
+    batch_plan = plan_of(
+        batch_frame(parsed, pin(spark, mapping), pin(spark, sources_df), batch_id=0)
+    )
+    sections.append(
+        (
+            batch_title,
+            batch_plan,
+            ["BroadcastHashJoin", "MapInArrow"],
+            ["CartesianProduct", "SortMergeJoin", "HashAggregate", "Scan ExistingRDD"],
+        )
+    )
+    batch_tree, batch_exchanges, batch_keys = payload_exchanges(batch_plan)
+    batch_checks = [
+        (
+            "mapping and sources broadcast from LocalTableScan "
+            f"(found {batch_tree.count('LocalTableScan')})",
+            batch_tree.count("LocalTableScan") == 2,
+        ),
+        (f"one payload exchange (found {len(batch_exchanges)})", len(batch_exchanges) == 1),
+        (
+            f"exchange keyed by sink, template_id and a salt of 1: `{batch_keys[11:]}`",
+            all(k in batch_keys for k in ("sink#", "template_id#", "* 1.0)), 1)")),
+        ),
+    ]
+    extra_checks = {route_title: route_checks, batch_title: batch_checks}
 
     # column pruning + predicate pushdown on the routed-style scan
     pruned = seq.select("doc_id", "n_tok").filter(F.col("n_tok") > 20)
@@ -256,11 +293,10 @@ def main() -> int:
     ]
     for title, plan, must, must_not in sections:
         checks = []
-        if title == route_title:
-            for what, ok in route_checks:
-                checks.append(f"- {'✅' if ok else '❌'} {what}")
-                if not ok:
-                    failures.append(f"{title}: {what}")
+        for what, ok in extra_checks.get(title, []):
+            checks.append(f"- {'✅' if ok else '❌'} {what}")
+            if not ok:
+                failures.append(f"{title}: {what}")
         for m in must:
             ok = any(alt in plan for alt in m.split("|"))
             checks.append(f"- {'✅' if ok else '❌'} contains `{m}`")
