@@ -13,7 +13,7 @@ Spark-first re-expression of the reference CLI's full run (SURVEY.md §3.1-3.2):
 Scale shape (designed for 10^12 rows / 1000 executors, exercised on local[N]):
 - stage boundaries are shuffle exchanges; the only wide op on the full fact
   stream is the final fan-out repartition (salted: sink × template × doc-hash
-  salt) and the aggregate shuffles, which run on pre-combined map-side rows;
+  salt) and the aggregate shuffle, which runs on pre-combined map-side rows;
 - template mapping and source dims are broadcast (KB-MB) → all enrichment
   joins are broadcast-hash, no shuffle;
 - discovery aggregates (source, content_sig) — cardinality ~templates, not
@@ -52,6 +52,10 @@ ROUTED_COLS = (
     "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
     "template_star", "variables", "n_vars",
 )
+# The aggregate stage's one grouping: the n_tok histogram's key plus
+# template_star, which depends only on the template, so the groups stay those
+# of (source, sink, template_id, n_tok).
+AGG_GRAIN = ("source", "sink", "template_id", "template_star", "n_tok")
 
 
 @dataclass
@@ -325,43 +329,45 @@ def enrich_stage(parsed: DataFrame, mapping: DataFrame, sources_df: DataFrame) -
     shuffle. Variable extraction is a JVM higher-order-function expression
     (zip content words against the template's <*> skeleton) — no Python.
     """
-    enriched = (
+    template_id = F.when(~F.col("head_matched"), F.lit(UNPARSED)).otherwise(
+        F.coalesce(F.col("template_id"), F.lit(UNMATCHED))
+    )
+    template_star = F.coalesce(F.col("template_star"), F.lit(""))
+    # two projections, not one analysis per withColumn: plan building sits on
+    # each micro-batch's critical path
+    return (
         parsed.join(F.broadcast(mapping), ["source", "content_sig"], "left")
         .join(F.broadcast(sources_df.select("source", "vendor", "sink")), ["source"], "left")
-        .withColumn(
-            "template_id",
-            F.when(~F.col("head_matched"), F.lit(UNPARSED)).otherwise(
-                F.coalesce(F.col("template_id"), F.lit(UNMATCHED))
-            ),
+        .withColumns(
+            {
+                "template_id": template_id,
+                "sink": F.when(
+                    template_id.isin(UNPARSED, UNMATCHED), F.lit("sink-failures")
+                ).otherwise(F.col("sink")),
+                "template_star": template_star,
+                # word-level variables: positions where the template skeleton
+                # disagrees with the content (i.e. <*>-bearing words). v1..vN
+                # naming (F7 semantics). A non-empty star is the joined one.
+                "word_vars": F.when(
+                    template_star == "", F.expr("CAST(array() AS array<string>)")
+                ).otherwise(
+                    F.expr(
+                        "filter(zip_with(split(content, ' '), split(template_star, ' '),"
+                        " (w, t) -> IF(t = w, NULL, w)), x -> x IS NOT NULL)"
+                    )
+                ),
+            }
         )
-        .withColumn(
-            "sink",
-            F.when(
-                F.col("template_id").isin(UNPARSED, UNMATCHED), F.lit("sink-failures")
-            ).otherwise(F.col("sink")),
+        .withColumns(
+            {
+                "variables": F.expr(
+                    "map_from_entries(transform(word_vars,"
+                    " (w, i) -> struct(concat('v', i + 1) AS key, w AS value)))"
+                ),
+                "n_vars": F.size("word_vars"),
+            }
         )
-        .withColumn("template_star", F.coalesce(F.col("template_star"), F.lit("")))
     )
-    # word-level variables: positions where the template skeleton disagrees
-    # with the content (i.e. <*>-bearing words). v1..vN naming (F7 semantics).
-    return enriched.withColumn(
-        "word_vars",
-        F.when(
-            F.col("template_star") == "",
-            F.expr("CAST(array() AS array<string>)"),
-        ).otherwise(
-            F.expr(
-                "filter(zip_with(split(content, ' '), split(template_star, ' '),"
-                " (w, t) -> IF(t = w, NULL, w)), x -> x IS NOT NULL)"
-            )
-        ),
-    ).withColumn(
-        "variables",
-        F.expr(
-            "map_from_entries(transform(word_vars,"
-            " (w, i) -> struct(concat('v', i + 1) AS key, w AS value)))"
-        ),
-    ).withColumn("n_vars", F.size("word_vars"))
 
 
 def route_frame(enriched: DataFrame, salt_buckets: int) -> DataFrame:
@@ -458,41 +464,45 @@ def routed_data_dirs(out_dir: str) -> list[str]:
 
 
 def aggregate_stage(spark: SparkSession, routed: DataFrame, out_dir: str) -> dict[str, str]:
-    """Per-sink aggregates: template counts (A2) + n_tok histogram (A13).
+    """Per-sink aggregates: template counts (A2) + n_tok histogram (A13), from
+    ONE scan of ``routed``, the read-back of the routed snapshot.
 
-    ``routed`` may be the in-flight enriched stream (no re-scan of the fan-out
-    files — the aggregates reduce the same rows the route stage shuffles) or a
-    read-back of the routed table (verification mode). Both aggregates are
-    map-side-combinable group-bys on tiny key cardinality.
+    One map-side-combinable group-by at the histogram grain (``AGG_GRAIN``,
+    ``count(*) AS cnt``) is collected to the driver: a row per template ×
+    distinct line length, so its size does not grow with the input rows.
+    ``ntok_hist`` is that table without ``template_star``; ``sink_counts`` is
+    its roll-up on the driver (``n_sequences = Σ cnt``, ``sum_n_tok =
+    Σ n_tok × cnt``). Raises ValueError when a (source, sink, template_id)
+    carries more than one ``template_star``: its ``sink_counts`` row would
+    split and its ``ntok_hist`` keys repeat.
     """
-    counts_path = os.path.join(out_dir, "sink_counts")
-    hist_path = os.path.join(out_dir, "ntok_hist")
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def write_counts():
-        (
-            routed.groupBy("source", "sink", "template_id", "template_star")
-            .agg(F.count("*").alias("n_sequences"), F.sum("n_tok").alias("sum_n_tok"))
-            .write.mode("overwrite")
-            .parquet(counts_path)
+    keys = ["source", "sink", "template_id"]
+    grain = routed.groupBy(*AGG_GRAIN).agg(F.count("*").alias("cnt")).toArrow()
+    tok = pc.multiply_checked(grain["n_tok"].cast(pa.int64()), grain["cnt"])
+    rolled = (
+        grain.append_column("tok", tok)
+        .group_by([*keys, "template_star"])
+        .aggregate([("cnt", "sum"), ("tok", "sum")])
+    )
+    stars = rolled.group_by(keys).aggregate([("template_star", "count", pc.CountOptions("all"))])
+    split = stars.filter(pc.field("template_star_count") > 1)
+    if split.num_rows:
+        raise ValueError(
+            f"template_star is not a function of the template: {split.select(keys).to_pylist()}"
+            " each carry several stars"
         )
-
-    def write_hist():
-        (
-            routed.groupBy("source", "sink", "template_id", "n_tok")
-            .agg(F.count("*").alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(hist_path)
-        )
-
-    # Two independent reductions — submit concurrently (Spark's scheduler
-    # interleaves their stages; halves the serial action latency).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [pool.submit(write_counts), pool.submit(write_hist)]
-        for fut in futures:
-            fut.result()
-    return {"sink_counts": counts_path, "ntok_hist": hist_path}
+    counts = rolled.select([*keys, "template_star", "cnt_sum", "tok_sum"]).rename_columns(
+        [*keys, "template_star", "n_sequences", "sum_n_tok"]
+    )
+    tables = {"sink_counts": counts, "ntok_hist": grain.select([*keys, "n_tok", "cnt"])}
+    paths = {name: os.path.join(out_dir, name) for name in tables}
+    for name, table in tables.items():
+        # a few hundred driver rows: one file, written by one task
+        spark.createDataFrame(table).coalesce(1).write.mode("overwrite").parquet(paths[name])
+    return paths
 
 
 def run_replay(

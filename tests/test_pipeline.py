@@ -6,6 +6,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from log_parser_cli_spark.plans.pipeline import read_routed
 
@@ -86,6 +87,82 @@ def test_ntok_histogram_consistency(spark, fixture_dir, pipeline_out):
         F.coalesce("n_gt", F.lit(-1)) != F.coalesce("n_mine", F.lit(-2))
     )
     assert bad.count() == 0
+
+
+def _two_groupby_aggregates(routed):
+    """sink_counts and ntok_hist as two group-bys straight over the routed
+    rows: the definition the single-scan stage must reproduce."""
+    return {
+        "sink_counts": routed.groupBy("source", "sink", "template_id", "template_star").agg(
+            F.count("*").alias("n_sequences"), F.sum("n_tok").alias("sum_n_tok")
+        ),
+        "ntok_hist": routed.groupBy("source", "sink", "template_id", "n_tok").agg(
+            F.count("*").alias("cnt")
+        ),
+    }
+
+
+def _types(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_aggregate_tables_equal_two_groupby_definition(spark, pipeline_out):
+    want = _two_groupby_aggregates(read_routed(spark, pipeline_out))
+    for name, df in want.items():
+        got = spark.read.parquet(os.path.join(pipeline_out, name))
+        assert _types(got) == _types(df), name
+        assert sorted(got.collect()) == sorted(df.collect()), name
+
+
+def test_aggregate_of_empty_routed_frame_writes_both_tables(spark, pipeline_out, tmp_path):
+    from log_parser_cli_spark.plans.pipeline import aggregate_stage
+
+    routed = read_routed(spark, pipeline_out).limit(0)
+    paths = aggregate_stage(spark, routed, str(tmp_path))
+    for name, df in _two_groupby_aggregates(routed).items():
+        got = spark.read.parquet(paths[name])
+        assert _types(got) == _types(df), name
+        assert got.count() == 0
+
+
+def test_aggregate_reads_each_routed_row_once(spark, pipeline_out, tmp_path):
+    """One scan of the routed snapshot: the stage's jobs read as many input
+    records as the snapshot holds rows."""
+    from log_parser_cli_spark.plans.pipeline import aggregate_stage
+
+    routed = read_routed(spark, pipeline_out)
+    n_rows = routed.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("aggregate-scan", "aggregate_stage")
+    try:
+        aggregate_stage(spark, routed, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)  # the status store lags the jobs' end
+    store = jsc.statusStore()
+    read = sum(
+        store.lastStageAttempt(sid).inputRecords()
+        for jid in sc.statusTracker().getJobIdsForGroup("aggregate-scan")
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds
+    )
+    assert read == n_rows
+
+
+def test_aggregate_rejects_star_that_is_not_a_function_of_its_template(spark, tmp_path):
+    from log_parser_cli_spark.plans.pipeline import aggregate_stage
+
+    routed = spark.createDataFrame(
+        [
+            ("s", "sink-a", "t1", "a <*>", 2),
+            ("s", "sink-a", "t1", "b <*>", 2),
+            ("s", "sink-a", "t2", "c", 1),
+        ],
+        "source string, sink string, template_id string, template_star string, n_tok int",
+    )
+    with pytest.raises(ValueError, match="'template_id': 't1'"):
+        aggregate_stage(spark, routed, str(tmp_path))
+    assert not os.path.exists(tmp_path / "sink_counts")
 
 
 def test_routed_partition_layout(pipeline_out):

@@ -10,6 +10,7 @@ from __future__ import annotations
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -37,10 +38,13 @@ def main() -> int:
     from log_parser_cli_spark.datagen import ensure_fixtures
     from log_parser_cli_spark.operators.parse import parse_stage
     from log_parser_cli_spark.plans.pipeline import (
+        AGG_GRAIN,
         discover_templates,
         enrich_stage,
         load_dims,
+        read_routed,
         route_frame,
+        route_stage,
     )
     from log_parser_cli_spark.session import get_spark
     from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs, minhash_dedup
@@ -127,16 +131,28 @@ def main() -> int:
         )
     )
 
-    # aggregates: map-side partial aggregation (two HashAggregates around the exchange)
-    agg = enriched.groupBy("source", "sink", "template_id").agg(F.count("*").alias("n"))
-    sections.append(
-        (
-            "per-sink aggregate (partial → exchange → final)",
-            plan_of(agg),
-            ["HashAggregate", "Exchange", "hashpartitioning"],
-            ["CartesianProduct"],
+    # the aggregate stage's one grouping over a committed routed snapshot:
+    # one parquet scan, map-side partial count → exchange → final count
+    agg_title = "aggregate stage (one routed scan → partial → exchange → final)"
+    with tempfile.TemporaryDirectory(prefix="explain-routed-") as routed_out:
+        route_stage(enriched, routed_out, salt_buckets=4)
+        agg_plan = plan_of(
+            read_routed(spark, routed_out).groupBy(*AGG_GRAIN).agg(F.count("*").alias("cnt"))
         )
-    )
+    sections.append((agg_title, agg_plan, ["hashpartitioning"], ["CartesianProduct"]))
+    agg_tree = agg_plan.split("\n\n", 1)[0]
+    extra_checks[agg_title] = [
+        (
+            f"one parquet scan (found {agg_tree.count('Scan parquet')})",
+            agg_tree.count("Scan parquet") == 1,
+        ),
+        (
+            "partial → final HashAggregate around one exchange",
+            agg_tree.count("HashAggregate") == 2
+            and agg_tree.count("Exchange") == 1
+            and agg_plan.index("partial_count(1)") < agg_plan.index("[count(1)]"),
+        ),
+    ]
 
     # head-derive pool: broadcast step join + map-side hash filter; the only
     # sort (for the window rank) runs on the filtered residue, and the big
