@@ -26,6 +26,7 @@ Scale shape (designed for 10^12 rows / 1000 executors, exercised on local[N]):
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass, field
@@ -75,17 +76,38 @@ def _observe(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
     return df.observe(obs, *(c.alias(name) for name, c in metrics.items())), obs
 
 
+def _reject_duplicates(table, key: str, name: str) -> None:
+    """Raise ValueError naming every ``key`` value that ``table`` holds twice."""
+    import pyarrow.compute as pc
+
+    counts = table.group_by(key).aggregate([(key, "count", pc.CountOptions("all"))])
+    dups = counts.filter(pc.field(f"{key}_count") > 1)[key].to_pylist()
+    if dups:
+        raise ValueError(f"{name} lists {key} more than once: {dups}")
+
+
 def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, str]], dict[str, tuple[str, int]], DataFrame]:
-    """Load vocab + source-head config (small driver-side dims) + sources df."""
-    vocab_rows = [
-        (int(r.token_id), r.text)
-        for r in spark.read.parquet(os.path.join(fixture_dir, "vocab.parquet")).collect()
-    ]
-    sources_df = spark.read.parquet(os.path.join(fixture_dir, "sources.parquet"))
+    """Load the small dims on the driver with pyarrow, submitting no job:
+    ``vocab_rows`` ((token_id, text) in file order), ``source_heads``
+    (source → (head_pattern, content_group)) and ``sources_df``, the sources
+    table as a local relation, so a plan that joins it broadcasts a
+    ``LocalTableScan``. Raises ValueError when ``vocab.parquet`` repeats a
+    token_id (the vocab would render whichever word came last) or
+    ``sources.parquet`` a source (the enrich join would duplicate its rows)."""
+    import pyarrow.parquet as pq
+
+    vocab = pq.read_table(os.path.join(fixture_dir, "vocab.parquet"), columns=["token_id", "text"])
+    sources = pq.read_table(os.path.join(fixture_dir, "sources.parquet"))
+    _reject_duplicates(vocab, "token_id", "vocab.parquet")
+    _reject_duplicates(sources, "source", "sources.parquet")
+    vocab_rows = list(zip(vocab["token_id"].to_pylist(), vocab["text"].to_pylist()))
     source_heads = {
-        r.source: (r.head_pattern, int(r.content_group)) for r in sources_df.collect()
+        src: (head, int(group))
+        for src, head, group in zip(
+            *(sources[c].to_pylist() for c in ("source", "head_pattern", "content_group"))
+        )
     }
-    return vocab_rows, source_heads, sources_df
+    return vocab_rows, source_heads, spark.createDataFrame(sources)
 
 
 def _top_signatures(parsed: DataFrame, cap: int, known: DataFrame | None = None) -> list:
@@ -472,12 +494,15 @@ def aggregate_stage(spark: SparkSession, routed: DataFrame, out_dir: str) -> dic
     distinct line length, so its size does not grow with the input rows.
     ``ntok_hist`` is that table without ``template_star``; ``sink_counts`` is
     its roll-up on the driver (``n_sequences = Σ cnt``, ``sum_n_tok =
-    Σ n_tok × cnt``). Raises ValueError when a (source, sink, template_id)
-    carries more than one ``template_star``: its ``sink_counts`` row would
-    split and its ``ntok_hist`` keys repeat.
+    Σ n_tok × cnt``). The driver writes both tables with pyarrow, one zstd
+    ``part-00000.parquet`` each, replacing what the dirs held: the stage's
+    only jobs are the scan's. Raises ValueError when a (source, sink,
+    template_id) carries more than one ``template_star``: its ``sink_counts``
+    row would split and its ``ntok_hist`` keys repeat.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     keys = ["source", "sink", "template_id"]
     grain = routed.groupBy(*AGG_GRAIN).agg(F.count("*").alias("cnt")).toArrow()
@@ -499,9 +524,14 @@ def aggregate_stage(spark: SparkSession, routed: DataFrame, out_dir: str) -> dic
     )
     tables = {"sink_counts": counts, "ntok_hist": grain.select([*keys, "n_tok", "cnt"])}
     paths = {name: os.path.join(out_dir, name) for name in tables}
-    for name, table in tables.items():
-        # a few hundred driver rows: one file, written by one task
-        spark.createDataFrame(table).coalesce(1).write.mode("overwrite").parquet(paths[name])
+    for name, path in paths.items():
+        # one file, written under a `.`-prefixed name (Spark and pyarrow
+        # readers skip it) and renamed in, so no reader sees a torn file
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        tmp = os.path.join(path, ".part-00000.parquet.tmp")
+        pq.write_table(tables[name], tmp, compression="zstd")
+        os.replace(tmp, os.path.join(path, "part-00000.parquet"))
     return paths
 
 

@@ -12,8 +12,8 @@ Streaming. Both entry points run one micro-batch path (``_start``):
 A micro-batch goes through the batch route path, with one salt: its rows
 hash-partition by (sink, template_id), so each template dir gets exactly one
 file per batch and the writes spread over the exchange's tasks. The mapping
-and the sources dim each batch joins are local relations (``pin``): their
-broadcasts scan no file and re-run no lineage.
+each batch joins is a local relation (``pin``) and so is the sources dim, as
+``load_dims`` returns it: their broadcasts scan no file and re-run no lineage.
 
 ``commit_batch`` is the same transactional table the batch route stage
 writes: a retried batch replaces its own dirs, a killed batch is never
@@ -73,8 +73,8 @@ def _start(
 ):
     """Start the checkpointed stream; ``mapping_for(parsed, batch_id)`` gives
     the mapping each micro-batch is enriched against."""
+    # sources_df is already a local relation: a batch's broadcast scans no file
     vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
-    sources_df = pin(spark, sources_df)  # a batch's broadcast then scans no file
     seq_schema = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet")).schema
     reader = spark.readStream.schema(seq_schema).option("maxFilesPerTrigger", max_files_per_trigger)
     if stream_dir is None:

@@ -125,28 +125,53 @@ def test_aggregate_of_empty_routed_frame_writes_both_tables(spark, pipeline_out,
         assert got.count() == 0
 
 
+def _jobs_of(spark, group: str, fn):
+    """``fn()``'s result and the ids of the Spark jobs it submitted, labelled
+    with job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # the status store lags the jobs' end
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_aggregate_reads_each_routed_row_once(spark, pipeline_out, tmp_path):
-    """One scan of the routed snapshot: the stage's jobs read as many input
-    records as the snapshot holds rows."""
+    """One scan of the routed snapshot and no write job: the stage's jobs read
+    as many input records as the snapshot holds rows and write none (the
+    driver writes both tables)."""
     from log_parser_cli_spark.plans.pipeline import aggregate_stage
 
     routed = read_routed(spark, pipeline_out)
     n_rows = routed.count()
-    sc = spark.sparkContext
-    sc.setJobGroup("aggregate-scan", "aggregate_stage")
-    try:
-        aggregate_stage(spark, routed, str(tmp_path))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty(10_000)  # the status store lags the jobs' end
-    store = jsc.statusStore()
-    read = sum(
-        store.lastStageAttempt(sid).inputRecords()
-        for jid in sc.statusTracker().getJobIdsForGroup("aggregate-scan")
-        for sid in sc.statusTracker().getJobInfo(jid).stageIds
+    _, jobs = _jobs_of(
+        spark, "aggregate-scan", lambda: aggregate_stage(spark, routed, str(tmp_path))
     )
-    assert read == n_rows
+    store = spark.sparkContext._jsc.sc().statusStore()
+    stages = [
+        store.lastStageAttempt(sid)
+        for jid in jobs
+        for sid in spark.sparkContext.statusTracker().getJobInfo(jid).stageIds
+    ]
+    assert sum(s.inputRecords() for s in stages) == n_rows
+    assert sum(s.outputRecords() for s in stages) == 0
+
+
+def test_aggregate_rerun_replaces_both_tables(spark, pipeline_out, tmp_path):
+    """A second aggregate into the same dir leaves one parquet file per
+    table, holding the second run's rows, and no temp file."""
+    from log_parser_cli_spark.plans.pipeline import aggregate_stage
+
+    routed = read_routed(spark, pipeline_out)
+    aggregate_stage(spark, routed, str(tmp_path))
+    one_sink = routed.filter(F.col("sink") == "sink-failures")
+    paths = aggregate_stage(spark, one_sink, str(tmp_path))
+    for name, df in _two_groupby_aggregates(one_sink).items():
+        assert os.listdir(paths[name]) == ["part-00000.parquet"], name
+        got = spark.read.parquet(paths[name])
+        assert sorted(got.collect()) == sorted(df.collect()), name
 
 
 def test_aggregate_rejects_star_that_is_not_a_function_of_its_template(spark, tmp_path):
@@ -163,6 +188,64 @@ def test_aggregate_rejects_star_that_is_not_a_function_of_its_template(spark, tm
     with pytest.raises(ValueError, match="'template_id': 't1'"):
         aggregate_stage(spark, routed, str(tmp_path))
     assert not os.path.exists(tmp_path / "sink_counts")
+
+
+def test_load_dims_submits_no_job_and_equals_spark_read(spark, fixture_dir):
+    """The dims come off the driver's pyarrow read with no job, equal to what
+    a Spark read of the same files gives: vocab rows in file order, the
+    source heads and the sources frame's schema and rows."""
+    from log_parser_cli_spark.plans.pipeline import load_dims
+
+    (vocab_rows, source_heads, sources_df), jobs = _jobs_of(
+        spark, "load-dims", lambda: load_dims(spark, fixture_dir)
+    )
+    assert jobs == []
+    vocab = spark.read.parquet(os.path.join(fixture_dir, "vocab.parquet")).collect()
+    assert vocab_rows == [(r.token_id, r.text) for r in vocab]
+    assert all(type(i) is int and type(w) is str for i, w in vocab_rows)
+    sources = spark.read.parquet(os.path.join(fixture_dir, "sources.parquet"))
+    assert source_heads == {
+        r.source: (r.head_pattern, r.content_group) for r in sources.collect()
+    }
+    assert sources_df.schema == sources.schema
+    assert sorted(sources_df.collect()) == sorted(sources.collect())
+
+
+@pytest.mark.parametrize(
+    "name, key, row", [("vocab.parquet", "token_id", 3), ("sources.parquet", "source", 1)]
+)
+def test_load_dims_rejects_a_repeated_key(spark, fixture_dir, tmp_path, name, key, row):
+    """A token_id or source listed twice raises, naming it, instead of
+    rendering the last word or duplicating the source's routed rows."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from log_parser_cli_spark.plans.pipeline import load_dims
+
+    for f in ("vocab.parquet", "sources.parquet"):
+        t = pq.read_table(os.path.join(fixture_dir, f))
+        if f == name:
+            dup = t.slice(row, 1)
+            t = pa.concat_tables([t, dup])
+        pq.write_table(t, str(tmp_path / f))
+    want = f"{name} lists {key} more than once: [{dup[key][0].as_py()!r}]"
+    with pytest.raises(ValueError, match=re.escape(want)):
+        load_dims(spark, str(tmp_path))
+
+
+def test_replay_job_count(spark, fixture_dir, pipeline_out, tmp_path):
+    """A replay pass submits at most 8 Spark jobs: the dims load and the
+    aggregate's two table writes run on the driver and submit none."""
+    from log_parser_cli_spark.plans.pipeline import run_replay
+
+    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    rows, jobs = _jobs_of(
+        spark, "replay", lambda: run_replay(spark, fixture_dir, str(tmp_path), mapping)
+    )
+    assert rows == spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet")).count()
+    assert len(jobs) <= 8, len(jobs)
 
 
 def test_routed_partition_layout(pipeline_out):

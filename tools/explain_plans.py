@@ -89,14 +89,13 @@ def main() -> int:
     ]
 
     # a micro-batch's frame, here over a static read: the same single payload
-    # exchange at salt 1, against the mapping and sources pinned as local
-    # relations (their broadcasts scan no file and re-run no lineage)
+    # exchange at salt 1, against the mapping pinned as a local relation and
+    # the sources dim as load_dims returns it, already local (their
+    # broadcasts scan no file and re-run no lineage)
     from log_parser_cli_spark.streaming.stream import batch_frame, pin
 
-    batch_title = "micro-batch route (pinned dims → broadcast joins → salt-1 exchange)"
-    batch_plan = plan_of(
-        batch_frame(parsed, pin(spark, mapping), pin(spark, sources_df), batch_id=0)
-    )
+    batch_title = "micro-batch route (local dims → broadcast joins → salt-1 exchange)"
+    batch_plan = plan_of(batch_frame(parsed, pin(spark, mapping), sources_df, batch_id=0))
     sections.append(
         (
             batch_title,
