@@ -4,10 +4,11 @@ The reference runs two regex steps the same way: the head step applies one
 compiled pattern per line and keeps its content group
 (src/core/head-pattern.ts:14-36), and the template step takes the first
 full-line match in ``created_at`` order (src/core/regex-worker-pool.ts:67-112,
-order from sqlite-template-manager.ts:224-247), both over one compiled cache
-(template-runtime-cache.ts:22-60). Here both run through two functions:
+order from sqlite-template-manager.ts:224-247). Here both run through two
+functions:
 
-- ``compile_regex`` compiles a pattern once per process: Python ``re`` always;
+- ``compile_regex`` compiles a pattern once per process (an ``lru_cache``
+  keyed on the pattern text itself): Python ``re`` always;
   RE2 as well when no group can miss a match, naming every unnamed group
   ``g<k>`` provably keeps Python's group numbering and RE2 accepts the
   anchored form.
@@ -20,13 +21,13 @@ Callers: the parse stage (head content of a known source, and the source
 vote over every head) and ``match_batch`` (templates per source), which
 ``match_templates`` runs per batch on the executors and the refine machine
 runs on the driver. Semantically a broadcast nested-loop join with
-short-circuit — never a crossJoin: the template side is tiny and broadcast.
+short-circuit — never a crossJoin: the template side is tiny and travels in
+the task closure.
 """
 
 from __future__ import annotations
 
 import functools
-import hashlib
 import re
 import re._constants as _sre
 import re._parser as _sre_parse
@@ -40,20 +41,10 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-_COMPILED_CACHE: dict[tuple[str, tuple], list[tuple[str, "Regex"]]] = {}
-
 MATCH_FIELDS = [
     T.StructField("template_id", T.StringType()),
     T.StructField("variables", T.MapType(T.StringType(), T.StringType())),
 ]
-
-
-def cache_key(tag: str, rows: list) -> tuple:
-    """Executor cache key: a digest of the WHOLE ``rows`` (a vocab, a template
-    library), so two values that differ in any row never share a cached
-    entry. Computed once per stage on the driver and closed over by the
-    tasks."""
-    return (tag, hashlib.blake2b(repr(rows).encode(), digest_size=16).hexdigest())
 
 
 @dataclass(frozen=True)
@@ -174,39 +165,17 @@ def first_match(
         rows = rows[~hit]
 
 
-def library_key(template_rows: list[dict]) -> tuple:
-    """Executor cache key of a template library: a digest of every
-    (template_id, source, pattern, created_at), so two libraries that differ
-    anywhere never share compiled templates."""
-    return cache_key(
-        "templates",
-        sorted((r["template_id"], r["source"], r["pattern"], r["created_at"]) for r in template_rows),
-    )
-
-
-def compile_ordered(
-    template_rows: list[dict], source: str, lib_key: tuple
-) -> list[tuple[str, Regex]]:
+def compile_ordered(template_rows: list[dict], source: str) -> list[tuple[str, Regex]]:
     """One source's (template_id, compiled pattern) in precedence order
-    (created_at, template_id), cached per source."""
-    key = (source, lib_key)
-    compiled = _COMPILED_CACHE.get(key)
-    if compiled is None:
-        # Keep only the latest library per source: long-lived executors
-        # matching against evolving libraries must not accumulate every
-        # historical compiled set.
-        for stale in [k for k in _COMPILED_CACHE if k[0] == source]:
-            del _COMPILED_CACHE[stale]
-        rows = [r for r in template_rows if r["source"] == source]
-        rows.sort(key=lambda r: (r["created_at"], r["template_id"]))
-        compiled = [(r["template_id"], compile_regex(r["pattern"], True)) for r in rows]
-        _COMPILED_CACHE[key] = compiled
-    return compiled
+    (created_at, template_id)."""
+    rows = sorted(
+        (r for r in template_rows if r["source"] == source),
+        key=lambda r: (r["created_at"], r["template_id"]),
+    )
+    return [(r["template_id"], compile_regex(r["pattern"], True)) for r in rows]
 
 
-def match_batch(
-    contents, sources, template_rows: list[dict], lib_key: tuple
-) -> tuple[np.ndarray, np.ndarray]:
+def match_batch(contents, sources, template_rows: list[dict]) -> tuple[np.ndarray, np.ndarray]:
     """Ordered first-match-wins templates over one batch.
 
     ``contents``/``sources``: equal-length sequences (a pandas Series or a
@@ -222,7 +191,7 @@ def match_batch(
     contents = pa.array(contents, type=pa.string(), from_pandas=True)
     sources = np.asarray(sources, dtype=object)
     for src in {s for s in sources if s is not None}:  # null sources stay unmatched
-        ordered = compile_ordered(template_rows, src, lib_key)
+        ordered = compile_ordered(template_rows, src)
         rows = np.nonzero(sources == src)[0]
         for pos, won, struct in first_match(contents, rows, [rx for _, rx in ordered]):
             tid, regex = ordered[pos]
@@ -244,22 +213,18 @@ def match_templates(
     ``template_rows``: dicts with template_id, source, pattern (anchored,
     Python syntax, named groups), created_at. Unmatched rows get NULLs —
     the matched/unmatched split is a single pass (E1 semantics), callers
-    filter ``template_id IS NULL`` for the failure side.
+    filter ``template_id IS NULL`` for the failure side. ``template_rows``
+    reach the tasks in their closure; ``spark`` is unused.
     """
-    lib_key = library_key(template_rows)
-    sc = spark.sparkContext
-    b_templates = sc.broadcast(template_rows)
-
     out_schema = T.StructType(list(df.schema.fields) + MATCH_FIELDS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = b_templates.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             out = pdf.copy()
             out["template_id"], out["variables"] = match_batch(
-                pdf["content"], pdf["source"], rows, lib_key
+                pdf["content"], pdf["source"], template_rows
             )
             yield out
 

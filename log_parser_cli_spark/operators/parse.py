@@ -4,7 +4,7 @@ The ONLY non-JVM stage in the pipeline, and it contains **zero per-row
 Python**: it runs as ``mapInArrow`` over Arrow RecordBatches with every step a
 vectorized Arrow/NumPy kernel:
 
-- render: ``pc.take`` of the broadcast vocab over the batch's flattened token
+- render: ``pc.take`` of the vocab over the batch's flattened token
   values, then ``pc.binary_join`` of the word lists — one C++ pass,
 - head extraction: the matcher's regex kernel (``compile_regex`` +
   ``first_match``) per source over that source's row subset — the reference
@@ -21,10 +21,6 @@ vectorized Arrow/NumPy kernel:
 Output adds: content, content_sig (masked canonical signature), head_matched.
 ``tokens`` passes through untouched — the byte-exact token-array equality
 invariant is carried, never recomputed.
-
-Per-executor caches mirror the reference's TemplateRuntimeCache
-(template-runtime-cache.ts:22-60): vocab lookup arrays and compiled regexes
-are built once per worker process, not per task.
 """
 
 from __future__ import annotations
@@ -38,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from log_parser_cli_spark.functions.masking import mask_word
-from log_parser_cli_spark.operators.matcher import cache_key, compile_regex, first_match
+from log_parser_cli_spark.operators.matcher import compile_regex, first_match
 
 PARSED_EXTRA_FIELDS = [
     T.StructField("content", T.StringType()),
@@ -48,18 +44,6 @@ PARSED_EXTRA_FIELDS = [
 
 # Source of rows no head pattern claims in the source vote.
 UNKNOWN_SOURCE = "__UNKNOWN__"
-
-# Per-executor-process caches (module state survives across tasks).
-_EXEC_CACHE: dict = {}
-
-
-def _cached_vocab_arrays(key: tuple, b_vocab) -> tuple[pa.Array, pa.Array]:
-    arrays = _EXEC_CACHE.get(key)
-    if arrays is None:
-        arrays = build_vocab_arrays(b_vocab.value)
-        _EXEC_CACHE[key] = arrays
-    return arrays
-
 
 def build_vocab_arrays(vocab_rows: list[tuple[int, str]]) -> tuple[pa.Array, pa.Array]:
     """(token_id, text) rows → (text_by_id, canon_by_id) Arrow lookup arrays.
@@ -89,14 +73,14 @@ def parse_stage(
     (reference routing-agent.ts:34-80 minus the LLM); unclaimed rows get
     ``UNKNOWN_SOURCE`` and ``head_matched = False``. Rows with a source keep
     their ``source`` column untouched.
+
+    The vocab lookup arrays are built here once and, with ``source_heads``,
+    reach the tasks in their closure; ``spark`` is unused.
     """
     for src, (pattern, group) in source_heads.items():
         if not 1 <= group <= len(compile_regex(pattern, False).groups):
             raise ValueError(f"head of {src!r} has no content group {group}: {pattern!r}")
-    sc = spark.sparkContext
-    b_vocab = sc.broadcast(vocab_rows)
-    vocab_key = cache_key("vocab", vocab_rows)
-    b_heads = sc.broadcast(source_heads)
+    text_by_id, canon_by_id = build_vocab_arrays(vocab_rows)
 
     out_schema = T.StructType(list(seq_df.schema.fields) + PARSED_EXTRA_FIELDS)
     col_names = [f.name for f in seq_df.schema.fields]
@@ -105,11 +89,10 @@ def parse_stage(
     out_names = [f.name for f in out_schema.fields]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        text_by_id, canon_by_id = _cached_vocab_arrays(vocab_key, b_vocab)
         # source → (compiled head, struct field of its content group)
         heads = {
             src: (compile_regex(pattern, False), group - 1)
-            for src, (pattern, group) in b_heads.value.items()
+            for src, (pattern, group) in source_heads.items()
         }
         vote_order = sorted(heads)
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from log_parser_cli_spark.functions.templates import to_jvm_pattern
-from log_parser_cli_spark.operators.matcher import library_key, match_batch
+from log_parser_cli_spark.operators.matcher import match_batch
 
 SAMPLES_PER_TEMPLATE = 20  # stored samples a candidate is checked against
 
@@ -79,9 +79,7 @@ def detect_conflicts(
 
 def _match(library: list[dict], rows: list[tuple]) -> list[str | None]:
     """Owner of each ``(doc_id, source, content)`` row under ``library``."""
-    tids, _ = match_batch(
-        [r[2] for r in rows], [r[1] for r in rows], library, library_key(library)
-    )
+    tids, _ = match_batch([r[2] for r in rows], [r[1] for r in rows], library)
     return list(tids)
 
 

@@ -304,7 +304,7 @@ def refine_mapping(
 
     Returns (refined mapping DataFrame, per-candidate reports).
     """
-    from log_parser_cli_spark.operators.matcher import library_key, match_batch
+    from log_parser_cli_spark.operators.matcher import match_batch
     from log_parser_cli_spark.plans.export import export_template_library
     from log_parser_cli_spark.plans.library_ops import discover_with_refine
 
@@ -331,9 +331,7 @@ def refine_mapping(
         candidates,
     )
     library = res["library"]
-    tids, _ = match_batch(
-        [r.content for r in reps], [r.source for r in reps], library, library_key(library)
-    )
+    tids, _ = match_batch([r.content for r in reps], [r.source for r in reps], library)
     star_of = {t["template_id"]: t.get("template_star", "") for t in library}
     rows = [
         (r.source, r.content_sig, tid, star_of.get(tid, ""), None)

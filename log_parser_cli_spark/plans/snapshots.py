@@ -153,41 +153,26 @@ class SnapshotTable:
             os.unlink(tmp)
         return version
 
-    def _commit(self, op: str, build, summary: dict, expected_parent: int | None = None) -> int:
+    def _commit(self, op: str, build, summary: dict) -> int:
         """The one optimistic commit loop: ``build(parent)`` returns the
         (data_dirs, dir_batches) of the new snapshot on top of the current
         version ``parent``; losing the race for version parent + 1 rebuilds on
-        the winner, at most ``_COMMIT_RETRIES`` times. With ``expected_parent``
-        set, a table past that version or a lost race raises instead."""
+        the winner, at most ``_COMMIT_RETRIES`` times."""
         for _ in range(_COMMIT_RETRIES):
             parent = self.current_version()
-            if expected_parent is not None and parent != expected_parent:
-                raise ConcurrentCommitError(
-                    f"expected parent v{expected_parent}, table is at v{parent}"
-                )
             data_dirs, dir_batches = build(parent)
             try:
                 return self._try_commit(parent, op, data_dirs, summary, dir_batches)
             except ConcurrentCommitError:
-                if expected_parent is not None:
-                    raise
+                pass
         raise ConcurrentCommitError(f"gave up after {_COMMIT_RETRIES} racing commits")
 
-    def commit_overwrite(
-        self,
-        df: DataFrame,
-        partition_by: tuple[str, ...] | None = None,
-        expected_parent: int | None = None,
-    ) -> int:
-        """Publish ``df`` as the new current snapshot (replaces all rows).
-
-        ``expected_parent``: fail rather than clobber if another committer
-        advanced the table past that version (compare-and-swap semantics);
-        with the default None, latest-overwrite-wins and a version race just
-        retries on top of the winner.
-        """
+    def commit_overwrite(self, df: DataFrame, partition_by: tuple[str, ...] | None = None) -> int:
+        """Publish ``df`` as the new current snapshot (replaces all rows):
+        latest-overwrite-wins, and a version race retries on top of the
+        winner."""
         staged = self._stage(df, partition_by)
-        return self._commit("overwrite", lambda parent: ([staged], None), {}, expected_parent)
+        return self._commit("overwrite", lambda parent: ([staged], None), {})
 
     def commit_batch(
         self, df: DataFrame, batch_id: int, partition_by: tuple[str, ...] | None = None

@@ -360,15 +360,14 @@ def test_legacy_four_column_mapping_routes_same_rows(spark, fixture_dir, pipelin
 
 
 
-def test_parse_vocab_cache_is_keyed_on_the_whole_vocab(spark):
-    """Two same-length vocabs that differ in one row get different executor
-    cache keys, and parsing one frame under each in the same session (Python
-    workers reused) renders each vocab's own words, never the cached other."""
-    from log_parser_cli_spark.operators.parse import cache_key, parse_stage
+def test_parse_renders_each_vocab_in_one_session(spark):
+    """Two same-length vocabs that differ in one row: parsing one frame under
+    each in the same session (Python workers reused) renders each vocab's own
+    words, never the other's."""
+    from log_parser_cli_spark.operators.parse import parse_stage
 
     vocab_a = [(i, f"word{i}") for i in range(64)]
     vocab_b = [(i, "CHANGED" if i == 1 else w) for i, w in vocab_a]
-    assert cache_key("vocab", vocab_a) != cache_key("vocab", vocab_b)
 
     seq = spark.createDataFrame(
         [("d0", [0, 1, 2], 3, "s")],
@@ -377,3 +376,34 @@ def test_parse_vocab_cache_is_keyed_on_the_whole_vocab(spark):
     heads = {"s": (r"(.*)", 1)}
     for vocab, want in ((vocab_a, "word0 word1 word2"), (vocab_b, "word0 CHANGED word2")):
         assert parse_stage(spark, seq, vocab, heads).collect()[0].content == want
+
+
+def test_tasks_read_their_tables_without_a_broadcast(
+    spark, fixture_dir, pipeline_out, tmp_path, monkeypatch
+):
+    """A replay pass and ``match_templates`` over the fixture library submit
+    no ``SparkContext.broadcast``: the vocab arrays, the heads and the template
+    rows reach the tasks in their closure. PySpark also broadcasts a task
+    command itself once it pickles past its 1 MB threshold, so this fails as
+    well if a closure grows that large."""
+    from pyspark import SparkContext
+
+    from log_parser_cli_spark.operators.matcher import match_templates
+    from log_parser_cli_spark.operators.parse import parse_stage
+    from log_parser_cli_spark.oracle import load_fixture_table, oracle_match
+    from log_parser_cli_spark.plans.pipeline import load_dims, run_replay
+
+    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+
+    def no_broadcast(self, value):
+        raise AssertionError("tasks carry their tables in the closure, never a broadcast")
+
+    monkeypatch.setattr(SparkContext, "broadcast", no_broadcast)
+    assert run_replay(spark, fixture_dir, str(tmp_path / "replay"), mapping) == 3000
+
+    vocab_rows, source_heads, _ = load_dims(spark, fixture_dir)
+    seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
+    parsed = parse_stage(spark, seq, vocab_rows, source_heads)
+    library = load_fixture_table(fixture_dir, "templates")
+    got = match_templates(spark, parsed, library).filter("template_id IS NOT NULL").count()
+    assert got == sum(m.template_id is not None for m in oracle_match(fixture_dir))

@@ -11,8 +11,11 @@ spans —
 
 from __future__ import annotations
 
+import dataclasses
 import re
 
+import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -23,6 +26,7 @@ from log_parser_cli_spark.functions.templates import (
     extract_variables_from_template,
     normalize_placeholder,
 )
+from log_parser_cli_spark.operators.matcher import compile_regex, first_match, match_batch
 
 # literal text between variables: printable, no ⟪⟫ markers
 _literal = st.text(
@@ -158,3 +162,99 @@ def test_derived_head_covers_generated_corpus(lines):
         # captured content is a word-suffix of the line
         assert line.endswith(content)
         assert content and content[0].islower()
+
+
+# ---------------------------------------------------------------------------
+# The regex kernel: for ANY small library drawn from a grammar of named and
+# unnamed groups, groups under ``?``/``*``, alternation and ``[...]`` classes
+# holding ``(``, ``)`` or a leading ``]``, ``match_batch`` (RE2 where
+# ``compile_regex`` allows it), ``first_match`` forced onto Python ``re`` and
+# ``oracle_match``'s rule (``rx.match`` ending at the line's end, the
+# groupdict without None) agree on every line's owner and variables.
+# ---------------------------------------------------------------------------
+
+_CHARS = "ab ()]"
+_NOISE = _CHARS + "?P<g1>"  # also the text of a ``(?P<g1>`` rewritten into a class
+_GROUP_NAMES = ["v1", "v2", "g1", "g2", "g3"]  # g<k> clashes with RE2's synthetic names
+
+
+def _escape(c: str) -> str:
+    return "\\" + c if c in "()]" else c
+
+
+@st.composite
+def _regex_node(draw, names: list[str], depth: int):
+    """(pattern text, line generator): ``gen(draw)`` draws a string the
+    pattern's text matches in full."""
+    kinds = ["lit", "cls"] + (["group", "opt", "star", "alt", "seq"] if depth < 3 else [])
+    kind = draw(st.sampled_from(kinds))
+    if kind == "lit":
+        text = draw(st.text(alphabet=_CHARS, min_size=1, max_size=3))
+        return "".join(map(_escape, text)), lambda d: text
+    if kind == "cls":
+        members = draw(st.sets(st.sampled_from(_CHARS), min_size=1, max_size=3))
+        rest = sorted(members - {"]"})
+        body = ("]" if "]" in members else "") + "".join(rest)  # ``]`` only leads
+        others = sorted(set(_CHARS) - members)
+        if others and draw(st.booleans()):
+            return f"[^{body}]", lambda d: d(st.sampled_from(others))
+        return f"[{body}]", lambda d: d(st.sampled_from(sorted(members)))
+    if kind == "seq":
+        parts = [draw(_regex_node(names, depth + 1)) for _ in range(draw(st.integers(2, 3)))]
+        return "".join(p for p, _ in parts), lambda d: "".join(g(d) for _, g in parts)
+    if kind == "alt":
+        parts = [draw(_regex_node(names, depth + 1)) for _ in range(2)]
+        return f"(?:{parts[0][0]}|{parts[1][0]})", lambda d: d(st.sampled_from(parts))[1](d)
+    inner, gen = draw(_regex_node(names, depth + 1))
+    if kind == "group":
+        opener = draw(st.sampled_from(["(", "(?:"] + ["(?P<>"] * 2 * bool(names)))
+        if opener == "(?P<>":
+            opener = f"(?P<{names.pop(draw(st.integers(0, len(names) - 1)))}>"
+        return f"{opener}{inner})", gen
+    # a quantifier applies to one atom: wrap the child in a (capturing or not) group
+    opener = draw(st.sampled_from(["(", "(?:"]))
+    if kind == "opt":
+        return f"{opener}{inner})?", lambda d: d(st.sampled_from(["", gen(d)]))
+    return f"{opener}{inner})*", lambda d: "".join(gen(d) for _ in range(d(st.integers(0, 2))))
+
+
+@st.composite
+def regex_libraries(draw):
+    library, lines = [], []
+    for i in range(draw(st.integers(1, 3))):
+        body, gen = draw(_regex_node(list(_GROUP_NAMES), 0))
+        library.append(
+            {"template_id": f"t#{i}", "source": "s", "pattern": f"^{body}$", "created_at": i}
+        )
+        lines += [gen(draw) for _ in range(draw(st.integers(0, 3)))]
+    lines += draw(st.lists(st.text(alphabet=_NOISE, max_size=6), max_size=2))
+    return library, lines or [""]
+
+
+@given(regex_libraries())
+@settings(max_examples=300, deadline=None, derandomize=True)
+def test_regex_kernel_agrees_with_python_re_and_the_oracle(case):
+    library, lines = case
+    tids, varmaps = match_batch(lines, ["s"] * len(lines), library)
+    got = list(zip(tids, varmaps))
+
+    forced = [(None, None)] * len(lines)
+    on_re = [dataclasses.replace(compile_regex(t["pattern"], True), re2=None) for t in library]
+    for pos, won, struct in first_match(pa.array(lines), np.arange(len(lines)), on_re):
+        named = {g: struct.field(k - 1).to_pylist() for g, k in on_re[pos].rx.groupindex.items()}
+        for i, row in enumerate(won):
+            variables = {g: vals[i] for g, vals in named.items() if vals[i] is not None}
+            forced[row] = (library[pos]["template_id"], variables)
+
+    oracle = []
+    for line in lines:
+        owner = (None, None)
+        for t in library:
+            m = re.compile(t["pattern"]).match(line)
+            if m is not None and m.end() == len(line):
+                variables = {k: v for k, v in m.groupdict().items() if v is not None}
+                owner = (t["template_id"], variables)
+                break
+        oracle.append(owner)
+
+    assert got == forced == oracle, [t["pattern"] for t in library]

@@ -92,16 +92,14 @@ def test_vacuum_spares_concurrent_staged_dir_but_commits_survive(spark, tmp_path
 
 def test_concurrent_commit_detected_at_commit_point(spark, tmp_path):
     """Exclusive manifest creation is the commit point: a racing committer that
-    lost the version gets ConcurrentCommitError (overwrite with
-    expected_parent = compare-and-swap), while append rebases and survives."""
+    lost the version gets ConcurrentCommitError, while append rebases and
+    survives."""
     t = SnapshotTable(str(tmp_path / "t"))
     t.commit_overwrite(_df(spark, [("a#1", "a", 1)]))
     # another committer publishes v1 between our read and our publish
     with pytest.raises(ConcurrentCommitError):
         t._try_commit(parent=None, op="overwrite", data_dirs=["data-x"], summary={})
     t.commit_overwrite(_df(spark, [("b#1", "b", 2)]))  # now at v1
-    with pytest.raises(ConcurrentCommitError):
-        t.commit_overwrite(_df(spark, [("c#1", "c", 3)]), expected_parent=0)
     # append retries on top of the winner: both writes survive
     t.commit_batch(_df(spark, [("d#1", "d", 4)]), batch_id=0)
     assert {r.template_id for r in t.read(spark).collect()} == {"b#1", "d#1"}
