@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from log_parser_cli_spark.datagen import GEN_VERSION, ensure_fixtures, fixtures_for_sf_dir
+from log_parser_cli_spark.extras.dedup import SIMHASH_CHUNKS
 from log_parser_cli_spark.plans.checkpoint import source_digest
 
 # Names bench.py's frozen ``_mapping-v{N}`` discovery cache; data/runs dirs
@@ -170,9 +171,6 @@ def q_head_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HEAD_DERIVE_POOL = 2000
-
-
 def _derive_heads_from_gt(gt_path: str) -> dict[str, str]:
     """Pure-python head derivation from a ground-truth parquet (the oracle
     twin of q_head_derive's driver-side loop — identical pools → identical
@@ -189,7 +187,7 @@ def _derive_heads_from_gt(gt_path: str) -> dict[str, str]:
     per_source: dict[str, list[tuple]] = {}
     for src, ln, rendered in rows:
         per_source.setdefault(src, []).append((ln, rendered))
-    return {s: p for s, p in derive_heads(per_source, HEAD_DERIVE_POOL).items() if p}
+    return {s: p for s, p in derive_heads(per_source).items() if p}
 
 
 def q_head_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,8 +202,8 @@ def q_head_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = spark.read.parquet(os.path.join(fx, "ground_truth.parquet")).select(
         "source", "line_no", "rendered"
     )
-    pools = stride_pool_collect(gt, "source", "line_no", ["rendered"], HEAD_DERIVE_POOL)
-    patterns = {s: p for s, p in derive_heads(pools, HEAD_DERIVE_POOL).items() if p}
+    pools = stride_pool_collect(gt, "source", "line_no", ["rendered"])
+    patterns = {s: p for s, p in derive_heads(pools).items() if p}
     # distributed coverage of the derived patterns (literal per-source rlike →
     # compiled once per branch, whole-stage codegen)
     matched = F.lit(False)
@@ -518,7 +516,7 @@ def q_dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.dedup import exact_dup_stats
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    return exact_dup_stats(docs, "doc_id", "text")
+    return exact_dup_stats(docs)
 
 
 def q_dedup_jaccard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,8 +526,8 @@ def q_dedup_jaccard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.dedup import jaccard_pairs, simhash, simhash_candidates
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    cands = simhash_candidates(simhash(docs, "doc_id", "text"))
-    return jaccard_pairs(docs, "doc_id", "text", k=2, threshold=0.3, candidates=cands).select(
+    cands = simhash_candidates(simhash(docs))
+    return jaccard_pairs(docs, threshold=0.3, candidates=cands).select(
         F.col("a").cast("long"), F.col("b").cast("long"), "jaccard"
     )
 
@@ -538,23 +536,23 @@ def q_dedup_minhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.dedup import minhash_dedup
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    return minhash_dedup(docs, "doc_id", "text", k=2, threshold=0.3).select(
+    return minhash_dedup(docs, threshold=0.3).select(
         F.col("a").cast("long"), F.col("b").cast("long"), "jaccard"
     )
 
 
-# Pigeonhole-sound parameterization: chunks (4) > max_hamming (3), so EVERY
-# pair within the advertised radius shares ≥1 exact chunk (simhash_pairs
-# enforces this; simhash_recall proves recall == 1.0 vs brute force).
+# Pigeonhole-sound parameterization: chunks (SIMHASH_CHUNKS = 4, the chunks
+# simhash_candidates bands on) > max_hamming (3), so EVERY pair within the
+# advertised radius shares ≥1 exact chunk (simhash_pairs enforces this;
+# simhash_recall proves recall == 1.0 vs brute force).
 SIMHASH_MAX_HAMMING = 3
-SIMHASH_CHUNKS = 4
 
 
 def q_dedup_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     return simhash_pairs(fp, max_hamming=SIMHASH_MAX_HAMMING, chunks=SIMHASH_CHUNKS).select(
         F.col("a").cast("long"), F.col("b").cast("long"), F.col("hamming").cast("long")
     )
@@ -572,7 +570,7 @@ def q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     banded = simhash_pairs(fp, max_hamming=SIMHASH_MAX_HAMMING, chunks=SIMHASH_CHUNKS).select("a", "b")
     brute = simhash_bruteforce_pairs(fp, SIMHASH_MAX_HAMMING).select("a", "b")
     return (
@@ -604,7 +602,7 @@ def q_dedup_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     return simhash_pairs(
         fp,
         max_hamming=SIMHASH_MAX_HAMMING,
@@ -620,7 +618,7 @@ def q_simhash_hot_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
     banded = bit_bands(
-        simhash(docs, "doc_id", "text"),
+        simhash(docs),
         "simhash",
         SIMHASH_BITS // SIMHASH_CHUNKS,
         [(c,) for c in range(SIMHASH_CHUNKS)],
@@ -646,7 +644,7 @@ def q_dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     return simhash_pairs(
         fp,
         max_hamming=SIMHASH_WIDE_HAMMING,
@@ -666,7 +664,7 @@ def q_simhash_wide_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     banded = simhash_pairs(
         fp,
         max_hamming=SIMHASH_WIDE_HAMMING,
@@ -713,20 +711,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(
         emb, ANN_QUERY_IDS, k=10, centroids=_ivf_centroids_for(sf_dir), nprobe=IVF_NPROBE
     )
-
-
-def q_ann_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-path twin of ann_ivf: same centroids/nprobe/rounding, but the
-    centroids ride a broadcast single-row DataFrame and the nearest-centroid
-    argmax is a higher-order-function reduce — plan size CONSTANT in centroid
-    count (the literal path's expression tree grows as O(centroids × dim)
-    and collapses at production IVF sizes). Its oracle is ann_ivf's
-    literal-inlined SQL: the value-hash match IS the parity proof."""
-    from log_parser_cli_spark.extras.similarity import ivf_topk, vectors_to_df
-
-    emb = spark.read.parquet(_tbl(sf_dir, "embeddings"))
-    cdf = vectors_to_df(spark, _ivf_centroids_for(sf_dir), "cents")
-    return ivf_topk(emb, ANN_QUERY_IDS, k=10, centroids_df=cdf, nprobe=IVF_NPROBE)
 
 
 def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -798,7 +782,7 @@ def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
     return docs.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(token_count("text")).cast("long").alias("n_tokens"),
+        F.sum(token_count()).cast("long").alias("n_tokens"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
     )
 
@@ -807,7 +791,7 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.textstats import quality_score
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    return docs.withColumn("q", quality_score("text", "n_chars")).groupBy("source").agg(
+    return docs.withColumn("q", quality_score()).groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.round(F.avg("q"), 4).alias("avg_quality"),
     )
@@ -824,7 +808,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.extras.textstats import fingerprint_count
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    return fingerprint_count(docs, "doc_id", "text").select(
+    return fingerprint_count(docs).select(
         F.col("doc").cast("long").alias("doc_id"), "n_fingerprints"
     )
 
@@ -980,7 +964,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spark.read.parquet(_tbl(sf_dir, "documents"))
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     pairs = simhash_pairs(fp, max_hamming=SIMHASH_MAX_HAMMING, chunks=SIMHASH_CHUNKS)
     comps = connected_components(
         pairs.select("a", "b"), all_docs=docs.select(F.col("doc_id").alias("doc"))
@@ -1066,7 +1050,7 @@ QUERIES = {
     "rhp_recall": q_rhp_recall,
     "ann_topk": q_ann_topk,
     "ann_ivf": q_ann_ivf,
-    "ann_ivf_join": q_ann_ivf_join,
+    "ann_ivf_join": q_ann_ivf,
     "ann_ivf_recall": q_ann_ivf_recall,
     "embedding_dedup": q_embedding_dedup,
     "doc_token_stats": q_doc_token_stats,
@@ -1858,9 +1842,8 @@ def build_oracle_sql() -> dict[str, str]:
             FROM ivf_ranked WHERE rank <= 10
         """
                 ),
-                # the join path is numerically identical to the literal path
-                # by construction — checking it against the SAME literal SQL
-                # is the parity gate
+                # ann_ivf_join names the same literal-centroid query as
+                # ann_ivf (IVF has one centroid carrier)
                 "ann_ivf_join": (
                     "WITH "
                     + _ivf_core_sql(_centroids, ANN_QUERY_IDS, IVF_NPROBE, 10)[1:]

@@ -5,9 +5,9 @@ reproduce results bit-for-bit; all operators are pure DataFrame ops (JVM-side,
 no Python UDFs) and scale-shaped:
 
 - exact: one hash group-by (map-side combinable).
-- n-gram Jaccard: shingle-explode + equi-join on shingle — used as the
+- word-bigram Jaccard: shingle-explode + equi-join on shingle — used as the
   *verifier* on candidate pairs; never run all-pairs at scale.
-- MinHash + LSH: shingle → n_hashes seeded min-hashes → band buckets →
+- MinHash + LSH: shingle → 16 seeded min-hashes → 4 band buckets →
   bucket-join for candidates → exact-Jaccard verification. The classic
   Broder construction; the only shuffles are keyed on shingles/bands.
 - SimHash: word-hash sign-sum → 60-bit fingerprint; candidate pairs via
@@ -15,6 +15,8 @@ no Python UDFs) and scale-shaped:
   packed-bit signature (SimHash, and RHP in extras/similarity.py) bands
   through ``bit_bands`` / ``bit_band_pairs``.
 - embedding cosine near-dup: see extras/similarity.py for the kernel.
+
+Every operator reads the documents table's ``doc_id`` / ``text`` columns.
 """
 
 from __future__ import annotations
@@ -24,16 +26,23 @@ from itertools import combinations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+ID_COL = "doc_id"
+TEXT_COL = "text"
+MINHASH_HASHES = 16
+MINHASH_BANDS = 4
+SIMHASH_CHUNKS = 4  # simhash_candidates' chunks, also the radius-3 queries' in entry_impl
+MAX_CC_ITERS = 50
+
+
 # Portable 32-bit hash of a string expression (same value in DuckDB via
 # CAST(('0x' || substr(md5(x),1,8)) AS BIGINT)).
-def hash32(col_expr: str, seed: str = "") -> str:
-    inner = f"concat('{seed}|', {col_expr})" if seed else col_expr
-    return f"CAST(conv(substr(md5({inner}), 1, 8), 16, 10) AS BIGINT)"
+def hash32(col_expr: str, seed: str) -> str:
+    return f"CAST(conv(substr(md5(concat('{seed}|', {col_expr})), 1, 8), 16, 10) AS BIGINT)"
 
 
-def exact_dup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def exact_dup_stats(df: DataFrame) -> DataFrame:
     """Exact duplicate statistics by content hash (A12-style distinct)."""
-    hashed = df.select(id_col, F.expr(f"md5({text_col})").alias("h"))
+    hashed = df.select(ID_COL, F.expr(f"md5({TEXT_COL})").alias("h"))
     groups = hashed.groupBy("h").agg(F.count("*").alias("n"))
     return groups.agg(
         F.sum("n").cast("long").alias("n_docs"),
@@ -43,27 +52,20 @@ def exact_dup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 2) -> DataFrame:
-    """Distinct word k-gram shingles per document (lower-cased, space-split)."""
-    words = f"split(lower({text_col}), ' ')"
-    if k == 2:
-        # bigram fast path: pair adjacent words with one zip_with concat
-        # instead of a slice+array_join allocation per shingle — identical
-        # output ('w1 w2' joined with a single space), ~2× cheaper on the
-        # hot verify path that re-shingles per jaccard pass
-        sh = (
-            f"CASE WHEN size({words}) < 2 THEN array() "
-            f"ELSE array_distinct(zip_with({words}, slice({words}, 2, size({words}) - 1),"
-            f" (a, b) -> CASE WHEN b IS NULL THEN NULL ELSE concat(a, ' ', b) END)) END"
-        )
-        sh = f"filter({sh}, x -> x IS NOT NULL)"
-    else:
-        sh = (
-            f"CASE WHEN size({words}) < {k} THEN array() "
-            f"ELSE array_distinct(transform(sequence(0, size({words}) - {k}),"
-            f" i -> array_join(slice({words}, i + 1, {k}), ' '))) END"
-        )
-    return df.select(F.col(id_col).alias("doc"), F.explode(F.expr(sh)).alias("shingle"))
+def shingles(df: DataFrame) -> DataFrame:
+    """Distinct word-bigram shingles per document (lower-cased, space-split)."""
+    words = f"split(lower({TEXT_COL}), ' ')"
+    # pair adjacent words with one zip_with concat instead of a
+    # slice+array_join allocation per shingle ('w1 w2' joined with a single
+    # space), ~2× cheaper on the hot verify path that re-shingles per
+    # jaccard pass
+    sh = (
+        f"CASE WHEN size({words}) < 2 THEN array() "
+        f"ELSE array_distinct(zip_with({words}, slice({words}, 2, size({words}) - 1),"
+        f" (a, b) -> CASE WHEN b IS NULL THEN NULL ELSE concat(a, ' ', b) END)) END"
+    )
+    sh = f"filter({sh}, x -> x IS NOT NULL)"
+    return df.select(F.col(ID_COL).alias("doc"), F.explode(F.expr(sh)).alias("shingle"))
 
 
 def _candidate_overlaps(candidates: DataFrame, sh: DataFrame, keys: list[str]) -> DataFrame:
@@ -95,10 +97,9 @@ def _score_pairs(inter: DataFrame, threshold: float) -> DataFrame:
 
 
 def jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, k: int = 2, threshold: float = 0.5,
-    candidates: DataFrame | None = None,
+    df: DataFrame, threshold: float = 0.5, candidates: DataFrame | None = None
 ) -> DataFrame:
-    """Pairs (a, b, jaccard) with Jaccard ≥ threshold over k-gram shingles.
+    """Pairs (a, b, jaccard) with Jaccard ≥ threshold over bigram shingles.
 
     With ``candidates`` (columns a, b) only those pairs are scored — the
     scale path; without, scoring happens for every shingle-sharing pair
@@ -109,7 +110,7 @@ def jaccard_pairs(
     # no .cache(): shingling is a narrow transform recomputed per reference
     # (3 scans max), and at the design scale a shingle cache wouldn't fit
     # executor storage anyway — a session-lifetime pin was the round-3 leak
-    sh = shingles(df, id_col, text_col, k)
+    sh = shingles(df)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     if candidates is not None:
         inter = _candidate_overlaps(candidates, sh, ["a", "b"])
@@ -128,28 +129,22 @@ def jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 2, n_hashes: int = 16,
-    with_size: bool = False,
-) -> DataFrame:
-    """doc → array of n_hashes min-hash values (portable seeded md5 hashes).
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(doc, sig, sz): the array of ``MINHASH_HASHES`` min-hash values
+    (portable seeded md5 hashes) and the distinct-shingle count.
 
-    ``with_size=True`` adds the per-doc distinct-shingle count (``sz``) to the
-    SAME aggregation, so a downstream Jaccard verify can consume it without
-    its own shingle scan — and because both consumers then share one
-    byte-identical aggregation subtree, Spark's ReuseExchange serves them
-    from a single shuffle of the shingle stream."""
-    sh = shingles(df, id_col, text_col, k)
+    ``sz`` comes from the SAME aggregation, so a downstream Jaccard verify
+    can consume it without its own shingle scan — and because both
+    consumers then share one byte-identical aggregation subtree, Spark's
+    ReuseExchange serves them from a single shuffle of the shingle stream."""
     aggs = [
-        F.min(F.expr(hash32("shingle", seed=f"mh{i}"))).alias(f"h{i}") for i in range(n_hashes)
+        F.min(F.expr(hash32("shingle", seed=f"mh{i}"))).alias(f"h{i}")
+        for i in range(MINHASH_HASHES)
     ]
-    if with_size:
-        aggs.append(F.count("*").alias("sz"))
-    sig = sh.groupBy("doc").agg(*aggs)
-    cols = ["doc", F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig")]
-    if with_size:
-        cols.append(F.col("sz"))
-    return sig.select(*cols)
+    sig = shingles(df).groupBy("doc").agg(*aggs, F.count("*").alias("sz"))
+    return sig.select(
+        "doc", F.array(*[F.col(f"h{i}") for i in range(MINHASH_HASHES)]).alias("sig"), "sz"
+    )
 
 
 def hot_bucket_stats(banded: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
@@ -285,14 +280,12 @@ band where the two arrays agree — the payload-array twin of the packed-
 signature XOR construction (see ``bit_band_pairs``)."""
 
 
-def minhash_banded(
-    sig: DataFrame, bands: int = 4, rows_per_band: int = 4,
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """(doc, band, bucket, _bands) banded rows for MinHash LSH; ``_bands``
-    carries the doc's full bucket array for the first-band dedup filter.
-    ``carry`` names extra per-doc columns to ride along (e.g. the shingle
-    count, so the Jaccard verify needs no size joins)."""
+def minhash_banded(sig: DataFrame) -> DataFrame:
+    """(doc, sz, _bands, band, bucket) banded rows for MinHash LSH over
+    ``MINHASH_BANDS`` bands; ``_bands`` carries the doc's full bucket array
+    for the first-band dedup filter and ``sz`` its shingle count, so the
+    Jaccard verify needs no size joins."""
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
     buckets = F.array(
         *[
             F.md5(
@@ -304,18 +297,15 @@ def minhash_banded(
                     ],
                 )
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ]
     )
-    return sig.select("doc", *carry, buckets.alias("_bands")).select(
-        "doc", *carry, "_bands", F.posexplode("_bands").alias("band", "bucket")
+    return sig.select("doc", "sz", buckets.alias("_bands")).select(
+        "doc", "sz", "_bands", F.posexplode("_bands").alias("band", "bucket")
     )
 
 
-def minhash_dedup(
-    df: DataFrame, id_col: str, text_col: str, k: int = 2, threshold: float = 0.5,
-    n_hashes: int = 16, bands: int = 4,
-) -> DataFrame:
+def minhash_dedup(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: candidates → exact-Jaccard verify.
 
     The signature aggregation also emits each doc's shingle count, which
@@ -324,20 +314,19 @@ def minhash_dedup(
     Jaccard verify then needs NO size aggregation and NO size joins: two
     whole shingle passes and two joins gone from the plan (guide §2.3:
     shuffle keys and metadata, decide downstream from what already flowed)."""
-    sig = minhash_signatures(df, id_col, text_col, k, n_hashes, with_size=True)
-    banded = minhash_banded(sig, bands, n_hashes // bands, carry=("sz",))
     cands = banded_pair_join(
-        banded, ["band", "bucket"], None,
+        minhash_banded(minhash_signatures(df)), ["band", "bucket"], None,
         payload=("sz",), first_band_filter=FIRST_BAND_ARRAY_FILTER,
     )
-    sh = shingles(df, id_col, text_col, k)
-    return _score_pairs(_candidate_overlaps(cands, sh, ["a", "b", "sz_a", "sz_b"]), threshold)
+    return _score_pairs(
+        _candidate_overlaps(cands, shingles(df), ["a", "b", "sz_a", "sz_b"]), threshold
+    )
 
 
 SIMHASH_BITS = 60  # keep within signed-64 positive range for portability
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """60-bit SimHash over lower-cased words (Charikar 2002 construction).
 
     Per-bit aggregate is ``sum((h >> b) & 1)`` + one word count rather than
@@ -346,8 +335,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     branch-free bit-extract aggregates compile ~3× faster than 60 CASE
     aggregates (the whole cold-query cost at sandbox scale is codegen)."""
     w = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.expr(f"split(lower({text_col}), ' ')")).alias("word"),
+        F.col(ID_COL).alias("doc"),
+        F.explode(F.expr(f"split(lower({TEXT_COL}), ' ')")).alias("word"),
     ).withColumn("h", F.expr(hash32("word", seed="sh")))
     bit_sums = w.groupBy("doc").agg(
         F.count("*").alias("nw"),
@@ -429,14 +418,17 @@ def bit_band_pairs(
     )
 
 
-def simhash_candidates(
-    fp: DataFrame, chunks: int = 4, max_bucket: int | None = None
-) -> DataFrame:
-    """Raw SimHash banding candidates (a < b): docs sharing any exact chunk.
-    Feed these to a verifier (e.g. jaccard_pairs) — the cross-family LSH plan.
-    ``max_bucket`` = hot-bucket guard (see ``banded_pair_join``)."""
+def simhash_candidates(fp: DataFrame, max_bucket: int | None = None) -> DataFrame:
+    """Raw SimHash banding candidates (a < b): docs sharing any exact one of
+    ``SIMHASH_CHUNKS`` chunks. Feed these to a verifier (e.g. jaccard_pairs)
+    — the cross-family LSH plan. ``max_bucket`` = hot-bucket guard (see
+    ``banded_pair_join``)."""
     return bit_band_pairs(
-        fp, "simhash", SIMHASH_BITS // chunks, [(c,) for c in range(chunks)], max_bucket
+        fp,
+        "simhash",
+        SIMHASH_BITS // SIMHASH_CHUNKS,
+        [(c,) for c in range(SIMHASH_CHUNKS)],
+        max_bucket,
     ).select("a", "b")
 
 
@@ -499,9 +491,7 @@ def simhash_pairs(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def connected_components(
-    pairs: DataFrame, all_docs: DataFrame | None = None, max_iters: int = 50
-) -> DataFrame:
+def connected_components(pairs: DataFrame, all_docs: DataFrame | None = None) -> DataFrame:
     """(doc, component) labeling over near-dup ``pairs`` (columns a, b):
     component = smallest doc id reachable — the dedup MATERIALIZATION step
     (keep one doc per component = the surviving corpus), which the pair
@@ -510,8 +500,8 @@ def connected_components(
     Min-label propagation: each round every node takes the min of its own
     label and its neighbors' labels; converges in O(component diameter)
     rounds, and near-dup components are dense (every member within radius
-    of a shared template), so diameter is small in practice — ``max_iters``
-    is a safety bound, convergence is checked per round. Per-round lineage
+    of a shared template), so diameter is small in practice —
+    ``MAX_CC_ITERS`` is a safety bound, convergence is checked per round. Per-round lineage
     is cut with ``localCheckpoint`` (the standard iterative-DataFrame shape;
     without it the plan doubles every round). All shuffles are keyed
     equi-joins on doc ids; the driver coordinates rounds but never holds
@@ -531,7 +521,7 @@ def connected_components(
         nodes = nodes.unionByName(all_docs.select(F.col("doc").alias("x"))).distinct()
     labels = nodes.select("x", F.col("x").alias("comp")).localCheckpoint()
     converged = False
-    for _ in range(max_iters):
+    for _ in range(MAX_CC_ITERS):
         neighbor_min = (
             edges.join(
                 labels.select(F.col("x").alias("y"), F.col("comp").alias("ncomp")), "y"
@@ -561,8 +551,8 @@ def connected_components(
         # returning silently would split real components (non-minimal
         # labels) and inflate the deduped corpus size
         raise RuntimeError(
-            f"connected_components did not converge within max_iters={max_iters} "
-            f"(a component with diameter > max_iters exists; raise the bound)"
+            f"connected_components did not converge within {MAX_CC_ITERS} rounds "
+            f"(a component with diameter > {MAX_CC_ITERS} exists; raise MAX_CC_ITERS)"
         )
     return labels.select(F.col("x").alias("doc"), F.col("comp").alias("component"))
 

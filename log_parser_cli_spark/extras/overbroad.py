@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 # both sides move together.
 GAIN_THRESHOLD = 0.2  # gain below this flags a template overbroad
 MAX_ROWS_PER_TEMPLATE = 200  # doc_id-smallest rows per template the stats read
+REPORT_TOP_N = 50  # flagged templates the persisted report keeps
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -131,9 +132,9 @@ def routed_for_overbroad(routed: DataFrame) -> DataFrame:
     )
 
 
-def write_overbroad_report(enriched: DataFrame, out_dir: str, top_n: int = 50) -> str:
-    """Persisted top-N flagged-templates report (O3): overbroad templates
-    ordered by cluster size, written as JSON rows
+def write_overbroad_report(enriched: DataFrame, out_dir: str) -> str:
+    """Persisted top-``REPORT_TOP_N`` flagged-templates report (O3):
+    overbroad templates ordered by cluster size, written as JSON rows
     (check-overbroad.js:241-243's sort-desc + slice, materialized)."""
     import os
 
@@ -142,7 +143,7 @@ def write_overbroad_report(enriched: DataFrame, out_dir: str, top_n: int = 50) -
     (
         stats.filter(F.col("overbroad"))
         .orderBy(F.desc("n_rows"), "template_id")
-        .limit(top_n)
+        .limit(REPORT_TOP_N)
         .coalesce(1)
         .write.mode("overwrite")
         .json(path)

@@ -26,7 +26,7 @@ def jaccard_distance(a: frozenset[str], b: frozenset[str]) -> float:
     return 1.0 - (inter / union if union else 0.0)
 
 
-def k_center_select(lines: list[str], k: int = 12) -> list[str]:
+def k_center_select(lines: list[str], k: int) -> list[str]:
     """Greedy max-min Jaccard-distance selection (k-center heuristic).
 
     Deterministic: starts from the first line, ties break on list order.

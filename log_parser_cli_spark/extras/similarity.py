@@ -11,13 +11,15 @@
   rounds) on a driver-side sample — real clustering for the IVF index.
 - ``ivf_topk``: IVF-style scale path — vectors are bucketed by nearest
   centroid; queries probe only ``nprobe`` buckets, pruning the scan by
-  ~n_centroids/nprobe.
+  ~n_centroids/nprobe. Centroids are inlined as double literals, like the
+  hyperplanes, so the DuckDB oracle replays the same buckets.
 - ``cosine_pairs``: embedding near-duplicate pairs (cos ≥ τ); pass LSH
   ``candidates`` for the scale plan (no corpus×corpus join).
 - ``topk_recall``: recall@k of an approximate ranking vs the exact one.
 
 All similarity math is computed in double and rounded, so a DuckDB oracle
-reproduces values exactly at the rounded precision.
+reproduces values exactly at the rounded precision. Every operator reads the
+embeddings table's ``vec_id`` / ``embedding`` columns.
 """
 
 from __future__ import annotations
@@ -31,6 +33,8 @@ from log_parser_cli_spark.extras.dedup import bit_band_pairs
 
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 NORM = "sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
+ID_COL = "vec_id"
+VEC_COL = "embedding"
 
 
 def _cosine_expr(a: str, b: str) -> str:
@@ -42,37 +46,37 @@ def _lit_array(vec: list[float]) -> str:
     return "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec) + ")"
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 4,
-) -> DataFrame:
+def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors for each query id (self excluded).
 
     The query side is a broadcast of |query_ids| rows → the join is a
     broadcast nested loop over one corpus scan; ranking is a per-query
     window. Ties break on neighbor id for determinism.
     """
-    queries = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    scored = embeddings.alias("c").join(F.broadcast(_queries(embeddings, query_ids)))
+    return _rank_neighbors(scored, k)
+
+
+def _queries(embeddings: DataFrame, query_ids: list[int]) -> DataFrame:
+    return embeddings.filter(F.col(ID_COL).isin(query_ids)).select(
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("qvec")
     )
-    scored = (
-        embeddings.alias("c")
-        .join(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("sim", F.round(F.expr(_cosine_expr("qvec", vec_col)), round_to))
+
+
+def _rank_neighbors(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k of (query, candidate) rows by cosine rounded to 4 dp, self
+    excluded; ties break on neighbor id."""
+    scored = scored.filter(F.col(ID_COL) != F.col("query_id")).withColumn(
+        "sim", F.round(F.expr(_cosine_expr("qvec", VEC_COL)), 4)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col(id_col).asc())
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col(ID_COL).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             "query_id",
             F.col("rank").cast("long").alias("rank"),
-            F.col(id_col).cast("long").alias("neighbor_id"),
+            F.col(ID_COL).cast("long").alias("neighbor_id"),
             "sim",
         )
     )
@@ -95,25 +99,11 @@ def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return [[_md5_unit(f"hp|{j}|{d}") for d in range(dim)] for j in range(n_planes)]
 
 
-def vectors_to_df(spark, vectors: list[list[float]], col: str) -> DataFrame:
-    """ONE-row DataFrame holding ``vectors`` as an array<array<double>>
-    column — the broadcast-join carrier for the IVF scale path. The literal
-    path inlines each vector into the SQL text (perfect for DuckDB oracle
-    portability, but the expression tree grows as O(n_vectors × dim)); at
-    production sizes (IVF lists of 4k–65k × dim 768–4096) that plan would
-    collapse, so ``ivf_topk(centroids_df=...)`` attaches the same numbers as
-    DATA via a broadcast single-row cross join and reduces them with
-    higher-order functions — plan size constant in both n_vectors and dim."""
-    return spark.createDataFrame([(vectors,)], f"{col} array<array<double>>")
-
-
 def rhp_candidates(
     embeddings: DataFrame,
     dim: int,
     n_planes: int = 60,
     rows_per_band: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate pairs (a < b) by banded random-hyperplane signatures.
@@ -130,7 +120,7 @@ def rhp_candidates(
         raise ValueError(f"n_planes={n_planes} must fit a signed 64-bit signature")
     planes = hyperplanes(n_planes, dim)
     sig_expr = " + ".join(
-        f"(CASE WHEN ({DOT.format(a=vec_col, b=_lit_array(planes[j]))}) >= 0 "
+        f"(CASE WHEN ({DOT.format(a=VEC_COL, b=_lit_array(planes[j]))}) >= 0 "
         f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         for j in range(n_planes)
     )
@@ -141,18 +131,14 @@ def rhp_candidates(
     # 4×); the signature is shuffle-materialized once per vector instead
     # (16 bytes/row, negligible next to the banded-row shuffle the join pays).
     sig = embeddings.select(
-        F.col(id_col).alias("doc"), F.expr(sig_expr).alias("rhpsig")
+        F.col(ID_COL).alias("doc"), F.expr(sig_expr).alias("rhpsig")
     ).repartition("doc")
     bands = [(b,) for b in range(n_planes // rows_per_band)]
     return bit_band_pairs(sig, "rhpsig", rows_per_band, bands, max_bucket).select("a", "b")
 
 
 def cosine_pairs(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    candidates: DataFrame | None = None,
+    embeddings: DataFrame, threshold: float, candidates: DataFrame | None = None
 ) -> DataFrame:
     """Near-duplicate pairs (a < b) with cosine ≥ threshold.
 
@@ -167,14 +153,14 @@ def cosine_pairs(
     # sim keeps the exact dot/(na*nb) operation tree, only the operand
     # evaluation site moves)
     a = embeddings.select(
-        F.col(id_col).alias("a"),
-        F.col(vec_col).alias("va"),
-        F.expr(NORM.format(a=vec_col)).alias("_na"),
+        F.col(ID_COL).alias("a"),
+        F.col(VEC_COL).alias("va"),
+        F.expr(NORM.format(a=VEC_COL)).alias("_na"),
     )
     b = embeddings.select(
-        F.col(id_col).alias("b"),
-        F.col(vec_col).alias("vb"),
-        F.expr(NORM.format(a=vec_col)).alias("_nb"),
+        F.col(ID_COL).alias("b"),
+        F.col(VEC_COL).alias("vb"),
+        F.expr(NORM.format(a=VEC_COL)).alias("_nb"),
     )
     if candidates is not None:
         pairs = (
@@ -220,26 +206,27 @@ def kmeans_centroids(vectors, k: int = 16, iters: int = 20) -> list[list[float]]
     return [[round(float(v), 9) for v in row] for row in cents]
 
 
+CENTROID_SAMPLE = 4096
+CENTROID_ITERS = 20
+
+
 def centroids_from_parquet(
-    path: str,
-    k: int = 16,
-    iters: int = 20,
-    sample: int = 4096,
-    _io_stats: dict | None = None,
+    path: str, k: int = 16, _io_stats: dict | None = None
 ) -> list[list[float]]:
     """Shared centroid source for the Spark query AND the DuckDB oracle:
-    k-means the ``sample`` smallest-vec_id vectors. Deterministic — both
-    sides inline identical literals.
+    k-means (``CENTROID_ITERS`` rounds) the ``CENTROID_SAMPLE``
+    smallest-vec_id vectors. Deterministic — both sides inline identical
+    literals.
 
     Driver memory is BOUNDED: row groups stream through a max-heap that
-    keeps only the ``sample`` smallest vec_ids (never the full column — at
+    keeps only the sample's smallest vec_ids (never the full column — at
     the design scale, 10^9+ vectors × 768+ dims, a full read is a driver
     OOM in the index-build path). Row groups whose min(vec_id) statistic
     cannot beat the current sample's largest kept id are skipped entirely,
     so on id-sorted files only the first group(s) are ever decoded; files
     without stats or with shuffled ids still produce the identical result,
     just reading more groups. Bit-identical to a full read + sort + take:
-    the kept set is exactly the ``sample`` smallest ids, ascending.
+    the kept set is exactly the sample's smallest ids, ascending.
 
     ``_io_stats`` (tests): filled with row_groups_read / num_row_groups.
     """
@@ -262,6 +249,7 @@ def centroids_from_parquet(
         st = md.row_group(g).column(vec_leaf).statistics
         return st.min if st is not None and st.has_min_max else None
 
+    sample = CENTROID_SAMPLE
     heap: list[tuple] = []  # max-heap via negated ids: the `sample` smallest
     groups_read = 0
 
@@ -286,105 +274,56 @@ def centroids_from_parquet(
         _io_stats["row_groups_read"] = groups_read
         _io_stats["num_row_groups"] = md.num_row_groups
     rows = sorted(heap, key=lambda t: -t[0])
-    return kmeans_centroids([emb for _, emb in rows], k=k, iters=iters)
+    return kmeans_centroids([emb for _, emb in rows], k=k, iters=CENTROID_ITERS)
 
 
-def _sims_expr(vec_col: str, centroids: list[list[float]], round_to: int = 6) -> str:
-    """SQL expr: array of rounded cosines against every centroid literal."""
-    sims = ", ".join(
-        f"round({_cosine_expr(vec_col, _lit_array(c))}, {round_to})" for c in centroids
-    )
+def _sims_expr(centroids: list[list[float]]) -> str:
+    """SQL expr: array of 6-dp cosines of the embedding against every
+    centroid literal."""
+    sims = ", ".join(f"round({_cosine_expr(VEC_COL, _lit_array(c))}, 6)" for c in centroids)
     return f"array({sims})"
 
 
 def ivf_topk(
     embeddings: DataFrame,
     query_ids: list[int],
+    centroids: list[list[float]],
     k: int = 10,
-    centroids: list[list[float]] | None = None,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids_df: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-bucketed approximate top-k: assign every vector to its nearest
     k-means centroid, probe only the ``nprobe`` closest buckets per query.
     Returns the same schema as cosine_topk.
 
-    Two numerically identical centroid carriers (same ranking bit for bit):
-    - ``centroids`` (literal path): every centroid inlined into the SQL text —
-      whole-stage codegen, no join, and a DuckDB oracle can replay it; plan
-      size O(n_centroids × dim), fine at sandbox scale.
-    - ``centroids_df`` (join path, from ``vectors_to_df(spark, centroids,
-      "cents")``): centroids ride a broadcast single-row cross join; the
-      nearest-centroid argmax is a higher-order-function reduce over the
-      array column — plan size CONSTANT in centroid count, the shape that
-      survives production IVF lists (4k–65k centroids × dim 768+). Still one
-      corpus scan, still no corpus-side shuffle.
+    Every centroid is inlined into the SQL text as a double-array literal,
+    the carrier RHP's hyperplanes use: whole-stage codegen, no join, and a
+    DuckDB oracle replays the same assignment. The plan grows as
+    O(n_centroids × dim).
     """
-    if centroids is None and centroids_df is None:
-        raise ValueError("pass deterministic centroids (kmeans_centroids) or centroids_df")
+    assigned = (
+        embeddings.withColumn("_sims", F.expr(_sims_expr(centroids)))
+        # first occurrence of the max → lowest centroid id wins ties
+        .withColumn("cid", F.expr("array_position(_sims, array_max(_sims)) - 1"))
+        .drop("_sims")
+    )
+    # per-query nprobe nearest centroids (tiny: |queries| × n_centroids)
+    probe_structs = [
+        F.struct(
+            F.lit(cid).alias("cid"),
+            F.expr(f"round({_cosine_expr('qvec', _lit_array(c))}, 6)").alias("qsim"),
+        )
+        for cid, c in enumerate(centroids)
+    ]
     w_probe = Window.partitionBy("query_id").orderBy(F.desc("qsim"), F.asc("cid"))
-    queries = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    probes = (
+        _queries(embeddings, query_ids)
+        .select("query_id", "qvec", F.explode(F.array(*probe_structs)).alias("p"))
+        .select("query_id", "qvec", "p.cid", "p.qsim")
+        .withColumn("r", F.row_number().over(w_probe))
+        .filter(F.col("r") <= nprobe)
+        .select("query_id", "qvec", "cid")
     )
-    if centroids_df is not None:
-        cdf = F.broadcast(centroids_df)
-        sims_hof = f"transform(cents, c -> round({_cosine_expr(vec_col, 'c')}, 6))"
-        assigned = (
-            embeddings.join(cdf)
-            .withColumn("_sims", F.expr(sims_hof))
-            # first occurrence of the max → lowest centroid id wins ties,
-            # identical to the literal path's array_position semantics
-            .withColumn("cid", F.expr("array_position(_sims, array_max(_sims)) - 1"))
-            .drop("_sims", "cents")
-        )
-        probes = (
-            queries.join(cdf)
-            .select("query_id", "qvec", F.posexplode("cents").alias("cid", "cvec"))
-            .withColumn("qsim", F.expr(f"round({_cosine_expr('qvec', 'cvec')}, 6)"))
-            .withColumn("r", F.row_number().over(w_probe))
-            .filter(F.col("r") <= nprobe)
-            .select("query_id", "qvec", "cid")
-        )
-    else:
-        assigned = (
-            embeddings.withColumn("_sims", F.expr(_sims_expr(vec_col, centroids)))
-            # first occurrence of the max → lowest centroid id wins ties
-            .withColumn("cid", F.expr("array_position(_sims, array_max(_sims)) - 1"))
-            .drop("_sims")
-        )
-        # per-query nprobe nearest centroids (tiny: |queries| × n_centroids)
-        probe_structs = [
-            F.struct(
-                F.lit(cid).alias("cid"),
-                F.expr(f"round({_cosine_expr('qvec', _lit_array(c))}, 6)").alias("qsim"),
-            )
-            for cid, c in enumerate(centroids)
-        ]
-        probes = (
-            queries.select("query_id", "qvec", F.explode(F.array(*probe_structs)).alias("p"))
-            .select("query_id", "qvec", "p.cid", "p.qsim")
-            .withColumn("r", F.row_number().over(w_probe))
-            .filter(F.col("r") <= nprobe)
-            .select("query_id", "qvec", "cid")
-        )
-    scored = (
-        assigned.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("sim", F.round(F.expr(_cosine_expr("qvec", vec_col)), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            "sim",
-        )
-    )
+    return _rank_neighbors(assigned.join(F.broadcast(probes), "cid"), k)
 
 
 def topk_recall(approx: DataFrame, exact: DataFrame, k: int = 10) -> DataFrame:

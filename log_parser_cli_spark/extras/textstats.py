@@ -2,7 +2,8 @@
 language-ID heuristic, document fingerprinting (winnowing).
 
 Everything is pure-Catalyst column math with engine-portable hashing, so each
-operator has a bit-exact DuckDB oracle twin.
+operator has a bit-exact DuckDB oracle twin. Every operator reads the
+documents table's ``doc_id`` / ``text`` / ``n_chars`` columns.
 """
 
 from __future__ import annotations
@@ -10,7 +11,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from log_parser_cli_spark.extras.dedup import hash32
+from log_parser_cli_spark.extras.dedup import ID_COL, TEXT_COL, hash32
+
+N_CHARS_COL = "n_chars"
+WORDS = f"split(lower({TEXT_COL}), ' ')"
+FINGERPRINT_K = 3  # words per winnowing k-gram
+FINGERPRINT_WINDOW = 4  # k-grams per winnowing window
 
 # Tiny per-language stopword tables (public, common knowledge) for a crude
 # n-gram-free language-ID heuristic: argmax of stopword hits.
@@ -22,40 +28,34 @@ STOPWORDS = {
 }
 
 
-def words_expr(text_col: str) -> str:
-    return f"split(lower({text_col}), ' ')"
-
-
-def token_count(text_col: str) -> Column:
+def token_count() -> Column:
     """Whitespace token count (the graft's n_tok analog for raw text)."""
-    return F.size(F.expr(words_expr(text_col))).cast("long")
+    return F.size(F.expr(WORDS)).cast("long")
 
 
-def quality_score(text_col: str, n_chars_col: str) -> Column:
+def quality_score() -> Column:
     """Deterministic [0,1] quality heuristic: length, lexical diversity,
     chars-per-word sanity. Identical formula in the DuckDB oracle."""
-    words = words_expr(text_col)
-    n_words = f"CAST(size({words}) AS DOUBLE)"
-    n_unique = f"CAST(size(array_distinct({words})) AS DOUBLE)"
+    n_words = f"CAST(size({WORDS}) AS DOUBLE)"
+    n_unique = f"CAST(size(array_distinct({WORDS})) AS DOUBLE)"
     return F.round(
         F.expr(
             f"0.4 * least(1.0, {n_words} / 80.0)"
             f" + 0.4 * ({n_unique} / greatest({n_words}, 1.0))"
-            f" + 0.2 * least(1.0, CAST({n_chars_col} AS DOUBLE) / ({n_words} * 8.0))"
+            f" + 0.2 * least(1.0, CAST({N_CHARS_COL} AS DOUBLE) / ({n_words} * 8.0))"
         ),
         4,
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-hit argmax language guess; 'und' (undetermined) when no hits.
 
     Ties break alphabetically for determinism.
     """
-    words = words_expr(text_col)
     hit_cols = [
         F.expr(
-            f"size(array_intersect({words}, array({', '.join(repr(w) for w in ws)})))"
+            f"size(array_intersect({WORDS}, array({', '.join(repr(w) for w in ws)})))"
         ).alias(f"hits_{lang}")
         for lang, ws in STOPWORDS.items()
     ]
@@ -70,23 +70,22 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint_count(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, window: int = 4
-) -> DataFrame:
-    """Winnowing fingerprints (Schleimer et al. 2003): hash k-gram shingles,
-    take the min hash in every sliding window of ``window`` consecutive
-    k-grams, count the distinct selected hashes per doc.
+def fingerprint_count(df: DataFrame) -> DataFrame:
+    """Winnowing fingerprints (Schleimer et al. 2003): hash word k-gram
+    shingles (k = ``FINGERPRINT_K``), take the min hash in every sliding
+    window of ``FINGERPRINT_WINDOW`` consecutive k-grams, count the distinct
+    selected hashes per doc.
 
     Pure window functions — expressible identically in the SQL oracle.
     """
-    words = words_expr(text_col)
+    k, window = FINGERPRINT_K, FINGERPRINT_WINDOW
     grams = (
-        f"CASE WHEN size({words}) < {k} THEN array() "
-        f"ELSE transform(sequence(0, size({words}) - {k}),"
-        f" i -> array_join(slice({words}, i + 1, {k}), ' ')) END"
+        f"CASE WHEN size({WORDS}) < {k} THEN array() "
+        f"ELSE transform(sequence(0, size({WORDS}) - {k}),"
+        f" i -> array_join(slice({WORDS}, i + 1, {k}), ' ')) END"
     )
     g = df.select(
-        F.col(id_col).alias("doc"), F.posexplode(F.expr(grams)).alias("pos", "gram")
+        F.col(ID_COL).alias("doc"), F.posexplode(F.expr(grams)).alias("pos", "gram")
     ).withColumn("h", F.expr(hash32("gram", seed="fp")))
     w = Window.partitionBy("doc").orderBy("pos").rowsBetween(0, window - 1)
     mins = (

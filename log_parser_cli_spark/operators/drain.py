@@ -25,6 +25,9 @@ from log_parser_cli_spark.functions.masking import MASK_TOKENS, signature_to_sta
 
 WILDCARD = "\x00*\x00"
 _MASK_SET = set(MASK_TOKENS.values())
+DEPTH = 3  # tree levels: the length level, then DEPTH - 1 leading tokens
+SIM_THRESHOLD = 0.6  # fraction of positions that must agree to merge
+MAX_CHILDREN = 64  # token-level branch cap; overflow shares a wildcard child
 
 
 def _is_wild(word: str) -> bool:
@@ -49,14 +52,11 @@ class DrainCluster:
 class DrainTree:
     """Fixed-depth prefix tree: length → first tokens → similarity search.
 
-    ``sim_threshold`` is the fraction of positions that must agree (wildcards
+    ``SIM_THRESHOLD`` is the fraction of positions that must agree (wildcards
     in the cluster template count as agreement, mirroring Drain's simSeq).
     """
 
-    def __init__(self, depth: int = 3, sim_threshold: float = 0.6, max_children: int = 64):
-        self.depth = depth
-        self.sim_threshold = sim_threshold
-        self.max_children = max_children
+    def __init__(self):
         self._root: dict = {}
         self.clusters: list[DrainCluster] = []
 
@@ -66,7 +66,7 @@ class DrainTree:
         # falls back to the shared WILDCARD child), so keys are resolved
         # while walking, not precomputed against the root.
         key_seq: list[object] = [len(words)]
-        for i in range(min(self.depth - 1, len(words))):
+        for i in range(min(DEPTH - 1, len(words))):
             w = words[i]
             key_seq.append(WILDCARD if _is_wild(w) else w)
         node = self._root
@@ -74,7 +74,7 @@ class DrainTree:
             last = j == len(key_seq) - 1
             # Drain's branch cap (token levels only, never the length level):
             # overflowing distinct heads share a wildcard child.
-            if j > 0 and key not in node and len(node) >= self.max_children:
+            if j > 0 and key not in node and len(node) >= MAX_CHILDREN:
                 key = WILDCARD
             child = node.get(key)
             if child is None:
@@ -105,7 +105,7 @@ class DrainTree:
             sim = self._similarity(cluster.template_words, words)
             if sim > best_sim:
                 best, best_sim = cluster, sim
-        if best is not None and best_sim >= self.sim_threshold:
+        if best is not None and best_sim >= SIM_THRESHOLD:
             # Merge: disagreeing positions become wildcards.
             best.template_words = [
                 t if (t == WILDCARD or t == w) else WILDCARD
@@ -127,7 +127,7 @@ class DrainTree:
         return cluster
 
 
-def _merge_pass(clusters: list[DrainCluster], sim_threshold: float) -> list[DrainCluster]:
+def _merge_pass(clusters: list[DrainCluster]) -> list[DrainCluster]:
     """Cross-leaf merge: the fixed-depth tree oversplits when a variable word
     sits inside the prefix-key positions; a final O(k²)-on-k-clusters pass
     (k = cluster count, tiny) folds such clusters together. Wildcards count as
@@ -144,7 +144,7 @@ def _merge_pass(clusters: list[DrainCluster], sim_threshold: float) -> list[Drai
                 for t, w in zip(m.template_words, c.template_words)
                 if t == w or t == WILDCARD or w == WILDCARD
             )
-            if len(m.template_words) == 0 or same / len(m.template_words) >= sim_threshold:
+            if len(m.template_words) == 0 or same / len(m.template_words) >= SIM_THRESHOLD:
                 target = m
                 break
         if target is None:
@@ -161,17 +161,13 @@ def _merge_pass(clusters: list[DrainCluster], sim_threshold: float) -> list[Drai
     return merged
 
 
-def cluster_signatures(
-    sig_rows: list[tuple[str, int, int]],
-    sim_threshold: float = 0.6,
-    depth: int = 3,
-) -> list[DrainCluster]:
+def cluster_signatures(sig_rows: list[tuple[str, int, int]]) -> list[DrainCluster]:
     """Cluster distinct signatures of ONE source.
 
     ``sig_rows``: (signature, n_rows, first_seen) — inserted in deterministic
     (first_seen, signature) order so ids are reproducible.
     """
-    tree = DrainTree(depth=depth, sim_threshold=sim_threshold)
+    tree = DrainTree()
     for sig, n_rows, first_seen in sorted(sig_rows, key=lambda r: (r[2], r[0])):
         tree.add_signature(sig, n_rows, first_seen)
-    return _merge_pass(tree.clusters, sim_threshold)
+    return _merge_pass(tree.clusters)

@@ -25,7 +25,7 @@ place of the LLM (everything else mirrors the reference's control flow):
   accept only non-worse candidates, stop at full coverage, a repeated
   candidate, or the round cap.
 - ``stride_pool_collect`` / ``derive_heads_stage``: Spark wrappers — a
-  deterministic hash-thinned pool (≤pool_size rows, map-side filter on a
+  deterministic hash-thinned pool (≤``POOL_SIZE`` rows, map-side filter on a
   portable hash of the order key, residue-only sort — never a full-corpus
   rank) is collected per source, the refine loop runs driver-side
   (discovery-time, like the reference's agent loop), and the FINAL pattern's
@@ -47,6 +47,7 @@ from log_parser_cli_spark.functions.templates import escape_regex_text
 MAX_REFINE_ROUNDS = 20  # manager.ts:84
 SEED_SAMPLES = 10  # manager.ts:45 (diverse-sampler picks)
 NEW_PICKS_PER_ROUND = 3  # manager.ts:112
+POOL_SIZE = 2000  # lines per source the refine loop reads
 
 _ALNUM = re.compile(r"[A-Za-z0-9]+")
 
@@ -165,12 +166,7 @@ def _unmatched(lines: list[str], rx: re.Pattern[str]) -> list[str]:
     return [ln for ln in lines if rx.match(ln) is None]
 
 
-def refine_head_pattern(
-    lines: list[str],
-    max_rounds: int = MAX_REFINE_ROUNDS,
-    n_seed: int = SEED_SAMPLES,
-    n_new: int = NEW_PICKS_PER_ROUND,
-) -> tuple[str | None, int, list[int]]:
+def refine_head_pattern(lines: list[str]) -> tuple[str | None, int, list[int]]:
     """Derive + keep-best refine over a line pool (manager.ts loop shape).
 
     Returns (best_pattern, n_unmatched_in_pool, per-round unmatched history —
@@ -178,7 +174,7 @@ def refine_head_pattern(
     """
     if not lines:
         return None, 0, []
-    seed = k_center_select(lines, k=n_seed)
+    seed = k_center_select(lines, k=SEED_SAMPLES)
     accumulator = list(seed)
     seen = set(seed)
     tried: set[str] = set()
@@ -191,13 +187,13 @@ def refine_head_pattern(
     best_unmatched = _unmatched(lines, re.compile(current))
     history = [len(best_unmatched)]
 
-    for _ in range(max_rounds):
+    for _ in range(MAX_REFINE_ROUNDS):
         if not best_unmatched:
             break
         available = [ln for ln in best_unmatched if ln not in seen]
         if not available:
             break
-        picks = k_center_select(available, k=min(n_new, len(available)))
+        picks = k_center_select(available, k=min(NEW_PICKS_PER_ROUND, len(available)))
         for ln in picks:
             seen.add(ln)
             accumulator.append(ln)
@@ -221,51 +217,49 @@ def _pool_hash(key) -> int:
     return int(hashlib.md5(f"pool|{key}".encode()).hexdigest()[:8], 16)
 
 
-def pool_lines(sorted_items: list[tuple], pool_size: int) -> list[str]:
+def pool_lines(sorted_items: list[tuple]) -> list[str]:
     """Deterministic hash-thinned pool over ordered ``(order_key, line)``
     pairs — the pure twin of ``stride_pool_collect``. With n rows and
-    step = n // pool_size, keeps lines whose key hash ≡ 0 (mod step), first
-    ``pool_size`` in order; n ≤ pool_size keeps everything."""
+    step = n // POOL_SIZE, keeps lines whose key hash ≡ 0 (mod step), first
+    ``POOL_SIZE`` in order; n ≤ POOL_SIZE keeps everything."""
     n = len(sorted_items)
-    if n <= pool_size:
+    if n <= POOL_SIZE:
         return [line for _k, line in sorted_items]
-    step = n // pool_size
+    step = n // POOL_SIZE
     out: list[str] = []
     for key, line in sorted_items:
         if _pool_hash(key) % step == 0:
             out.append(line)
-            if len(out) >= pool_size:
+            if len(out) >= POOL_SIZE:
                 break
     return out
 
 
-def derive_heads(
-    per_source_items: dict[str, list[tuple]], pool_size: int = 2000
-) -> dict[str, str | None]:
+def derive_heads(per_source_items: dict[str, list[tuple]]) -> dict[str, str | None]:
     """Run the derive+refine loop per source over hash-thinned pools
     (driver-side, discovery-time). ``per_source_items`` values are
     ``(order_key, line)`` pairs in line order."""
     out: dict[str, str | None] = {}
     for source in sorted(per_source_items):
-        pool = pool_lines(per_source_items[source], pool_size)
+        pool = pool_lines(per_source_items[source])
         pattern, _, _ = refine_head_pattern(pool)
         out[source] = pattern
     return out
 
 
 def stride_pool_collect(
-    df, group_col: str, order_col: str, value_cols: list[str], pool_size: int = 2000
+    df, group_col: str, order_col: str, value_cols: list[str]
 ) -> dict[str, list[tuple]]:
     """Collect a deterministic per-group pool WITHOUT a full-corpus sort.
 
     The distributed twin of ``pool_lines``: per group with n rows, rows whose
-    portable hash of the order key ≡ 0 (mod n // pool_size) survive a
+    portable hash of the order key ≡ 0 (mod n // POOL_SIZE) survive a
     map-side filter (selectivity ~pool/n — unselected rows never shuffle),
-    then the first ``pool_size`` survivors by ``order_col`` are kept. The only
+    then the first ``POOL_SIZE`` survivors by ``order_col`` are kept. The only
     sort runs on the ~pool-sized residue per group — the previous windowed
     stride ranked EVERY row, a needless full shuffle+sort at 10^12 rows where
     the pool is 10⁻⁸ of the data. Per-group steps join in as a broadcast
-    DataFrame (not an O(groups)-deep CASE chain). Groups with n ≤ pool_size
+    DataFrame (not an O(groups)-deep CASE chain). Groups with n ≤ POOL_SIZE
     keep every row. Returns {group: [(order, *values), …]} sorted by order.
     Shared by every derive surface so the pure-Python oracle twin and the
     Spark queries can never drift apart.
@@ -277,7 +271,7 @@ def stride_pool_collect(
         df.groupBy(F.col(group_col).alias("_g")).agg(F.count("*").alias("_n")).collect()
     )
     steps = df.sparkSession.createDataFrame(
-        [(r["_g"], r["_n"] // pool_size if r["_n"] > pool_size else 1) for r in counts],
+        [(r["_g"], r["_n"] // POOL_SIZE if r["_n"] > POOL_SIZE else 1) for r in counts],
         "_g string, _step long",
     )
     h32 = (
@@ -289,7 +283,7 @@ def stride_pool_collect(
         .join(F.broadcast(steps), F.col(group_col) == F.col("_g"))
         .filter(F.expr(h32) % F.col("_step") == 0)
         .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= pool_size)
+        .filter(F.col("_rn") <= POOL_SIZE)
         .select(group_col, order_col, *value_cols)
         .collect()
     )
@@ -300,13 +294,13 @@ def stride_pool_collect(
 
 
 def derive_heads_stage(
-    spark, seq_df, vocab_rows: list[tuple[int, str]], pool_size: int = 2000
+    spark, seq_df, vocab_rows: list[tuple[int, str]]
 ) -> dict[str, tuple[str, int]]:
     """Pipeline stage: derive head patterns straight from the TOKEN table —
     no head config needed (the reference's ensureHeadPattern step run before
     parsing, manager.ts:31-213).
 
-    A deterministic stride pool per source (≤``pool_size`` rows) is collected,
+    A deterministic stride pool per source (≤``POOL_SIZE`` rows) is collected,
     rendered driver-side from the vocab, and fed to the refine loop. Returns
     the ``source_heads`` dict parse_stage consumes: {source: (pattern, 1)} —
     group 1 is the named ``(?P<content>…)`` group. Sources where derivation
@@ -321,10 +315,10 @@ def derive_heads_stage(
     from pyspark.sql import functions as F
 
     known = seq_df.filter(F.col("source") != "")
-    pools = stride_pool_collect(known, "source", "doc_id", ["tokens"], pool_size)
+    pools = stride_pool_collect(known, "source", "doc_id", ["tokens"])
     vocab = dict(vocab_rows)
     rendered = {
         source: [(doc, " ".join(vocab.get(t, "") for t in tokens)) for doc, tokens in rows]
         for source, rows in pools.items()
     }
-    return {s: (p, 1) for s, p in derive_heads(rendered, pool_size).items() if p}
+    return {s: (p, 1) for s, p in derive_heads(rendered).items() if p}

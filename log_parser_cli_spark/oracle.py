@@ -50,8 +50,8 @@ def oracle_match(fixture_dir: str) -> list[OracleMatch]:
         content = m.group(sources[src]["content_group"])
         tid, variables = None, {}
         for cand_id, rx in per_source.get(src, []):
-            mm = rx.match(content)
-            if mm is not None and mm.end() == len(content):
+            mm = rx.fullmatch(content)
+            if mm is not None:
                 tid = cand_id
                 variables = {k: v for k, v in mm.groupdict().items() if v is not None}
                 break

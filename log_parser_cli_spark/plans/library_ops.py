@@ -31,6 +31,7 @@ from log_parser_cli_spark.functions.templates import to_jvm_pattern
 from log_parser_cli_spark.operators.matcher import match_batch
 
 SAMPLES_PER_TEMPLATE = 20  # stored samples a candidate is checked against
+MAX_ITERATIONS = 5  # conflict → delete → re-check rounds per candidate
 
 
 def merge_templates(existing: DataFrame, updates: DataFrame, key: str = "template_id") -> DataFrame:
@@ -83,16 +84,14 @@ def _match(library: list[dict], rows: list[tuple]) -> list[str | None]:
     return list(tids)
 
 
-def discover_with_refine(
-    library: list[dict], rows: list[tuple], candidates: list[dict], max_iterations: int = 5
-) -> dict:
+def discover_with_refine(library: list[dict], rows: list[tuple], candidates: list[dict]) -> dict:
     """The reference's discovery state machine over a candidate queue
     (pipeline.ts:130-165, 355-451, 463-525, 561-612), on the driver.
 
     ``library``: template dicts (template_id, source, pattern, created_at).
     ``rows``: ``(doc_id, source, content)`` representatives. The state is a
     ``doc_id → template_id | None`` owner map seeded by matching ``rows``
-    against ``library``. Each candidate gets ≤``max_iterations`` rounds: its
+    against ``library``. Each candidate gets ≤``MAX_ITERATIONS`` rounds: its
     conflicts are the owners of the stored samples (the first
     ``SAMPLES_PER_TEMPLATE`` rows by doc_id of every other template in its
     source) whose whole line it matches. No conflict → it joins the library
@@ -113,9 +112,9 @@ def discover_with_refine(
             "template_id": cand["template_id"],
             "accepted": False,
             "deleted_ids": [],
-            "iterations": max_iterations,
+            "iterations": MAX_ITERATIONS,
         }
-        for iteration in range(max_iterations):
+        for iteration in range(MAX_ITERATIONS):
             by_owner: dict[str, list[tuple]] = {}
             for r in rows:
                 if r[1] == cand["source"] and owner[r[0]] not in (None, cand["template_id"]):

@@ -57,6 +57,8 @@ ROUTED_COLS = (
 # template_star, which depends only on the template, so the groups stay those
 # of (source, sink, template_id, n_tok).
 AGG_GRAIN = ("source", "sink", "template_id", "template_star", "n_tok")
+# Driver bound on the distinct signatures discovery collects per source.
+MAX_SIGNATURES_PER_SOURCE = 10_000
 
 
 @dataclass
@@ -155,9 +157,7 @@ def _cluster_by_source(sig_rows: list) -> Iterator[tuple[str, int, DrainCluster]
             yield source, idx, cluster
 
 
-def discover_templates(
-    spark: SparkSession, parsed: DataFrame, max_signatures_per_source: int = 10_000
-) -> DataFrame:
+def discover_templates(spark: SparkSession, parsed: DataFrame) -> DataFrame:
     """Distinct-signature aggregation + driver-side Drain → signature mapping.
 
     Returns the mapping DataFrame (source, content_sig, template_id,
@@ -167,7 +167,7 @@ def discover_templates(
     the template's rows ÷ the hottest template's rows, so ``route_stage``
     salts a template by ``ceil(salt_buckets × salt_share)``.
 
-    Driver safety: the collected set is CAPPED at ``max_signatures_per_source``
+    Driver safety: the collected set is CAPPED at ``MAX_SIGNATURES_PER_SOURCE``
     per source (top-N by row count, deterministic tie-break) — if mask classes
     flap on pathological vocab and distinct signatures explode, the driver
     stays bounded and overflow signatures simply get no mapping row, routing
@@ -177,7 +177,7 @@ def discover_templates(
     templates = [
         (source, f"{source}#{idx}", cluster)
         for source, idx, cluster in _cluster_by_source(
-            _top_signatures(parsed, max_signatures_per_source)
+            _top_signatures(parsed, MAX_SIGNATURES_PER_SOURCE)
         )
     ]
     hottest = max((c.n_rows for _, _, c in templates), default=1)
@@ -190,10 +190,7 @@ def discover_templates(
 
 
 def extend_mapping(
-    spark: SparkSession,
-    frozen_mapping: DataFrame,
-    parsed_new: DataFrame,
-    max_signatures_per_source: int = 10_000,
+    spark: SparkSession, frozen_mapping: DataFrame, parsed_new: DataFrame
 ) -> DataFrame:
     """Incremental library evolution: extend a frozen mapping with a new batch.
 
@@ -218,7 +215,7 @@ def extend_mapping(
     from log_parser_cli_spark.functions.masking import signature_to_star
     from log_parser_cli_spark.plans.export import template_ordinal
 
-    novel = _top_signatures(parsed_new, max_signatures_per_source, known=frozen_mapping)
+    novel = _top_signatures(parsed_new, MAX_SIGNATURES_PER_SOURCE, known=frozen_mapping)
     if not novel:
         return frozen_mapping
     frozen_rows = frozen_mapping.collect()

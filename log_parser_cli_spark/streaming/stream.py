@@ -34,7 +34,6 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from log_parser_cli_spark.operators.parse import parse_stage
 from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims, route_frame
@@ -48,18 +47,15 @@ def pin(spark: SparkSession, df: DataFrame) -> DataFrame:
     return spark.createDataFrame(df.toArrow())
 
 
-def batch_frame(
-    parsed: DataFrame, mapping: DataFrame, sources_df: DataFrame, batch_id: int
-) -> DataFrame:
+def batch_frame(parsed: DataFrame, mapping: DataFrame, sources_df: DataFrame) -> DataFrame:
     """The rows one micro-batch commits: ``parsed`` enriched against
-    ``mapping``, behind the batch route's payload exchange, tagged with
-    ``batch_id``."""
+    ``mapping``, behind the batch route's payload exchange. The batch id is
+    the snapshot manifest's, not a column."""
     # one salt: the exchange is keyed by (sink, template_id) alone, so each
     # template dir gets one file per batch and the batch's writes still spread
     # over the exchange's tasks; on 15k-row batches salt 4 wrote 65 files
     # instead of 49 and salt 16 wrote 119, both slower per batch
-    routed = route_frame(enrich_stage(parsed, mapping, sources_df), salt_buckets=1)
-    return routed.withColumn("batch_id", F.lit(batch_id).cast("long"))
+    return route_frame(enrich_stage(parsed, mapping, sources_df), salt_buckets=1)
 
 
 def _start(
@@ -93,7 +89,7 @@ def _start(
         # mid-batch leaves an unreferenced staged dir — readers on
         # read_routed never observe a torn batch)
         table.commit_batch(
-            batch_frame(parsed, mapping_for(parsed, batch_id), sources_df, batch_id),
+            batch_frame(parsed, mapping_for(parsed, batch_id), sources_df),
             batch_id=batch_id,
             partition_by=("sink", "template_id"),
         )

@@ -27,7 +27,7 @@ def docs(spark):
 
 
 def test_exact_dup_stats(docs):
-    r = exact_dup_stats(docs, "doc_id", "text").first()
+    r = exact_dup_stats(docs).first()
     assert r.n_docs == 6
     assert r.n_distinct == 5
     assert r.n_dup_rows == 2
@@ -35,15 +35,15 @@ def test_exact_dup_stats(docs):
 
 
 def test_jaccard_pairs_finds_near_and_exact_dups(docs):
-    pairs = {(r.a, r.b): r.jaccard for r in jaccard_pairs(docs, "doc_id", "text", k=2, threshold=0.5).collect()}
+    pairs = {(r.a, r.b): r.jaccard for r in jaccard_pairs(docs, threshold=0.5).collect()}
     assert pairs[(1, 3)] == 1.0  # exact dup
     assert (1, 2) in pairs and 0.5 <= pairs[(1, 2)] < 1.0
     assert not any(4 in p for p in pairs)
 
 
 def test_minhash_equals_bruteforce_on_found_pairs(docs):
-    brute = {(r.a, r.b): r.jaccard for r in jaccard_pairs(docs, "doc_id", "text", k=2, threshold=0.5).collect()}
-    mh = {(r.a, r.b): r.jaccard for r in minhash_dedup(docs, "doc_id", "text", k=2, threshold=0.5).collect()}
+    brute = {(r.a, r.b): r.jaccard for r in jaccard_pairs(docs, threshold=0.5).collect()}
+    mh = {(r.a, r.b): r.jaccard for r in minhash_dedup(docs, threshold=0.5).collect()}
     # LSH may miss pairs (probabilistic recall) but never invents them, and
     # scores agree exactly where found. Exact dups always share every band.
     assert set(mh) <= set(brute)
@@ -56,7 +56,7 @@ def test_candidate_restricted_jaccard_equals_bruteforce(docs, spark):
     """The input-restricted candidate join computes the SAME jaccard values
     as the self-join path when the candidate set is complete — also when the
     candidates carry stray (here deliberately wrong) ``sz_a``/``sz_b``."""
-    brute = {(r.a, r.b): r.jaccard for r in jaccard_pairs(docs, "doc_id", "text", k=2, threshold=0.0).collect()}
+    brute = {(r.a, r.b): r.jaccard for r in jaccard_pairs(docs, threshold=0.0).collect()}
     ids = [r.doc_id for r in docs.select("doc_id").collect()]
     all_pairs = spark.createDataFrame(
         [(a, b) for a in ids for b in ids if a < b], "a long, b long"
@@ -65,22 +65,24 @@ def test_candidate_restricted_jaccard_equals_bruteforce(docs, spark):
     for candidates in (all_pairs, wrong_sizes):
         cand = {
             (r.a, r.b): r.jaccard
-            for r in jaccard_pairs(docs, "doc_id", "text", k=2, threshold=0.0, candidates=candidates).collect()
+            for r in jaccard_pairs(docs, threshold=0.0, candidates=candidates).collect()
         }
         assert cand == brute
 
 
 def test_minhash_signature_shape(docs):
-    sig = minhash_signatures(docs, "doc_id", "text", k=2, n_hashes=16)
+    sig = minhash_signatures(docs)
     rows = sig.collect()
     assert all(len(r.sig) == 16 for r in rows)
+    # sz = distinct bigrams; the one-word doc 6 has none, so no row
+    assert {r.doc: r.sz for r in rows} == {1: 8, 2: 8, 3: 8, 4: 6, 5: 1}
     # identical docs → identical signatures
     by_doc = {r.doc: list(r.sig) for r in rows}
     assert by_doc[1] == by_doc[3]
 
 
 def test_simhash_hamming(spark, docs):
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     by_doc = {r.doc: r.simhash for r in fp.collect()}
     assert by_doc[1] == by_doc[3]  # identical text → identical fingerprint
     # radius 10 needs > 10 chunks for the pigeonhole guarantee (12 × 5-bit)
@@ -98,7 +100,7 @@ def test_simhash_pairs_rejects_recall_hole(docs):
     silently drop pairs that differ in every chunk."""
     import pytest
 
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     with pytest.raises(ValueError, match="chunks > max_hamming"):
         simhash_pairs(fp, max_hamming=8, chunks=4)
 
@@ -108,7 +110,7 @@ def test_simhash_banding_recall_is_total(spark, docs):
     pairs at the same radius."""
     import pyspark.sql.functions as F
 
-    fp = simhash(docs, "doc_id", "text").cache()
+    fp = simhash(docs).cache()
     banded = {
         (r.a, r.b) for r in simhash_pairs(fp, max_hamming=3, chunks=4).collect()
     }
@@ -130,7 +132,7 @@ def test_simhash_banding_recall_is_total(spark, docs):
 
 def test_simhash_pairs_no_crossjoin(spark, docs):
     """The candidate join must be an equi-join on chunk values, not a cartesian."""
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     plan = simhash_pairs(fp).sample(False, 1.0)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -142,7 +144,7 @@ def test_simhash_wide_combo_recall_is_total(spark, docs):
     scheme cannot give without collapsing to 6-bit buckets."""
     import pyspark.sql.functions as F
 
-    fp = simhash(docs, "doc_id", "text").cache()
+    fp = simhash(docs).cache()
     banded = {
         (r.a, r.b)
         for r in simhash_pairs(fp, max_hamming=8, chunks=10, combo_size=2).collect()
@@ -168,7 +170,7 @@ def test_simhash_wide_rejects_unsound_params(docs):
     voids the combination guarantee — must raise."""
     import pytest
 
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     with pytest.raises(ValueError, match="combo_size"):
         simhash_pairs(fp, max_hamming=8, chunks=10, combo_size=3)
     with pytest.raises(ValueError, match="divide"):
@@ -186,7 +188,7 @@ def test_hot_bucket_guard_star_caps_degenerate_corpus(spark):
         [(i, "boilerplate cookie banner repeated on every page") for i in range(n)],
         "doc_id long, text string",
     )
-    fp = simhash(df, "doc_id", "text")
+    fp = simhash(df)
     got = simhash_pairs(fp, max_hamming=3, chunks=4, max_bucket=64).collect()
     assert len(got) == n - 1  # O(n), not C(n,2)
     assert all(r.a == 0 and r.hamming == 0 for r in got)
@@ -202,7 +204,7 @@ def test_hot_bucket_guard_reports_capped_buckets(spark):
         [(i, "identical text for the hot bucket test") for i in range(n)],
         "doc_id long, text string",
     )
-    banded = bit_bands(simhash(df, "doc_id", "text"), "simhash", 15, [(c,) for c in range(4)])
+    banded = bit_bands(simhash(df), "simhash", 15, [(c,) for c in range(4)])
     stats = hot_bucket_stats(banded, ["band", "val"], max_bucket=64).collect()
     # every chunk of the shared fingerprint is one hot bucket of n docs
     assert len(stats) == 4
@@ -212,7 +214,7 @@ def test_hot_bucket_guard_reports_capped_buckets(spark):
 def test_hot_bucket_guard_noop_below_cap(spark, docs):
     """A cap larger than every bucket must reproduce the unguarded pair set
     exactly (the oracle-verified shape)."""
-    fp = simhash(docs, "doc_id", "text")
+    fp = simhash(docs)
     unguarded = {(r.a, r.b, r.hamming) for r in simhash_pairs(fp, 3, 4).collect()}
     guarded = {
         (r.a, r.b, r.hamming)
@@ -275,7 +277,7 @@ def test_simhash_candidates_guard_uses_two_level_star(spark):
     fp_b = sum(1 << b for b in range(15, 23))  # shares chunk 0, differs elsewhere
     rows = [(i, fp_a) for i in range(300)] + [(i, fp_b) for i in range(300, 600)]
     fp = spark.createDataFrame(rows, "doc long, simhash long")
-    got = {(r.a, r.b) for r in simhash_candidates(fp, chunks=4, max_bucket=64).collect()}
+    got = {(r.a, r.b) for r in simhash_candidates(fp, max_bucket=64).collect()}
     # group B's members must anchor on B's min (300), not the global min 0
     assert {(300, b) for b in range(301, 600)} <= got
     assert (0, 300) in got  # the single inter-group representative edge

@@ -5,6 +5,7 @@ import os
 
 import pyspark.sql.functions as F
 
+from log_parser_cli_spark.plans import library_ops, pipeline
 from log_parser_cli_spark.plans.library_ops import discover_with_refine
 from log_parser_cli_spark.plans.pipeline import discover_templates, extend_mapping
 
@@ -56,7 +57,7 @@ def test_refine_loop_deletes_overbroad_seed_and_reassigns():
     assert {d[0] for d in _pending(result["owner"])} == {"b", "g"}
 
 
-def test_refine_loop_rejects_unresolvable_candidate():
+def test_refine_loop_rejects_unresolvable_candidate(monkeypatch):
     """A candidate that conflicts with a template whose samples it cannot
     release (self-conflict via identical ownership each round) hits the
     iteration cap and is rejected; orphans stay pending."""
@@ -82,7 +83,8 @@ def test_refine_loop_rejects_unresolvable_candidate():
 
     # iteration-cap exhaustion path: with a zero budget the candidate is
     # rejected outright and the library is untouched
-    r2 = discover_with_refine([t1], rows, [candidate], max_iterations=0)
+    monkeypatch.setattr(library_ops, "MAX_ITERATIONS", 0)
+    r2 = discover_with_refine([t1], rows, [candidate])
     assert not r2["reports"][0]["accepted"]
     assert [t["template_id"] for t in r2["library"]] == ["s#1"]
 
@@ -132,7 +134,7 @@ def test_refine_conflicts_are_full_line_matches():
     assert result["owner"] == {"a0": "s#seed", "a1": "s#seed", "a2": "s#seed", "p0": "s#1"}
 
 
-def test_discovery_driver_set_is_bounded(spark):
+def test_discovery_driver_set_is_bounded(spark, monkeypatch):
     """A pathological source with far more distinct signatures than the cap
     completes with a bounded driver set; overflow rows get no mapping."""
     n = 5000
@@ -140,10 +142,11 @@ def test_discovery_driver_set_is_bounded(spark):
     parsed = spark.createDataFrame(
         rows, "doc_id string, source string, content_sig string, content string, head_matched boolean"
     ).withColumn("content_sig", F.concat(F.lit("evt word"), F.col("doc_id")))
-    mapping = discover_templates(spark, parsed, max_signatures_per_source=200)
+    monkeypatch.setattr(pipeline, "MAX_SIGNATURES_PER_SOURCE", 200)
+    mapping = discover_templates(spark, parsed)
     assert mapping.count() <= 200
     # deterministic: same cap twice → identical mapping
-    mapping2 = discover_templates(spark, parsed, max_signatures_per_source=200)
+    mapping2 = discover_templates(spark, parsed)
     assert sorted(map(tuple, mapping.collect())) == sorted(map(tuple, mapping2.collect()))
 
 

@@ -37,17 +37,19 @@ def test_deterministic_ids_regardless_of_input_order():
     assert [c.first_seen for c in c1] == [c.first_seen for c in c2]
 
 
-def test_branch_cap_bounds_deep_levels():
+def test_branch_cap_bounds_deep_levels(monkeypatch):
     """High-cardinality tokens at tree level >= 1 must share a wildcard child
-    once max_children is hit — the cap is enforced against the actual sibling
+    once MAX_CHILDREN is hit — the cap is enforced against the actual sibling
     dict at each depth, not just the first token level."""
-    from log_parser_cli_spark.operators.drain import DrainTree
+    from log_parser_cli_spark.operators import drain
 
-    tree = DrainTree(depth=3, sim_threshold=0.99, max_children=4)
+    monkeypatch.setattr(drain, "MAX_CHILDREN", 4)
+    monkeypatch.setattr(drain, "SIM_THRESHOLD", 0.99)
+    tree = drain.DrainTree()
     # same first token, 100 distinct second tokens → level-2 siblings
     for i in range(100):
         tree.add_signature(f"fixed tok{i:03d} alpha beta", 1, i)
-    # tree nodes under root[len=4]["fixed"]: at most max_children+1 (cap + wildcard)
+    # tree nodes under root[len=4]["fixed"]: at most MAX_CHILDREN+1 (cap + wildcard)
     level2 = tree._root[4]["fixed"]
     assert len(level2) <= 5
 

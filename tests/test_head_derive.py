@@ -6,6 +6,7 @@ import re
 import pyspark.sql.functions as F
 
 from log_parser_cli_spark.functions.templates import to_jvm_pattern
+from log_parser_cli_spark.operators import head_derive
 from log_parser_cli_spark.operators.head_derive import (
     pool_lines,
     propose_head_pattern,
@@ -29,20 +30,21 @@ def test_derived_patterns_cover_exactly_head_matchable(spark, fixture_dir):
     """For every fixture source the derived pattern matches ALL head-matchable
     lines (100% coverage) and NO noise lines."""
     for src, rows in _gt_lines_by_source(spark, fixture_dir).items():
-        pattern, _, _ = refine_head_pattern(pool_lines([(r.line_no, r.rendered) for r in rows], 2000))
+        pattern, _, _ = refine_head_pattern(pool_lines([(r.line_no, r.rendered) for r in rows]))
         assert pattern is not None, src
         rx = re.compile(pattern)
         for r in rows:
             assert bool(rx.match(r.rendered)) == r.head_matched, (src, r.rendered, pattern)
 
 
-def test_refine_history_is_monotone_nonincreasing():
+def test_refine_history_is_monotone_nonincreasing(monkeypatch):
     """keep-best: the unmatched count never increases across rounds."""
     # one template visible in the seed, a second shape only in the tail —
     # forces at least one refine round to generalize the timestamp literal
     lines = [f"2024-01-01T00:00:00 INFO pid=1 alpha message {i}" for i in range(50)]
     lines += [f"2024-{m:02d}-02T03:04:05 WARN pid=77 beta other text" for m in range(1, 13)]
-    pattern, n_unmatched, history = refine_head_pattern(lines, n_seed=2)
+    monkeypatch.setattr(head_derive, "SEED_SAMPLES", 2)
+    pattern, n_unmatched, history = refine_head_pattern(lines)
     assert pattern is not None
     assert n_unmatched == 0
     assert history == sorted(history, reverse=True)
@@ -72,7 +74,7 @@ def test_derived_heads_are_dropin_for_parse_stage(spark, fixture_dir):
     per_src = _gt_lines_by_source(spark, fixture_dir)
     derived = {}
     for src, rows in per_src.items():
-        pattern, _, _ = refine_head_pattern(pool_lines([(r.line_no, r.rendered) for r in rows], 2000))
+        pattern, _, _ = refine_head_pattern(pool_lines([(r.line_no, r.rendered) for r in rows]))
         derived[src] = (pattern, 1)
     vocab_rows = [
         (int(r.token_id), r.text)
@@ -116,9 +118,9 @@ def test_jvm_dialect_conversion():
     assert to_jvm_pattern(r"^x (?P<content>.*)$") == r"^x (?<content>.*)$"
 
 
-def test_stride_pool_collect_twin_of_pool_lines(spark, fixture_dir):
+def test_stride_pool_collect_twin_of_pool_lines(spark, fixture_dir, monkeypatch):
     """The distributed pool (map-side hash filter + residue-only sort) must
-    equal the pure-Python twin exactly, including when n > pool_size forces
+    equal the pure-Python twin exactly, including when n > POOL_SIZE forces
     the hash-thinned path — the oracle-portability contract."""
     from log_parser_cli_spark.operators.head_derive import pool_lines, stride_pool_collect
 
@@ -126,14 +128,15 @@ def test_stride_pool_collect_twin_of_pool_lines(spark, fixture_dir):
         "source", "line_no", "rendered"
     )
     pool_size = 50  # fixture sources have hundreds of rows → hash path
-    pools = stride_pool_collect(gt, "source", "line_no", ["rendered"], pool_size)
+    monkeypatch.setattr(head_derive, "POOL_SIZE", pool_size)
+    pools = stride_pool_collect(gt, "source", "line_no", ["rendered"])
     rows = sorted(gt.collect(), key=lambda r: r.line_no)
     per_src = {}
     for r in rows:
         per_src.setdefault(r.source, []).append((r.line_no, r.rendered))
     assert set(pools) == set(per_src)
     for src, items in per_src.items():
-        expect = pool_lines(items, pool_size)
+        expect = pool_lines(items)
         got = [ln for _no, ln in pools[src]]
         assert got == expect, src
         assert 0 < len(got) <= pool_size

@@ -198,6 +198,27 @@ def test_fixture_patterns_run_on_re2(fixture_dir):
     assert engines == {("re2", False): 6, ("re2", True): 48}
 
 
+def _write_fixture(d: str, lines: list[str], head: str, group: int, templates: list[dict]) -> str:
+    """A one-source fixture dir holding ``lines`` under ``head``."""
+    words = sorted({w for line in lines for w in line.split(" ")})
+    tokens = [[words.index(w) for w in line.split(" ")] for line in lines]
+    for name, cols in {
+        "vocab": {"token_id": range(len(words)), "text": words},
+        "sources": {"source": ["s"], "head_pattern": [head], "content_group": [group]},
+        "templates": {
+            c: [t[c] for t in templates] for c in ("template_id", "source", "pattern", "created_at")
+        },
+        "sequences": {
+            "doc_id": [f"d{i}" for i in range(len(lines))],
+            "tokens": tokens,
+            "n_tok": [len(t) for t in tokens],
+            "source": ["s"] * len(lines),
+        },
+    }.items():
+        pq.write_table(pa.table({c: list(v) for c, v in cols.items()}), f"{d}/{name}.parquet")
+    return d
+
+
 @pytest.mark.parametrize(
     "head, group, on_re2, doc, content",
     [
@@ -213,21 +234,7 @@ def test_parse_heads_agree_with_oracle(spark, tmp_path, head, group, on_re2, doc
     Python ``re``; either way as ``oracle.oracle_match`` parses them."""
     assert (compile_regex(head, full_line=False).re2 is not None) == on_re2
     lines = ["(12) host the message", "12 host the message", "ab ab rest of it", "x y"]
-    words = sorted({w for line in lines for w in line.split(" ")})
-    tokens = [[words.index(w) for w in line.split(" ")] for line in lines]
-    d = str(tmp_path)
-    for name, cols in {
-        "vocab": {"token_id": range(len(words)), "text": words},
-        "sources": {"source": ["s"], "head_pattern": [head], "content_group": [group]},
-        "templates": {"template_id": [], "source": [], "pattern": [], "created_at": []},
-        "sequences": {
-            "doc_id": [f"d{i}" for i in range(len(lines))],
-            "tokens": tokens,
-            "n_tok": [len(t) for t in tokens],
-            "source": ["s"] * len(lines),
-        },
-    }.items():
-        pq.write_table(pa.table({c: list(v) for c, v in cols.items()}), f"{d}/{name}.parquet")
+    d = _write_fixture(str(tmp_path), lines, head, group, [])
     vocab_rows, source_heads, _ = load_dims(spark, d)
     seq = spark.read.parquet(f"{d}/sequences.parquet")
     parsed = parse_stage(spark, seq, vocab_rows, source_heads).collect()
@@ -236,3 +243,14 @@ def test_parse_heads_agree_with_oracle(spark, tmp_path, head, group, on_re2, doc
     assert {k: c for k, (c, matched) in got.items() if matched} == {doc: content}
     with pytest.raises(ValueError, match=f"no content group {group + 1}"):
         parse_stage(spark, seq, vocab_rows, {"s": (head, group + 1)})
+
+
+def test_oracle_matches_the_whole_line(tmp_path):
+    """An unanchored template whose alternation tries its shorter branch
+    first owns a line its longer branch spans: ``oracle_match`` matches the
+    whole line, as ``match_batch`` does."""
+    template = {"template_id": "t#1", "source": "s", "pattern": "(?:a|ab)", "created_at": 1}
+    d = _write_fixture(str(tmp_path), ["x ab"], r"^(\S+) (.*)$", 2, [template])
+    (m,) = oracle_match(d)
+    assert (m.content, m.template_id) == ("ab", "t#1")
+    assert list(match_batch(["ab"], ["s"], [template])[0]) == ["t#1"]

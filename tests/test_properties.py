@@ -167,10 +167,10 @@ def test_derived_head_covers_generated_corpus(lines):
 # ---------------------------------------------------------------------------
 # The regex kernel: for ANY small library drawn from a grammar of named and
 # unnamed groups, groups under ``?``/``*``, alternation and ``[...]`` classes
-# holding ``(``, ``)`` or a leading ``]``, ``match_batch`` (RE2 where
-# ``compile_regex`` allows it), ``first_match`` forced onto Python ``re`` and
-# ``oracle_match``'s rule (``rx.match`` ending at the line's end, the
-# groupdict without None) agree on every line's owner and variables.
+# holding ``(``, ``)`` or a leading ``]``, anchored by ``^…$`` or not,
+# ``match_batch`` (RE2 where ``compile_regex`` allows it), ``first_match``
+# forced onto Python ``re`` and ``oracle_match``'s rule (``rx.fullmatch``,
+# the groupdict without None) agree on every line's owner and variables.
 # ---------------------------------------------------------------------------
 
 _CHARS = "ab ()]"
@@ -223,9 +223,8 @@ def regex_libraries(draw):
     library, lines = [], []
     for i in range(draw(st.integers(1, 3))):
         body, gen = draw(_regex_node(list(_GROUP_NAMES), 0))
-        library.append(
-            {"template_id": f"t#{i}", "source": "s", "pattern": f"^{body}$", "created_at": i}
-        )
+        pattern = f"^{body}$" if draw(st.booleans()) else body
+        library.append({"template_id": f"t#{i}", "source": "s", "pattern": pattern, "created_at": i})
         lines += [gen(draw) for _ in range(draw(st.integers(0, 3)))]
     lines += draw(st.lists(st.text(alphabet=_NOISE, max_size=6), max_size=2))
     return library, lines or [""]
@@ -250,8 +249,8 @@ def test_regex_kernel_agrees_with_python_re_and_the_oracle(case):
     for line in lines:
         owner = (None, None)
         for t in library:
-            m = re.compile(t["pattern"]).match(line)
-            if m is not None and m.end() == len(line):
+            m = re.compile(t["pattern"]).fullmatch(line)
+            if m is not None:
                 variables = {k: v for k, v in m.groupdict().items() if v is not None}
                 owner = (t["template_id"], variables)
                 break

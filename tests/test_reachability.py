@@ -103,6 +103,66 @@ def test_every_package_function_is_referenced_from_an_entry_point():
     assert sorted(unreferenced - TEST_ONLY) == []
 
 
+#: Defaulted parameters no caller passes, on purpose: input seams only tests
+#: set, and hot-bucket guards that are off by default.
+UNPASSED_OPTIONS = {
+    f"{PKG}.plans.pipeline.run_pipeline.seq_df": "input seam: tests route a prepared sequence frame",
+    f"{PKG}.plans.checkpoint.source_digest.pkg_dir": "input seam: tests digest a copied package",
+    f"{PKG}.extras.similarity.centroids_from_parquet._io_stats": "input seam: tests read row-group counts",
+    f"{PKG}.extras.dedup.simhash_candidates.max_bucket": "hot-bucket guard, a safety bound",
+    f"{PKG}.extras.similarity.rhp_candidates.max_bucket": "hot-bucket guard, a safety bound",
+}
+
+
+def test_every_option_is_passed_by_a_caller():
+    """Each defaulted parameter of a module-level function in ``extras/``,
+    ``operators/`` and ``plans/`` is passed, by keyword or by position, by a
+    call in the package, ``tools/``, ``perfbench/``, ``bench.py`` or
+    ``__spark_entry__.py``; one no caller varies is a constant. Calls
+    resolve by name."""
+    files = [
+        *(ROOT / PKG).rglob("*.py"),
+        *(ROOT / "tools").glob("*.py"),
+        *(ROOT / "perfbench").glob("*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+    ]
+    calls: dict[str, list[ast.Call]] = {}
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+
+    def passes(call: ast.Call, index: int | None, name: str) -> bool:
+        if any(kw.arg in (name, None) for kw in call.keywords):
+            return True
+        starred = any(isinstance(a, ast.Starred) for a in call.args)
+        return index is not None and (len(call.args) > index or starred)
+
+    unpassed = set()
+    for sub in ("extras", "operators", "plans"):
+        for path in sorted((ROOT / PKG / sub).glob("*.py")):
+            for fn in ast.parse(path.read_text()).body:
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                positional = fn.args.posonlyargs + fn.args.args
+                first = len(positional) - len(fn.args.defaults)
+                options = [(i, a.arg) for i, a in enumerate(positional) if i >= first]
+                options += [
+                    (None, a.arg)
+                    for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                    if d is not None
+                ]
+                unpassed |= {
+                    f"{_module_name(path)}.{fn.name}.{name}"
+                    for i, name in options
+                    if not any(passes(c, i, name) for c in calls.get(fn.name, []))
+                }
+    # both ways: an allow-listed option a caller now passes leaves the list
+    assert sorted(unpassed ^ UNPASSED_OPTIONS.keys()) == []
+
 
 def test_one_regex_executor():
     """Only the matcher's kernel calls Arrow's regex kernels; any other

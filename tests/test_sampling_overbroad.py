@@ -45,7 +45,7 @@ def test_compression_gain_flags_overbroad(spark):
     assert got["t#1"].n_rows == 50
 
 
-def test_overbroad_report_persists_top_n(spark, tmp_path):
+def test_overbroad_report_persists_top_n(spark, tmp_path, monkeypatch):
     rows = []
     for i in range(30):
         rows.append((f"d{i:03d}", "t#ok", f"served block {i}", "served block <*>", [str(i)]))
@@ -54,9 +54,10 @@ def test_overbroad_report_persists_top_n(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "doc_id string, template_id string, content string, template_star string, word_vars array<string>"
     )
-    from log_parser_cli_spark.extras.overbroad import write_overbroad_report
+    from log_parser_cli_spark.extras import overbroad
 
-    path = write_overbroad_report(df, str(tmp_path), top_n=1)
+    monkeypatch.setattr(overbroad, "REPORT_TOP_N", 1)
+    path = overbroad.write_overbroad_report(df, str(tmp_path))
     report = spark.read.json(path).collect()
     assert len(report) == 1  # top-N slice applied
     assert report[0].overbroad and report[0].template_id in ("t#bad", "t#bad2")

@@ -170,6 +170,6 @@ def test_micro_batch_writes_one_file_per_template_dir(spark, pipeline_out, three
         ]
 
     def by_doc(df):
-        return {r.doc_id: r.asDict() for r in df.drop("batch_id").collect()}
+        return {r.doc_id: r.asDict() for r in df.collect()}
 
     assert by_doc(read_routed(spark, out)) == by_doc(read_routed(spark, pipeline_out))

@@ -25,7 +25,7 @@ def docs(spark):
 
 def test_token_count(spark):
     df = spark.createDataFrame([(1, "a b c d")], "id long, text string")
-    assert df.select(token_count("text")).first()[0] == 4
+    assert df.select(token_count()).first()[0] == 4
 
 
 def test_lang_id_heuristic(docs):
@@ -38,7 +38,7 @@ def test_quality_score_bounds(spark):
     df = spark.createDataFrame(
         [(i, t.strip(), n) for i, t, n in rows], "id long, text string, n_chars long"
     )
-    scores = {r.id: r.q for r in df.withColumn("q", quality_score("text", "n_chars")).collect()}
+    scores = {r.id: r.q for r in df.withColumn("q", quality_score()).collect()}
     assert 0 <= scores[2] < scores[1] <= 1.0  # repetitive short text scores lower
 
 
@@ -48,6 +48,6 @@ def test_fingerprints_deterministic_and_dup_invariant(spark):
         [(1, text), (2, text), (3, "totally different words appear in this document here now")],
         "doc_id long, text string",
     )
-    got = {r.doc: r.n_fingerprints for r in fingerprint_count(df, "doc_id", "text").collect()}
+    got = {r.doc: r.n_fingerprints for r in fingerprint_count(df).collect()}
     assert got[1] == got[2] > 0  # identical docs → identical fingerprint count
     assert got[3] > 0

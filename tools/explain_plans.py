@@ -47,7 +47,7 @@ def main() -> int:
         route_stage,
     )
     from log_parser_cli_spark.session import get_spark
-    from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs, minhash_dedup
+    from log_parser_cli_spark.extras.dedup import simhash, simhash_pairs
     from log_parser_cli_spark.extras.similarity import cosine_topk
 
     spark = get_spark(app_name="explain", cores=8, extra_conf={"spark.ui.showConsoleProgress": "false"})
@@ -95,7 +95,7 @@ def main() -> int:
     from log_parser_cli_spark.streaming.stream import batch_frame, pin
 
     batch_title = "micro-batch route (local dims → broadcast joins → salt-1 exchange)"
-    batch_plan = plan_of(batch_frame(parsed, pin(spark, mapping), sources_df, batch_id=0))
+    batch_plan = plan_of(batch_frame(parsed, pin(spark, mapping), sources_df))
     sections.append(
         (
             batch_title,
@@ -179,7 +179,7 @@ def main() -> int:
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    sh_pairs = simhash_pairs(simhash(docs, "doc_id", "text"))
+    sh_pairs = simhash_pairs(simhash(docs))
     sections.append(
         (
             "simhash near-dup candidates (pigeonhole equi-join, no cross join)",
@@ -189,7 +189,7 @@ def main() -> int:
         )
     )
 
-    sh_wide = simhash_pairs(simhash(docs, "doc_id", "text"), max_hamming=8, chunks=10, combo_size=2)
+    sh_wide = simhash_pairs(simhash(docs), max_hamming=8, chunks=10, combo_size=2)
     sections.append(
         (
             "simhash WIDE radius 8 (C(10,2)=45 combination bands, still equi-joins only)",
@@ -201,7 +201,7 @@ def main() -> int:
 
     # guarded path: window bucket-count on the SAME keys as the pair join,
     # normal pairs + star pairs unioned — still equi-joins only, no cartesian
-    sh_capped = simhash_pairs(simhash(docs, "doc_id", "text"), max_bucket=64)
+    sh_capped = simhash_pairs(simhash(docs), max_bucket=64)
     sections.append(
         (
             "simhash with hot-bucket guard (window count → normal equi-join ∪ star, cap 64)",
@@ -240,10 +240,7 @@ def main() -> int:
     # cross-family jaccard: simhash chunk candidates → shingle-join verify
     from log_parser_cli_spark.extras.dedup import jaccard_pairs, simhash_candidates
 
-    jac = jaccard_pairs(
-        docs, "doc_id", "text", k=2, threshold=0.3,
-        candidates=simhash_candidates(simhash(docs, "doc_id", "text")),
-    )
+    jac = jaccard_pairs(docs, threshold=0.3, candidates=simhash_candidates(simhash(docs)))
     sections.append(
         (
             "candidate-fed jaccard (simhash bands → shingle equi-join → verify)",
@@ -267,39 +264,7 @@ def main() -> int:
         )
     )
 
-    # IVF join path: centroids as broadcast DATA (single-row array column +
-    # higher-order-function argmax) — the plan must contain no centroid
-    # literal and must not grow with centroid count (the literal path's
-    # expression tree is O(centroids × dim), which collapses at production
-    # IVF sizes; this is the 100 TB carrier)
-    from log_parser_cli_spark.extras.similarity import vectors_to_df
-
-    plans_by_k = {}
-    for k_c in (16, 64):
-        # centroids_from_parquet is the shared Spark/oracle centroid source —
-        # reusing it keeps this evidence on the same centroids the gated
-        # queries run with
-        cdf = vectors_to_df(
-            spark, centroids_from_parquet("/root/testdata/sf0.01/embeddings.parquet", k=k_c), "cents"
-        )
-        plans_by_k[k_c] = plan_of(ivf_topk(emb, [0, 1, 2, 3, 4], k=10, centroids_df=cdf, nprobe=5))
-    sections.append(
-        (
-            "IVF top-k JOIN path (broadcast centroid DataFrame + HOF argmax — plan size independent of centroid count)",
-            plans_by_k[16],
-            ["BroadcastHashJoin", "BroadcastNestedLoopJoin", "WindowGroupLimit"],
-            ["CartesianProduct"],
-        )
-    )
-
     failures: list[str] = []
-    if abs(len(plans_by_k[16]) - len(plans_by_k[64])) > 200:
-        failures.append(
-            f"IVF join path plan grows with centroid count: "
-            f"{len(plans_by_k[16])} chars @k=16 vs {len(plans_by_k[64])} @k=64"
-        )
-    if str(cents[0][0]) in plans_by_k[16]:
-        failures.append("IVF join path leaks centroid literals into the plan")
     out = [
         "# PLANS — physical-plan evidence\n",
         "Generated by `python tools/explain_plans.py` (sf0.01). Each section",
@@ -326,12 +291,6 @@ def main() -> int:
         out.extend(checks)
         out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
 
-    out.append(
-        f"\nIVF join-path plan size: {len(plans_by_k[16])} chars @ k_centroids=16 vs "
-        f"{len(plans_by_k[64])} @ k_centroids=64 — constant in centroid count, no "
-        f"centroid literal in the plan text (the literal path is kept solely for "
-        f"DuckDB-oracle portability; `ann_ivf_join` hash-matches it).\n"
-    )
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     spark.stop()
