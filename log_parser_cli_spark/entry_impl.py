@@ -193,10 +193,13 @@ def _derive_heads_from_gt(gt_path: str) -> dict[str, str]:
 def q_head_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic head-pattern derivation + refine (manager.ts:83-186 minus
     the LLM): stride pools per source → driver-side keep-best refine loop →
-    distributed coverage validation of the final pattern (P5). Sources whose
-    derivation fails are omitted (matching the oracle twin's filter)."""
-    from log_parser_cli_spark.functions.templates import to_jvm_pattern
+    distributed coverage validation of the final pattern (P5) through
+    ``match_templates``, the derived heads as a per-source library (each is
+    ``^… (?P<content>.*)$``, so a full-line match is the oracle's search).
+    Sources whose derivation fails are omitted (matching the oracle twin's
+    filter)."""
     from log_parser_cli_spark.operators.head_derive import derive_heads, stride_pool_collect
+    from log_parser_cli_spark.operators.matcher import match_templates
 
     fx = fixtures_for_sf_dir(sf_dir)
     gt = spark.read.parquet(os.path.join(fx, "ground_truth.parquet")).select(
@@ -204,21 +207,17 @@ def q_head_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pools = stride_pool_collect(gt, "source", "line_no", ["rendered"])
     patterns = {s: p for s, p in derive_heads(pools).items() if p}
-    # distributed coverage of the derived patterns (literal per-source rlike →
-    # compiled once per branch, whole-stage codegen)
-    matched = F.lit(False)
+    library = [dict(template_id=s, source=s, pattern=p, created_at=0) for s, p in patterns.items()]
     pattern_col = F.lit(None).cast("string")
     for src, pat in patterns.items():
-        matched = F.when(F.col("source") == src, F.col("rendered").rlike(to_jvm_pattern(pat))).otherwise(matched)
         pattern_col = F.when(F.col("source") == src, F.lit(pat)).otherwise(pattern_col)
+    lines = gt.filter(F.col("source").isin(list(patterns))).select("source", F.col("rendered").alias("content"))
     return (
-        gt.withColumn("_m", matched)
-        .withColumn("pattern", pattern_col)
-        .filter(F.col("pattern").isNotNull())
-        .groupBy("source", "pattern")
+        match_templates(spark, lines, library)
+        .groupBy("source", pattern_col.alias("pattern"))
         .agg(
             F.count("*").cast("long").alias("n_lines"),
-            F.sum(F.col("_m").cast("int")).cast("long").alias("n_matched"),
+            F.count("template_id").cast("long").alias("n_matched"),
         )
     )
 
@@ -307,7 +306,7 @@ CONFLICT_CANDIDATE = ("apache#candidate", r"^workers (?P<v1>[A-Za-z0-9_/-]+) con
 
 def q_template_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: an overbroad candidate pattern vs stored samples of other templates."""
-    from log_parser_cli_spark.plans.library_ops import detect_conflicts
+    from log_parser_cli_spark.plans.library_ops import SAMPLES_PER_TEMPLATE, detect_conflicts
 
     fx = fixtures_for_sf_dir(sf_dir)
     gt = spark.read.parquet(os.path.join(fx, "ground_truth.parquet"))
@@ -315,7 +314,7 @@ def q_template_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples = (
         gt.filter(F.col("head_matched"))
         .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 20)
+        .filter(F.col("_rn") <= SAMPLES_PER_TEMPLATE)
         .select(F.col("event_id").alias("template_id"), "content")
     )
     cid, pattern = CONFLICT_CANDIDATE

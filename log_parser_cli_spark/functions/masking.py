@@ -21,17 +21,17 @@ from __future__ import annotations
 
 import re
 
-# Order matters: first match wins (a word is classified once).
+# Order matters: first match wins (a word is classified once); classes are ASCII.
 MASK_RULES: list[tuple[str, re.Pattern[str]]] = [
-    ("TS", re.compile(r"^\d{4}-\d{2}-\d{2}(?:[T ]\d{2}:\d{2}:\d{2}(?:[.,]\d+)?Z?)?$")),
-    ("TIME", re.compile(r"^\d{2}:\d{2}(?::\d{2})?(?:[.,]\d+)?$")),
-    ("IP", re.compile(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}(?::\d+)?$")),
-    ("UUID", re.compile(r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$")),
-    ("HEX", re.compile(r"^(?:0x[0-9a-fA-F]+|(?=[0-9a-fA-F]*\d)[0-9a-fA-F]{6,})$")),
-    ("NUM", re.compile(r"^[+-]?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?%?$")),
-    ("PATH", re.compile(r"^/(?:[A-Za-z0-9_.\-]+/)*[A-Za-z0-9_.\-]+/?$")),
-    ("PFX", re.compile(r"^([A-Za-z][A-Za-z_]*_)(\d+)$")),  # blk_1234 → blk_<NUM>
-    ("KV", re.compile(r"^([A-Za-z][A-Za-z0-9_]*)=(\S+)$")),  # key=value → key=<mask>
+    ("TS", re.compile(r"^\d{4}-\d{2}-\d{2}(?:[T ]\d{2}:\d{2}:\d{2}(?:[.,]\d+)?Z?)?$", re.ASCII)),
+    ("TIME", re.compile(r"^\d{2}:\d{2}(?::\d{2})?(?:[.,]\d+)?$", re.ASCII)),
+    ("IP", re.compile(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}(?::\d+)?$", re.ASCII)),
+    ("UUID", re.compile(r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$", re.ASCII)),
+    ("HEX", re.compile(r"^(?:0x[0-9a-fA-F]+|(?=[0-9a-fA-F]*\d)[0-9a-fA-F]{6,})$", re.ASCII)),
+    ("NUM", re.compile(r"^[+-]?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?%?$", re.ASCII)),
+    ("PATH", re.compile(r"^/(?:[A-Za-z0-9_.\-]+/)*[A-Za-z0-9_.\-]+/?$", re.ASCII)),
+    ("PFX", re.compile(r"^([A-Za-z][A-Za-z_]*_)(\d+)$", re.ASCII)),  # blk_1234 → blk_<NUM>
+    ("KV", re.compile(r"^([A-Za-z][A-Za-z0-9_]*)=(\S+)$", re.ASCII)),  # key=value → key=<mask>
 ]
 
 # \x00 guard: no real token can equal a mask token.

@@ -212,11 +212,6 @@ def anchor_pattern(pattern: str) -> str:
     return p
 
 
-def to_jvm_pattern(pattern: str) -> str:
-    """Python-dialect named groups → JVM dialect for Spark ``rlike``."""
-    return pattern.replace("(?P<", "(?<").replace("(?P=", r"\k<")
-
-
 _PLACEHOLDER = re.compile(r"⟪[^⟫]+⟫")
 _WS = re.compile(r"\s+")
 

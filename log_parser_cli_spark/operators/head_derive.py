@@ -29,11 +29,11 @@ place of the LLM (everything else mirrors the reference's control flow):
   portable hash of the order key, residue-only sort — never a full-corpus
   rank) is collected per source, the refine loop runs driver-side
   (discovery-time, like the reference's agent loop), and the FINAL pattern's
-  coverage is validated distributed via ``rlike`` (P5). At 10^12 rows the
-  full-scan coverage check runs once, not per round.
+  coverage is validated distributed through ``match_templates`` (P5). At
+  10^12 rows the full-scan coverage check runs once, not per round.
 
-Patterns are emitted in Python/RE2 dialect (``(?P<content>...)``);
-``functions.templates.to_jvm_pattern`` converts for Spark ``rlike``.
+Patterns are emitted in the matcher's one dialect and scored with its
+``compile_regex``; words are classified in ASCII, as RE2 reads them.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ from collections import Counter
 
 from log_parser_cli_spark.extras.sampling import k_center_select
 from log_parser_cli_spark.functions.templates import escape_regex_text
+from log_parser_cli_spark.operators.matcher import compile_regex
 
 MAX_REFINE_ROUNDS = 20  # manager.ts:84
 SEED_SAMPLES = 10  # manager.ts:45 (diverse-sampler picks)
@@ -69,15 +70,15 @@ def _runs(word: str) -> list[str]:
 
 def _skeleton(word: str) -> tuple:
     """Structural skeleton: symbol chars verbatim, alnum runs as None slots."""
-    return tuple(None if r[0].isalnum() else r for r in _runs(word))
+    return tuple(None if _ALNUM.match(r) else r for r in _runs(word))
 
 
 def _seg_classes(seg: str) -> frozenset[str]:
     classes = set()
     for ch in seg:
-        if ch.isdigit():
+        if "0" <= ch <= "9":
             classes.add("D")
-        elif ch.isupper():
+        elif "A" <= ch <= "Z":
             classes.add("U")
         else:
             classes.add("L")
@@ -117,7 +118,7 @@ def _merge_position(values: list[str]) -> str | None:
     for v in distinct:
         slot = 0
         for r in _runs(v):
-            if r[0].isalnum():
+            if _ALNUM.match(r):
                 slot_classes[slot] |= _seg_classes(r)
                 slot += 1
     # bare lexical word guard: one slot, no symbols, lowercase present
@@ -184,7 +185,7 @@ def refine_head_pattern(lines: list[str]) -> tuple[str | None, int, list[int]]:
         return None, len(lines), []
     tried.add(current)
     best_pattern = current
-    best_unmatched = _unmatched(lines, re.compile(current))
+    best_unmatched = _unmatched(lines, compile_regex(current, False).rx)
     history = [len(best_unmatched)]
 
     for _ in range(MAX_REFINE_ROUNDS):
@@ -201,7 +202,7 @@ def refine_head_pattern(lines: list[str]) -> tuple[str | None, int, list[int]]:
         if candidate is None or candidate in tried:
             break  # deterministic generator: a repeat cannot improve
         tried.add(candidate)
-        cand_unmatched = _unmatched(lines, re.compile(candidate))
+        cand_unmatched = _unmatched(lines, compile_regex(candidate, False).rx)
         # keep-best: accept only non-worse candidates (manager.ts:158)
         if len(cand_unmatched) <= len(best_unmatched):
             best_pattern, best_unmatched = candidate, cand_unmatched

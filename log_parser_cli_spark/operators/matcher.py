@@ -8,10 +8,10 @@ order from sqlite-template-manager.ts:224-247). Here both run through two
 functions:
 
 - ``compile_regex`` compiles a pattern once per process (an ``lru_cache``
-  keyed on the pattern text itself): Python ``re`` always;
-  RE2 as well when no group can miss a match, naming every unnamed group
-  ``g<k>`` provably keeps Python's group numbering and RE2 accepts the
-  anchored form.
+  keyed on the pattern text itself): ``python_regex`` (Python ``re`` under
+  RE2's class rule) always; RE2 as well when no group can miss a match,
+  naming every unnamed group ``g<k>`` provably keeps Python's group
+  numbering and RE2 accepts the anchored form.
 - ``first_match`` runs patterns in precedence order over the still-unclaimed
   rows: a row claimed by an earlier pattern is masked out of every later
   one's input. On the RE2 path it is one vectorized ``pc.extract_regex`` per
@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import functools
 import re
+import re._compiler as _sre_compile
 import re._constants as _sre
 import re._parser as _sre_parse
 from collections.abc import Iterator
@@ -87,15 +88,28 @@ def _name_groups(pattern: str) -> str:
     return "".join(out)
 
 
-def _group_can_miss(tree, optional: bool = False) -> bool:
-    """Whether a capturing group in ``tree`` (an ``re._parser`` parse) can
-    take no part in a match: it sits under a min-0 repeat, in an alternation
-    branch, or in a conditional or negative lookahead. RE2 (Arrow's
-    ``extract_regex``) reads such a group as ``""`` where Python ``re`` gives
-    None."""
-    for op, av in tree:
-        if op is _sre.SUBPATTERN and av[0] is not None and optional:
-            return True
+# RE2's \s is [\t\n\f\r ]: Python's ASCII \s also holds \x0b, and its \S does not
+_SPACE, _NOT_SPACE = (_sre.CATEGORY, _sre.CATEGORY_SPACE), (_sre.CATEGORY, _sre.CATEGORY_NOT_SPACE)
+_RE2_CLASS = {_SPACE: [(_sre.LITERAL, c) for c in b"\t\n\f\r "], _NOT_SPACE: [_NOT_SPACE, (_sre.LITERAL, 0x0B)]}
+
+
+def _re2_rule(tree, optional: bool = False) -> bool:
+    """Rewrite ``tree`` (an ``re._parser`` parse under ``re.ASCII``) in
+    place to RE2's class rule, building new class lists (the parser shares
+    its category lists between parses), and return whether a capturing
+    group can take no part in a match: it sits under a min-0 repeat, in an
+    alternation branch, or in a conditional or negative lookahead. RE2
+    (Arrow's ``extract_regex``) reads such a group as ``""`` where Python
+    ``re`` gives None."""
+    can_miss = False
+    for i, (op, av) in enumerate(tree):
+        if op is _sre.IN:
+            tree[i] = (op, [x for item in av for x in _RE2_CLASS.get(item, [item])])
+            continue
+        if op is _sre.SUBPATTERN:
+            if av[1] & (re.IGNORECASE | re.UNICODE):
+                raise ValueError("scoped case-insensitive or Unicode flag")
+            can_miss |= av[0] is not None and optional
         inner = optional or op in (_sre.BRANCH, _sre.GROUPREF_EXISTS, _sre.ASSERT_NOT) or (
             op in (_sre.MAX_REPEAT, _sre.MIN_REPEAT, _sre.POSSESSIVE_REPEAT) and av[0] == 0
         )
@@ -103,11 +117,27 @@ def _group_can_miss(tree, optional: bool = False) -> bool:
         while stack:
             x = stack.pop()
             if isinstance(x, _sre_parse.SubPattern):
-                if _group_can_miss(x, inner):
-                    return True
+                can_miss |= _re2_rule(x, inner)
             elif isinstance(x, (tuple, list)):
                 stack.extend(x)
-    return False
+    return can_miss
+
+
+def _compile_re2_rule(pattern: str) -> tuple[re.Pattern[str], bool]:
+    """``python_regex(pattern)`` and whether a group in it can miss a match."""
+    tree = _sre_parse.parse(pattern, re.ASCII)
+    if tree.state.flags & re.IGNORECASE:
+        raise ValueError(f"case-insensitive flag in {pattern!r}")
+    can_miss = _re2_rule(tree)
+    return _sre_compile.compile(tree), can_miss
+
+
+def python_regex(pattern: str) -> re.Pattern[str]:
+    """The one Python ``re`` spelling of a head or template pattern, under
+    RE2's class rule: ``\\w``, ``\\d``, ``\\s`` and ``\\b`` are ASCII,
+    ``\\s`` is ``[\\t\\n\\f\\r ]``, and a case-insensitive (RE2 folds
+    Unicode, ``re.ASCII`` only ASCII) or Unicode flag raises ValueError."""
+    return _compile_re2_rule(pattern)[0]
 
 
 @functools.lru_cache(maxsize=4096)
@@ -117,15 +147,15 @@ def compile_regex(pattern: str, full_line: bool) -> Regex:
     like ``re.fullmatch``). RE2 runs it only when no group can miss a match,
     the all-named rewrite keeps Python's group numbering (checked on its
     ``groupindex``) and RE2 accepts ``\\A(?:…)`` / ``\\A(?:…)\\z``;
-    otherwise Python ``re`` does."""
-    rx = re.compile(pattern)
+    otherwise ``python_regex`` does."""
+    rx, can_miss = _compile_re2_rule(pattern)
     own = {k: name for name, k in rx.groupindex.items()}
     groups = tuple(own.get(k, f"g{k}") for k in range(1, rx.groups + 1))
     re2 = None
     try:
         named = re.compile(_name_groups(pattern))
         if (
-            not _group_can_miss(_sre_parse.parse(pattern))
+            not can_miss
             and named.groups == rx.groups
             and named.groupindex == {g: k for k, g in enumerate(groups, 1)}
         ):

@@ -9,11 +9,12 @@ distributed operators must agree exactly.
 from __future__ import annotations
 
 import os
-import re
 from collections import Counter
 from dataclasses import dataclass
 
 import pyarrow.parquet as pq
+
+from log_parser_cli_spark.operators.matcher import python_regex
 
 
 @dataclass
@@ -33,11 +34,11 @@ def oracle_match(fixture_dir: str) -> list[OracleMatch]:
     """Head-extract + ordered regex first-match over every sequence."""
     vocab = {r["token_id"]: r["text"] for r in load_fixture_table(fixture_dir, "vocab")}
     sources = {r["source"]: r for r in load_fixture_table(fixture_dir, "sources")}
-    head_rx = {s: re.compile(r["head_pattern"]) for s, r in sources.items()}
+    head_rx = {s: python_regex(r["head_pattern"]) for s, r in sources.items()}
     templates = load_fixture_table(fixture_dir, "templates")
-    per_source: dict[str, list[tuple[str, re.Pattern[str]]]] = {}
+    per_source: dict[str, list] = {}
     for t in sorted(templates, key=lambda t: (t["source"], t["created_at"], t["template_id"])):
-        per_source.setdefault(t["source"], []).append((t["template_id"], re.compile(t["pattern"])))
+        per_source.setdefault(t["source"], []).append((t["template_id"], python_regex(t["pattern"])))
 
     out: list[OracleMatch] = []
     for row in load_fixture_table(fixture_dir, "sequences"):

@@ -13,8 +13,8 @@ cardinality is tiny; the fact stream never flows through here):
 - ``exclude_seen`` — E3: left-anti seen-sample exclusion (manager.ts:112).
 - ``detect_conflicts`` — J3: a candidate template pattern run over the stored
   samples of OTHER templates; full-line hits grouped by owning template
-  (conflict-detector.ts:30-64). The candidate is one pattern → rlike filter,
-  no crossJoin blowup.
+  (conflict-detector.ts:30-64). The candidate is a one-row library for
+  ``match_templates``, no crossJoin blowup.
 - ``discover_with_refine`` — the candidate queue's conflict → delete →
   re-queue machine (pipeline.ts:130-165, 355-451, 561-612), run on the driver
   over signature representatives through the matcher's kernel.
@@ -27,8 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from log_parser_cli_spark.functions.templates import to_jvm_pattern
-from log_parser_cli_spark.operators.matcher import match_batch
+from log_parser_cli_spark.operators.matcher import match_batch, match_templates
 
 SAMPLES_PER_TEMPLATE = 20  # stored samples a candidate is checked against
 MAX_ITERATIONS = 5  # conflict → delete → re-check rounds per candidate
@@ -64,12 +63,14 @@ def detect_conflicts(
     the candidate would claim that line, the matcher's full-line semantics.
     Returns (template_id, n_conflicts, sample_contents array,
     candidate_template_id)."""
-    full_line = to_jvm_pattern(r"\A(?:" + candidate_pattern + r")\z")
-    hits = samples.filter(F.col("template_id") != candidate_template_id).filter(
-        F.col("content").rlike(full_line)
+    others = samples.filter(F.col("template_id") != candidate_template_id).select(
+        F.col("template_id").alias("owner"), "content", F.lit("").alias("source")
     )
+    library = [dict(template_id=candidate_template_id, source="", pattern=candidate_pattern, created_at=0)]
+    hits = match_templates(samples.sparkSession, others, library)
     return (
-        hits.groupBy("template_id")
+        hits.filter(F.col("template_id").isNotNull())
+        .groupBy(F.col("owner").alias("template_id"))
         .agg(
             F.count("*").alias("n_conflicts"),
             F.slice(F.collect_list("content"), 1, 5).alias("sample_contents"),

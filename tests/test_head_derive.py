@@ -3,15 +3,17 @@
 import os
 import re
 
+import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 
-from log_parser_cli_spark.functions.templates import to_jvm_pattern
 from log_parser_cli_spark.operators import head_derive
 from log_parser_cli_spark.operators.head_derive import (
     pool_lines,
     propose_head_pattern,
     refine_head_pattern,
 )
+from log_parser_cli_spark.operators.matcher import compile_regex, first_match
 
 
 def _gt_lines_by_source(spark, fixture_dir):
@@ -114,8 +116,21 @@ def test_pipeline_with_derived_heads_matches_configured(spark, fixture_dir, pipe
     assert mine == ref
 
 
-def test_jvm_dialect_conversion():
-    assert to_jvm_pattern(r"^x (?P<content>.*)$") == r"^x (?<content>.*)$"
+def test_non_ascii_digit_heads_score_as_the_kernel_matches():
+    """Words are classified in ASCII and candidates scored through the
+    kernel: on heads of Arabic-Indic digits the derived head is None, or
+    ``first_match`` claims exactly the pool lines the refine loop counted
+    as matched (no ``\\d+`` head that scores every line and matches none)."""
+    arabic = str.maketrans("0123456789", "٠١٢٣٤٥٦٧٨٩")
+    lines = [f"{str(10 + 7 * i).translate(arabic)} INFO worker {i % 4} started" for i in range(20)]
+    pattern, n_unmatched, _ = refine_head_pattern(lines)
+    if pattern is None:
+        return
+    regex = compile_regex(pattern, False)
+    won = [list(rows) for _, rows, _ in first_match(pa.array(lines), np.arange(len(lines)), [regex])]
+    claimed = won[0] if won else []
+    assert claimed == [i for i, ln in enumerate(lines) if regex.rx.match(ln)]
+    assert len(claimed) == len(lines) - n_unmatched
 
 
 def test_stride_pool_collect_twin_of_pool_lines(spark, fixture_dir, monkeypatch):

@@ -42,3 +42,12 @@ def test_signature_and_star():
 def test_mask_tokens_never_collide_with_real_words():
     for tok in MASK_TOKENS.values():
         assert "\x00" in tok
+
+
+def test_non_ascii_digits_stay_literal():
+    """An exported template's ``[A-Za-z0-9_/-]+`` cannot match ``٤٢``, so
+    masking reads digits in ASCII too: a cluster never mixes ``42`` and
+    ``٤٢``."""
+    assert mask_word("42") == MASK_TOKENS["NUM"]
+    for w in ["٤٢", "n=٤٢", "blk_٤٢", "٣.٥"]:
+        assert mask_word(w) == w, w

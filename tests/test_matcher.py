@@ -1,9 +1,11 @@
 """Regex first-match-wins matcher (J2) vs the pure-Python oracle and GT."""
 
+import dataclasses
 import os
 import re
 from collections import Counter
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -11,8 +13,10 @@ import pyspark.sql.functions as F
 
 from log_parser_cli_spark.operators.matcher import (
     compile_regex,
+    first_match,
     match_batch,
     match_templates,
+    python_regex,
 )
 from log_parser_cli_spark.operators.parse import parse_stage
 from log_parser_cli_spark.oracle import load_fixture_table, oracle_counts, oracle_match
@@ -183,6 +187,47 @@ def test_group_that_misses_the_match_is_absent(pattern):
     expected = {g: v for g, v in re.fullmatch(pattern, "a").groupdict().items() if v is not None}
     assert varmaps[0] == expected
     assert compile_regex(pattern, full_line=True).re2 is None
+
+
+@pytest.mark.parametrize(
+    "body, text, owned",
+    [
+        (r"\w+", "café", False),
+        (r"n=\d", "n=٣", False),
+        (r"a\sb", "a\xa0b", False),
+        (r"a\sb", "a\x0bb", False),
+        (r"a\Sb", "a\x0bb", True),
+        (r"a[^\s]b", "a\x0bb", True),
+        (r"a\bé", "aé", True),
+    ],
+    ids=["w-letter", "d-digit", "s-nbsp", "s-vtab", "S-vtab", "not-s-class", "b-boundary"],
+)
+def test_class_rule_is_re2s_on_every_engine(body, text, owned):
+    """``\\w``, ``\\d``, ``\\s`` and ``\\b`` read a line as RE2 does
+    whichever engine runs the pattern: ASCII classes, ``\\s`` without
+    ``\\x0b``. The template on RE2, the same template forced onto Python
+    ``re`` and its optional-group twin (which lands on Python ``re``) give
+    one owner and the same variables."""
+    line, on_re2, on_re = f"{text} ok", rf"^(?P<v1>{body}) ok$", rf"^(?P<v1>{body})? ok$"
+    assert compile_regex(on_re2, True).re2 is not None and compile_regex(on_re, True).re2 is None
+    expected = ("t#1", {"v1": text}) if owned else (None, None)
+    for pattern in (on_re2, on_re):
+        lib = [{"template_id": "t#1", "source": "s", "pattern": pattern, "created_at": 1}]
+        tids, varmaps = match_batch([line], ["s"], lib)
+        assert (tids[0], varmaps[0]) == expected, pattern
+    forced = dataclasses.replace(compile_regex(on_re2, True), re2=None)
+    hits = first_match(pa.array([line]), np.arange(1), [forced])
+    got = [(list(rows), won.to_pylist()) for _, rows, won in hits]
+    assert got == ([([0], [{"v1": text}])] if owned else [])
+
+
+@pytest.mark.parametrize("pattern", [r"(?i)^k ok$", r"^(?i:k) ok$", r"^(?u:\w) ok$"])
+def test_case_insensitive_or_unicode_flag_raises(pattern):
+    """RE2 folds case by Unicode (K and U+212A, s and U+017F), ``re.ASCII``
+    only in ASCII, so no head or template may ask for either flag."""
+    for compile_ in (python_regex, lambda p: compile_regex(p, True)):
+        with pytest.raises(ValueError, match="flag"):
+            compile_(pattern)
 
 
 def test_fixture_patterns_run_on_re2(fixture_dir):

@@ -26,7 +26,12 @@ from log_parser_cli_spark.functions.templates import (
     extract_variables_from_template,
     normalize_placeholder,
 )
-from log_parser_cli_spark.operators.matcher import compile_regex, first_match, match_batch
+from log_parser_cli_spark.operators.matcher import (
+    compile_regex,
+    first_match,
+    match_batch,
+    python_regex,
+)
 
 # literal text between variables: printable, no ⟪⟫ markers
 _literal = st.text(
@@ -166,31 +171,40 @@ def test_derived_head_covers_generated_corpus(lines):
 
 # ---------------------------------------------------------------------------
 # The regex kernel: for ANY small library drawn from a grammar of named and
-# unnamed groups, groups under ``?``/``*``, alternation and ``[...]`` classes
-# holding ``(``, ``)`` or a leading ``]``, anchored by ``^…$`` or not,
+# unnamed groups, groups under ``?``/``*``, alternation, ``[...]`` classes
+# holding ``(``, ``)``, ``[``, ``&`` or a leading ``]``, and the ``\w``,
+# ``\d``, ``\s`` and ``\S`` escapes over lines holding non-ASCII letters,
+# digits and spaces and ``\x0b``, anchored by ``^…$`` or not,
 # ``match_batch`` (RE2 where ``compile_regex`` allows it), ``first_match``
-# forced onto Python ``re`` and ``oracle_match``'s rule (``rx.fullmatch``,
-# the groupdict without None) agree on every line's owner and variables.
+# forced onto Python ``re`` and ``oracle_match``'s rule (``python_regex``'s
+# ``fullmatch``, the groupdict without None) agree on every line's owner and
+# variables.
 # ---------------------------------------------------------------------------
 
-_CHARS = "ab ()]"
+_CHARS = "ab ()][&é٣\xa0\x0b"
 _NOISE = _CHARS + "?P<g1>"  # also the text of a ``(?P<g1>`` rewritten into a class
 _GROUP_NAMES = ["v1", "v2", "g1", "g2", "g3"]  # g<k> clashes with RE2's synthetic names
+# class escapes → the characters their lines draw: RE2's members and the
+# near misses Python's Unicode classes (or its ASCII ``\s``) would take
+_ESCAPES = {r"\w": "a_é", r"\d": "1٣", r"\s": " \xa0\x0b", r"\S": "a\xa0\x0b"}
 
 
 def _escape(c: str) -> str:
-    return "\\" + c if c in "()]" else c
+    return "\\" + c if c in "()][" else c
 
 
 @st.composite
 def _regex_node(draw, names: list[str], depth: int):
     """(pattern text, line generator): ``gen(draw)`` draws a string the
-    pattern's text matches in full."""
-    kinds = ["lit", "cls"] + (["group", "opt", "star", "alt", "seq"] if depth < 3 else [])
+    pattern's text matches in full, or a near miss at a class escape."""
+    kinds = ["lit", "cls", "esc"] + (["group", "opt", "star", "alt", "seq"] if depth < 3 else [])
     kind = draw(st.sampled_from(kinds))
     if kind == "lit":
         text = draw(st.text(alphabet=_CHARS, min_size=1, max_size=3))
         return "".join(map(_escape, text)), lambda d: text
+    if kind == "esc":
+        esc = draw(st.sampled_from(sorted(_ESCAPES)))
+        return esc, lambda d: d(st.sampled_from(_ESCAPES[esc]))
     if kind == "cls":
         members = draw(st.sets(st.sampled_from(_CHARS), min_size=1, max_size=3))
         rest = sorted(members - {"]"})
@@ -249,7 +263,7 @@ def test_regex_kernel_agrees_with_python_re_and_the_oracle(case):
     for line in lines:
         owner = (None, None)
         for t in library:
-            m = re.compile(t["pattern"]).fullmatch(line)
+            m = python_regex(t["pattern"]).fullmatch(line)
             if m is not None:
                 variables = {k: v for k, v in m.groupdict().items() if v is not None}
                 owner = (t["template_id"], variables)

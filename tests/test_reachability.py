@@ -4,6 +4,7 @@ module or function only its own tests use is dead code."""
 
 import ast
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = "log_parser_cli_spark"
@@ -165,13 +166,14 @@ def test_every_option_is_passed_by_a_caller():
 
 
 def test_one_regex_executor():
-    """Only the matcher's kernel calls Arrow's regex kernels; any other
-    package module doing so is a second executor (Catalyst ``rlike`` is out
-    of scope)."""
+    """Only the matcher's kernel calls Arrow's regex kernels, and no package
+    module runs a pattern on Java's regex dialect (Spark ``rlike`` or
+    ``regexp_like``, or a ``to_jvm_pattern`` spelling for them): either is a
+    second executor. ``regexp_extract`` over an events field reads no head
+    or template pattern."""
     kernels = {"extract_regex", "match_substring_regex"}
-    callers = {
-        _module_name(p)
-        for p in (ROOT / PKG).rglob("*.py")
-        if kernels & _referenced_names(ast.parse(p.read_text()))
-    }
+    jvm = re.compile(r"(?i)\b(?:rlike|regexp_like|to_jvm_pattern)\b")
+    files = {_module_name(p): p.read_text() for p in (ROOT / PKG).rglob("*.py")}
+    callers = {m for m, text in files.items() if kernels & _referenced_names(ast.parse(text))}
     assert callers <= {f"{PKG}.operators.matcher"}
+    assert {m: jvm.findall(text) for m, text in files.items() if jvm.search(text)} == {}
