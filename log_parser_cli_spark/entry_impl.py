@@ -350,16 +350,16 @@ def q_derived_library_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline."""
     from log_parser_cli_spark.operators.matcher import match_templates
     from log_parser_cli_spark.plans.export import export_template_library
-    from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims
+    from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims, read_mapping
 
     out, fx = pipeline_out_for(spark, sf_dir)
-    _vocab_rows, _source_heads, sources_df = load_dims(spark, fx)
+    _vocab_rows, _source_heads, sinks = load_dims(spark, fx)
     # the pipeline run just checkpointed the parsed stream — reuse it instead
     # of re-running the mapInArrow parse (twice, since the returned plan is
     # evaluated by the caller after this function exits)
     parsed = spark.read.parquet(os.path.join(out, "parsed"))
-    mapping = spark.read.parquet(os.path.join(out, "template_mapping"))
-    enriched = enrich_stage(parsed, mapping, sources_df)
+    mapping = read_mapping(spark, os.path.join(out, "template_mapping"))
+    enriched = enrich_stage(parsed, mapping, sinks)
     library = export_template_library(spark, enriched)
     star_of = {t["template_id"]: t["template_star"] for t in library}
     matched = match_templates(spark, parsed, library)
@@ -981,12 +981,12 @@ def q_stream_batch_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache, so a repeat is an availableNow no-op. Oracle: the ground truth's
     row count with zero mismatches (any divergence inflates the full-outer
     row count or a mismatch sum)."""
-    from log_parser_cli_spark.plans.pipeline import read_routed
+    from log_parser_cli_spark.plans.pipeline import read_mapping, read_routed
     from log_parser_cli_spark.streaming.stream import stream_replay
 
     out, fx = pipeline_out_for(spark, sf_dir)
     stream_out = _run_dir(sf_dir, "stream")
-    mapping = spark.read.parquet(os.path.join(out, "template_mapping"))
+    mapping = read_mapping(spark, os.path.join(out, "template_mapping"))
     q = stream_replay(spark, fx, stream_out, mapping, available_now=True)
     if not q.awaitTermination(600):
         # on timeout awaitTermination returns False (no raise) — reading

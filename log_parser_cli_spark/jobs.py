@@ -100,7 +100,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.retain_snapshots < 1:
         ap.error("--retain-snapshots must be >= 1 (retention below 1 would vacuum the current snapshot)")
 
-    from log_parser_cli_spark.plans.pipeline import read_routed, run_pipeline
+    from log_parser_cli_spark.plans.pipeline import read_mapping, read_routed, run_pipeline
     from log_parser_cli_spark.session import get_spark
 
     spark = get_spark(app_name=f"lpcs-{args.run_id}", cores=args.cores)
@@ -111,7 +111,7 @@ def main(argv: list[str] | None = None) -> int:
         rc = _maintenance(spark, args)
         spark.stop()
         return rc
-    mapping_df = spark.read.parquet(args.match_only) if args.match_only else None
+    mapping_df = read_mapping(spark, args.match_only) if args.match_only else None
     t0 = time.time()
     result = run_pipeline(
         spark,
@@ -182,12 +182,10 @@ def main(argv: list[str] | None = None) -> int:
 
         # reuse the run's OWN checkpointed parse output — consistent with
         # whatever heads the run used (incl. --derive-heads) and no re-parse
-        _vocab_rows, _source_heads, sources_df = load_dims(spark, args.fixtures)
+        _vocab_rows, _source_heads, sinks = load_dims(spark, args.fixtures)
         parsed = spark.read.parquet(f"{args.out}/parsed")
-        mapping = spark.read.parquet(
-            args.match_only if args.match_only else f"{args.out}/template_mapping"
-        )
-        enriched = enrich_stage(parsed, mapping, sources_df)
+        mapping = read_mapping(spark, args.match_only or f"{args.out}/template_mapping")
+        enriched = enrich_stage(parsed, mapping, sinks)
         library = export_template_library(spark, enriched)
         lib_path = os.path.join(args.out, "template_library")
         lib_df = spark.createDataFrame(

@@ -61,11 +61,10 @@ class Regex:
     re2: str | None
 
 
-def _name_groups(pattern: str) -> str:
-    """``pattern`` with each unnamed capturing group named ``g<k>``, k its
-    group number; escapes and ``[...]`` classes (a leading ``]`` or ``^]``
-    included) are copied as they are."""
-    out, i, k, n = [], 0, 0, len(pattern)
+def _atoms(pattern: str) -> Iterator[tuple[int, str]]:
+    """(start, text) of each atom of ``pattern``: an escape, a ``[...]``
+    class (a leading ``]`` or ``^]`` included) or one character."""
+    i, n = 0, len(pattern)
     while i < n:
         j = i + 1
         if pattern[i] == "\\":
@@ -76,15 +75,18 @@ def _name_groups(pattern: str) -> str:
             while j < n and pattern[j] != "]":
                 j += 2 if pattern[j] == "\\" else 1
             j += 1
-        elif pattern[i] == "(":
-            if not pattern.startswith("(?", i):
-                k += 1
-                out.append(f"(?P<g{k}>")
-                i = j
-                continue
-            k += pattern.startswith("(?P<", i)
-        out.append(pattern[i:j])
+        yield i, pattern[i:j]
         i = j
+
+
+def _name_groups(pattern: str) -> str:
+    """``pattern`` with each unnamed capturing group named ``g<k>``, k its
+    group number; escapes and classes are copied as they are."""
+    out, k = [], 0
+    for i, atom in _atoms(pattern):
+        unnamed = atom == "(" and not pattern.startswith("?", i + 1)
+        k += unnamed or pattern.startswith("(?P<", i)
+        out.append(f"(?P<g{k}>" if unnamed else atom)
     return "".join(out)
 
 
@@ -93,23 +95,28 @@ _SPACE, _NOT_SPACE = (_sre.CATEGORY, _sre.CATEGORY_SPACE), (_sre.CATEGORY, _sre.
 _RE2_CLASS = {_SPACE: [(_sre.LITERAL, c) for c in b"\t\n\f\r "], _NOT_SPACE: [_NOT_SPACE, (_sre.LITERAL, 0x0B)]}
 
 
-def _re2_rule(tree, optional: bool = False) -> bool:
+def _re2_rule(tree, optional: bool = False, multiline: bool = False) -> bool:
     """Rewrite ``tree`` (an ``re._parser`` parse under ``re.ASCII``) in
-    place to RE2's class rule, building new class lists (the parser shares
-    its category lists between parses), and return whether a capturing
-    group can take no part in a match: it sits under a min-0 repeat, in an
-    alternation branch, or in a conditional or negative lookahead. RE2
-    (Arrow's ``extract_regex``) reads such a group as ``""`` where Python
-    ``re`` gives None."""
+    place to RE2's reading: its class rule, in new class lists (the parser
+    shares its category lists between parses), and ``$`` outside multiline
+    mode as ``\\Z``. Return whether a capturing group can take no part in a
+    match: it sits under a min-0 repeat, in an alternation branch, or in a
+    conditional or negative lookahead. RE2 (Arrow's ``extract_regex``) reads
+    such a group as ``""`` where Python ``re`` gives None."""
     can_miss = False
     for i, (op, av) in enumerate(tree):
         if op is _sre.IN:
             tree[i] = (op, [x for item in av for x in _RE2_CLASS.get(item, [item])])
             continue
+        if op is _sre.AT and av is _sre.AT_END and not multiline:
+            tree[i] = (op, _sre.AT_END_STRING)
+            continue
+        inner_multiline = multiline
         if op is _sre.SUBPATTERN:
             if av[1] & (re.IGNORECASE | re.UNICODE):
                 raise ValueError("scoped case-insensitive or Unicode flag")
             can_miss |= av[0] is not None and optional
+            inner_multiline = (multiline or bool(av[1] & re.MULTILINE)) and not av[2] & re.MULTILINE
         inner = optional or op in (_sre.BRANCH, _sre.GROUPREF_EXISTS, _sre.ASSERT_NOT) or (
             op in (_sre.MAX_REPEAT, _sre.MIN_REPEAT, _sre.POSSESSIVE_REPEAT) and av[0] == 0
         )
@@ -117,7 +124,7 @@ def _re2_rule(tree, optional: bool = False) -> bool:
         while stack:
             x = stack.pop()
             if isinstance(x, _sre_parse.SubPattern):
-                can_miss |= _re2_rule(x, inner)
+                can_miss |= _re2_rule(x, inner, inner_multiline)
             elif isinstance(x, (tuple, list)):
                 stack.extend(x)
     return can_miss
@@ -125,10 +132,15 @@ def _re2_rule(tree, optional: bool = False) -> bool:
 
 def _compile_re2_rule(pattern: str) -> tuple[re.Pattern[str], bool]:
     """``python_regex(pattern)`` and whether a group in it can miss a match."""
+    if any(  # RE2 reads `{,` as a literal (Python: a 0–n repeat) and `[:` as a POSIX class
+        pattern.startswith("{,", i) or atom[0] == "[" and "[:" in re.sub(r"\\.", "", atom[1:], flags=re.S)
+        for i, atom in _atoms(pattern)
+    ):
+        raise ValueError(f"{pattern!r} has `{{,` or a `[:` class, which RE2 reads otherwise")
     tree = _sre_parse.parse(pattern, re.ASCII)
     if tree.state.flags & re.IGNORECASE:
         raise ValueError(f"case-insensitive flag in {pattern!r}")
-    can_miss = _re2_rule(tree)
+    can_miss = _re2_rule(tree, multiline=bool(tree.state.flags & re.MULTILINE))
     return _sre_compile.compile(tree), can_miss
 
 
@@ -136,7 +148,8 @@ def python_regex(pattern: str) -> re.Pattern[str]:
     """The one Python ``re`` spelling of a head or template pattern, under
     RE2's class rule: ``\\w``, ``\\d``, ``\\s`` and ``\\b`` are ASCII,
     ``\\s`` is ``[\\t\\n\\f\\r ]``, and a case-insensitive (RE2 folds
-    Unicode, ``re.ASCII`` only ASCII) or Unicode flag raises ValueError."""
+    Unicode, ``re.ASCII`` only ASCII) or Unicode flag, ``{,`` or a POSIX
+    ``[:`` class raises ValueError; ``$`` is RE2's (end of text) too."""
     return _compile_re2_rule(pattern)[0]
 
 

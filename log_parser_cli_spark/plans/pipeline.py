@@ -14,8 +14,8 @@ Scale shape (designed for 10^12 rows / 1000 executors, exercised on local[N]):
 - stage boundaries are shuffle exchanges; the only wide op on the full fact
   stream is the final fan-out repartition (salted: sink × template × doc-hash
   salt) and the aggregate shuffle, which runs on pre-combined map-side rows;
-- template mapping and source dims are broadcast (KB-MB) → all enrichment
-  joins are broadcast-hash, no shuffle;
+- the template mapping is broadcast (KB-MB) → enrichment is one
+  broadcast-hash join, no shuffle; the sink is a literal map lookup;
 - discovery aggregates (source, content_sig) — cardinality ~templates, not
   rows — then runs Drain on the driver over that tiny set;
 - AQE handles the deliberately-skewed hot source; the salt bounds the largest
@@ -41,10 +41,9 @@ from log_parser_cli_spark.plans.checkpoint import Manifest, source_digest
 UNPARSED = "__UNPARSED__"
 UNMATCHED = "__UNMATCHED__"
 
-# Schema of every template mapping built here. ``salt_share`` is the
-# template's discovery row count over the hottest template's (1.0 for the
-# hottest); NULL where unknown. Mappings written before the column existed
-# have only the first four columns; every consumer accepts both shapes.
+# Schema of every template mapping. ``salt_share``: the template's discovery
+# row count over the hottest template's (1.0 for the hottest), NULL where
+# unknown, as ``read_mapping`` reads it from a dir written before it existed.
 MAPPING_SCHEMA = (
     "source string, content_sig string, template_id string, template_star string,"
     " salt_share double"
@@ -88,14 +87,13 @@ def _reject_duplicates(table, key: str, name: str) -> None:
         raise ValueError(f"{name} lists {key} more than once: {dups}")
 
 
-def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, str]], dict[str, tuple[str, int]], DataFrame]:
+def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, str]], dict[str, tuple[str, int]], dict[str, str]]:
     """Load the small dims on the driver with pyarrow, submitting no job:
     ``vocab_rows`` ((token_id, text) in file order), ``source_heads``
-    (source → (head_pattern, content_group)) and ``sources_df``, the sources
-    table as a local relation, so a plan that joins it broadcasts a
-    ``LocalTableScan``. Raises ValueError when ``vocab.parquet`` repeats a
-    token_id (the vocab would render whichever word came last) or
-    ``sources.parquet`` a source (the enrich join would duplicate its rows)."""
+    (source → (head_pattern, content_group)) and ``sinks`` (source → sink).
+    Raises ValueError when ``vocab.parquet`` repeats a token_id (the vocab
+    would render whichever word came last) or ``sources.parquet`` a source
+    (its head and sink would be whichever row came last)."""
     import pyarrow.parquet as pq
 
     vocab = pq.read_table(os.path.join(fixture_dir, "vocab.parquet"), columns=["token_id", "text"])
@@ -109,7 +107,13 @@ def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, st
             *(sources[c].to_pylist() for c in ("source", "head_pattern", "content_group"))
         )
     }
-    return vocab_rows, source_heads, spark.createDataFrame(sources)
+    return vocab_rows, source_heads, dict(zip(sources["source"].to_pylist(), sources["sink"].to_pylist()))
+
+
+def read_mapping(spark: SparkSession, path: str) -> DataFrame:
+    """The mapping dir at ``path`` under ``MAPPING_SCHEMA``: no schema
+    inference job, and a dir written without ``salt_share`` reads it NULL."""
+    return spark.read.schema(MAPPING_SCHEMA).parquet(path)
 
 
 def _top_signatures(parsed: DataFrame, cap: int, known: DataFrame | None = None) -> list:
@@ -209,8 +213,7 @@ def extend_mapping(
 
     Both driver-side sets (frozen distinct templates, capped novel signatures)
     are small; the new batch is scanned once. Appended rows carry a NULL
-    ``salt_share`` (routed at the full salt), as do all rows when the frozen
-    mapping is a legacy four-column one.
+    ``salt_share`` (routed at the full salt).
     """
     from log_parser_cli_spark.functions.masking import signature_to_star
     from log_parser_cli_spark.plans.export import template_ordinal
@@ -267,7 +270,7 @@ def extend_mapping(
         for sig in cluster.signatures:
             new_rows.append((source, sig, tid, cluster.template_star, None))
     appended = spark.createDataFrame(new_rows, MAPPING_SCHEMA)
-    return frozen_mapping.unionByName(appended, allowMissingColumns=True)
+    return frozen_mapping.unionByName(appended)
 
 
 def refine_mapping(
@@ -339,28 +342,26 @@ def refine_mapping(
     return refined, res["reports"]
 
 
-def enrich_stage(parsed: DataFrame, mapping: DataFrame, sources_df: DataFrame) -> DataFrame:
-    """Broadcast-join enrichment (J1): signature → template, source → sink.
-
-    Pure Catalyst; both build sides are tiny ⇒ broadcast-hash joins, no
-    shuffle. Variable extraction is a JVM higher-order-function expression
-    (zip content words against the template's <*> skeleton) — no Python.
-    """
+def enrich_stage(parsed: DataFrame, mapping: DataFrame, sinks: dict[str, str]) -> DataFrame:
+    """Enrichment (J1): signature → template by a broadcast-hash join against
+    the tiny mapping; source → sink by a literal map lookup (NULL for a source
+    ``sinks`` lacks). Variable extraction is a JVM higher-order-function
+    expression (zip content words against the template's <*> skeleton)."""
     template_id = F.when(~F.col("head_matched"), F.lit(UNPARSED)).otherwise(
         F.coalesce(F.col("template_id"), F.lit(UNMATCHED))
     )
     template_star = F.coalesce(F.col("template_star"), F.lit(""))
+    sink_of = F.create_map(*[F.lit(x) for kv in sorted(sinks.items()) for x in kv])
     # two projections, not one analysis per withColumn: plan building sits on
     # each micro-batch's critical path
     return (
         parsed.join(F.broadcast(mapping), ["source", "content_sig"], "left")
-        .join(F.broadcast(sources_df.select("source", "vendor", "sink")), ["source"], "left")
         .withColumns(
             {
                 "template_id": template_id,
                 "sink": F.when(
                     template_id.isin(UNPARSED, UNMATCHED), F.lit("sink-failures")
-                ).otherwise(F.col("sink")),
+                ).otherwise(sink_of[F.col("source")]),
                 "template_star": template_star,
                 # word-level variables: positions where the template skeleton
                 # disagrees with the content (i.e. <*>-bearing words). v1..vN
@@ -395,22 +396,17 @@ def route_frame(enriched: DataFrame, salt_buckets: int) -> DataFrame:
     salts keyed by hash(doc_id). The hottest template (share 1.0) gets all
     ``salt_buckets``, so the hot source cannot serialize into one writer task;
     a template with share ≤ 1/``salt_buckets`` gets one salt, hence one file
-    per (sink, template_id) dir. Where the share is unknown — UNPARSED and
-    UNMATCHED rows (no mapping row joined: an UNPARSED row's content_sig is
-    NULL), rows added by ``extend_mapping``/``refine_mapping``, a legacy
-    four-column mapping, a frame with no ``salt_share`` column — the salt is
-    the full ``salt_buckets``. The share rides in the mapping's broadcast
-    join, so sizing adds no job, join or exchange.
+    per (sink, template_id) dir. A NULL share — UNPARSED and UNMATCHED rows
+    (no mapping row joined), rows added by ``extend_mapping``/``refine_mapping``,
+    a mapping dir written before the column existed — gets the full
+    ``salt_buckets``. The share rides in the mapping's broadcast join, so
+    sizing adds no job, join or exchange.
     """
-    salts = F.lit(salt_buckets)
-    cols = ROUTED_COLS
-    if "salt_share" in enriched.columns:
-        cols += ("salt_share",)
-        salts = F.coalesce(F.ceil(F.col("salt_share") * salt_buckets), salts)
+    salts = F.coalesce(F.ceil(F.col("salt_share") * salt_buckets), F.lit(salt_buckets))
     # content/content_sig are derivable (render+mask of tokens) — not carried
     # through the fan-out shuffle; tokens ride untouched.
     return (
-        enriched.select(*cols)
+        enriched.select(*ROUTED_COLS, "salt_share")
         .repartition(F.col("sink"), F.col("template_id"), F.pmod(F.hash("doc_id"), salts))
         .select(*ROUTED_COLS)
     )
@@ -422,13 +418,9 @@ def route_stage(
     salt_buckets: int = 16,
     retain_snapshots: int = 2,
 ) -> dict[str, int]:
-    """Deterministic fan-out write partitioned by (sink, template_id) — K1.
-
-    Salting (``route_frame``): a template's rows spread over
-    ``ceil(salt_buckets × salt_share)`` tasks keyed by hash(doc_id), or over
-    ``salt_buckets`` where the share is unknown — the hot template cannot
-    serialize into one writer task, and cold templates are not split into
-    many tiny files. Original ``tokens`` ride along untouched.
+    """Deterministic fan-out write partitioned by (sink, template_id) — K1,
+    salted per template by ``route_frame``. Original ``tokens`` ride along
+    untouched.
 
     The write is a SNAPSHOT COMMIT (plans/snapshots.py): data lands in an
     immutable uniquely-named dir and becomes visible only when the manifest
@@ -545,10 +537,10 @@ def run_replay(
     no intermediate persist — then the per-sink aggregates reduce the routed
     files. Returns the routed row count, observed on the route write.
     """
-    vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
+    vocab_rows, source_heads, sinks = load_dims(spark, fixture_dir)
     seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
     parsed = parse_stage(spark, seq_df, vocab_rows, source_heads)
-    enriched = enrich_stage(parsed, mapping_df, sources_df)
+    enriched = enrich_stage(parsed, mapping_df, sinks)
     counts = route_stage(enriched, out_dir, salt_buckets=salt_buckets)
     aggregate_stage(spark, read_routed(spark, out_dir), out_dir)
     return counts["rows"]
@@ -600,7 +592,7 @@ def run_pipeline(
             f"cannot resume {out_dir}: its stages were written by engine source "
             f"{manifest.digest}, this is {source_digest()}"
         )
-    vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
+    vocab_rows, source_heads, sinks = load_dims(spark, fixture_dir)
     if seq_df is None:
         seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
     if derive_heads:
@@ -674,12 +666,10 @@ def run_pipeline(
             return {**info, **obs.get}
 
         stage("discover", do_discover)
-        mapping_df_local = spark.read.parquet(mapping_path)
-    else:
-        mapping_df_local = mapping_df
+        mapping_df = read_mapping(spark, mapping_path)
 
     # -- stage 3: enrich + route
-    enriched = enrich_stage(parsed, mapping_df_local, sources_df)
+    enriched = enrich_stage(parsed, mapping_df, sinks)
 
     stage(
         "route",

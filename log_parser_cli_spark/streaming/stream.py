@@ -12,8 +12,8 @@ Streaming. Both entry points run one micro-batch path (``_start``):
 A micro-batch goes through the batch route path, with one salt: its rows
 hash-partition by (sink, template_id), so each template dir gets exactly one
 file per batch and the writes spread over the exchange's tasks. The mapping
-each batch joins is a local relation (``pin``) and so is the sources dim, as
-``load_dims`` returns it: their broadcasts scan no file and re-run no lineage.
+each batch joins is a local relation (``pin``): its broadcast scans no file
+and re-runs no lineage.
 
 ``commit_batch`` is the same transactional table the batch route stage
 writes: a retried batch replaces its own dirs, a killed batch is never
@@ -47,7 +47,7 @@ def pin(spark: SparkSession, df: DataFrame) -> DataFrame:
     return spark.createDataFrame(df.toArrow())
 
 
-def batch_frame(parsed: DataFrame, mapping: DataFrame, sources_df: DataFrame) -> DataFrame:
+def batch_frame(parsed: DataFrame, mapping: DataFrame, sinks: dict[str, str]) -> DataFrame:
     """The rows one micro-batch commits: ``parsed`` enriched against
     ``mapping``, behind the batch route's payload exchange. The batch id is
     the snapshot manifest's, not a column."""
@@ -55,7 +55,7 @@ def batch_frame(parsed: DataFrame, mapping: DataFrame, sources_df: DataFrame) ->
     # template dir gets one file per batch and the batch's writes still spread
     # over the exchange's tasks; on 15k-row batches salt 4 wrote 65 files
     # instead of 49 and salt 16 wrote 119, both slower per batch
-    return route_frame(enrich_stage(parsed, mapping, sources_df), salt_buckets=1)
+    return route_frame(enrich_stage(parsed, mapping, sinks), salt_buckets=1)
 
 
 def _start(
@@ -69,8 +69,7 @@ def _start(
 ):
     """Start the checkpointed stream; ``mapping_for(parsed, batch_id)`` gives
     the mapping each micro-batch is enriched against."""
-    # sources_df is already a local relation: a batch's broadcast scans no file
-    vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
+    vocab_rows, source_heads, sinks = load_dims(spark, fixture_dir)
     seq_schema = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet")).schema
     reader = spark.readStream.schema(seq_schema).option("maxFilesPerTrigger", max_files_per_trigger)
     if stream_dir is None:
@@ -89,7 +88,7 @@ def _start(
         # mid-batch leaves an unreferenced staged dir — readers on
         # read_routed never observe a torn batch)
         table.commit_batch(
-            batch_frame(parsed, mapping_for(parsed, batch_id), sources_df),
+            batch_frame(parsed, mapping_for(parsed, batch_id), sinks),
             batch_id=batch_id,
             partition_by=("sink", "template_id"),
         )

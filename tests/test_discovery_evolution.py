@@ -195,12 +195,16 @@ def test_extend_mapping_keeps_ids_stable_and_appends_dense(spark, fixture_dir, p
     assert sorted(map(tuple, again.collect())) == ext_rows
 
 
-def test_extend_mapping_accepts_legacy_four_column_mapping(spark, pipeline_out):
-    """A frozen mapping written before salt_share existed still extends: the
-    union gains the column as NULL (routed at the full salt), and the rows
-    are the ones the current-schema mapping extends to."""
-    frozen = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
-    legacy = frozen.select("source", "content_sig", "template_id", "template_star")
+def test_extend_mapping_accepts_legacy_four_column_mapping(spark, pipeline_out, tmp_path):
+    """A frozen mapping dir written before salt_share existed still extends:
+    ``read_mapping`` reads the column as NULL (routed at the full salt), and
+    the rows are the ones the current-schema mapping extends to."""
+    from log_parser_cli_spark.plans.pipeline import read_mapping
+
+    frozen = read_mapping(spark, os.path.join(pipeline_out, "template_mapping"))
+    legacy_path = str(tmp_path / "legacy_mapping")
+    frozen.select("source", "content_sig", "template_id", "template_star").write.parquet(legacy_path)
+    legacy = read_mapping(spark, legacy_path)
     num = "\x00NUM\x00"
     new_parsed = spark.createDataFrame(
         [("doc-z00000009", "apache", f"legacy shape event {num}", True)],

@@ -26,11 +26,11 @@ def test_placeholder_from_star_embeds_values():
 
 
 def _library(spark, fixture_dir, pipeline_out):
-    vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
+    vocab_rows, source_heads, sinks = load_dims(spark, fixture_dir)
     seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
     parsed = parse_stage(spark, seq, vocab_rows, source_heads)
     mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
-    enriched = enrich_stage(parsed, mapping, sources_df)
+    enriched = enrich_stage(parsed, mapping, sinks)
     return parsed, export_template_library(spark, enriched)
 
 

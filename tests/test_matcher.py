@@ -230,6 +230,34 @@ def test_case_insensitive_or_unicode_flag_raises(pattern):
             compile_(pattern)
 
 
+@pytest.mark.parametrize("pattern", [r"^a{,2}$", r"^[[:digit:]]$"], ids=["open-repeat", "posix-class"])
+def test_syntax_re2_reads_otherwise_raises(pattern):
+    """``{,`` is a literal on RE2 and a 0–n repeat on Python ``re``; ``[:``
+    in a class is RE2's POSIX class and plain characters on Python ``re``."""
+    for compile_ in (python_regex, lambda p: compile_regex(p, True)):
+        with pytest.raises(ValueError, match="which RE2 reads otherwise"):
+            compile_(pattern)
+
+
+def test_dollar_is_end_of_text_on_every_engine(spark, tmp_path):
+    """``$`` does not match before a final newline: RE2 reads it as the end
+    of the text, and so do the same head forced onto Python ``re``, the
+    parse stage and ``oracle.oracle_match``; under ``(?m)`` it does."""
+    head = r"^x (?P<content>.*)$"
+    regex = compile_regex(head, full_line=False)
+    assert regex.re2 is not None
+    for r in (regex, dataclasses.replace(regex, re2=None)):
+        assert list(first_match(pa.array(["x ab\n"]), np.arange(1), [r])) == []
+    assert python_regex("(?m)" + head).match("x ab\n")["content"] == "ab"
+    d = _write_fixture(str(tmp_path), ["x ab\n", "x ab"], head, 1, [])
+    vocab_rows, source_heads, _ = load_dims(spark, d)
+    seq = spark.read.parquet(f"{d}/sequences.parquet")
+    parsed = parse_stage(spark, seq, vocab_rows, source_heads).collect()
+    got = {r.doc_id: (r.content, r.head_matched) for r in parsed}
+    assert got == {m.doc_id: (m.content, m.head_matched) for m in oracle_match(d)}
+    assert {k: c for k, (c, matched) in got.items() if matched} == {"d1": "ab"}
+
+
 def test_fixture_patterns_run_on_re2(fixture_dir):
     """No fixture head or template has a group that can miss a match (the one
     ``?`` is a literal ``\\?``): all 6 heads and 48 templates stay on RE2."""
@@ -249,7 +277,7 @@ def _write_fixture(d: str, lines: list[str], head: str, group: int, templates: l
     tokens = [[words.index(w) for w in line.split(" ")] for line in lines]
     for name, cols in {
         "vocab": {"token_id": range(len(words)), "text": words},
-        "sources": {"source": ["s"], "head_pattern": [head], "content_group": [group]},
+        "sources": {"source": ["s"], "head_pattern": [head], "content_group": [group], "sink": ["sink-s"]},
         "templates": {
             c: [t[c] for t in templates] for c in ("template_id", "source", "pattern", "created_at")
         },

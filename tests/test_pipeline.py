@@ -193,22 +193,19 @@ def test_aggregate_rejects_star_that_is_not_a_function_of_its_template(spark, tm
 def test_load_dims_submits_no_job_and_equals_spark_read(spark, fixture_dir):
     """The dims come off the driver's pyarrow read with no job, equal to what
     a Spark read of the same files gives: vocab rows in file order, the
-    source heads and the sources frame's schema and rows."""
+    source heads and the source → sink map."""
     from log_parser_cli_spark.plans.pipeline import load_dims
 
-    (vocab_rows, source_heads, sources_df), jobs = _jobs_of(
+    (vocab_rows, source_heads, sinks), jobs = _jobs_of(
         spark, "load-dims", lambda: load_dims(spark, fixture_dir)
     )
     assert jobs == []
     vocab = spark.read.parquet(os.path.join(fixture_dir, "vocab.parquet")).collect()
     assert vocab_rows == [(r.token_id, r.text) for r in vocab]
     assert all(type(i) is int and type(w) is str for i, w in vocab_rows)
-    sources = spark.read.parquet(os.path.join(fixture_dir, "sources.parquet"))
-    assert source_heads == {
-        r.source: (r.head_pattern, r.content_group) for r in sources.collect()
-    }
-    assert sources_df.schema == sources.schema
-    assert sorted(sources_df.collect()) == sorted(sources.collect())
+    sources = spark.read.parquet(os.path.join(fixture_dir, "sources.parquet")).collect()
+    assert source_heads == {r.source: (r.head_pattern, r.content_group) for r in sources}
+    assert sinks == {r.source: r.sink for r in sources}
 
 
 @pytest.mark.parametrize(
@@ -216,7 +213,7 @@ def test_load_dims_submits_no_job_and_equals_spark_read(spark, fixture_dir):
 )
 def test_load_dims_rejects_a_repeated_key(spark, fixture_dir, tmp_path, name, key, row):
     """A token_id or source listed twice raises, naming it, instead of
-    rendering the last word or duplicating the source's routed rows."""
+    rendering the last word or taking the last row's head and sink."""
     import re
 
     import pyarrow as pa
@@ -236,16 +233,57 @@ def test_load_dims_rejects_a_repeated_key(spark, fixture_dir, tmp_path, name, ke
 
 
 def test_replay_job_count(spark, fixture_dir, pipeline_out, tmp_path):
-    """A replay pass submits at most 8 Spark jobs: the dims load and the
-    aggregate's two table writes run on the driver and submit none."""
-    from log_parser_cli_spark.plans.pipeline import run_replay
+    """A replay pass submits at most 7 Spark jobs: the dims load and the
+    aggregate's two table writes run on the driver and submit none, and the
+    sink lookup broadcasts nothing."""
+    from log_parser_cli_spark.plans.pipeline import read_mapping, run_replay
 
-    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    mapping = read_mapping(spark, os.path.join(pipeline_out, "template_mapping"))
     rows, jobs = _jobs_of(
         spark, "replay", lambda: run_replay(spark, fixture_dir, str(tmp_path), mapping)
     )
     assert rows == spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet")).count()
-    assert len(jobs) <= 8, len(jobs)
+    assert len(jobs) <= 7, len(jobs)
+
+
+def test_stream_pass_job_count(spark, fixture_dir, pipeline_out, tmp_path):
+    """A ``stream-microbatch``-shaped pass (``stream_replay`` of 2 files, one
+    micro-batch each, then ``read_routed`` and ``aggregate_stage``) submits at
+    most 12 Spark jobs. The stream's own thread runs its jobs under the
+    query's run id as job group, so both groups are counted."""
+    from log_parser_cli_spark.plans.pipeline import aggregate_stage, read_mapping
+    from log_parser_cli_spark.streaming.stream import stream_replay
+
+    seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
+    stream_dir = str(tmp_path / "stream_src")
+    ordinal = F.substring("doc_id", 5, 9).cast("long")
+    seq.filter(ordinal % 2 == 0).coalesce(1).write.parquet(stream_dir)
+    seq.filter(ordinal % 2 == 1).coalesce(1).write.mode("append").parquet(stream_dir)
+    mapping = read_mapping(spark, os.path.join(pipeline_out, "template_mapping"))
+    out = str(tmp_path / "stream_out")
+
+    def stream_pass():
+        q = stream_replay(spark, fixture_dir, out, mapping, stream_dir=stream_dir)
+        assert q.awaitTermination(120)
+        aggregate_stage(spark, read_routed(spark, out), out)
+        return q
+
+    q, jobs = _jobs_of(spark, "stream-pass", stream_pass)
+    assert [p["numInputRows"] > 0 for p in q.recentProgress].count(True) == 2
+    stream_jobs = list(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert stream_jobs and len(jobs) + len(stream_jobs) <= 12, (jobs, stream_jobs)
+
+
+def test_enrich_plan_joins_once(spark, fixture_dir, pipeline_out):
+    """Enrichment joins the mapping and nothing else: the sink is a literal
+    map lookup, so the optimized plan holds exactly one Join."""
+    from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims, read_mapping
+
+    _, _, sinks = load_dims(spark, fixture_dir)
+    parsed = spark.read.parquet(os.path.join(pipeline_out, "parsed"))
+    mapping = read_mapping(spark, os.path.join(pipeline_out, "template_mapping"))
+    plan = enrich_stage(parsed, mapping, sinks)._jdf.queryExecution().optimizedPlan().toString()
+    assert [ln.lstrip(" :+-").split(" ")[0] for ln in plan.splitlines()].count("Join") == 1, plan
 
 
 def test_routed_partition_layout(pipeline_out):
@@ -270,9 +308,20 @@ def test_salted_fanout_splits_hot_template(spark, fixture_dir, pipeline_out, tmp
     """
     import glob
 
-    from log_parser_cli_spark.plans.pipeline import read_routed, route_stage, routed_data_dirs
+    from pyspark.errors import AnalysisException
 
-    enriched = read_routed(spark, pipeline_out)
+    from log_parser_cli_spark.plans.pipeline import (
+        read_routed,
+        route_frame,
+        route_stage,
+        routed_data_dirs,
+    )
+
+    # routed rows carry no share: the route takes one shape, so they need a
+    # NULL one, which routes every template at the full salt
+    with pytest.raises(AnalysisException, match="salt_share"):
+        route_frame(read_routed(spark, pipeline_out), salt_buckets=4)
+    enriched = read_routed(spark, pipeline_out).withColumn("salt_share", F.lit(None).cast("double"))
     counts = spark.read.parquet(os.path.join(pipeline_out, "sink_counts"))
     hot = counts.orderBy(F.desc("n_sequences")).first()
 
@@ -304,18 +353,19 @@ def test_salt_sized_by_template_share(spark, fixture_dir, pipeline_out, tmp_path
     from log_parser_cli_spark.plans.pipeline import (
         enrich_stage,
         load_dims,
+        read_mapping,
         route_stage,
         routed_data_dirs,
     )
 
     salt_buckets = 4
-    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    mapping = read_mapping(spark, os.path.join(pipeline_out, "template_mapping"))
     shares = dict(mapping.select("template_id", "salt_share").distinct().collect())
     assert len(shares) == mapping.select("template_id").distinct().count()  # one share per template
     assert max(shares.values()) == 1.0
-    _, _, sources_df = load_dims(spark, fixture_dir)
+    _, _, sinks = load_dims(spark, fixture_dir)
     parsed = spark.read.parquet(os.path.join(pipeline_out, "parsed"))
-    enriched = enrich_stage(parsed, mapping, sources_df)
+    enriched = enrich_stage(parsed, mapping, sinks)
 
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
@@ -337,16 +387,18 @@ def test_salt_sized_by_template_share(spark, fixture_dir, pipeline_out, tmp_path
 
 
 def test_legacy_four_column_mapping_routes_same_rows(spark, fixture_dir, pipeline_out, tmp_path):
-    """--match-only with a mapping written before salt_share existed: the
-    route falls back to the full salt and routes the same rows and tokens."""
-    from log_parser_cli_spark.plans.pipeline import run_pipeline
+    """--match-only with a mapping dir written before salt_share existed:
+    ``read_mapping`` reads the share as NULL, so the route falls back to the
+    full salt and routes the same rows and tokens."""
+    from log_parser_cli_spark.plans.pipeline import read_mapping, run_pipeline
 
     legacy_path = str(tmp_path / "legacy_mapping")
     spark.read.parquet(os.path.join(pipeline_out, "template_mapping")).select(
         "source", "content_sig", "template_id", "template_star"
     ).write.parquet(legacy_path)
-    legacy = spark.read.parquet(legacy_path)
-    assert "salt_share" not in legacy.columns
+    assert "salt_share" not in spark.read.parquet(legacy_path).columns
+    legacy = read_mapping(spark, legacy_path)
+    assert legacy.filter(legacy.salt_share.isNotNull()).count() == 0
 
     out = str(tmp_path / "legacy_run")
     res = run_pipeline(spark, fixture_dir, out, run_id="legacy", mapping_df=legacy)
