@@ -18,8 +18,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from log_parser_cli_spark.datagen import GEN_VERSION, ensure_fixtures, fixtures_for_sf_dir
-from log_parser_cli_spark.extras.dedup import SIMHASH_CHUNKS
+from log_parser_cli_spark.extras.dedup import MINHASH_BANDS, MINHASH_HASHES, SIMHASH_BITS, SIMHASH_CHUNKS
 from log_parser_cli_spark.plans.checkpoint import source_digest
+from log_parser_cli_spark.plans.pipeline import (
+    UNPARSED,
+    discover_templates,
+    enrich_stage,
+    extend_mapping,
+    load_dims,
+    read_mapping,
+    read_parsed,
+    read_routed,
+    read_sequences,
+    run_pipeline,
+)
 
 # Names bench.py's frozen ``_mapping-v{N}`` discovery cache; data/runs dirs
 # are keyed on the engine source itself (``source_digest``).
@@ -44,8 +56,6 @@ def _run_dir(sf_dir: str, kind: str = "") -> str:
 
 def pipeline_out_for(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Run (or reuse) the full pipeline for this sf; returns (out_dir, fixture_dir)."""
-    from log_parser_cli_spark.plans.pipeline import run_pipeline
-
     fixture_dir = fixtures_for_sf_dir(sf_dir)
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     out_dir = _run_dir(sf_dir)
@@ -57,9 +67,9 @@ def _tbl(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _fx(name: str, sf: str = "sf0.01") -> str:
+def _fx(name: str) -> str:
     """Absolute fixture parquet path for oracle SQL (driver compares at sf0.01)."""
-    return os.path.join(ensure_fixtures(sf), f"{name}.parquet")
+    return os.path.join(ensure_fixtures("sf0.01"), f"{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -78,12 +88,10 @@ def q_pipeline_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_route_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, fx = pipeline_out_for(spark, sf_dir)
-    from log_parser_cli_spark.plans.pipeline import read_routed
-
     routed = read_routed(spark, out).select(
         "doc_id", F.col("tokens").alias("routed_tokens")
     )
-    seq = spark.read.parquet(os.path.join(fx, "sequences.parquet")).select("doc_id", "tokens")
+    seq = read_sequences(spark, fx).select("doc_id", "tokens")
     return routed.join(seq, "doc_id", "full").agg(
         F.count("*").cast("long").alias("n_rows"),
         F.sum(
@@ -110,8 +118,6 @@ def q_pipeline_ntok_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, _ = pipeline_out_for(spark, sf_dir)
-    from log_parser_cli_spark.plans.pipeline import read_routed
-
     routed = read_routed(spark, out)
     return (
         routed.withColumn(
@@ -136,11 +142,10 @@ def q_match_regex_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.operators.matcher import match_templates
     from log_parser_cli_spark.operators.parse import parse_stage
     from log_parser_cli_spark.oracle import load_fixture_table
-    from log_parser_cli_spark.plans.pipeline import load_dims
 
     fx = fixtures_for_sf_dir(sf_dir)
     vocab_rows, source_heads, _ = load_dims(spark, fx)
-    seq = spark.read.parquet(os.path.join(fx, "sequences.parquet"))
+    seq = read_sequences(spark, fx)
     parsed = parse_stage(spark, seq, vocab_rows, source_heads)
     # mapInPandas ships every input column through the Python boundary
     # (Spark cannot prune through an opaque function — guide §4.1); this
@@ -160,11 +165,10 @@ def q_match_regex_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_head_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.operators.parse import parse_stage
-    from log_parser_cli_spark.plans.pipeline import load_dims
 
     fx = fixtures_for_sf_dir(sf_dir)
     vocab_rows, source_heads, _ = load_dims(spark, fx)
-    seq = spark.read.parquet(os.path.join(fx, "sequences.parquet"))
+    seq = read_sequences(spark, fx)
     parsed = parse_stage(spark, seq, vocab_rows, source_heads)
     return parsed.groupBy("source", "head_matched").agg(
         F.count("*").cast("long").alias("n_rows")
@@ -330,8 +334,6 @@ def q_pipeline_eval_vs_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_parser_cli_spark.eval.metrics import accuracy_metrics
 
     out, fx = pipeline_out_for(spark, sf_dir)
-    from log_parser_cli_spark.plans.pipeline import read_routed
-
     routed = read_routed(spark, out).select(
         "doc_id", F.col("template_id").alias("pred_id")
     )
@@ -350,14 +352,13 @@ def q_derived_library_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline."""
     from log_parser_cli_spark.operators.matcher import match_templates
     from log_parser_cli_spark.plans.export import export_template_library
-    from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims, read_mapping
 
     out, fx = pipeline_out_for(spark, sf_dir)
     _vocab_rows, _source_heads, sinks = load_dims(spark, fx)
     # the pipeline run just checkpointed the parsed stream — reuse it instead
     # of re-running the mapInArrow parse (twice, since the returned plan is
     # evaluated by the caller after this function exits)
-    parsed = spark.read.parquet(os.path.join(out, "parsed"))
+    parsed = read_parsed(spark, read_sequences(spark, fx).schema, os.path.join(out, "parsed"))
     mapping = read_mapping(spark, os.path.join(out, "template_mapping"))
     enriched = enrich_stage(parsed, mapping, sinks)
     library = export_template_library(spark, enriched)
@@ -441,16 +442,10 @@ def q_mapping_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same GT per-(source, template_star) count as pipeline_sink_counts.
     """
     from log_parser_cli_spark.operators.parse import parse_stage
-    from log_parser_cli_spark.plans.pipeline import (
-        UNPARSED,
-        discover_templates,
-        extend_mapping,
-        load_dims,
-    )
 
     fx = fixtures_for_sf_dir(sf_dir)
     vocab_rows, source_heads, _ = load_dims(spark, fx)
-    seq = spark.read.parquet(os.path.join(fx, "sequences.parquet"))
+    seq = read_sequences(spark, fx)
     parsed = parse_stage(spark, seq, vocab_rows, source_heads).persist()
     try:
         ordinal = F.substring("doc_id", 5, 9).cast("long")
@@ -490,8 +485,6 @@ def q_pipeline_with_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     template ends up deleted and the final per-(source, star) clustering still
     equals ground truth exactly — the refine machine recovers from a poisoned
     carried-over library without help."""
-    from log_parser_cli_spark.plans.pipeline import run_pipeline
-
     fx = fixtures_for_sf_dir(sf_dir)
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     out_dir = _run_dir(sf_dir, "refine")
@@ -863,11 +856,10 @@ def q_source_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendered lines — DuckDB's regexps are RE2, the same engine the matcher
     uses, so the vote is bit-reproducible."""
     from log_parser_cli_spark.operators.parse import parse_stage
-    from log_parser_cli_spark.plans.pipeline import load_dims
 
     fx = fixtures_for_sf_dir(sf_dir)
     vocab_rows, source_heads, _ = load_dims(spark, fx)
-    seq = spark.read.parquet(os.path.join(fx, "sequences.parquet")).withColumn(
+    seq = read_sequences(spark, fx).withColumn(
         "source", F.lit(None).cast("string")
     )
     parsed = parse_stage(spark, seq, vocab_rows, source_heads)
@@ -884,8 +876,6 @@ def q_compression_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         compression_gain_stats,
         routed_for_overbroad,
     )
-    from log_parser_cli_spark.plans.pipeline import read_routed
-
     out, _ = pipeline_out_for(spark, sf_dir)
     # discovered template ids have their own numbering — only the
     # (source, template_star) pair is the stable contract vs ground truth
@@ -906,7 +896,6 @@ def q_stream_discovery_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    from log_parser_cli_spark.plans.pipeline import read_routed
     from log_parser_cli_spark.streaming.stream import stream_with_discovery
 
     fx = fixtures_for_sf_dir(sf_dir)
@@ -920,7 +909,7 @@ def q_stream_discovery_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
         # doc_id arithmetic — ids may be non-numeric), staged in a temp dir
         # and renamed atomically so a crash between the two writes can't
         # leave a half corpus that looks complete
-        seq = spark.read.parquet(os.path.join(fx, "sequences.parquet"))
+        seq = read_sequences(spark, fx)
         parity = F.expr("conv(substr(md5(doc_id), 1, 8), 16, 10) % 2")
         tmp = os.path.join(base, f".stream_src.{uuid.uuid4().hex[:8]}")
         seq.filter(parity == 0).coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -981,7 +970,6 @@ def q_stream_batch_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache, so a repeat is an availableNow no-op. Oracle: the ground truth's
     row count with zero mismatches (any divergence inflates the full-outer
     row count or a mismatch sum)."""
-    from log_parser_cli_spark.plans.pipeline import read_mapping, read_routed
     from log_parser_cli_spark.streaming.stream import stream_replay
 
     out, fx = pipeline_out_for(spark, sf_dir)
@@ -1103,10 +1091,10 @@ WHERE round(i / (sa.sz + sb.sz - i), 6) >= {threshold}
 """
 
 
-def _minhash_sql(threshold: float, n_hashes: int = 16, bands: int = 4) -> str:
-    rows_per_band = n_hashes // bands
+def _minhash_sql(threshold: float) -> str:
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
     mh_parts = []
-    for i in range(n_hashes):
+    for i in range(MINHASH_HASHES):
         hashed = H32.format(x=f"concat('mh{i}|', shingle)")
         mh_parts.append(f"min({hashed}) AS h{i}")
     mh_cols = ", ".join(mh_parts)
@@ -1114,7 +1102,7 @@ def _minhash_sql(threshold: float, n_hashes: int = 16, bands: int = 4) -> str:
         f"SELECT doc, {b} AS band, md5(concat_ws(',', "
         + ", ".join(f"CAST(h{b * rows_per_band + r} AS VARCHAR)" for r in range(rows_per_band))
         + ")) AS bucket FROM sig"
-        for b in range(bands)
+        for b in range(MINHASH_BANDS)
     )
     return f"""
 WITH {_shingle_cte(2)},
@@ -1129,16 +1117,16 @@ cands AS (
 """
 
 
-def _simhash_fp_banded_cte(chunks: int = 4, bits: int = 60) -> str:
+def _simhash_fp_banded_cte(chunks: int) -> str:
     """Shared CTE body: words → 60-bit SimHash fingerprints → chunk banding
     (used by the banded-pairs oracle AND the recall oracle)."""
-    width = bits // chunks
+    width = SIMHASH_BITS // chunks
     mask = (1 << width) - 1
     bit_sum_cols = ", ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(bits)
+        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(SIMHASH_BITS)
     )
     fp_expr = " + ".join(
-        f"CASE WHEN b{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END" for b in range(bits)
+        f"CASE WHEN b{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END" for b in range(SIMHASH_BITS)
     )
     chunk_selects = " UNION ALL ".join(
         f"SELECT doc, simhash, {c} AS chunk, (simhash >> {c * width}) & {mask} AS val FROM fp"
@@ -1155,9 +1143,7 @@ fp AS (SELECT doc, {fp_expr} AS simhash FROM bitsums),
 banded AS ({chunk_selects})"""
 
 
-def _simhash_combo_banded_cte(
-    max_hamming: int = 8, chunks: int = 10, combo_size: int = 2, bits: int = 60
-) -> str:
+def _simhash_combo_banded_cte(chunks: int, combo_size: int) -> str:
     """Like ``_simhash_fp_banded_cte`` but bands every C(chunks, combo_size)
     chunk COMBINATION (concatenated chunk values as the key) — the oracle
     twin of ``dedup.simhash_pairs(..., combo_size=...)``;
@@ -1165,7 +1151,7 @@ def _simhash_combo_banded_cte(
     both sides."""
     from itertools import combinations
 
-    width = bits // chunks
+    width = SIMHASH_BITS // chunks
     mask = (1 << width) - 1
     combo_selects = " UNION ALL ".join(
         f"SELECT doc, simhash, {i} AS band, "
@@ -1175,16 +1161,14 @@ def _simhash_combo_banded_cte(
         + " AS val FROM fp"
         for i, combo in enumerate(combinations(range(chunks), combo_size))
     )
-    base = _simhash_fp_banded_cte(chunks, bits)
+    base = _simhash_fp_banded_cte(chunks)
     # reuse the fp CTEs; replace the single-chunk banding with combinations
     return base[: base.index("banded AS (")] + f"banded AS ({combo_selects})"
 
 
-def _simhash_wide_sql(
-    max_hamming: int = 8, chunks: int = 10, combo_size: int = 2, bits: int = 60
-) -> str:
+def _simhash_wide_sql(max_hamming: int, chunks: int, combo_size: int) -> str:
     return f"""
-WITH {_simhash_combo_banded_cte(max_hamming, chunks, combo_size, bits)}
+WITH {_simhash_combo_banded_cte(chunks, combo_size)}
 SELECT DISTINCT CAST(x.doc AS BIGINT) AS a, CAST(y.doc AS BIGINT) AS b,
        CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
 FROM banded x JOIN banded y USING (band, val)
@@ -1192,11 +1176,9 @@ WHERE x.doc < y.doc AND bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}
 """
 
 
-def _simhash_wide_recall_sql(
-    max_hamming: int = 8, chunks: int = 10, combo_size: int = 2, bits: int = 60
-) -> str:
+def _simhash_wide_recall_sql(max_hamming: int, chunks: int, combo_size: int) -> str:
     return f"""
-WITH {_simhash_combo_banded_cte(max_hamming, chunks, combo_size, bits)},
+WITH {_simhash_combo_banded_cte(chunks, combo_size)},
 cand AS (
   SELECT DISTINCT x.doc AS a, y.doc AS b
   FROM banded x JOIN banded y USING (band, val)
@@ -1214,9 +1196,9 @@ SELECT CAST((SELECT count(*) FROM brute) AS BIGINT) AS n_pairs_exact,
 """
 
 
-def _simhash_sql(max_hamming: int = 3, chunks: int = 4, bits: int = 60) -> str:
+def _simhash_sql(max_hamming: int, chunks: int) -> str:
     return f"""
-WITH {_simhash_fp_banded_cte(chunks, bits)}
+WITH {_simhash_fp_banded_cte(chunks)}
 SELECT DISTINCT CAST(x.doc AS BIGINT) AS a, CAST(y.doc AS BIGINT) AS b,
        CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
 FROM banded x JOIN banded y USING (chunk, val)
@@ -1224,11 +1206,11 @@ WHERE x.doc < y.doc AND bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}
 """
 
 
-def _simhash_recall_sql(max_hamming: int = 3, chunks: int = 4, bits: int = 60) -> str:
+def _simhash_recall_sql(max_hamming: int, chunks: int) -> str:
     """Banded pairs vs brute-force all-pairs at the same radius — recall must
     be exactly 1.0 (pigeonhole: chunks > max_hamming)."""
     return f"""
-WITH {_simhash_fp_banded_cte(chunks, bits)},
+WITH {_simhash_fp_banded_cte(chunks)},
 cand AS (
   SELECT DISTINCT x.doc AS a, y.doc AS b
   FROM banded x JOIN banded y USING (chunk, val)
@@ -1246,14 +1228,14 @@ SELECT CAST((SELECT count(*) FROM brute) AS BIGINT) AS n_pairs_exact,
 """
 
 
-def _simhash_capped_sql(max_hamming: int, chunks: int, cap: int, bits: int = 60) -> str:
+def _simhash_capped_sql(max_hamming: int, chunks: int, cap: int) -> str:
     """Oracle twin of ``simhash_pairs(..., max_bucket=cap)``: buckets over
     the cap contribute the TWO-LEVEL star (identical-fingerprint members →
     their group min at distance 0, group minima → bucket min) instead of
     all pairs — replayed here with a window count + two grouped minima +
     union, so the guard itself is hash-gated."""
     return f"""
-WITH {_simhash_fp_banded_cte(chunks, bits)},
+WITH {_simhash_fp_banded_cte(chunks)},
 sized AS (
   SELECT doc, simhash, chunk, val, count(*) OVER (PARTITION BY chunk, val) AS bsz
   FROM banded
@@ -1282,14 +1264,14 @@ FROM pairs WHERE bit_count(xor(sa, sb)) <= {max_hamming}
 """
 
 
-def _dedup_components_sql(max_hamming: int, chunks: int, bits: int = 60) -> str:
+def _dedup_components_sql(max_hamming: int, chunks: int) -> str:
     """Recursive-CTE twin of connected_components over the SimHash pairs:
     walk accumulates every (node, reachable-node) pair inside a component
     (UNION dedupes, so the recursion reaches a fixpoint), min over the
     reachable set is the component label — lexicographic min over VARCHAR
     doc ids on both engines."""
     return f"""
-WITH RECURSIVE {_simhash_fp_banded_cte(chunks, bits)},
+WITH RECURSIVE {_simhash_fp_banded_cte(chunks)},
 p AS (
   SELECT x.doc AS a, y.doc AS b
   FROM banded x JOIN banded y USING (chunk, val)
@@ -1308,9 +1290,9 @@ FROM labeled GROUP BY 1
 """
 
 
-def _simhash_hot_buckets_sql(chunks: int, cap: int, bits: int = 60) -> str:
+def _simhash_hot_buckets_sql(chunks: int, cap: int) -> str:
     return f"""
-WITH {_simhash_fp_banded_cte(chunks, bits)},
+WITH {_simhash_fp_banded_cte(chunks)},
 hb AS (
   SELECT chunk, val, count(*) AS n FROM banded GROUP BY chunk, val
   HAVING count(*) > {cap}
@@ -1384,20 +1366,20 @@ SELECT CAST((SELECT count(*) FROM exact) AS BIGINT) AS n_pairs_exact,
 """
 
 
-def _simhash_cands_jaccard_sql(threshold: float, chunks: int = 4, bits: int = 60) -> str:
+def _simhash_cands_jaccard_sql(threshold: float) -> str:
     """SimHash chunk-band candidates → exact Jaccard verify (the DuckDB twin
     of the cross-family q_dedup_jaccard_docs plan)."""
-    width = bits // chunks
+    width = SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << width) - 1
     bit_sum_cols = ", ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(bits)
+        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(SIMHASH_BITS)
     )
     fp_expr = " + ".join(
-        f"CASE WHEN b{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END" for b in range(bits)
+        f"CASE WHEN b{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END" for b in range(SIMHASH_BITS)
     )
     chunk_selects = " UNION ALL ".join(
         f"SELECT doc, {c} AS chunk, (simhash >> {c * width}) & {mask} AS val FROM fp"
-        for c in range(chunks)
+        for c in range(SIMHASH_CHUNKS)
     )
     h = H32.format(x="concat('sh|', word)")
     return f"""

@@ -42,6 +42,12 @@ PARSED_EXTRA_FIELDS = [
     T.StructField("head_matched", T.BooleanType()),
 ]
 
+
+def parsed_schema(seq_schema: T.StructType) -> T.StructType:
+    """``parse_stage``'s output schema over an input of ``seq_schema``."""
+    return T.StructType(seq_schema.fields + PARSED_EXTRA_FIELDS)
+
+
 # Source of rows no head pattern claims in the source vote.
 UNKNOWN_SOURCE = "__UNKNOWN__"
 
@@ -82,7 +88,7 @@ def parse_stage(
             raise ValueError(f"head of {src!r} has no content group {group}: {pattern!r}")
     text_by_id, canon_by_id = build_vocab_arrays(vocab_rows)
 
-    out_schema = T.StructType(list(seq_df.schema.fields) + PARSED_EXTRA_FIELDS)
+    out_schema = parsed_schema(seq_df.schema)
     col_names = [f.name for f in seq_df.schema.fields]
     tokens_idx = col_names.index("tokens")
     source_idx = col_names.index("source")

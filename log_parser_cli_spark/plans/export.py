@@ -26,11 +26,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from log_parser_cli_spark.functions.templates import (
+    END,
+    START,
     anchor_pattern,
     build_regex_from_template,
 )
-
-START, END = "⟪", "⟫"
 
 
 def placeholder_from_star(content: str, star: str) -> str:

@@ -33,10 +33,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from log_parser_cli_spark.operators.drain import DrainCluster, cluster_signatures
-from log_parser_cli_spark.operators.parse import parse_stage
+from log_parser_cli_spark.operators.parse import parse_stage, parsed_schema
 from log_parser_cli_spark.plans.checkpoint import Manifest, source_digest
+from log_parser_cli_spark.plans.snapshots import SnapshotTable
 
 UNPARSED = "__UNPARSED__"
 UNMATCHED = "__UNMATCHED__"
@@ -108,6 +110,22 @@ def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, st
         )
     }
     return vocab_rows, source_heads, dict(zip(sources["source"].to_pylist(), sources["sink"].to_pylist()))
+
+
+def read_sequences(spark: SparkSession, fixture_dir: str) -> DataFrame:
+    """The fixture's ``sequences`` table under its parquet footer's schema,
+    which pyarrow reads on the driver: no schema-inference job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = os.path.join(fixture_dir, "sequences.parquet")
+    return spark.read.schema(from_arrow_schema(pq.read_schema(path))).parquet(path)
+
+
+def read_parsed(spark: SparkSession, seq_schema: StructType, path: str) -> DataFrame:
+    """The parse checkpoint at ``path`` under ``parse_stage``'s output schema
+    for an input of ``seq_schema``: no schema-inference job."""
+    return spark.read.schema(parsed_schema(seq_schema)).parquet(path)
 
 
 def read_mapping(spark: SparkSession, path: str) -> DataFrame:
@@ -432,8 +450,6 @@ def route_stage(
     observed on the write itself. The observation sits above the exchange, so
     the column pruning below it is unaffected.
     """
-    from log_parser_cli_spark.plans.snapshots import SnapshotTable
-
     routed, obs = _observe(
         route_frame(enriched, salt_buckets),
         rows=F.count(F.lit(1)),
@@ -455,16 +471,12 @@ def read_routed(spark: SparkSession, out_dir: str) -> DataFrame:
     FileNotFoundError when no snapshot is committed — staged dirs of a writer
     that crashed before its first commit point mean "table does not exist
     yet", never "read the partial bytes"."""
-    from log_parser_cli_spark.plans.snapshots import SnapshotTable
-
     return SnapshotTable(os.path.join(out_dir, "routed")).read(spark)
 
 
 def routed_data_dirs(out_dir: str) -> list[str]:
     """Absolute physical dirs (sink=/template_id= roots) of the current routed
     snapshot — for file-layout inspection (skew reports, tests)."""
-    from log_parser_cli_spark.plans.snapshots import SnapshotTable
-
     root = os.path.join(out_dir, "routed")
     manifest = SnapshotTable(root).manifest()
     if manifest is None:
@@ -538,8 +550,7 @@ def run_replay(
     files. Returns the routed row count, observed on the route write.
     """
     vocab_rows, source_heads, sinks = load_dims(spark, fixture_dir)
-    seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
-    parsed = parse_stage(spark, seq_df, vocab_rows, source_heads)
+    parsed = parse_stage(spark, read_sequences(spark, fixture_dir), vocab_rows, source_heads)
     enriched = enrich_stage(parsed, mapping_df, sinks)
     counts = route_stage(enriched, out_dir, salt_buckets=salt_buckets)
     aggregate_stage(spark, read_routed(spark, out_dir), out_dir)
@@ -594,7 +605,7 @@ def run_pipeline(
         )
     vocab_rows, source_heads, sinks = load_dims(spark, fixture_dir)
     if seq_df is None:
-        seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
+        seq_df = read_sequences(spark, fixture_dir)
     if derive_heads:
         from log_parser_cli_spark.operators.head_derive import derive_heads_stage
 
@@ -624,7 +635,6 @@ def run_pipeline(
         )
         if checkpoint_parse:
             parsed.write.mode("overwrite").parquet(parsed_path)
-            parsed_cached = spark.read.parquet(parsed_path)
             return parse_obs.get
         # One-shot mode: persist OFF-HEAP on local storage, not in executor
         # memory. The default MEMORY_AND_DISK cache of the fat parsed stream
@@ -642,7 +652,7 @@ def run_pipeline(
         return {}
 
     stage("parse", do_parse)
-    parsed = parsed_cached if parsed_cached is not None else spark.read.parquet(parsed_path)
+    parsed = parsed_cached if parsed_cached is not None else read_parsed(spark, seq_df.schema, parsed_path)
 
     # -- stage 2: discover (skipped in match-only mode)
     mapping_path = os.path.join(out_dir, "template_mapping")

@@ -11,6 +11,11 @@ data files plus an atomic metadata commit — with zero dependencies:
       _snapshots/v000000000001.json   immutable manifest per snapshot
       data-v000000000001-<hex>/       immutable parquet dir(s), one per commit
 
+A manifest holds ``format``, ``version``, ``parent`` (None for the first),
+``operation``, ``data_dirs``, ``summary``, ``dir_batches`` (commit_batch's
+data dir → batch id) and ``schema``: the table's ``StructType.jsonValue``,
+partition columns last, under which readers read every dir, inferring none.
+
 Protocol (Iceberg's, minus the catalog):
 
 - Data is staged first, into a fresh uniquely-named directory that no
@@ -40,17 +45,25 @@ import os
 import re
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _MANIFEST_DIR = "_snapshots"
 _MANIFEST_NAME = re.compile(r"v(\d{12})\.json")
-FORMAT = "lpcs-snapshot-v1"
+FORMAT = "lpcs-snapshot-v2"
 _COMMIT_RETRIES = 5  # racing commits a writer rebases over before giving up
 
 
 class ConcurrentCommitError(RuntimeError):
     """Another committer published this version first; rebase and retry."""
+
+
+def _schema(manifest: dict) -> T.StructType:
+    if "schema" not in manifest:
+        raise ValueError(f"snapshot v{manifest['version']} is {manifest.get('format')}, with no schema")
+    return T.StructType.fromJson(manifest["schema"])
 
 
 class SnapshotTable:
@@ -96,34 +109,36 @@ class SnapshotTable:
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """DataFrame over exactly the data dirs of one committed snapshot
-        (default: current). Each dir discovers its own partition columns; the
-        dir count is bounded by vacuum, so the union stays shallow."""
+        (default: current), each read under the manifest's schema. A stream
+        adds a dir per micro-batch, so the union grows with its batches, but
+        no dir's read submits a schema-inference job. Raises ValueError for
+        a manifest that records no schema."""
         m = self.manifest(version)
         if m is None:
             raise FileNotFoundError(f"no committed snapshot under {self.root}")
-        dfs = [spark.read.parquet(os.path.join(self.root, d)) for d in m["data_dirs"]]
-        out = dfs[0]
-        for df in dfs[1:]:
-            out = out.unionByName(df)
-        return out
+        reader = spark.read.schema(_schema(m))
+        return reduce(DataFrame.union, (reader.parquet(os.path.join(self.root, d)) for d in m["data_dirs"]))
 
     # -- write --------------------------------------------------------------
 
-    def _stage(self, df: DataFrame, partition_by: tuple[str, ...] | None) -> str:
+    def _stage(self, df: DataFrame, partition_by: tuple[str, ...] | None) -> tuple[str, T.StructType]:
         """Write ``df`` into a fresh dir no manifest references (crash ⇒ orphan,
-        collected by vacuum — never visible to readers)."""
+        collected by vacuum — never visible to readers). Returns the dir and
+        the schema a read of it returns: partition columns last."""
         name = f"data-{uuid.uuid4().hex[:12]}"
         writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        part = partition_by or ()
+        if part:
+            writer = writer.partitionBy(*part)
         writer.parquet(os.path.join(self.root, name))
-        return name
+        return name, T.StructType([f for f in df.schema if f.name not in part] + [df.schema[c] for c in part])
 
     def _try_commit(
         self,
         parent: int | None,
         op: str,
         data_dirs: list[str],
+        schema: T.StructType,
         summary: dict,
         dir_batches: dict[str, int] | None = None,
     ) -> int:
@@ -134,6 +149,7 @@ class SnapshotTable:
             "parent": parent,
             "operation": op,
             "data_dirs": data_dirs,
+            "schema": schema.jsonValue(),
             "summary": summary,
         }
         if dir_batches is not None:
@@ -155,14 +171,14 @@ class SnapshotTable:
 
     def _commit(self, op: str, build, summary: dict) -> int:
         """The one optimistic commit loop: ``build(parent)`` returns the
-        (data_dirs, dir_batches) of the new snapshot on top of the current
-        version ``parent``; losing the race for version parent + 1 rebuilds on
-        the winner, at most ``_COMMIT_RETRIES`` times."""
+        (data_dirs, schema, dir_batches) of the new snapshot on top of the
+        current version ``parent``; losing the race for version parent + 1
+        rebuilds on the winner, at most ``_COMMIT_RETRIES`` times."""
         for _ in range(_COMMIT_RETRIES):
             parent = self.current_version()
-            data_dirs, dir_batches = build(parent)
+            data_dirs, schema, dir_batches = build(parent)
             try:
-                return self._try_commit(parent, op, data_dirs, summary, dir_batches)
+                return self._try_commit(parent, op, data_dirs, schema, summary, dir_batches)
             except ConcurrentCommitError:
                 pass
         raise ConcurrentCommitError(f"gave up after {_COMMIT_RETRIES} racing commits")
@@ -171,8 +187,8 @@ class SnapshotTable:
         """Publish ``df`` as the new current snapshot (replaces all rows):
         latest-overwrite-wins, and a version race retries on top of the
         winner."""
-        staged = self._stage(df, partition_by)
-        return self._commit("overwrite", lambda parent: ([staged], None), {})
+        staged, schema = self._stage(df, partition_by)
+        return self._commit("overwrite", lambda parent: ([staged], schema, None), {})
 
     def commit_batch(
         self, df: DataFrame, batch_id: int, partition_by: tuple[str, ...] | None = None
@@ -183,14 +199,19 @@ class SnapshotTable:
         and adds one new dir tagged with it. A retried micro-batch therefore
         REPLACES its own prior output instead of duplicating rows, and a
         crash before the commit point leaves only an unreferenced staged dir
-        (age-gated vacuum) — readers never observe a torn batch."""
-        staged = self._stage(df, partition_by)
+        (age-gated vacuum) — readers never observe a torn batch. A frame whose
+        column names or types (nullability aside) differ from the parent
+        snapshot's raises ValueError before the commit point."""
+        staged, schema = self._stage(df, partition_by)
 
-        def build(parent: int | None) -> tuple[list[str], dict[str, int]]:
+        def build(parent: int | None) -> tuple[list[str], T.StructType, dict[str, int]]:
             tags: dict[str, int] = {}
             base: list[str] = []
             if parent is not None:
                 m = self.manifest(parent)
+                have, new = _schema(m).simpleString(), schema.simpleString()
+                if have != new:
+                    raise ValueError(f"batch {batch_id} is {new}; v{parent} of {self.root} is {have}")
                 ptags = m.get("dir_batches", {})
                 for d in m["data_dirs"]:
                     if ptags.get(d) != batch_id:
@@ -198,7 +219,7 @@ class SnapshotTable:
                         if d in ptags:
                             tags[d] = ptags[d]
             tags[staged] = batch_id
-            return base + [staged], tags
+            return base + [staged], schema, tags
 
         return self._commit("append-batch", build, {"batch_id": batch_id})
 
@@ -210,9 +231,10 @@ class SnapshotTable:
         never lost-update."""
         from log_parser_cli_spark.plans.library_ops import merge_templates
 
-        def build(parent: int | None) -> tuple[list[str], None]:
+        def build(parent: int | None) -> tuple[list[str], T.StructType, None]:
             merged = updates if parent is None else merge_templates(self.read(spark, parent), updates, key)
-            return [self._stage(merged, None)], None
+            staged, schema = self._stage(merged, None)
+            return [staged], schema, None
 
         return self._commit("merge", build, {"key": key})
 

@@ -46,10 +46,7 @@ def get_spark(
         # ~defaultParallelism partitions for small shuffles; at cluster
         # scale total/parallelism dominates the max() and this floor is
         # inert, so the setting is scale-neutral.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "1k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -60,10 +57,7 @@ def get_spark(
         # local corpora are a handful of medium files; split at row-group
         # granularity so scans parallelize (cluster default 128m is fine when
         # the input is thousands of files)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "2m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "2m")
         .config("spark.sql.files.openCostInBytes", "1m")
         # dynamic-partition fan-out writes: keep ≤N files open per task
         # instead of sorting every task's rows by partition key — the route

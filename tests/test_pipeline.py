@@ -232,10 +232,20 @@ def test_load_dims_rejects_a_repeated_key(spark, fixture_dir, tmp_path, name, ke
         load_dims(spark, str(tmp_path))
 
 
+def test_read_sequences_submits_no_job_and_equals_spark_read(spark, fixture_dir):
+    """``read_sequences`` takes its schema from the parquet footer on the
+    driver: no job, and the schema an inferring Spark read gives."""
+    from log_parser_cli_spark.plans.pipeline import read_sequences
+
+    seq, jobs = _jobs_of(spark, "read-sequences", lambda: read_sequences(spark, fixture_dir))
+    assert jobs == []
+    assert seq.schema == spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet")).schema
+
+
 def test_replay_job_count(spark, fixture_dir, pipeline_out, tmp_path):
-    """A replay pass submits at most 7 Spark jobs: the dims load and the
-    aggregate's two table writes run on the driver and submit none, and the
-    sink lookup broadcasts nothing."""
+    """A replay pass submits at most 5 Spark jobs: the dims load and the
+    aggregate's two table writes run on the driver and submit none, the sink
+    lookup broadcasts nothing, and no table read infers a schema."""
     from log_parser_cli_spark.plans.pipeline import read_mapping, run_replay
 
     mapping = read_mapping(spark, os.path.join(pipeline_out, "template_mapping"))
@@ -243,13 +253,13 @@ def test_replay_job_count(spark, fixture_dir, pipeline_out, tmp_path):
         spark, "replay", lambda: run_replay(spark, fixture_dir, str(tmp_path), mapping)
     )
     assert rows == spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet")).count()
-    assert len(jobs) <= 7, len(jobs)
+    assert len(jobs) <= 5, len(jobs)
 
 
 def test_stream_pass_job_count(spark, fixture_dir, pipeline_out, tmp_path):
     """A ``stream-microbatch``-shaped pass (``stream_replay`` of 2 files, one
     micro-batch each, then ``read_routed`` and ``aggregate_stage``) submits at
-    most 12 Spark jobs. The stream's own thread runs its jobs under the
+    most 9 Spark jobs. The stream's own thread runs its jobs under the
     query's run id as job group, so both groups are counted."""
     from log_parser_cli_spark.plans.pipeline import aggregate_stage, read_mapping
     from log_parser_cli_spark.streaming.stream import stream_replay
@@ -271,7 +281,7 @@ def test_stream_pass_job_count(spark, fixture_dir, pipeline_out, tmp_path):
     q, jobs = _jobs_of(spark, "stream-pass", stream_pass)
     assert [p["numInputRows"] > 0 for p in q.recentProgress].count(True) == 2
     stream_jobs = list(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
-    assert stream_jobs and len(jobs) + len(stream_jobs) <= 12, (jobs, stream_jobs)
+    assert stream_jobs and len(jobs) + len(stream_jobs) <= 9, (jobs, stream_jobs)
 
 
 def test_enrich_plan_joins_once(spark, fixture_dir, pipeline_out):

@@ -117,7 +117,7 @@ UNPASSED_OPTIONS = {
 
 def test_every_option_is_passed_by_a_caller():
     """Each defaulted parameter of a module-level function in ``extras/``,
-    ``operators/`` and ``plans/`` is passed, by keyword or by position, by a
+    ``operators/``, ``plans/`` and ``entry_impl.py`` is passed, by keyword or by position, by a
     call in the package, ``tools/``, ``perfbench/``, ``bench.py`` or
     ``__spark_entry__.py``; one no caller varies is a constant. Calls
     resolve by name."""
@@ -142,25 +142,28 @@ def test_every_option_is_passed_by_a_caller():
         starred = any(isinstance(a, ast.Starred) for a in call.args)
         return index is not None and (len(call.args) > index or starred)
 
+    scanned = [
+        *(p for sub in ("extras", "operators", "plans") for p in sorted((ROOT / PKG / sub).glob("*.py"))),
+        ROOT / PKG / "entry_impl.py",
+    ]
     unpassed = set()
-    for sub in ("extras", "operators", "plans"):
-        for path in sorted((ROOT / PKG / sub).glob("*.py")):
-            for fn in ast.parse(path.read_text()).body:
-                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    continue
-                positional = fn.args.posonlyargs + fn.args.args
-                first = len(positional) - len(fn.args.defaults)
-                options = [(i, a.arg) for i, a in enumerate(positional) if i >= first]
-                options += [
-                    (None, a.arg)
-                    for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
-                    if d is not None
-                ]
-                unpassed |= {
-                    f"{_module_name(path)}.{fn.name}.{name}"
-                    for i, name in options
-                    if not any(passes(c, i, name) for c in calls.get(fn.name, []))
-                }
+    for path in scanned:
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            positional = fn.args.posonlyargs + fn.args.args
+            first = len(positional) - len(fn.args.defaults)
+            options = [(i, a.arg) for i, a in enumerate(positional) if i >= first]
+            options += [
+                (None, a.arg)
+                for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                if d is not None
+            ]
+            unpassed |= {
+                f"{_module_name(path)}.{fn.name}.{name}"
+                for i, name in options
+                if not any(passes(c, i, name) for c in calls.get(fn.name, []))
+            }
     # both ways: an allow-listed option a caller now passes leaves the list
     assert sorted(unpassed ^ UNPASSED_OPTIONS.keys()) == []
 
@@ -177,3 +180,16 @@ def test_one_regex_executor():
     callers = {m for m, text in files.items() if kernels & _referenced_names(ast.parse(text))}
     assert callers <= {f"{PKG}.operators.matcher"}
     assert {m: jvm.findall(text) for m, text in files.items() if jvm.search(text)} == {}
+
+
+def test_every_pipeline_read_names_its_schema():
+    """No ``plans/``, ``streaming/`` or ``operators/`` module reads parquet
+    without a schema: each table has one reader, under the schema its writer
+    recorded, so no read runs a schema-inference job."""
+    found = {
+        str(p.relative_to(ROOT)): text.count(".read.parquet(")
+        for sub in ("plans", "streaming", "operators")
+        for p in sorted((ROOT / PKG / sub).glob("*.py"))
+        if ".read.parquet(" in (text := p.read_text())
+    }
+    assert found == {}

@@ -74,10 +74,10 @@ def test_vacuum_spares_concurrent_staged_dir_but_commits_survive(spark, tmp_path
     root = str(tmp_path / "t")
     t = SnapshotTable(root)
     t.commit_overwrite(_df(spark, [("a#1", "a", 1)]))
-    staged = t._stage(_df(spark, [("b#1", "b", 2)]), None)  # B stages...
+    staged, schema = t._stage(_df(spark, [("b#1", "b", 2)]), None)  # B stages...
     t.commit_overwrite(_df(spark, [("c#1", "c", 3)]))  # ...A commits v1...
     t.vacuum(keep_last=2)  # ...and auto-vacuums (default grace)
-    v = t._try_commit(1, "append", t.manifest(1)["data_dirs"] + [staged], {})  # B commits
+    v = t._try_commit(1, "append", t.manifest(1)["data_dirs"] + [staged], schema, {})  # B commits
     assert {r.template_id for r in t.read(spark, v).collect()} == {"c#1", "b#1"}
     # v0's dir is referenced only by an EXPIRED manifest after two more
     # commits → deleted with no grace needed
@@ -98,11 +98,59 @@ def test_concurrent_commit_detected_at_commit_point(spark, tmp_path):
     t.commit_overwrite(_df(spark, [("a#1", "a", 1)]))
     # another committer publishes v1 between our read and our publish
     with pytest.raises(ConcurrentCommitError):
-        t._try_commit(parent=None, op="overwrite", data_dirs=["data-x"], summary={})
+        t._try_commit(
+            parent=None, op="overwrite", data_dirs=["data-x"], schema=_df(spark, []).schema, summary={}
+        )
     t.commit_overwrite(_df(spark, [("b#1", "b", 2)]))  # now at v1
     # append retries on top of the winner: both writes survive
     t.commit_batch(_df(spark, [("d#1", "d", 4)]), batch_id=0)
     assert {r.template_id for r in t.read(spark).collect()} == {"b#1", "d#1"}
+
+
+def test_read_of_20_batch_dirs_submits_no_job(spark, tmp_path):
+    """Every data dir is read under the manifest's schema, so a snapshot of
+    20 ``commit_batch`` dirs reads with no schema-inference job, and its rows
+    are the union of the batches'."""
+    from test_pipeline import _jobs_of
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    batches = [[(f"t{b}#{i}", f"s{b % 3}", b * 10 + i) for i in range(2)] for b in range(20)]
+    for b, rows in enumerate(batches):
+        t.commit_batch(_df(spark, rows), batch_id=b, partition_by=("source",))
+    got, jobs = _jobs_of(spark, "snapshot-read", lambda: t.read(spark))
+    assert jobs == []
+    assert len(t.manifest()["data_dirs"]) == 20
+    assert got.columns == ["template_id", "n", "source"]  # partition column last
+    want = {(tid, src, n) for rows in batches for tid, src, n in rows}
+    assert {(r.template_id, r.source, r.n) for r in got.collect()} == want
+
+
+def test_commit_batch_rejects_other_column_types(spark, tmp_path):
+    """A batch whose columns differ in type from the parent snapshot's raises
+    before the commit point, instead of failing every later read."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit_batch(_df(spark, [("a#1", "a", 1)]), batch_id=0)
+    other = spark.createDataFrame([("b#1", "b", "2")], "template_id string, source string, n string")
+    with pytest.raises(ValueError, match="n:string"):
+        t.commit_batch(other, batch_id=1)
+    assert t.current_version() == 0
+    assert [r.template_id for r in t.read(spark).collect()] == ["a#1"]
+
+
+def test_read_rejects_a_manifest_without_schema(spark, tmp_path):
+    """A v1 manifest records no schema; reading it raises, naming its format,
+    rather than inferring one."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    v = t.commit_overwrite(_df(spark, [("a#1", "a", 1)]))
+    path = t._manifest_path(v)
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    m["format"] = "lpcs-snapshot-v1"
+    with open(path, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="lpcs-snapshot-v1"):
+        t.read(spark)
 
 
 def test_commit_batch_retry_replaces_own_output(spark, tmp_path):
@@ -136,8 +184,8 @@ def test_vacuum_retains_snapshot_committed_during_scan(spark, tmp_path, monkeypa
         if not fired["done"]:
             fired["done"] = True
             # concurrent committer publishes v1 right after the sample
-            staged = t._stage(_df(spark, [("b#1", "b", 2)]), None)
-            t._try_commit(v, "overwrite", [staged], {})
+            staged, schema = t._stage(_df(spark, [("b#1", "b", 2)]), None)
+            t._try_commit(v, "overwrite", [staged], schema, {})
         return v
 
     monkeypatch.setattr(SnapshotTable, "current_version", racy_cv)
@@ -254,7 +302,7 @@ def test_routed_sink_is_snapshot_committed(spark, pipeline_out):
     root = os.path.join(pipeline_out, "routed")
     assert SnapshotTable.is_snapshot_dir(root)
     m = SnapshotTable(root).manifest()
-    assert m["operation"] == "overwrite" and m["format"] == "lpcs-snapshot-v1"
+    assert m["operation"] == "overwrite" and m["format"] == "lpcs-snapshot-v2"
     for d in m["data_dirs"]:
         assert os.path.isdir(os.path.join(root, d))
     assert not any(d.startswith("sink=") for d in os.listdir(root))

@@ -43,6 +43,7 @@ def main() -> int:
         enrich_stage,
         load_dims,
         read_routed,
+        read_sequences,
         route_frame,
         route_stage,
     )
@@ -53,7 +54,7 @@ def main() -> int:
     spark = get_spark(app_name="explain", cores=8, extra_conf={"spark.ui.showConsoleProgress": "false"})
     fx = ensure_fixtures("sf0.01")
     vocab_rows, source_heads, sinks = load_dims(spark, fx)
-    seq = spark.read.parquet(os.path.join(fx, "sequences.parquet"))
+    seq = read_sequences(spark, fx)
 
     sections: list[tuple[str, str, list[str], list[str]]] = []
     # (title, plan, must_contain, must_not_contain)
