@@ -358,7 +358,7 @@ def q_derived_library_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pipeline run just checkpointed the parsed stream — reuse it instead
     # of re-running the mapInArrow parse (twice, since the returned plan is
     # evaluated by the caller after this function exits)
-    parsed = read_parsed(spark, read_sequences(spark, fx).schema, os.path.join(out, "parsed"))
+    parsed = read_parsed(spark, fx, os.path.join(out, "parsed"))
     mapping = read_mapping(spark, os.path.join(out, "template_mapping"))
     enriched = enrich_stage(parsed, mapping, sinks)
     library = export_template_library(spark, enriched)
@@ -1062,21 +1062,20 @@ QUERIES = {
 H32 = "CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"  # == Spark conv(md5)
 
 
-def _shingle_cte(k: int = 2) -> str:
-    return f"""
+# word bigrams per doc and their distinct count: the DuckDB twin of dedup.shingles
+_SHINGLE_CTE = """
 docs_w AS (SELECT doc_id AS doc, string_split(lower(text), ' ') AS words FROM documents),
 exploded AS (
-  SELECT doc, words, unnest(range(0, greatest(len(words) - {k} + 1, 0))) AS i FROM docs_w
+  SELECT doc, words, unnest(range(0, greatest(len(words) - 2 + 1, 0))) AS i FROM docs_w
 ),
 shingled AS (
-  SELECT DISTINCT doc, array_to_string(words[i + 1 : i + {k}], ' ') AS shingle FROM exploded
+  SELECT DISTINCT doc, array_to_string(words[i + 1 : i + 2], ' ') AS shingle FROM exploded
 ),
 sizes AS (SELECT doc, count(*) AS sz FROM shingled GROUP BY doc)
 """
 
 
-def _jaccard_sql(threshold: float, with_candidates: bool = False) -> str:
-    cand_filter = "JOIN cands USING (a, b)" if with_candidates else ""
+def _jaccard_sql(threshold: float) -> str:
     return f"""
 inter AS (
   SELECT x.doc AS a, y.doc AS b, CAST(count(*) AS DOUBLE) AS i
@@ -1085,7 +1084,7 @@ inter AS (
 )
 SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
        round(i / (sa.sz + sb.sz - i), 6) AS jaccard
-FROM inter {cand_filter}
+FROM inter JOIN cands USING (a, b)
 JOIN sizes sa ON sa.doc = a JOIN sizes sb ON sb.doc = b
 WHERE round(i / (sa.sz + sb.sz - i), 6) >= {threshold}
 """
@@ -1105,7 +1104,7 @@ def _minhash_sql(threshold: float) -> str:
         for b in range(MINHASH_BANDS)
     )
     return f"""
-WITH {_shingle_cte(2)},
+WITH {_SHINGLE_CTE},
 sig AS (SELECT doc, {mh_cols} FROM shingled GROUP BY doc),
 banded AS ({band_selects}),
 cands AS (
@@ -1113,7 +1112,7 @@ cands AS (
   FROM banded x JOIN banded y USING (band, bucket)
   WHERE x.doc < y.doc
 ),
-{_jaccard_sql(threshold, True)}
+{_jaccard_sql(threshold)}
 """
 
 
@@ -1308,21 +1307,20 @@ def _dlit(vec: list[float]) -> str:
     return "[" + ",".join(repr(v) for v in vec) + "]::DOUBLE[]"
 
 
-def _rhp_banded_cte(dim: int, n_planes: int = 60, rows_per_band: int = 3) -> str:
+def _rhp_banded_cte(dim: int) -> str:
     """Shared CTE body: hyperplane sign-bit band signatures + candidate pairs
     (identical hyperplane literals to the Spark side ⇒ identical candidates)."""
     from log_parser_cli_spark.extras.similarity import hyperplanes
 
-    planes = hyperplanes(n_planes, dim)
-    n_bands = n_planes // rows_per_band
+    planes = hyperplanes(RHP_PLANES, dim)
     band_selects = " UNION ALL ".join(
         f"SELECT vec_id AS doc, {b} AS band, "
         + " + ".join(
-            f"(CASE WHEN list_dot_product(embedding::DOUBLE[], {_dlit(planes[b * rows_per_band + r])}) >= 0 THEN {1 << r} ELSE 0 END)"
-            for r in range(rows_per_band)
+            f"(CASE WHEN list_dot_product(embedding::DOUBLE[], {_dlit(planes[b * RHP_ROWS_PER_BAND + r])}) >= 0 THEN {1 << r} ELSE 0 END)"
+            for r in range(RHP_ROWS_PER_BAND)
         )
         + " AS val FROM embeddings"
-        for b in range(n_bands)
+        for b in range(RHP_PLANES // RHP_ROWS_PER_BAND)
     )
     return f"""
 banded AS ({band_selects}),
@@ -1332,32 +1330,32 @@ cands AS (
 )"""
 
 
-def _rhp_dedup_sql(threshold: float, dim: int, n_planes: int = 60, rows_per_band: int = 3) -> str:
+def _rhp_dedup_sql(dim: int) -> str:
     """Random-hyperplane LSH candidates → exact cosine verify — the DuckDB
     twin of q_embedding_dedup."""
     return f"""
-WITH {_rhp_banded_cte(dim, n_planes, rows_per_band)}
+WITH {_rhp_banded_cte(dim)}
 SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
        round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) AS sim
 FROM cands JOIN embeddings x ON x.vec_id = a JOIN embeddings y ON y.vec_id = b
-WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) >= {threshold}
+WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) >= {RHP_THRESHOLD}
 """
 
 
-def _rhp_recall_sql(threshold: float, dim: int, n_planes: int = 60, rows_per_band: int = 3) -> str:
+def _rhp_recall_sql(dim: int) -> str:
     """LSH-verified pairs vs brute-force all-pairs cosine at the same
     threshold — the DuckDB twin of q_rhp_recall."""
     return f"""
-WITH {_rhp_banded_cte(dim, n_planes, rows_per_band)},
+WITH {_rhp_banded_cte(dim)},
 lsh AS (
   SELECT a, b
   FROM cands JOIN embeddings x ON x.vec_id = a JOIN embeddings y ON y.vec_id = b
-  WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) >= {threshold}
+  WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) >= {RHP_THRESHOLD}
 ),
 exact AS (
   SELECT x.vec_id AS a, y.vec_id AS b
   FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-  WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) >= {threshold}
+  WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) >= {RHP_THRESHOLD}
 )
 SELECT CAST((SELECT count(*) FROM exact) AS BIGINT) AS n_pairs_exact,
        CAST((SELECT count(*) FROM lsh) AS BIGINT) AS n_pairs_lsh,
@@ -1383,7 +1381,7 @@ def _simhash_cands_jaccard_sql(threshold: float) -> str:
     )
     h = H32.format(x="concat('sh|', word)")
     return f"""
-WITH {_shingle_cte(2)},
+WITH {_SHINGLE_CTE},
 sw AS (SELECT doc_id AS doc, unnest(string_split(lower(text), ' ')) AS word FROM documents),
 hashed AS (SELECT doc, {h} AS h FROM sw),
 bitsums AS (SELECT doc, {bit_sum_cols} FROM hashed GROUP BY doc),
@@ -1393,7 +1391,7 @@ cands AS (
   SELECT DISTINCT x.doc AS a, y.doc AS b
   FROM banded x JOIN banded y USING (chunk, val) WHERE x.doc < y.doc
 ),
-{_jaccard_sql(threshold, True)}
+{_jaccard_sql(threshold)}
 """
 
 
@@ -1812,8 +1810,8 @@ def build_oracle_sql() -> dict[str, str]:
         """,
         **(
             {
-                "embedding_dedup": _rhp_dedup_sql(RHP_THRESHOLD, _emb_dim, RHP_PLANES, RHP_ROWS_PER_BAND),
-                "rhp_recall": _rhp_recall_sql(RHP_THRESHOLD, _emb_dim, RHP_PLANES, RHP_ROWS_PER_BAND),
+                "embedding_dedup": _rhp_dedup_sql(_emb_dim),
+                "rhp_recall": _rhp_recall_sql(_emb_dim),
                 "ann_ivf": (
                     "WITH "
                     + _ivf_core_sql(_centroids, ANN_QUERY_IDS, IVF_NPROBE, 10)[1:]

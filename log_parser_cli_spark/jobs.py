@@ -178,12 +178,12 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.export_library:
         from log_parser_cli_spark.plans.export import export_template_library
-        from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims, read_parsed, read_sequences
+        from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims, read_parsed
 
         # reuse the run's OWN checkpointed parse output — consistent with
         # whatever heads the run used (incl. --derive-heads) and no re-parse
         _vocab_rows, _source_heads, sinks = load_dims(spark, args.fixtures)
-        parsed = read_parsed(spark, read_sequences(spark, args.fixtures).schema, f"{args.out}/parsed")
+        parsed = read_parsed(spark, args.fixtures, f"{args.out}/parsed")
         mapping = read_mapping(spark, args.match_only or f"{args.out}/template_mapping")
         enriched = enrich_stage(parsed, mapping, sinks)
         library = export_template_library(spark, enriched)

@@ -112,20 +112,26 @@ def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, st
     return vocab_rows, source_heads, dict(zip(sources["source"].to_pylist(), sources["sink"].to_pylist()))
 
 
-def read_sequences(spark: SparkSession, fixture_dir: str) -> DataFrame:
-    """The fixture's ``sequences`` table under its parquet footer's schema,
-    which pyarrow reads on the driver: no schema-inference job."""
+def sequences_schema(fixture_dir: str) -> StructType:
+    """The fixture's ``sequences`` schema from its parquet footer, which
+    pyarrow reads on the driver: no Spark job."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    path = os.path.join(fixture_dir, "sequences.parquet")
-    return spark.read.schema(from_arrow_schema(pq.read_schema(path))).parquet(path)
+    return from_arrow_schema(pq.read_schema(os.path.join(fixture_dir, "sequences.parquet")))
 
 
-def read_parsed(spark: SparkSession, seq_schema: StructType, path: str) -> DataFrame:
-    """The parse checkpoint at ``path`` under ``parse_stage``'s output schema
-    for an input of ``seq_schema``: no schema-inference job."""
-    return spark.read.schema(parsed_schema(seq_schema)).parquet(path)
+def read_sequences(spark: SparkSession, fixture_dir: str) -> DataFrame:
+    """The fixture's ``sequences`` table under ``sequences_schema``."""
+    return spark.read.schema(sequences_schema(fixture_dir)).parquet(
+        os.path.join(fixture_dir, "sequences.parquet")
+    )
+
+
+def read_parsed(spark: SparkSession, fixture_dir: str, path: str) -> DataFrame:
+    """The parse checkpoint at ``path`` of the fixture's sequences, under
+    ``parse_stage``'s output schema for them: no schema-inference job."""
+    return spark.read.schema(parsed_schema(sequences_schema(fixture_dir))).parquet(path)
 
 
 def read_mapping(spark: SparkSession, path: str) -> DataFrame:
@@ -583,6 +589,8 @@ def run_pipeline(
     (persist DISK_ONLY — a memory-level cache thrashes against the route
     shuffle's execution memory) instead of materializing to parquet — faster
     for one-shot runs, but a crash then restarts from stage 1.
+    ``seq_df`` replaces the fixture's ``sequences`` read and must keep its
+    schema: the parse checkpoint is read back under it.
     ``derive_heads=True`` ignores the configured head patterns and derives
     them from the token table itself (the reference's ensureHeadPattern step,
     manager.ts:31-213) before parsing.
@@ -652,7 +660,7 @@ def run_pipeline(
         return {}
 
     stage("parse", do_parse)
-    parsed = parsed_cached if parsed_cached is not None else read_parsed(spark, seq_df.schema, parsed_path)
+    parsed = parsed_cached if parsed_cached is not None else read_parsed(spark, fixture_dir, parsed_path)
 
     # -- stage 2: discover (skipped in match-only mode)
     mapping_path = os.path.join(out_dir, "template_mapping")

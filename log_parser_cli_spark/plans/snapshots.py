@@ -111,8 +111,10 @@ class SnapshotTable:
         """DataFrame over exactly the data dirs of one committed snapshot
         (default: current), each read under the manifest's schema. A stream
         adds a dir per micro-batch, so the union grows with its batches, but
-        no dir's read submits a schema-inference job. Raises ValueError for
-        a manifest that records no schema."""
+        no dir's read submits a schema-inference job. The dirs are unioned,
+        not passed to one ``parquet(*dirs)``: Spark's partition discovery
+        rejects a read of several partitioned table roots. Raises ValueError
+        for a manifest that records no schema."""
         m = self.manifest(version)
         if m is None:
             raise FileNotFoundError(f"no committed snapshot under {self.root}")

@@ -36,7 +36,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from log_parser_cli_spark.operators.parse import parse_stage
-from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims, read_sequences, route_frame
+from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims, route_frame, sequences_schema
 from log_parser_cli_spark.plans.snapshots import SnapshotTable
 
 
@@ -70,8 +70,7 @@ def _start(
     """Start the checkpointed stream; ``mapping_for(parsed, batch_id)`` gives
     the mapping each micro-batch is enriched against."""
     vocab_rows, source_heads, sinks = load_dims(spark, fixture_dir)
-    seq_schema = read_sequences(spark, fixture_dir).schema
-    reader = spark.readStream.schema(seq_schema).option("maxFilesPerTrigger", max_files_per_trigger)
+    reader = spark.readStream.schema(sequences_schema(fixture_dir)).option("maxFilesPerTrigger", max_files_per_trigger)
     if stream_dir is None:
         # file-stream source wants a directory: stream the fixture dir,
         # filtered to the sequences file(s)
