@@ -113,8 +113,7 @@ def load_dims(spark: SparkSession, fixture_dir: str) -> tuple[list[tuple[int, st
 
 
 def sequences_schema(fixture_dir: str) -> StructType:
-    """The fixture's ``sequences`` schema from its parquet footer, which
-    pyarrow reads on the driver: no Spark job."""
+    """The ``sequences`` schema of its parquet footer, read by pyarrow: no job."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -123,9 +122,7 @@ def sequences_schema(fixture_dir: str) -> StructType:
 
 def read_sequences(spark: SparkSession, fixture_dir: str) -> DataFrame:
     """The fixture's ``sequences`` table under ``sequences_schema``."""
-    return spark.read.schema(sequences_schema(fixture_dir)).parquet(
-        os.path.join(fixture_dir, "sequences.parquet")
-    )
+    return spark.read.schema(sequences_schema(fixture_dir)).parquet(os.path.join(fixture_dir, "sequences.parquet"))
 
 
 def read_parsed(spark: SparkSession, fixture_dir: str, path: str) -> DataFrame:

@@ -109,12 +109,9 @@ class SnapshotTable:
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """DataFrame over exactly the data dirs of one committed snapshot
-        (default: current), each read under the manifest's schema. A stream
-        adds a dir per micro-batch, so the union grows with its batches, but
-        no dir's read submits a schema-inference job. The dirs are unioned,
-        not passed to one ``parquet(*dirs)``: Spark's partition discovery
-        rejects a read of several partitioned table roots. Raises ValueError
-        for a manifest that records no schema."""
+        (default: current), each read under the manifest's schema (no job)
+        and unioned: partition discovery rejects one read of several table
+        roots. Raises ValueError for a manifest that records no schema."""
         m = self.manifest(version)
         if m is None:
             raise FileNotFoundError(f"no committed snapshot under {self.root}")
