@@ -315,9 +315,9 @@ def refine_mapping(
     — the reference's replay-vs-final-library semantics — so orphans
     re-queued after their rightful template was already integrated still
     land correctly. Signatures no surviving template matches get no mapping
-    row (→ UNMATCHED, the unresolved-samples path, pipeline.ts:451-456). The
-    refined templates' ``salt_share`` is NULL: their row counts were never
-    aggregated.
+    row (→ UNMATCHED, the unresolved-samples path, pipeline.ts:451-456). A
+    refined template's ``salt_share`` is discovery's: its rows ÷ the hottest
+    refined template's rows, from the row counts the one collect carries.
 
     ``seed_library``: pre-existing template dicts (template_id, source,
     pattern, created_at, template_star) — e.g. a carried-over library whose
@@ -332,12 +332,13 @@ def refine_mapping(
     sig_agg = (
         parsed.filter(F.col("head_matched"))
         .groupBy("source", "content_sig")
-        .agg(F.min(F.struct("doc_id", "content")).alias("_f"))
+        .agg(F.min(F.struct("doc_id", "content")).alias("_f"), F.count("*").alias("n_rows"))
         .select(
             F.col("_f.doc_id").alias("doc_id"),
             "source",
             "content_sig",
             F.col("_f.content").alias("content"),
+            "n_rows",
         )
     )
     reps = sig_agg.collect()
@@ -354,8 +355,13 @@ def refine_mapping(
     library = res["library"]
     tids, _ = match_batch([r.content for r in reps], [r.source for r in reps], library)
     star_of = {t["template_id"]: t.get("template_star", "") for t in library}
+    rows_of: dict[str, int] = {}
+    for r, tid in zip(reps, tids):
+        if tid is not None:
+            rows_of[tid] = rows_of.get(tid, 0) + r.n_rows
+    hottest = max(rows_of.values(), default=1)
     rows = [
-        (r.source, r.content_sig, tid, star_of.get(tid, ""), None)
+        (r.source, r.content_sig, tid, star_of.get(tid, ""), rows_of[tid] / hottest)
         for r, tid in zip(reps, tids)
         if tid is not None
     ]
@@ -418,8 +424,8 @@ def route_frame(enriched: DataFrame, salt_buckets: int) -> DataFrame:
     ``salt_buckets``, so the hot source cannot serialize into one writer task;
     a template with share ≤ 1/``salt_buckets`` gets one salt, hence one file
     per (sink, template_id) dir. A NULL share — UNPARSED and UNMATCHED rows
-    (no mapping row joined), rows added by ``extend_mapping``/``refine_mapping``,
-    a mapping dir written before the column existed — gets the full
+    (no mapping row joined), rows added by ``extend_mapping``, a mapping dir
+    written before the column existed — gets the full
     ``salt_buckets``. The share rides in the mapping's broadcast join, so
     sizing adds no job, join or exchange.
     """

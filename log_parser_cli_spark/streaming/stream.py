@@ -3,27 +3,28 @@
 The reference is a batch CLI that micro-batches a file in 50k-line chunks with
 evolving state (SURVEY.md §2.9). Its *scoring* semantics — match a stream of
 sequences against a template library — map directly onto Structured
-Streaming. Both entry points run one micro-batch path (``_start``):
+Streaming. The chain is the streaming plan, so Spark plans it once per query:
 
-    readStream over the token files → foreachBatch: parse → enrich against
-    this batch's mapping → ``route_frame`` (the batch route's one payload
-    exchange, at salt 1) → ``SnapshotTable.commit_batch`` into ``out/routed``
+    readStream over the token files → parse → enrich against a mapping pinned
+    once per query → ``route_frame`` (the batch route's one payload exchange,
+    at salt 1) → foreachBatch: ``SnapshotTable.commit_batch`` into ``out/routed``
 
 A micro-batch goes through the batch route path, with one salt: its rows
 hash-partition by (sink, template_id), so each template dir gets exactly one
 file per batch and the writes spread over the exchange's tasks. The mapping
-each batch joins is a local relation (``pin``): its broadcast scans no file
-and re-runs no lineage.
+is a local relation (``pin``): its broadcast scans no file and re-runs no
+lineage.
 
 ``commit_batch`` is the same transactional table the batch route stage
 writes: a retried batch replaces its own dirs, a killed batch is never
 visible. The checkpointLocation gives exactly-once per-batch resume — the
 streaming twin of the batch manifest. The entry points differ only in where
-each batch's mapping comes from:
+the mapping comes from:
 
-- ``stream_replay``: a frozen mapping, pinned once per stream.
-- ``stream_with_discovery``: each batch extends the library, itself a
-  ``SnapshotTable`` under ``out/mapping``, before routing.
+- ``stream_replay``: a frozen mapping; a micro-batch only commits.
+- ``stream_with_discovery``: the plan ends at the parse; each batch's rows
+  are persisted, extend the library (a ``SnapshotTable`` under
+  ``out/mapping``), then route: one read and parse for two actions.
 
 Tested with ``trigger(availableNow=True)`` so pytest runs bounded.
 """
@@ -48,9 +49,9 @@ def pin(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 
 def batch_frame(parsed: DataFrame, mapping: DataFrame, sinks: dict[str, str]) -> DataFrame:
-    """The rows one micro-batch commits: ``parsed`` enriched against
-    ``mapping``, behind the batch route's payload exchange. The batch id is
-    the snapshot manifest's, not a column."""
+    """The rows a micro-batch commits: ``parsed`` (streaming, or one batch's
+    rows) enriched against ``mapping``, behind the batch route's payload
+    exchange. The batch id is the snapshot manifest's, not a column."""
     # one salt: the exchange is keyed by (sink, template_id) alone, so each
     # template dir gets one file per batch and the batch's writes still spread
     # over the exchange's tasks; on 15k-row batches salt 4 wrote 65 files
@@ -58,17 +59,10 @@ def batch_frame(parsed: DataFrame, mapping: DataFrame, sinks: dict[str, str]) ->
     return route_frame(enrich_stage(parsed, mapping, sinks), salt_buckets=1)
 
 
-def _start(
-    spark: SparkSession,
-    fixture_dir: str,
-    out_dir: str,
-    mapping_for: Callable[[DataFrame, int], DataFrame],
-    max_files_per_trigger: int,
-    available_now: bool,
-    stream_dir: str | None,
-):
-    """Start the checkpointed stream; ``mapping_for(parsed, batch_id)`` gives
-    the mapping each micro-batch is enriched against."""
+def _parsed_stream(
+    spark: SparkSession, fixture_dir: str, max_files_per_trigger: int, stream_dir: str | None
+) -> tuple[DataFrame, dict[str, str]]:
+    """The streaming parse of the token files, and the ``sinks`` map."""
     vocab_rows, source_heads, sinks = load_dims(spark, fixture_dir)
     reader = spark.readStream.schema(sequences_schema(fixture_dir)).option("maxFilesPerTrigger", max_files_per_trigger)
     if stream_dir is None:
@@ -77,25 +71,24 @@ def _start(
         stream = reader.option("pathGlobFilter", "sequences*.parquet").parquet(fixture_dir)
     else:
         stream = reader.parquet(stream_dir)
-    table = SnapshotTable(os.path.join(out_dir, "routed"))
+    return parse_stage(spark, stream, vocab_rows, source_heads), sinks
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = parse_stage(spark, batch_df, vocab_rows, source_heads)
-        # foreachBatch is at-least-once on micro-batch retry; committing each
-        # batch through the snapshot protocol keeps the sink idempotent (a
-        # retried batch_id REPLACES its own prior dir) and atomic (a crash
-        # mid-batch leaves an unreferenced staged dir — readers on
-        # read_routed never observe a torn batch)
-        table.commit_batch(
-            batch_frame(parsed, mapping_for(parsed, batch_id), sinks),
-            batch_id=batch_id,
-            partition_by=("sink", "template_id"),
-        )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
+def _commit(out_dir: str, routed: DataFrame, batch_id: int) -> None:
+    # foreachBatch is at-least-once on micro-batch retry; committing each
+    # batch through the snapshot protocol keeps the sink idempotent (a retried
+    # batch_id REPLACES its own prior dir) and atomic (a crash mid-batch
+    # leaves an unreferenced staged dir — readers on read_routed never
+    # observe a torn batch)
+    SnapshotTable(os.path.join(out_dir, "routed")).commit_batch(
+        routed, batch_id=batch_id, partition_by=("sink", "template_id")
     )
+
+
+def _start(frame: DataFrame, out_dir: str, process_batch: Callable[[DataFrame, int], None], available_now: bool):
+    """Start the checkpointed query over the streaming ``frame``."""
+    checkpoint = os.path.join(out_dir, "_stream_checkpoint")
+    writer = frame.writeStream.foreachBatch(process_batch).option("checkpointLocation", checkpoint)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
@@ -117,15 +110,14 @@ def stream_replay(
     load from ``fixture_dir``; default streams the fixture's own
     sequences file(s).
 
-    ``mapping_df`` is evaluated once, here, not once per micro-batch.
+    The chain is built here, once per query, over the stream and
+    ``mapping_df`` pinned once; a micro-batch only commits its routed rows.
 
     Returns the started StreamingQuery; callers awaitTermination() it.
     """
-    pinned = pin(spark, mapping_df)
-    return _start(
-        spark, fixture_dir, out_dir, lambda parsed, batch_id: pinned,
-        max_files_per_trigger, available_now, stream_dir,
-    )
+    parsed, sinks = _parsed_stream(spark, fixture_dir, max_files_per_trigger, stream_dir)
+    routed = batch_frame(parsed, pin(spark, mapping_df), sinks)
+    return _start(routed, out_dir, lambda batch_df, batch_id: _commit(out_dir, batch_df, batch_id), available_now)
 
 
 def stream_with_discovery(
@@ -139,6 +131,10 @@ def stream_with_discovery(
     """Streaming twin of the reference's EVOLVING state (T2): each micro-batch
     extends the template library with its novel signatures before routing.
 
+    The query's plan is the parse; a batch's parsed rows are persisted for
+    its two actions (the library's signature aggregation, then the route
+    write), so each input row is read and parsed once.
+
     The library is ``SnapshotTable(out_dir/mapping)``, overwritten once per
     batch (foreachBatch runs serially on the driver); the manifest link is
     the commit point, so a crash mid-write leaves the previous library
@@ -151,20 +147,23 @@ def stream_with_discovery(
     """
     from log_parser_cli_spark.plans.pipeline import discover_templates, extend_mapping
 
+    parsed, sinks = _parsed_stream(spark, fixture_dir, max_files_per_trigger, stream_dir)
     library = SnapshotTable(os.path.join(out_dir, "mapping"))
 
-    def evolve(parsed: DataFrame, batch_id: int) -> DataFrame:
-        if library.current_version() is None:
-            mapping = discover_templates(spark, parsed)
-        else:
-            mapping = extend_mapping(spark, library.read(spark), parsed)
-        # library is tiny; pin before writing. salt_share passes through
-        # (the first batch's discovery shares; rows appended later carry NULL)
-        mapping = pin(spark, mapping)
-        library.commit_overwrite(mapping)
-        library.vacuum()
-        return mapping
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            if library.current_version() is None:
+                mapping = discover_templates(spark, batch_df)
+            else:
+                mapping = extend_mapping(spark, library.read(spark), batch_df)
+            # library is tiny; pin before writing. salt_share passes through
+            # (the first batch's discovery shares; rows appended later carry NULL)
+            mapping = pin(spark, mapping)
+            library.commit_overwrite(mapping)
+            library.vacuum()
+            _commit(out_dir, batch_frame(batch_df, mapping, sinks), batch_id)
+        finally:
+            batch_df.unpersist()
 
-    return _start(
-        spark, fixture_dir, out_dir, evolve, max_files_per_trigger, available_now, stream_dir
-    )
+    return _start(parsed, out_dir, process_batch, available_now)

@@ -79,3 +79,18 @@ def test_refine_job_count_does_not_grow_with_candidates(spark, pipeline_out):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(reports) > 10
     assert len(sc.statusTracker().getJobIdsForGroup("refine-job-count")) <= 10
+
+
+def test_refined_salt_shares_equal_discovery(spark, pipeline_out):
+    """With no deletion the refined templates are discovery's, so each one's
+    ``salt_share`` (its rows ÷ the hottest template's rows) is discovery's
+    too, and the route salts it the same."""
+    parsed = spark.read.parquet(os.path.join(pipeline_out, "parsed"))
+    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    refined, reports = refine_mapping(spark, parsed, mapping)
+    assert all(r["accepted"] and not r["deleted_ids"] for r in reports)
+
+    def shares(df):
+        return dict(df.select("template_id", "salt_share").distinct().collect())
+
+    assert shares(refined) == shares(mapping)

@@ -9,6 +9,16 @@ from log_parser_cli_spark.plans.pipeline import read_routed, run_pipeline
 from log_parser_cli_spark.streaming.stream import stream_replay
 
 
+def _split(spark, fixture_dir, stream_dir, n_files):
+    """``stream_dir`` holding the fixture's sequences split by doc ordinal
+    into ``n_files`` parquet files, one micro-batch each."""
+    seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
+    ordinal = F.substring("doc_id", 5, 9).cast("long")
+    for part in range(n_files):
+        seq.filter(ordinal % n_files == part).coalesce(1).write.mode("append").parquet(stream_dir)
+    return stream_dir
+
+
 def test_stream_replay_matches_batch(spark, fixture_dir, pipeline_out, tmp_path):
     mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
     out = str(tmp_path / "stream_out")
@@ -42,12 +52,7 @@ def test_stream_with_discovery_evolves_library(spark, fixture_dir, pipeline_out,
 
     from log_parser_cli_spark.streaming.stream import stream_with_discovery
 
-    seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
-    stream_dir = str(tmp_path / "stream_src")
-    ordinal = FN.substring("doc_id", 5, 9).cast("long")
-    seq.filter(ordinal % 2 == 0).coalesce(1).write.parquet(stream_dir)
-    seq.filter(ordinal % 2 == 1).coalesce(1).write.mode("append").parquet(stream_dir)
-
+    stream_dir = _split(spark, fixture_dir, str(tmp_path / "stream_src"), 2)
     out = str(tmp_path / "stream_out")
     q = stream_with_discovery(spark, fixture_dir, stream_dir, out, available_now=True)
     q.awaitTermination(180)
@@ -122,11 +127,7 @@ def three_batch_stream(spark, fixture_dir, pipeline_out, tmp_path_factory):
     """``stream_replay`` of the fixture split into 3 files (3 micro-batches)
     against the pipeline's mapping rebuilt as a Python RDD whose map counts
     every row it yields; returns (out dir, rows counted, mapping rows)."""
-    seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
-    stream_dir = str(tmp_path_factory.mktemp("stream_src3"))
-    ordinal = F.substring("doc_id", 5, 9).cast("long")
-    for part in range(3):
-        seq.filter(ordinal % 3 == part).coalesce(1).write.mode("append").parquet(stream_dir)
+    stream_dir = _split(spark, fixture_dir, str(tmp_path_factory.mktemp("stream_src3")), 3)
 
     stored = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
     rows = stored.collect()
@@ -173,3 +174,50 @@ def test_micro_batch_writes_one_file_per_template_dir(spark, pipeline_out, three
         return {r.doc_id: r.asDict() for r in df.collect()}
 
     assert by_doc(read_routed(spark, out)) == by_doc(read_routed(spark, pipeline_out))
+
+
+def test_stream_replay_builds_the_chain_once(spark, fixture_dir, pipeline_out, tmp_path, monkeypatch):
+    """The parse → enrich → route chain is the streaming plan: over 3
+    micro-batches each stage is built once per query, and a batch only
+    commits."""
+    from log_parser_cli_spark.streaming import stream
+
+    built = {"parse_stage": 0, "enrich_stage": 0, "route_frame": 0}
+    for name in built:
+        real = getattr(stream, name)
+
+        def counted(*args, _real=real, _name=name, **kw):
+            built[_name] += 1
+            return _real(*args, **kw)
+
+        monkeypatch.setattr(stream, name, counted)
+    stream_dir = _split(spark, fixture_dir, str(tmp_path / "stream_src"), 3)
+    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    q = stream_replay(spark, fixture_dir, str(tmp_path / "stream_out"), mapping, stream_dir=stream_dir)
+    assert q.awaitTermination(180) and q.exception() is None
+    assert [p["numInputRows"] > 0 for p in q.recentProgress].count(True) == 3
+    assert built == {"parse_stage": 1, "enrich_stage": 1, "route_frame": 1}
+
+
+def test_stream_with_discovery_reads_each_row_once(spark, fixture_dir, tmp_path):
+    """A discovery micro-batch is read and parsed once for its two actions
+    (the library's signature aggregation and the route write): over 2
+    batches the query's stages read fewer than twice the input rows. The
+    surplus over one read is the library's own rows; a persisted batch's
+    re-read is not input."""
+    from log_parser_cli_spark.streaming.stream import stream_with_discovery
+
+    stream_dir = _split(spark, fixture_dir, str(tmp_path / "stream_src"), 2)
+    out = str(tmp_path / "stream_out")
+    q = stream_with_discovery(spark, fixture_dir, stream_dir, out)
+    assert q.awaitTermination(180) and q.exception() is None
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    store = sc._jsc.sc().statusStore()
+    read = sum(
+        store.lastStageAttempt(sid).inputRecords()
+        for jid in sc.statusTracker().getJobIdsForGroup(str(q.runId))
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds
+    )
+    n_rows = read_routed(spark, out).count()
+    assert n_rows <= read < 2 * n_rows, (read, n_rows)

@@ -62,7 +62,9 @@ def main() -> int:
         print(f"pruned stale run cache {name}")
 
     only = set(sys.argv[1:])
-    spark = get_spark(app_name="check-oracles", cores=16)
+    # no console progress bar: its un-terminated stderr lines would split
+    # the per-query lines of a combined log
+    spark = get_spark(app_name="check-oracles", cores=16, extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
@@ -70,9 +72,11 @@ def main() -> int:
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
+    ok = ran = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        ran += 1
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR)
@@ -97,6 +101,7 @@ def main() -> int:
         sn, dn = normalize(s_rows), normalize(d_rows)
         schema_ok = len(s_cols) == len(d_cols) and [c.lower() for c in s_cols] == [c.lower() for c in d_cols]
         if sn == dn and schema_ok:
+            ok += 1
             print(f"OK    {name}: {len(sn)} rows match [{time.time()-t0:.1f}s]")
         else:
             failures.append(name)
@@ -108,7 +113,7 @@ def main() -> int:
             for r in list(dset - sset)[:3]:
                 print(f"      only-duck:  {r}")
     spark.stop()
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    print(f"\n{ok}/{ran} OK, {len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
 

@@ -89,18 +89,19 @@ def main() -> int:
         ),
     ]
 
-    # a micro-batch's frame, here over a static read: the same single payload
-    # exchange at salt 1, against the mapping pinned as a local relation (its
-    # broadcast scans no file and re-runs no lineage)
-    from log_parser_cli_spark.streaming.stream import batch_frame, pin
+    # the streaming frame stream_replay hands to writeStream: the same single
+    # payload exchange at salt 1, against the mapping pinned as a local
+    # relation (its broadcast scans no file and re-runs no lineage)
+    from log_parser_cli_spark.streaming.stream import _parsed_stream, batch_frame, pin
 
-    batch_title = "micro-batch route (local mapping → broadcast join → salt-1 exchange)"
-    batch_plan = plan_of(batch_frame(parsed, pin(spark, mapping), sinks))
+    batch_title = "micro-batch route (file stream → local mapping → broadcast join → salt-1 exchange)"
+    stream_parsed, _ = _parsed_stream(spark, fx, 1, None)
+    batch_plan = plan_of(batch_frame(stream_parsed, pin(spark, mapping), sinks))
     sections.append(
         (
             batch_title,
             batch_plan,
-            ["BroadcastHashJoin", "MapInArrow"],
+            ["StreamingRelation", "BroadcastHashJoin", "MapInArrow"],
             ["CartesianProduct", "SortMergeJoin", "HashAggregate", "Scan ExistingRDD"],
         )
     )
